@@ -190,7 +190,8 @@ object ArtifactCache {
     * path re-asserts the RECORDED schema via not-null assertions
     * (loud on violation — see GraftPlanShim.assertNotNull). Columns
     * nested deeper than array-of-primitive keep the read schema;
-    * no registered artifact carries any. */
+    * no registered artifact carries any. The read-back passes the
+    * sidecar schema to the reader, so it runs no inference job. */
   def persisted(s: SparkSession, d: String, key: String, ver: String)(
       build: => DataFrame): DataFrame = {
     // ADVICE r15: a sibling process's over-budget sweep honors only the
@@ -232,7 +233,7 @@ object ArtifactCache {
       } else events.putIfAbsent(s"$key@$ver", "read")
       val want = DataType.fromJson(java.nio.file.Files
         .readString(sidecar.toPath)).asInstanceOf[StructType]
-      restoreNullability(s.read.parquet(root.getPath), want)
+      restoreNullability(s.read.schema(want).parquet(root.getPath), want)
     }
   }
 
@@ -306,15 +307,9 @@ object ArtifactCache {
     * different fixture that merely shares the basename (keep). */
   private[graft] def fixtureTag(d: String): String = {
     val f = new java.io.File(d)
-    def walk(file: java.io.File, rel: String): Seq[String] =
-      if (file.isDirectory)
-        Option(file.listFiles()).getOrElse(Array.empty)
-          .sortBy(_.getName).toSeq
-          .flatMap(c => walk(c, s"$rel/${c.getName}"))
-      else Seq(s"$rel:${file.lastModified()}:${file.length()}")
     val parts = Option(f.listFiles()).getOrElse(Array.empty)
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
-      .flatMap(p => walk(p, p.getName)).toSeq
+      .flatMap(p => fileStamps(p, p.getName)).toSeq
     val h = java.security.MessageDigest.getInstance("SHA-256")
       .digest((f.getAbsolutePath +: parts).mkString("|")
         .getBytes("UTF-8"))
@@ -335,6 +330,17 @@ object ArtifactCache {
     expireStaleTags(f.getName, tag, f.getAbsolutePath)
     tag
   }
+
+  /** `rel:mtime:length` for `file`, or for every file under it in name
+    * order when it is a directory — the fingerprint that [[fixtureTag]]
+    * and `sources.Tables.schemaOf` key on. */
+  private[graft] def fileStamps(file: java.io.File, rel: String)
+      : Seq[String] =
+    if (file.isDirectory)
+      Option(file.listFiles()).getOrElse(Array.empty)
+        .sortBy(_.getName).toSeq
+        .flatMap(c => fileStamps(c, s"$rel/${c.getName}"))
+    else Seq(s"$rel:${file.lastModified()}:${file.length()}")
 
   private val touchedTags = java.util.concurrent.ConcurrentHashMap
     .newKeySet[String]()

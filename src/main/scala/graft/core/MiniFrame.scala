@@ -54,9 +54,9 @@ object MiniFrame {
   /** Native ingest path for the driver fixtures: Parquet scan with an
     * `_idx` order column. The reference has no file I/O at all
     * (SURVEY §2.1); Parquet + vectorized reader is the 100 TB ingest
-    * story. */
+    * story. The schema is resolved once per file (`Tables.schemaOf`). */
   def fromParquet(spark: SparkSession, path: String): MiniFrame =
-    new MiniFrame(withIdx(spark.read.parquet(path)))
+    new MiniFrame(withIdx(graft.sources.Tables.read(spark, path)))
 
   /** Global position column, fully inside Catalyst (the r2 version went
     * through `rdd.zipWithIndex`, which deserializes every row and kills

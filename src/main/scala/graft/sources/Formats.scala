@@ -80,6 +80,9 @@ object Formats {
     * rename is atomic per directory on HDFS-like filesystems. */
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L << 20): Int = {
+    // an inferring read, not Tables.schemaOf: this call swaps the
+    // directory's files, so a schema cached under their fingerprint
+    // would never be hit again
     val df = spark.read.parquet(path)
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val nFiles = ((bytes + targetBytes - 1) / targetBytes)

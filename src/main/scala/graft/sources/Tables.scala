@@ -2,16 +2,64 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Parquet loaders for the driver fixtures (TESTDATA.md). The reference
   * has no file I/O at all (SURVEY.md §2.1) — the Parquet scan with
   * Spark's vectorized reader is this engine's native ingest path, and the
   * one that matters at 100 TB: filters and projections declared on these
   * frames reach the scan as PushedFilters/ReadSchema, pruning row groups
-  * and columns before any byte is decoded. */
+  * and columns before any byte is decoded.
+  *
+  * Resolve once: a `spark.read.parquet` without a schema runs a
+  * footer-inference job on every call. [[schemaOf]] infers a path's
+  * schema once per process and every later read passes it with
+  * `.schema(s)`, so building a read runs no Spark job.
+  *  - Key: the absolute path, a fingerprint of its files (name, mtime
+  *    and length, recursing into a `*.parquet` directory, as
+  *    `ArtifactCache.fixtureTag` does) and the session's Parquet
+  *    inference confs (`spark.sql.parquet.*`,
+  *    `spark.sql.legacy.parquet.*`): [[events]] reads under
+  *    [[withNanosAsLong]], which changes the inferred `ts` type.
+  *  - Staleness: rewriting the files changes the fingerprint, so the
+  *    next read infers again under a new key; the old entry is never
+  *    hit again. The key names no session, so none is kept alive, and
+  *    sessions with the same confs share an entry.
+  *  - Only the `StructType` is cached, never a DataFrame or data: each
+  *    call builds a fresh relation with fresh exprIds, so a self-join
+  *    of two reads of one table resolves as it always did. */
 object Tables {
+  private val schemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, Seq[String], Map[String, String]), StructType]()
+
+  /** The Parquet schema of `path` as `spark.read.parquet` infers it
+    * under `s`'s current confs, inferred at most once per key (see the
+    * object doc). A concurrent first read may infer twice; both store
+    * the same schema. `path` is local, like every fixture: the
+    * fingerprint reads it through `java.io`, so on another filesystem
+    * it would be constant and a rewrite would go unseen. */
+  def schemaOf(s: SparkSession, path: String): StructType = {
+    val f = new java.io.File(path).getAbsoluteFile
+    val confs = s.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.")
+    }
+    val key = (f.getPath, graft.core.ArtifactCache.fileStamps(f, ""), confs)
+    val hit = schemas.get(key)
+    if (hit != null) hit
+    else {
+      val inferred = s.read.parquet(f.getPath).schema
+      schemas.put(key, inferred)
+      inferred
+    }
+  }
+
+  /** A Parquet read of `path` with its resolved schema. */
+  def read(s: SparkSession, path: String): DataFrame =
+    s.read.schema(schemaOf(s, path)).parquet(path)
+
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    read(spark, s"$sfDir/$name.parquet")
 
   def region(s: SparkSession, d: String): DataFrame = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame = table(s, d, "nation")
@@ -53,8 +101,7 @@ object Tables {
     * lands, scope it to the stream's options instead. */
   def eventsStream(s: SparkSession, d: String,
       watermark: Option[String] = None): DataFrame = {
-    val schema = withNanosAsLong(s)(
-      s.read.parquet(s"$d/events.parquet").schema)
+    val schema = withNanosAsLong(s)(schemaOf(s, s"$d/events.parquet"))
     // A NANOS-annotated generation needs the legacy conf at
     // MICRO-BATCH time, not just while this plan is built: the
     // streaming engine clones the session (capturing confs) at
@@ -102,10 +149,11 @@ object Tables {
     }
   }
 
-  /** Scope the legacy nanos-as-long conf to one read: the Parquet
-    * relation captures the conf when `spark.read.parquet` resolves the
-    * schema, so restoring it immediately after keeps the rest of the
-    * session on strict semantics (a permanent set() here was flipping
+  /** Scope the legacy nanos-as-long conf to one read: the conf matters
+    * where the footer schema is inferred ([[schemaOf]], whose key
+    * carries it) and the scan then reads with that schema, so restoring
+    * it immediately after keeps the rest of the session on strict
+    * semantics (a permanent set() here was flipping
     * every later parquet read in the session — ADVICE r2). There is no
     * per-read option for this conf (verified: the option-shaped read
     * still throws PARQUET_TYPE_ILLEGAL). */

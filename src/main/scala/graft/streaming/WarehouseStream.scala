@@ -153,7 +153,9 @@ object WarehouseStream {
     // Tables.eventsStream, so a fixture-generation ts-encoding change
     // (int64 nanos / NTZ / native) is absorbed by the shared
     // normalizeEventTs projection instead of failing only this
-    // consumer's unix_micros
+    // consumer's unix_micros. The probe infers, not Tables.schemaOf:
+    // the directory grows while the stream runs, so every call would
+    // see a new fingerprint and a cached schema would never be hit.
     val schema = graft.sources.Tables.withNanosAsLong(spark)(
       spark.read.parquet(streamInDir).schema)
     graft.sources.Tables.normalizeEventTs(
