@@ -144,29 +144,32 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
       .map(f => Identifier.of(ns, f.getName))
   }
 
-  /** Iceberg-style `$suffix` metadata tables: one resolution loop
-    * over a suffix → constructor map (`t$files` manifest listing,
-    * `t$history` versions, `t$refs` tags, `t$branches`, `t$txns`
-    * markers, `t$cdc` typed-feed coverage, `t$stats` ANALYZE-at-
-    * metadata-cost, `t$partitions` layout) — the introspection
-    * surface maintenance jobs and sync planners read. */
-  private val MetaTables: Seq[(String, String => Table)] = Seq(
-    "$files" -> (d => new GraftLogFilesTable(d)),
-    "$history" -> (d => new GraftLogHistoryTable(d)),
-    "$refs" -> (d => new GraftLogRefsTable(d)),
-    "$branches" -> (d => new GraftLogBranchesTable(d)),
-    "$txns" -> (d => new GraftLogTxnsTable(d)),
-    "$cdc" -> (d => new GraftLogCdcTable(d)),
-    "$stats" -> (d => new GraftLogStatsTable(d)),
-    "$partitions" -> (d => new GraftLogPartitionsTable(d)))
+  /** Iceberg-style `$suffix` metadata tables: suffix → (schema, rows)
+    * pair, all served by one [[GraftLogMetaTable]] whose rows are
+    * listed at planning time and scanned as [[LocalRows]] (a plain
+    * `SELECT *` runs no Spark job). The
+    * tables: `t$files` manifest listing, `t$history` versions, `t$refs`
+    * tags, `t$branches`, `t$txns` markers, `t$cdc` typed-feed coverage,
+    * `t$stats` ANALYZE-at-metadata-cost, `t$partitions` layout — the
+    * introspection surface maintenance jobs and sync planners read. */
+  private val MetaTables: Seq[(String, GraftLogMetaTable.Def)] = Seq(
+    "$files" -> GraftLogMetaTable.Files,
+    "$history" -> GraftLogMetaTable.History,
+    "$refs" -> GraftLogMetaTable.Refs,
+    "$branches" -> GraftLogMetaTable.Branches,
+    "$txns" -> GraftLogMetaTable.Txns,
+    "$cdc" -> GraftLogMetaTable.Cdc,
+    "$stats" -> GraftLogMetaTable.Stats,
+    "$partitions" -> GraftLogMetaTable.Partitions)
 
   override def loadTable(ident: Identifier): Table = {
-    MetaTables.foreach { case (suffix, mk) =>
+    MetaTables.foreach { case (suffix, (schema, rows)) =>
       if (ident.name.endsWith(suffix)) {
         val base = Identifier.of(ident.namespace,
           ident.name.stripSuffix(suffix))
         if (!tableExists(base)) throw new NoSuchTableException(base)
-        return mk(tableDir(base).getPath)
+        return new GraftLogMetaTable(suffix, tableDir(base).getPath,
+          schema, rows)
       }
     }
     if (!tableExists(ident)) throw new NoSuchTableException(ident)

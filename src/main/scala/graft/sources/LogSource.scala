@@ -76,6 +76,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * one). Stats cover the numeric columns (string min/max would need
   * escaping in the manifest; numeric stats carry the pruning weight
   * for the fact-table layouts this format targets).
+  * The `t$suffix` metadata tables over this log (`t$files`, `t$stats`,
+  * `t$history`, ...) are (schema, rows) pairs in `MetaTables.scala`,
+  * listed at planning time and scanned as [[LocalRows]].
   * Usage: df.write.format("graft.sources.GraftLogSource")
   *   .option("path", dir).mode("append"|"overwrite").save()
   */
@@ -2963,7 +2966,12 @@ object GraftLog {
   /** Commit timestamp of each version: the (shared) stamp its entries
     * carry. Oldest version first. */
   def versionTimestamps(dir: String): Seq[(Long, Long)] =
-    entries(dir).groupBy(_.version).view
+    versionTimestamps(entries(dir))
+
+  /** [[versionTimestamps]] over entries already read, so a caller that
+    * also lists them derives its stamps from the same read of the log. */
+  def versionTimestamps(es: Seq[LogEntry]): Seq[(Long, Long)] =
+    es.groupBy(_.version).view
       .mapValues(_.map(_.ts).max).toSeq.sortBy(_._1)
 
   /** `TIMESTAMP AS OF` resolution: the newest version committed at or
@@ -5100,513 +5108,6 @@ case class GraftLogGroupPartition(dir: String, key: InternalRow,
     extends InputPartition with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow = key
 }
-
-/** The `t$files` metadata table: one row per manifest entry —
-  * (version, action, file, rows, data_change) — the introspection
-  * surface maintenance jobs (vacuum planning, compaction policy, CDF
-  * consumers) read. Entries are captured at PLANNING time — the
-  * listing is as snapshot-consistent as any scan. */
-class GraftLogFilesTable(dir: String) extends Table with SupportsRead {
-  override def name(): String = s"graft_log_files($dir)"
-  override def schema(): StructType = GraftLogFilesTable.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        private val entries = GraftLog.entries(dir)
-        override def readSchema(): StructType = GraftLogFilesTable.Schema
-        override def toBatch: Batch = this
-        override def description(): String =
-          s"graft_log_files $dir entries=${entries.size}"
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(GraftLogFilesPartition(entries))
-        override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(
-                p: InputPartition): PartitionReader[InternalRow] = {
-              val it = p.asInstanceOf[GraftLogFilesPartition]
-                .entries.iterator
-              new PartitionReader[InternalRow] {
-                private var cur: InternalRow = _
-                override def next(): Boolean = {
-                  if (!it.hasNext) return false
-                  val e = it.next()
-                  cur = new GenericInternalRow(Array[Any](
-                    e.version, UTF8String.fromString(e.action),
-                    UTF8String.fromString(e.file), e.rows,
-                    e.dataChange))
-                  true
-                }
-                override def get(): InternalRow = cur
-                override def close(): Unit = ()
-              }
-            }
-          }
-      }
-    }
-}
-
-object GraftLogFilesTable {
-  val Schema: StructType = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("action", StringType, nullable = false),
-    StructField("file", StringType, nullable = false),
-    StructField("rows", LongType, nullable = false),
-    StructField("data_change", BooleanType, nullable = false)))
-}
-
-/** The `t$stats` metadata table: one row per table column with the
-  * MERGED manifest statistics of the current snapshot — (column,
-  * ndv_est, null_count, min, max, n_files) — the ANALYZE-TABLE
-  * surface, except nothing runs: every figure derives from the
-  * per-file sketches the writers already paid for, merged at metadata
-  * cost. ndv_est is the HLL union estimate (±~5%), null_count exact
-  * and additive, min/max the numeric fold; any figure a file can't
-  * vouch for (legacy entry, DV'd file) reads NULL rather than a wrong
-  * number. At 100 TB this is how an optimizer, a data engineer, or a
-  * quality monitor asks "how many distinct users / how null is this
-  * column" without a table scan. */
-class GraftLogStatsTable(dir: String) extends Table with SupportsRead {
-  override def name(): String = s"graft_log_stats($dir)"
-  override def schema(): StructType = GraftLogStatsTable.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        private val rows: Seq[InternalRow] = {
-          val schema = GraftLog.storedSchema(dir)
-            .getOrElse(StructType(Nil))
-          // the LIVE snapshot (checkpoint+tail replay), not the full
-          // ledger — removed files must not pollute table-level stats
-          val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
-          val merged = GraftLogNdv.mergedColumnStats(schema, live)
-          val withRows = live.filter(_.rows != 0L)
-          val noDv =
-            withRows.forall(e => GraftLog.dvOf(e).isEmpty)
-          schema.fields.toSeq.map { f =>
-            val (ndv, nulls) = merged(f.name)
-            // numeric min/max fold mirrors the scan's skipping rules:
-            // present only when every row-bearing DV-free file carries
-            // the column's range
-            // pre-rename files key the range under the former name;
-            // unparseable stats (NaN) drop the range, never crash
-            def localStat(e: LogEntry) =
-              GraftLog.decStat(e,
-                GraftLog.fileLocalName(schema, e, f.name))
-            val range =
-              if (noDv && withRows.nonEmpty &&
-                  withRows.forall(localStat(_).isDefined)) {
-                val mn = withRows.map(localStat(_).get._1).min
-                val mx = withRows.map(localStat(_).get._2).max
-                Some((mn.toPlainString, mx.toPlainString))
-              } else None
-            new GenericInternalRow(Array[Any](
-              UTF8String.fromString(f.name),
-              ndv.map(Long.box).orNull,
-              nulls.map(Long.box).orNull,
-              range.map(r => UTF8String.fromString(r._1)).orNull,
-              range.map(r => UTF8String.fromString(r._2)).orNull,
-              live.size.toLong))
-          }
-        }
-        override def readSchema(): StructType = GraftLogStatsTable.Schema
-        override def toBatch: Batch = this
-        override def description(): String =
-          s"graft_log_stats $dir cols=${rows.size}"
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(GraftLogStatsPartition(rows))
-        override def createReaderFactory(): PartitionReaderFactory =
-          GraftLogStatsRows
-      }
-    }
-}
-
-/** The `t$cdc` metadata table: one row per committed version with its
-  * typed-feed coverage — (version, has_cdc, n_cdc_files, n_cdc_rows,
-  * n_add_files, n_add_rows) — what a downstream sync planner reads to
-  * know which spans carry exact change types and which fall back to
-  * adds-as-inserts. Walks the same O(history-span) commit listing the
-  * feed itself reads. */
-class GraftLogCdcTable(dir: String) extends Table with SupportsRead {
-  override def name(): String = s"graft_log_cdc($dir)"
-  override def schema(): StructType = GraftLogCdcTable.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        private val rows: Seq[InternalRow] = {
-          val all = GraftLog.entries(dir)
-          all.groupBy(_.version).toSeq.sortBy(_._1).map {
-            case (v, es) =>
-              val cdc = es.filter(_.action == "cdc")
-              val adds = es.filter(e => e.isAdd && e.dataChange)
-              new GenericInternalRow(Array[Any](
-                v, cdc.nonEmpty, cdc.size.toLong,
-                cdc.map(e => math.max(e.rows, 0L)).sum,
-                adds.size.toLong,
-                adds.map(e => math.max(e.rows, 0L)).sum))
-          }
-        }
-        override def readSchema(): StructType = GraftLogCdcTable.Schema
-        override def toBatch: Batch = this
-        override def description(): String =
-          s"graft_log_cdc $dir versions=${rows.size}"
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(GraftLogStatsPartition(rows))
-        override def createReaderFactory(): PartitionReaderFactory =
-          GraftLogStatsRows
-      }
-    }
-}
-
-object GraftLogCdcTable {
-  val Schema: StructType = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("has_cdc", BooleanType, nullable = false),
-    StructField("n_cdc_files", LongType, nullable = false),
-    StructField("n_cdc_rows", LongType, nullable = false),
-    StructField("n_add_files", LongType, nullable = false),
-    StructField("n_add_rows", LongType, nullable = false)))
-}
-
-case class GraftLogStatsPartition(rows: Seq[InternalRow])
-    extends InputPartition
-
-/** Shared reader factory for the single-partition metadata tables
-  * whose rows are precomputed on the driver
-  * ([[GraftLogStatsPartition]]): t$stats, t$cdc. */
-object GraftLogStatsRows extends PartitionReaderFactory {
-  override def createReader(
-      p: InputPartition): PartitionReader[InternalRow] = {
-    val it = p.asInstanceOf[GraftLogStatsPartition].rows.iterator
-    new PartitionReader[InternalRow] {
-      private var cur: InternalRow = _
-      override def next(): Boolean = {
-        if (!it.hasNext) return false
-        cur = it.next(); true
-      }
-      override def get(): InternalRow = cur
-      override def close(): Unit = ()
-    }
-  }
-}
-
-object GraftLogStatsTable {
-  val Schema: StructType = StructType(Seq(
-    StructField("column", StringType, nullable = false),
-    StructField("ndv_est", LongType, nullable = true),
-    StructField("null_count", LongType, nullable = true),
-    StructField("min", StringType, nullable = true),
-    StructField("max", StringType, nullable = true),
-    StructField("n_files", LongType, nullable = false)))
-}
-
-/** The `t$history` metadata table: one row per committed version —
-  * (version, ts_millis, n_adds, n_removes, rows_added) — the audit
-  * surface `TIMESTAMP AS OF` resolves against and a RESTORE consults.
-  * rows_added counts dataChange rows only (what a CDF consumer saw). */
-class GraftLogHistoryTable(dir: String) extends Table with SupportsRead {
-  override def name(): String = s"graft_log_history($dir)"
-  override def schema(): StructType = GraftLogHistoryTable.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        private val rows: Seq[Array[Any]] = {
-          // ts from versionTimestamps — the SAME derivation TIMESTAMP
-          // AS OF resolves against, so audit and resolution can't drift
-          val vts = GraftLog.versionTimestamps(dir).toMap
-          GraftLog.entries(dir).groupBy(_.version).toSeq.sortBy(_._1)
-            .map { case (v, es) =>
-              Array[Any](v, vts(v),
-                es.count(_.isAdd).toLong,
-                es.count(!_.isAdd).toLong,
-                es.filter(e => e.isAdd && e.dataChange)
-                  .map(e => math.max(e.rows, 0L)).sum)
-            }
-        }
-        override def readSchema(): StructType = GraftLogHistoryTable.Schema
-        override def toBatch: Batch = this
-        override def description(): String =
-          s"graft_log_history $dir versions=${rows.size}"
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(GraftLogHistoryPartition(rows))
-        override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(
-                p: InputPartition): PartitionReader[InternalRow] = {
-              val it = p.asInstanceOf[GraftLogHistoryPartition].rows.iterator
-              new PartitionReader[InternalRow] {
-                private var cur: InternalRow = _
-                override def next(): Boolean = {
-                  if (!it.hasNext) return false
-                  cur = new GenericInternalRow(it.next())
-                  true
-                }
-                override def get(): InternalRow = cur
-                override def close(): Unit = ()
-              }
-            }
-          }
-      }
-    }
-}
-
-object GraftLogHistoryTable {
-  val Schema: StructType = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("ts_millis", LongType, nullable = false),
-    StructField("n_adds", LongType, nullable = false),
-    StructField("n_removes", LongType, nullable = false),
-    StructField("rows_added", LongType, nullable = false)))
-}
-
-/** The `t$partitions` metadata table (Iceberg's `partitions`): one row
-  * per live identity-partition value — (part_value, n_files, n_rows) —
-  * the layout surface a maintenance policy reads (which partitions are
-  * fragmented enough to compact, how skewed the value distribution
-  * is). Rows count EFFECTIVE rows (DV-deleted rows excluded), files
-  * are the CURRENT snapshot only — `t$files` keeps the full ledger.
-  * part_value is NULL for the NULL partition, for files predating the
-  * partition declaration (honest: those files also fall out of
-  * storage-partitioned grouping), and for every file of an
-  * unpartitioned table (one summary row, like Iceberg). */
-class GraftLogPartitionsTable(dir: String) extends Table with SupportsRead {
-  override def name(): String = s"graft_log_partitions($dir)"
-  override def schema(): StructType = GraftLogPartitionsTable.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        private val rows: Seq[Array[Any]] = {
-          val partCol = GraftLog.partitionColOf(dir)
-          val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
-          live.groupBy(e => partCol.flatMap(c =>
-              GraftLogPartValue.of(e, c)).map {
-                case null => null
-                case v => v.toString
-              }.orNull)
-            .toSeq
-            .sortBy { case (pv, _) => (pv == null, Option(pv).getOrElse("")) }
-            .map { case (pv, es) =>
-              Array[Any](
-                Option(pv).map(UTF8String.fromString).orNull,
-                es.size.toLong,
-                es.map(GraftLog.effectiveRows).sum)
-            }
-        }
-        override def readSchema(): StructType =
-          GraftLogPartitionsTable.Schema
-        override def toBatch: Batch = this
-        override def description(): String =
-          s"graft_log_partitions $dir groups=${rows.size}"
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(GraftLogHistoryPartition(rows))
-        override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(
-                p: InputPartition): PartitionReader[InternalRow] = {
-              val it = p.asInstanceOf[GraftLogHistoryPartition].rows.iterator
-              new PartitionReader[InternalRow] {
-                private var cur: InternalRow = _
-                override def next(): Boolean = {
-                  if (!it.hasNext) return false
-                  cur = new GenericInternalRow(it.next())
-                  true
-                }
-                override def get(): InternalRow = cur
-                override def close(): Unit = ()
-              }
-            }
-          }
-      }
-    }
-}
-
-object GraftLogPartitionsTable {
-  val Schema: StructType = StructType(Seq(
-    StructField("part_value", StringType, nullable = true),
-    StructField("n_files", LongType, nullable = false),
-    StructField("n_rows", LongType, nullable = false)))
-}
-
-/** The `t$refs` metadata table: one row per named ref (tag) —
-  * (name, version, reachable) — the discovery surface for
-  * `VERSION AS OF '<name>'`. `reachable` is false when log expiration
-  * moved the retained horizon past the pinned version (reads through
-  * the ref now fail loudly; the row makes the dead tag visible to
-  * cleanup jobs instead of silent). */
-class GraftLogRefsTable(dir: String) extends Table with SupportsRead {
-  override def name(): String = s"graft_log_refs($dir)"
-  override def schema(): StructType = GraftLogRefsTable.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        private val rows: Seq[Array[Any]] = {
-          val oldest = GraftLog.oldestReplayableVersion(dir)
-          GraftLog.refs(dir).toSeq.sortBy(_._1).map { case (n, v) =>
-            Array[Any](UTF8String.fromString(n), v,
-              oldest <= 0L || v >= oldest)
-          }
-        }
-        override def readSchema(): StructType = GraftLogRefsTable.Schema
-        override def toBatch: Batch = this
-        override def description(): String =
-          s"graft_log_refs $dir refs=${rows.size}"
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(GraftLogHistoryPartition(rows))
-        override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(
-                p: InputPartition): PartitionReader[InternalRow] = {
-              val it = p.asInstanceOf[GraftLogHistoryPartition].rows.iterator
-              new PartitionReader[InternalRow] {
-                private var cur: InternalRow = _
-                override def next(): Boolean = {
-                  if (!it.hasNext) return false
-                  cur = new GenericInternalRow(it.next())
-                  true
-                }
-                override def get(): InternalRow = cur
-                override def close(): Unit = ()
-              }
-            }
-          }
-      }
-    }
-}
-
-object GraftLogRefsTable {
-  val Schema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("version", LongType, nullable = false),
-    StructField("reachable", BooleanType, nullable = false)))
-}
-
-/** The `t$txns` metadata table: one row per incremental writer's
-  * latest [[LogEntry.txn]] marker — (app_id, applied_through,
-  * committed_version, ts_millis) — the observability surface for the
-  * exactly-once contract: which consumer has applied the source
-  * through which version, and when. What an operator checks before
-  * deciding whether a materialized view or streaming sink is stale. */
-class GraftLogTxnsTable(dir: String) extends Table with SupportsRead {
-  override def name(): String = s"graft_log_txns($dir)"
-  override def schema(): StructType = GraftLogTxnsTable.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        private val rows: Seq[Array[Any]] =
-          GraftLog.snapshotAsOf(dir, Long.MaxValue).txns
-            .sortBy(_.file).map { e =>
-              Array[Any](
-                UTF8String.fromString(e.file.stripPrefix("txn:")),
-                e.rows, e.version, e.ts)
-            }
-        override def readSchema(): StructType = GraftLogTxnsTable.Schema
-        override def toBatch: Batch = this
-        override def description(): String =
-          s"graft_log_txns $dir txns=${rows.size}"
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(GraftLogHistoryPartition(rows))
-        override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(
-                p: InputPartition): PartitionReader[InternalRow] = {
-              val it = p.asInstanceOf[GraftLogHistoryPartition].rows.iterator
-              new PartitionReader[InternalRow] {
-                private var cur: InternalRow = _
-                override def next(): Boolean = {
-                  if (!it.hasNext) return false
-                  cur = new GenericInternalRow(it.next())
-                  true
-                }
-                override def get(): InternalRow = cur
-                override def close(): Unit = ()
-              }
-            }
-          }
-      }
-    }
-}
-
-object GraftLogTxnsTable {
-  val Schema: StructType = StructType(Seq(
-    StructField("app_id", StringType, nullable = false),
-    StructField("applied_through", LongType, nullable = false),
-    StructField("committed_version", LongType, nullable = false),
-    StructField("ts_millis", LongType, nullable = false)))
-}
-
-/** The `t$branches` metadata table: one row per live branch —
-  * (name, fork_version, head_version, n_commits, n_files) — the
-  * discovery surface for branch reads and the fast-forward decision
-  * (a branch whose fork trails the main head cannot fast-forward). */
-class GraftLogBranchesTable(dir: String) extends Table with SupportsRead {
-  override def name(): String = s"graft_log_branches($dir)"
-  override def schema(): StructType = GraftLogBranchesTable.Schema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new Scan with Batch {
-        private val rows: Seq[Array[Any]] =
-          GraftLog.branches(dir).toSeq.sortBy(_._1).map { case (n, fork) =>
-            val es = GraftLog.branchEntries(dir, n)
-            Array[Any](UTF8String.fromString(n), fork,
-              GraftLog.branchHead(dir, n),
-              es.map(_.version).distinct.size.toLong,
-              es.count(_.isAdd).toLong)
-          }
-        override def readSchema(): StructType = GraftLogBranchesTable.Schema
-        override def toBatch: Batch = this
-        override def description(): String =
-          s"graft_log_branches $dir branches=${rows.size}"
-        override def planInputPartitions(): Array[InputPartition] =
-          Array(GraftLogHistoryPartition(rows))
-        override def createReaderFactory(): PartitionReaderFactory =
-          new PartitionReaderFactory {
-            override def createReader(
-                p: InputPartition): PartitionReader[InternalRow] = {
-              val it = p.asInstanceOf[GraftLogHistoryPartition].rows.iterator
-              new PartitionReader[InternalRow] {
-                private var cur: InternalRow = _
-                override def next(): Boolean = {
-                  if (!it.hasNext) return false
-                  cur = new GenericInternalRow(it.next())
-                  true
-                }
-                override def get(): InternalRow = cur
-                override def close(): Unit = ()
-              }
-            }
-          }
-      }
-    }
-}
-
-object GraftLogBranchesTable {
-  val Schema: StructType = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("fork_version", LongType, nullable = false),
-    StructField("head_version", LongType, nullable = false),
-    StructField("n_commits", LongType, nullable = false),
-    StructField("n_files", LongType, nullable = false)))
-}
-
-case class GraftLogHistoryPartition(rows: Seq[Array[Any]])
-    extends InputPartition
-
-case class GraftLogFilesPartition(entries: Seq[LogEntry])
-    extends InputPartition
 
 class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
     columnar: Boolean = false,

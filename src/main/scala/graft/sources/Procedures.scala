@@ -1,11 +1,10 @@
 package graft.sources
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.Identifier
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure,
   ProcedureParameter, UnboundProcedure}
-import org.apache.spark.sql.connector.read.{LocalScan, Scan}
+import org.apache.spark.sql.connector.read.Scan
 import org.apache.spark.sql.types._
 
 /** SQL stored procedures for graft-log table MAINTENANCE [EXT] — the
@@ -21,7 +20,7 @@ import org.apache.spark.sql.types._
   *        col_a => 'x', col_b => 'y');
   *   CALL graftq.system.restore(table => 'ns.t', version => 3);
   *
-  * Each returns a one-row result (as a [[LocalScan]]) reporting what
+  * Each returns a one-row result (as [[LocalRows]]) reporting what
   * the op did — file counts a scheduler can log and alert on. The ops
   * themselves are the already-committed maintenance primitives on
   * [[GraftLog]]; CALL adds no new mutation path, only the SQL face.
@@ -37,14 +36,6 @@ object GraftProcedures {
       "publish_staged", "drop_staged",
       "create_branch", "fast_forward", "drop_branch", "refresh_mv",
       "sync_replica", "repartition_table")
-
-  /** One-row, driver-local result set. */
-  private case class ResultScan(schema: StructType,
-      row: Array[Any]) extends LocalScan {
-    override def readSchema(): StructType = schema
-    override def rows(): Array[InternalRow] =
-      Array(new GenericInternalRow(row))
-  }
 
   private def param(name: String, dt: DataType): ProcedureParameter =
     ProcedureParameter.in(name, dt).build()
@@ -72,7 +63,7 @@ object GraftProcedures {
         s"procedure $procName: argument '${params(i).name}' is NULL " +
           "(every parameter requires a concrete value)"))
       java.util.List.of[Scan](
-        ResultScan(resultSchema, run(args))).iterator()
+        new LocalRows(resultSchema, Seq(run(args)))).iterator()
     }
   }
 

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 /** SQL DDL against the custom catalog: create/insert/select/time-travel
@@ -262,6 +264,25 @@ class GraftCatalogSpec extends SparkSpec {
           .collect()
       }
       assert(e.getMessage.contains("predates"))
+    }
+  }
+
+  test("every $suffix metadata table is a driver-local scan: " +
+      "LocalTableScan in the plan, no Spark job for SELECT *") {
+    withCatalog {
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.meta")
+      spark.sql("CREATE TABLE graftcat.meta.t (id BIGINT)")
+      spark.sql("INSERT INTO graftcat.meta.t SELECT id FROM range(5)")
+      for (suffix <- Seq("files", "stats", "cdc", "history", "partitions",
+          "refs", "txns", "branches")) {
+        val query = s"SELECT * FROM graftcat.meta.`t$$$suffix`"
+        val plan = spark.sql(query).queryExecution.executedPlan
+        assert(plan.collect { case s: LocalTableScanExec => s }.nonEmpty,
+          s"$suffix: $plan")
+        assert(plan.collect { case s: BatchScanExec => s }.isEmpty,
+          s"$suffix: $plan")
+        assert(jobsDuring(spark.sql(query).collect()) == 0, suffix)
+      }
     }
   }
 

@@ -1,11 +1,7 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import scala.util.{Success, Try}
 
-import org.apache.spark.GraftTestShim
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampType}
@@ -17,28 +13,6 @@ import graft.sources.Tables
   * later reads pass it to the reader and run no job, and every read is
   * still a fresh relation. */
 class TablesSchemaSpec extends SparkSpec {
-  private val Tag = "graft.test.tablesSchema"
-
-  /** Spark jobs started by this thread while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val token = java.util.UUID.randomUUID().toString
-    val jobs = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty(Tag) == token))
-          jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    sc.setLocalProperty(Tag, token)
-    try { body; GraftTestShim.drainListeners(sc) }
-    finally {
-      sc.setLocalProperty(Tag, null)
-      sc.removeSparkListener(listener)
-    }
-    jobs.get
-  }
-
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft-tables-schema").toString
 
