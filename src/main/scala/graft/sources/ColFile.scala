@@ -75,8 +75,8 @@ trait TextLines {
   * the separator is unambiguous); a block's row ordinals are global
   * (`firstOrdinal + rowInBlock`), which keeps deletion vectors and the
   * `_pos` metadata column exact under any subset of blocks (range
-  * split, stats skip). Old `.tsv.gz`/`.tsv` parts keep reading through
-  * the legacy line path — mixed-vintage tables need no rewrite. */
+  * split, stats skip). It is the only part-file format graft-log
+  * reads: a file without the trailing magic fails in [[readFooter]]. */
 object GraftColFile {
   val Extension = ".gcol"
   private val Magic: Array[Byte] =
@@ -226,9 +226,9 @@ object GraftColFile {
               }
             } catch { case _: NumberFormatException => bad(i) = true }
           } else {
-            // parse guarded like the long branch: a junk cell from a
-            // legacy part streamed through compaction must drop the
-            // column's block stats, not crash the write task
+            // parse guarded like the long branch: a cell that does
+            // not parse must drop the column's block stats, not crash
+            // the write task
             val v = try java.lang.Double.parseDouble(c)
               catch { case _: NumberFormatException => Double.NaN }
             if (java.lang.Double.isNaN(v) ||
@@ -252,9 +252,11 @@ object GraftColFile {
       * canonical rendering (Long.toString / Double.toString), so the
       * decoded chunk can reproduce the exact cell text (compaction
       * remaps, NDV hashing, and the oracle all see identical bytes).
-      * A legacy cell like '007' or '1e3' falls back to plain text for
-      * the whole chunk. Layout: [ceil(rows/8) null bitmap][8B LE per
-      * row] — nulls carry a zero slot. Returns null when ineligible. */
+      * A non-canonical cell — an INT cell like '7' compacted into a
+      * column widened to DOUBLE, whose rendering is '7.0' — falls back
+      * to plain text for the whole chunk. Layout: [ceil(rows/8) null
+      * bitmap][8B LE per row] — nulls carry a zero slot. Returns null
+      * when ineligible. */
     private def tryBinary(cells: ArrayBuffer[String],
         t: Int): Array[Byte] = {
       val n = cells.length
@@ -648,11 +650,10 @@ object GraftColFile {
     }
   }
 
-  /** Legacy-shaped line reader over a gcol file: reconstructs the TSV
-    * lines block by block (bounded memory — one block's cells live at
-    * a time). Keeps every line-oriented consumer — compaction's
-    * remap/rewrite streams, the row-based PartitionReader that serves
-    * streaming — working unchanged over the columnar payload. Returns
+  /** Line reader over a gcol file: reconstructs each row's
+    * tab-joined cells block by block (bounded memory — one block's
+    * cells live at a time). Compaction's remap/rewrite stream reads
+    * parts through it. Returns
     * the narrow [[TextLines]] contract, not a BufferedReader: only
     * readLine/close exist, so a future consumer reaching for read()/
     * lines()/ready() fails to compile instead of silently getting an

@@ -1,10 +1,9 @@
 package graft.sources
 
-import java.io.{BufferedReader, File, InputStreamReader}
+import java.io.File
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.util.{Map => JMap, UUID}
-import java.util.zip.{GZIPInputStream, GZIPOutputStream}
 
 import scala.jdk.CollectionConverters._
 
@@ -48,18 +47,19 @@ import org.apache.spark.unsafe.types.UTF8String
   *  - Each task's `DataWriter` streams rows to an uncommitted
   *    `part-<uuid>.gcol` file ([[GraftColFile]]: row-group blocks of
   *    per-column gzip chunks + a footer index — splittable, columnar,
-  *    block-stats-indexed; pre-r10 `.tsv.gz` parts keep reading) and
-  *    hands back the file name, its row count, and per-column min/max
-  *    stats as its commit message; a retried/aborted task deletes its
-  *    file and its name never reaches the driver.
-  *  - Visibility is ONLY through the `_manifest` file: each commit
-  *    appends `add` entries tagged with the next table version (plus
-  *    `remove` entries when compaction retires files) and atomically
-  *    renames a temp manifest over `_manifest`. Readers list the
-  *    manifest, never the directory — orphaned part files from failed
-  *    jobs are invisible, which is exactly the atomicity contract a
-  *    100 TB pipeline needs from object storage (rename → a metastore
-  *    swap in production).
+  *    block-stats-indexed; the only part-file format read) and hands
+  *    back the file name, its row count, its column list, and
+  *    per-column stats as its commit message; a retried/aborted task
+  *    deletes its file and its name never reaches the driver.
+  *  - Visibility is ONLY through the log: each commit writes its
+  *    entries (`add`, plus `remove` when a rewrite retires files) to
+  *    the next `_commit.<v>` file, claimed with a hard-link CAS, and
+  *    every [[GraftLog.CheckpointInterval]] commits a `_checkpoint.<v>`
+  *    folds the live set. Readers replay the log, never list the
+  *    directory — orphaned part files from failed jobs are invisible,
+  *    which is exactly the atomicity contract a 100 TB pipeline needs
+  *    from object storage (the link CAS → a metastore compare-and-swap
+  *    in production).
   *  - The READ path uses the manifest stats the way Delta/Iceberg do:
   *    a scan with pushed comparison predicates skips every file whose
   *    [min, max] range can't satisfy them (planning-time file
@@ -68,14 +68,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    selective` reads a fraction of the files and decodes a fraction
   *    of each line. Pushed filters remain Spark-side residuals — file
   *    skipping is conservative, never row-exact.
-  *  - `truncate()` (overwrite mode) commits a manifest containing only
-  *    the new files (a fresh lineage at version 0).
+  *  - `truncate()` (overwrite mode) retires the old log and commits
+  *    only the new files (a fresh lineage at version 0).
   *
-  * Values are tab-separated (long/int/double/string columns; strings
+  * Cells are canonical text (long/int/double/string columns; strings
   * must not contain tabs/newlines — a demo codec, not a production
-  * one). Stats cover the numeric columns (string min/max would need
-  * escaping in the manifest; numeric stats carry the pruning weight
-  * for the fact-table layouts this format targets).
+  * one). Range stats cover the numeric columns; string columns prune
+  * through per-file blooms.
   * The `t$suffix` metadata tables over this log (`t$files`, `t$stats`,
   * `t$history`, ...) are (schema, rows) pairs in `MetaTables.scala`,
   * listed at planning time and scanned as [[LocalRows]].
@@ -109,20 +108,19 @@ class GraftLogSource extends TableProvider {
         Option(properties.get("readChangeFeed")).exists(_.toBoolean))
 }
 
-/** One manifest line. `action` is add/remove; `dataChange=false` marks
-  * a compaction add (same rows, new layout) so the change data feed
-  * skips it; `stats` maps numeric column name → (min, max) in the TSV
+/** One log line. `action` is add/remove/cdc/dv/txn; `dataChange=false`
+  * marks a compaction add (same rows, new layout) so the change data
+  * feed skips it; `stats` maps numeric column name → (min, max) in the
   * cell encoding; `cols` is the file's OWN column list (its write
-  * schema) — the per-file schema record that makes additive evolution
-  * readable (a TSV line can't self-describe the way a parquet footer
-  * does). Empty `cols` = pre-evolution entry: the file carries the
-  * full current table schema. `ts` is the commit wall-clock in epoch
-  * millis, stamped at publish (strictly monotone per table — the axis
-  * `TIMESTAMP AS OF` resolves against); -1 = unstamped/legacy.
-  * Serialized as
+  * schema) — the per-file schema record that makes additive evolution,
+  * renames and drops readable by name. Every `add` and `cdc` entry
+  * carries one. `ts` is the commit wall-clock in epoch millis, stamped
+  * at publish (strictly monotone per table — the axis `TIMESTAMP AS
+  * OF` resolves against); -1 = not yet stamped.
+  * Serialized as the 8 fields
   * `version\taction\tfile\trows\tdataChange\tcol=min,max;...\tc1,c2\tts`;
-  * legacy 2-field `version\tfile` lines parse as stat-less adds,
-  * 6-field as cols-less, 7-field as ts-less ones. */
+  * any other line shape, and an `add`/`cdc` line with no column
+  * record, is rejected at parse. */
 case class LogEntry(version: Long, action: String, file: String,
     rows: Long, dataChange: Boolean,
     stats: Map[String, (String, String)],
@@ -141,7 +139,7 @@ object LogEntry {
   def add(version: Long, file: String, rows: Long,
       stats: Map[String, (String, String)],
       dataChange: Boolean = true,
-      cols: Seq[String] = Seq.empty): LogEntry =
+      cols: Seq[String]): LogEntry =
     LogEntry(version, "add", file, rows, dataChange, stats, cols)
   def remove(version: Long, file: String): LogEntry =
     LogEntry(version, "remove", file, -1L, dataChange = false, Map.empty)
@@ -185,16 +183,12 @@ object LogEntry {
         kv.substring(0, eq) -> (mn, mx)
       }.toMap
     line.split("\t", -1) match {
-      case Array(v, f) => // legacy manifest: stat-less add
-        LogEntry(v.toLong, "add", f, -1L, dataChange = true, Map.empty)
-      case Array(v, act, f, rows, dc, st) =>
-        LogEntry(v.toLong, act, f, rows.toLong, dc == "1", parseStats(st))
-      case Array(v, act, f, rows, dc, st, cs) =>
-        LogEntry(v.toLong, act, f, rows.toLong, dc == "1", parseStats(st),
-          cs.split(",").filter(_.nonEmpty).toSeq)
       case Array(v, act, f, rows, dc, st, cs, ts) =>
+        val cols = cs.split(",").filter(_.nonEmpty).toSeq
+        require(cols.nonEmpty || (act != "add" && act != "cdc"),
+          s"graft-log $act entry carries no column record: $line")
         LogEntry(v.toLong, act, f, rows.toLong, dc == "1", parseStats(st),
-          cs.split(",").filter(_.nonEmpty).toSeq, ts.toLong)
+          cols, ts.toLong)
       case _ => throw new IllegalArgumentException(
         s"unparseable graft-log manifest line: $line")
     }
@@ -202,9 +196,7 @@ object LogEntry {
 }
 
 object GraftLog {
-  val ManifestFile = "_manifest"
   val SchemaFile = "_schema"
-  val EpochsFile = "_epochs"
   val PartitionFile = "_partition"
 
   /** Temp-file + atomic-rename publish for every metadata file (schema,
@@ -400,13 +392,10 @@ object GraftLog {
   /** The name under which the part file behind `e` wrote schema
     * column `name` — `name` itself unless the file predates a rename,
     * in which case the column's recorded former name that appears in
-    * the file's own column list applies. Entries with no column
-    * record wrote the then-current schema positionally; a rename
-    * never changes position or count, so their positional mapping
-    * under the CURRENT names stays correct. */
+    * the file's own column list applies. */
   def fileLocalName(schema: StructType, e: LogEntry,
       name: String): String =
-    if (e.cols.isEmpty || e.cols.contains(name)) name
+    if (e.cols.contains(name)) name
     else schema.fields.find(_.name == name)
       .flatMap(f => formerNames(f).find(e.cols.contains))
       .getOrElse(name)
@@ -504,10 +493,8 @@ object GraftLog {
   /** DROP COLUMN: metadata-only — the stored schema narrows, old
     * files keep their (now invisible) cells, and the name plus its
     * former-name trail tombstone so no later column can claim the
-    * orphaned cells. Requires every file in retained history to carry
-    * a column record: a pre-evolution file is read positionally under
-    * the CURRENT schema, and narrowing it would shift every later
-    * column's cells (compact() stamps records on such tables).
+    * orphaned cells. Every file is read by name through its own
+    * column record, so narrowing shifts no other column's cells.
     * Reads — time travel included — always resolve against the
     * CURRENT schema, so a dropped column is invisible in historical
     * snapshots too (the single-schema contract; Iceberg keeps
@@ -520,23 +507,6 @@ object GraftLog {
     require(schema.fields.length > 1,
       s"cannot drop '$name': it is the table's only column")
     requireUnanchored(dir, name, "drop")
-    // ALL retained history, not just the live snapshot: a time-travel
-    // read (or RESTORE) can resurrect an older cols-less add, and a
-    // positional read under the narrowed schema would serve the WRONG
-    // column's cells for every field past the dropped one. History
-    // survives in TWO places once expireLog has run — the segment
-    // files (legacy manifest + commit tail) AND the checkpoints the
-    // expired commits were folded into — so the guard must scan both:
-    // a live cols-less add can exist ONLY inside a checkpoint
-    // (ADVICE r9), and entries() never reads checkpoints.
-    val ckptLive = listVersioned(dir, CheckpointPrefix)
-      .flatMap { case (v, f) => readCheckpoint(v, f).live }
-    val colsless = (entries(dir) ++ ckptLive)
-      .filter(e => e.isAdd && e.cols.isEmpty && e.rows != 0L)
-    require(colsless.isEmpty,
-      s"cannot drop '$name': ${colsless.size} file(s) in retained " +
-        "history carry no column record and are read positionally — " +
-        "compact() and expire the pre-compaction history first")
     val updated = StructType(schema.fields.filterNot(_.name == name))
     val dead = (name +: formerNames(f)).map(encodeColName) ++
       propertiesOf(dir).get(DroppedColsProp).toSeq
@@ -607,13 +577,6 @@ object GraftLog {
     * way before compacting them away). */
   val MaxDvPositions = 100000
 
-  def committedEpochs(dir: String): Set[Long] = {
-    val f = new File(dir, EpochsFile)
-    if (!f.exists()) Set.empty
-    else new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
-      .linesIterator.filter(_.nonEmpty).map(_.toLong).toSet
-  }
-
   /** Writer identity the streaming sink's epoch markers commit under
     * — epoch ids are monotone per query, so applied-through IS the
     * newest epoch. */
@@ -624,14 +587,11 @@ object GraftLog {
     * upgrades the sink to exactly-once under Structured Streaming's
     * epoch-replay recovery contract. The epoch id rides the commit as
     * a [[LogEntry.txn]] marker — data and idempotence record become
-    * visible ATOMICALLY, so the crash window between a commit and a
-    * post-commit ledger write cannot exist (the older side-ledger
-    * file also lost epochs to concurrent read-modify-writes; it is
-    * still read for tables written before the marker scheme). */
+    * visible ATOMICALLY, so no crash window between a commit and a
+    * separate post-commit ledger write can exist. */
   def publishEpoch(dir: String, epochId: Long, files: Seq[GraftLogCommit],
       schema: StructType): Unit = synchronized {
-    val seen = lastTxnVersion(dir, EpochAppId) >= epochId ||
-      committedEpochs(dir).contains(epochId)
+    val seen = lastTxnVersion(dir, EpochAppId) >= epochId
     if (!seen && files.nonEmpty) {
       val merged =
         storedSchema(dir).map(mergeSchemas(_, schema)).getOrElse(schema)
@@ -657,10 +617,7 @@ object GraftLog {
 
   // ---- log storage: commit files + checkpoints ---------------------
   // The metadata plane is a sequence of per-version COMMIT files plus
-  // periodic reconciled CHECKPOINTS — the Delta/Iceberg shape,
-  // replacing the earlier single flat `_manifest` that was re-read and
-  // re-written in full on every operation (O(history) planning, and a
-  // read-modify-write race across processes):
+  // periodic reconciled CHECKPOINTS — the Delta/Iceberg shape:
   //
   //   _commit.<v>      that version's entries, one file per commit.
   //                    CLAIMED with a hard-link CAS — link(2) fails
@@ -680,9 +637,6 @@ object GraftLog {
   //                    never the full history. Checkpoints are KEPT,
   //                    so time travel to ANY version is also
   //                    O(live + interval).
-  //   _manifest        the legacy flat file, read-only compatibility:
-  //                    parsed as the base segment below every commit
-  //                    file; new commits never rewrite it.
 
   val CommitPrefix = "_commit."
   val CheckpointPrefix = "_checkpoint."
@@ -710,11 +664,27 @@ object GraftLog {
       .linesIterator.filter(l => l.nonEmpty && !l.startsWith("#"))
       .map(LogEntry.parse).toSeq
 
-  /** The legacy flat manifest, if present — the base history segment
-    * of a table written before the commit-file layout. */
-  private def legacyEntries(dir: String): Seq[LogEntry] = {
-    val m = new File(dir, ManifestFile)
-    if (!m.exists()) Seq.empty else readEntryLines(m)
+  /** Commit files of the versions in (fromVersion, toVersion], in
+    * version order — the O(span) walk every change-feed reader shares
+    * (listing only; [[entriesBetween]] reads them). */
+  private def commitsBetween(dir: String, fromVersion: Long,
+      toVersion: Long): Seq[(Long, File)] =
+    listVersioned(dir, CommitPrefix)
+      .filter { case (v, _) => v > fromVersion && v <= toVersion }
+
+  private def entriesBetween(dir: String, fromVersion: Long,
+      toVersion: Long): Seq[LogEntry] =
+    commitsBetween(dir, fromVersion, toVersion)
+      .flatMap { case (_, f) => readEntryLines(f) }
+
+  /** The flat `_manifest` file of the pre-commit-file layout is no
+    * longer read. A table that still has one fails here, on every
+    * snapshot and history read, instead of reading as empty — an empty
+    * history would also leave vacuum with no referenced part files. */
+  private def requireCommitLayout(dir: String): Unit = {
+    val m = new File(dir, "_manifest")
+    require(!m.exists(),
+      s"$m: graft-log no longer reads the flat-manifest table layout")
   }
 
   private case class Checkpoint(version: Long, maxTs: Long,
@@ -741,19 +711,19 @@ object GraftLog {
     * resolution, vacuum's referenced set. Snapshot PLANNING never
     * calls this; it goes through [[snapshotAsOf]]'s checkpoint+tail
     * read. */
-  def entries(dir: String): Seq[LogEntry] =
-    legacyEntries(dir) ++ listVersioned(dir, CommitPrefix)
-      .flatMap { case (_, f) => readEntryLines(f) }
+  def entries(dir: String): Seq[LogEntry] = {
+    requireCommitLayout(dir)
+    entriesBetween(dir, -1L, Long.MaxValue)
+  }
 
   /** Live data files at the current version (removes applied). */
   def committedFiles(dir: String): Seq[String] =
     entriesAsOf(dir, Long.MaxValue).map(_.file)
 
   /** A snapshot plan plus its read provenance — which checkpoint
-    * seeded it and how many segment files (legacy manifest + commit
-    * files) were parsed. GraftLogSpec asserts planning stays
-    * O(live + tail) once checkpoints exist, whatever the table's
-    * commit count. */
+    * seeded it and how many commit files were parsed. GraftLogSpec
+    * asserts planning stays O(live + tail) once checkpoints exist,
+    * whatever the table's commit count. */
   case class SnapshotPlan(entries: Seq[LogEntry],
       checkpointVersion: Option[Long], segmentsRead: Int,
       txns: Seq[LogEntry] = Seq.empty)
@@ -800,20 +770,12 @@ object GraftLog {
       scala.collection.mutable.LinkedHashMap.empty[String, LogEntry]
     ckpt.foreach(_.live.foreach(e => latest(e.file) = e))
     val floor = ckpt.map(_.version).getOrElse(-1L)
-    var segs = 0
-    if (ckpt.isEmpty) {
-      val leg = legacyEntries(dir)
-      if (leg.nonEmpty) segs += 1
-      leg.filter(_.version <= version).foreach(e => applyEntry(latest, e))
+    val tail = commitsBetween(dir, floor, version)
+    tail.foreach { case (_, f) =>
+      readEntryLines(f).foreach(e => applyEntry(latest, e))
     }
-    listVersioned(dir, CommitPrefix)
-      .filter { case (v, _) => v > floor && v <= version }
-      .foreach { case (_, f) =>
-        segs += 1
-        readEntryLines(f).foreach(e => applyEntry(latest, e))
-      }
     SnapshotPlan(latest.valuesIterator.filter(_.isAdd).toSeq,
-      ckpt.map(_.version), segs,
+      ckpt.map(_.version), tail.size,
       txns = latest.valuesIterator.filter(_.action == "txn").toSeq)
   }
 
@@ -875,14 +837,9 @@ object GraftLog {
     * (same rows, new layout), so a feed spanning a compaction never
     * double-counts. */
   def changedEntriesBetween(dir: String, fromVersion: Long,
-      toVersion: Long): Seq[LogEntry] = {
-    val leg = legacyEntries(dir).filter(e =>
-      e.version > fromVersion && e.version <= toVersion)
-    val tail = listVersioned(dir, CommitPrefix)
-      .filter { case (v, _) => v > fromVersion && v <= toVersion }
-      .flatMap { case (_, f) => readEntryLines(f) }
-    (leg ++ tail).filter(e => e.isAdd && e.dataChange)
-  }
+      toVersion: Long): Seq[LogEntry] =
+    entriesBetween(dir, fromVersion, toVersion)
+      .filter(e => e.isAdd && e.dataChange)
 
   /** Parse a manifest stat pair, None when absent OR unparseable
     * (NaN/Infinity stats from a frozen writer compare) — consumers
@@ -917,20 +874,20 @@ object GraftLog {
     * dataChange=false adds) stay replayable — they change no visible
     * rows. O(span) commit-file walk. */
   def spanHasNonAppendChanges(dir: String, fromVersion: Long,
-      toVersion: Long): Boolean = {
-    val leg = legacyEntries(dir).filter(e =>
-      e.version > fromVersion && e.version <= toVersion)
-    val tail = listVersioned(dir, CommitPrefix)
-      .filter { case (v, _) => v > fromVersion && v <= toVersion }
-      .flatMap { case (_, f) => readEntryLines(f) }
-    (leg ++ tail).groupBy(_.version).values.exists { es =>
-      val removes = es.exists(_.action == "remove")
-      // ANY dv action counts — a CLEARING dv (restore resurrecting
-      // DV'd rows) changes visible rows just like an assignment
-      val dvTouched = es.exists(_.action == "dv")
-      val dataAdds = es.exists(e => e.isAdd && e.dataChange)
-      dvTouched || (removes && (dataAdds || !es.exists(_.isAdd)))
-    }
+      toVersion: Long): Boolean =
+    entriesBetween(dir, fromVersion, toVersion).groupBy(_.version)
+      .values.exists(changesBeyondAppends)
+
+  /** The rule behind [[spanHasNonAppendChanges]] for ONE version's
+    * entries: removes paired with dataChange adds or with no adds at
+    * all, or any deletion-vector action. */
+  private def changesBeyondAppends(es: Seq[LogEntry]): Boolean = {
+    val removes = es.exists(_.action == "remove")
+    // ANY dv action counts — a CLEARING dv (restore resurrecting
+    // DV'd rows) changes visible rows just like an assignment
+    val dvTouched = es.exists(_.action == "dv")
+    val dataAdds = es.exists(e => e.isAdd && e.dataChange)
+    dvTouched || (removes && (dataAdds || !es.exists(_.isAdd)))
   }
 
   /** TRUE when version `v` changed visible rows beyond appends
@@ -940,14 +897,8 @@ object GraftLog {
     * would re-deliver carried rows as inserts. A typed consumer must
     * re-seed from the snapshot at `v` instead. */
   def versionLacksCdcCoverage(dir: String, v: Long): Boolean = {
-    val es = (legacyEntries(dir) ++ listVersioned(dir, CommitPrefix)
-      .filter(_._1 == v).flatMap { case (_, f) => readEntryLines(f) })
-      .filter(_.version == v)
-    if (es.exists(_.action == "cdc")) return false
-    val removes = es.exists(_.action == "remove")
-    val dvTouched = es.exists(_.action == "dv")
-    val dataAdds = es.exists(e => e.isAdd && e.dataChange)
-    dvTouched || (removes && (dataAdds || !es.exists(_.isAdd)))
+    val es = entriesBetween(dir, v - 1, v)
+    !es.exists(_.action == "cdc") && changesBeyondAppends(es)
   }
 
   /** Typed change feed: the TSV column carrying each CDC row's change
@@ -972,19 +923,13 @@ object GraftLog {
     * never touch existing rows). Same O(span) commit-file walk as
     * [[changedEntriesBetween]]. */
   def typedChangedEntriesBetween(dir: String, fromVersion: Long,
-      toVersion: Long): Seq[LogEntry] = {
-    val leg = legacyEntries(dir).filter(e =>
-      e.version > fromVersion && e.version <= toVersion)
-    val tail = listVersioned(dir, CommitPrefix)
-      .filter { case (v, _) => v > fromVersion && v <= toVersion }
-      .flatMap { case (_, f) => readEntryLines(f) }
-    (leg ++ tail).groupBy(_.version).toSeq.sortBy(_._1)
-      .flatMap { case (_, es) =>
+      toVersion: Long): Seq[LogEntry] =
+    entriesBetween(dir, fromVersion, toVersion).groupBy(_.version).toSeq
+      .sortBy(_._1).flatMap { case (_, es) =>
         val cdc = es.filter(_.action == "cdc")
         if (cdc.nonEmpty) cdc
         else es.filter(e => e.isAdd && e.dataChange)
       }
-  }
 
   /** Typed change feed as a DataFrame: the table schema plus
     * [[ChangeTypeCol]] ∈ insert | update_preimage | update_postimage
@@ -1038,14 +983,14 @@ object GraftLog {
     * axis a downstream applier walks. O(span) name listing. */
   def versionsBetween(dir: String, fromVersion: Long,
       toVersion: Long): Seq[Long] =
-    (legacyEntries(dir).map(_.version) ++
-      listVersioned(dir, CommitPrefix).map(_._1))
-      .filter(v => v > fromVersion && v <= toVersion).distinct.sorted
+    commitsBetween(dir, fromVersion, toVersion).map(_._1)
 
   /** Write `changes` (full table schema + [[ChangeTypeCol]]) as CDC
     * sidecar files in `dir`, returning their manifest entries at
     * version -1 for the caller's [[commitNew]] — sidecars and the
-    * row-level commit they describe become visible atomically. */
+    * row-level commit they describe become visible atomically. Each
+    * file is only moved, so its entry keeps the writer's exact
+    * [[RawBytesKey]] size for the typed-feed scan's CBO estimate. */
   private def stageCdc(spark: org.apache.spark.sql.SparkSession,
       dir: String, changes: org.apache.spark.sql.DataFrame): Seq[LogEntry] = {
     val scratch = s"$dir/__cdc-${UUID.randomUUID()}"
@@ -1056,7 +1001,7 @@ object GraftLog {
       val cdcName = CdcPrefix + e.file.stripPrefix("part-")
       Files.move(Paths.get(scratch, e.file), Paths.get(dir, cdcName))
       LogEntry(-1L, "cdc", cdcName, e.rows, dataChange = false,
-        Map.empty, cols = e.cols)
+        e.stats.filter(_._1 == RawBytesKey), cols = e.cols)
     }
     Option(new File(scratch).listFiles()).getOrElse(Array.empty)
       .foreach(_.delete())
@@ -1064,18 +1009,13 @@ object GraftLog {
     out
   }
 
-  /** Newest committed version — filename listing only for commit-file
-    * tables; a legacy flat manifest is parsed only when no commit
-    * file supersedes it. */
+  /** Newest committed version — filename listing only. */
   def currentVersion(dir: String): Long = {
     val cv = listVersioned(dir, CommitPrefix).lastOption
       .map(_._1).getOrElse(-1L)
     val kv = listVersioned(dir, CheckpointPrefix).lastOption
       .map(_._1).getOrElse(-1L)
-    val lv = if (cv < 0 && kv < 0)
-      legacyEntries(dir).map(_.version).maxOption.getOrElse(-1L)
-    else -1L
-    math.max(math.max(cv, kv), lv)
+    math.max(cv, kv)
   }
 
   def nextVersion(dir: String): Long = currentVersion(dir) + 1
@@ -1087,12 +1027,8 @@ object GraftLog {
     val ckpt = listVersioned(dir, CheckpointPrefix).lastOption
     val floor = ckpt.map(_._1).getOrElse(-1L)
     val base = ckpt.map { case (v, f) => readCheckpoint(v, f).maxTs }
-    val tailTs = listVersioned(dir, CommitPrefix)
-      .filter(_._1 > floor)
-      .flatMap { case (_, f) => readEntryLines(f) }.map(_.ts)
-    val legTs = if (ckpt.isEmpty) legacyEntries(dir).map(_.ts)
-      else Seq.empty
-    (base.toSeq ++ tailTs ++ legTs).maxOption.getOrElse(-1L)
+    val tailTs = entriesBetween(dir, floor, Long.MaxValue).map(_.ts)
+    (base.toSeq ++ tailTs).maxOption.getOrElse(-1L)
   }
 
   /** Optimistic cross-process commit: serialize the next version's
@@ -1229,8 +1165,8 @@ object GraftLog {
     * expire-snapshots for the metadata side): delete every commit
     * file at-or-below the newest checkpoint at-or-below
     * `beforeVersion` — that checkpoint subsumes them for planning any
-    * version from its own upward — plus all older checkpoints and the
-    * legacy flat manifest. This BOUNDS total log size forever:
+    * version from its own upward — plus all older checkpoints. This
+    * BOUNDS total log size forever:
     * retained metadata is one checkpoint (O(live files)) plus the
     * commit tail. The trade is documented and loud: time travel below
     * the pivot checkpoint now throws (see [[snapshotAsOf]]'s horizon
@@ -1246,22 +1182,19 @@ object GraftLog {
         val commits = listVersioned(dir, CommitPrefix)
           .filter(_._1 <= pivot)
         val older = ckpts.filter(_._1 < pivot)
-        val legacy =
-          Option(new File(dir, ManifestFile)).filter(_.exists()).toSeq
-        (commits.map(_._2) ++ older.map(_._2) ++ legacy)
-          .foreach(_.delete())
-        commits.size + older.size + legacy.size
+        (commits.map(_._2) ++ older.map(_._2)).foreach(_.delete())
+        commits.size + older.size
     }
   }
 
   /** Oldest version the retained log can still reconstruct: 0 while
-    * the full history (legacy manifest or `_commit.0`) survives, else
-    * the oldest remaining checkpoint. -1 = empty table (no horizon
-    * to violate). */
+    * the full history (`_commit.0`) survives, else the oldest
+    * remaining checkpoint. -1 = empty table (no horizon to violate).
+    * Every snapshot read passes here, so this is where a flat-manifest
+    * table is rejected. */
   def oldestReplayableVersion(dir: String): Long = {
-    val hasFull = new File(dir, ManifestFile).exists() ||
-      listVersioned(dir, CommitPrefix).headOption.exists(_._1 == 0L)
-    if (hasFull) 0L
+    requireCommitLayout(dir)
+    if (listVersioned(dir, CommitPrefix).headOption.exists(_._1 == 0L)) 0L
     else {
       val floors = listVersioned(dir, CheckpointPrefix).map(_._1) ++
         listVersioned(dir, CommitPrefix).map(_._1)
@@ -1756,12 +1689,11 @@ object GraftLog {
   }
 
   /** Overwrite semantics: a truncate resets the table to a NEW lineage
-    * (version 0) — all commit files, checkpoints, and any legacy
-    * manifest are retired. */
+    * (version 0) — all commit files and checkpoints are retired. */
   /** Wipe the version lineage for an overwrite. Deletion order is
-    * NEWEST-first (checkpoints, then commits descending, the legacy
-    * manifest last) so any crash mid-reset leaves a CONSISTENT older
-    * snapshot — an unordered delete could drop `_commit.0` first and
+    * NEWEST-first (checkpoints, then commits descending) so any crash
+    * mid-reset leaves a CONSISTENT older snapshot — an unordered
+    * delete could drop `_commit.0` first and
     * leave a tail whose removes dangle and whose horizon guard passes,
     * a silently corrupt replay. The overwrite itself stays non-atomic
     * across the reset→commit pair (a crash between them leaves an
@@ -1783,7 +1715,6 @@ object GraftLog {
       .sortBy(f => -versionOf(f, CheckpointPrefix)).foreach(_.delete())
     files.filter(_.getName.startsWith(CommitPrefix))
       .sortBy(f => -versionOf(f, CommitPrefix)).foreach(_.delete())
-    files.filter(_.getName == ManifestFile).foreach(_.delete())
     // Version-anchored side state dies WITH the lineage it indexed
     // (ADVICE r9): a ref pinned at `gold=5` in the retired lineage
     // must not silently resolve against the new lineage once it
@@ -1912,13 +1843,9 @@ object GraftLog {
     // nothing to do when every group is already a single file
     if (groups.forall(_._2.size <= 1)) return 0
 
-    // Output files ROLL at a target uncompressed size: gzip'd TSV is
-    // not splittable, so a compacted file IS the read-parallelism
-    // granule — one unbounded 100 GB output per partition would
-    // serialize every future scan of that partition onto one task
-    // (parquet formats split by row group; a non-splittable format
-    // must bound at write time). Conf'able for tests; the default
-    // keeps small fixtures at one file per group.
+    // Output files ROLL at a target uncompressed size, so no group
+    // compacts into one unbounded 100 GB file. Conf'able for tests;
+    // the default keeps small fixtures at one file per group.
     // table property beats session conf beats default: layout policy
     // belongs to the table, not to whichever session runs maintenance
     val targetBytes = propertiesOf(dir).get("graft.compact.target-bytes")
@@ -1998,11 +1925,10 @@ object GraftLog {
       // current layout stream through unmodified.
       try {
         try entries.foreach { e =>
-          val fileCols = if (e.cols.nonEmpty) e.cols else curCols
           val remap: Option[Array[Int]] =
-            if (fileCols == curCols) None
+            if (e.cols == curCols) None
             else Some(schema.fields.map(f =>
-              fileCols.indexOf(
+              e.cols.indexOf(
                 GraftLog.fileLocalName(schema, e, f.name))).toArray)
           // materialize the file's deletion vector: DV'd ordinals are
           // dropped here and the compacted output carries no DV — the
@@ -2013,7 +1939,7 @@ object GraftLog {
             .getOrElse(Array.empty[Long])
           var dvPtr = 0
           var ord = -1L
-          val in = GraftLogReaderFactory.openLines(dir, e.file)
+          val in = GraftColFile.lineReader(new File(dir, e.file))
           try {
             var line = in.readLine()
             // EVERY line is a row — including the empty line a
@@ -3657,7 +3583,7 @@ class GraftLogStreamingWrite(dir: String, schema: StructType,
 
 case class GraftLogCommit(file: String, rows: Long,
     stats: Map[String, (String, String)] = Map.empty,
-    cols: Seq[String] = Seq.empty)
+    cols: Seq[String])
     extends WriterCommitMessage
 
 /** A partitioned writer task commits SEVERAL files (one per partition
@@ -4112,21 +4038,17 @@ class GraftLogScan(dir: String, tableSchema: StructType,
         val planned = files.filter(e => runtimeFilters.forall(f =>
           GraftLogScan.mayMatch(tableSchema, e, f)))
         cowPlanHook.foreach(_(planned.map(_.file)))
-        // gcol parts SPLIT into byte ranges (driver-side planning has
-        // the session; one stat call per file, same as the stats
-        // estimate). DV'd files split too — DV ordinals are global and
-        // every block's first ordinal is in the footer. Legacy .tsv.gz
-        // parts stay one-task-per-file (gzip is not seekable).
+        // parts SPLIT into byte ranges (driver-side planning has the
+        // session; one stat call per file). DV'd files split too — DV
+        // ordinals are global and every block's first ordinal is in
+        // the footer.
         val splitBytes: Long = GraftLog.byteConf(
           "spark.graft.log.splitBytes",
           GraftLog.byteConf("spark.sql.files.maxPartitionBytes",
             134217728L))
         planned.flatMap { e =>
           val dv = GraftLog.dvOf(e).map(_._1)
-          val size =
-            if (GraftColFile.isCol(e.file))
-              new File(dir, e.file).length()
-            else 0L
+          val size = new File(dir, e.file).length()
           if (size > splitBytes) {
             // splits-per-file capped: a degenerate conf must not
             // overflow the Int partition count (negative count would
@@ -4157,8 +4079,8 @@ class GraftLogScan(dir: String, tableSchema: StructType,
       typed = typedCdf)
 
   /** CBO statistics from the manifest (post-skipping): row counts come
-    * straight from the entries, bytes from the kept files' on-disk
-    * sizes scaled by a gzip-expansion factor. This is what lets
+    * straight from the entries, bytes from the writer-stamped exact
+    * uncompressed size each entry carries. This is what lets
     * Catalyst auto-broadcast a small log table in a join — without it
     * every graft-log join side defaults to "unknown = huge" and pays a
     * shuffle even when one side is a 100-row dimension. Stats shrink
@@ -4168,16 +4090,11 @@ class GraftLogScan(dir: String, tableSchema: StructType,
     private val known = files.forall(_.rows >= 0L)
     private val rowCount =
       files.map(e => math.max(GraftLog.effectiveRows(e), 0L)).sum
-    // exact raw size from the writer-stamped manifest stat when
-    // present (gcol parts), the on-disk-times-expansion guess only
-    // for legacy stat-less parts — CBO's broadcast decision reads
-    // this, and "exact" vs "4x guess" flips plans near the threshold
-    private val bytes = files.map(e =>
-      e.stats.get(GraftLog.RawBytesKey)
-        .flatMap(v => scala.util.Try(v._1.toLong).toOption)
-        .getOrElse(
-          new File(dir, e.file).length() * GraftLogScan.GzipExpansion))
-      .sum
+    // every add and cdc entry carries its file's exact raw size —
+    // CBO's broadcast decision reads this, so plans near the
+    // threshold are decided on real numbers
+    private val bytes =
+      files.map(_.stats(GraftLog.RawBytesKey)._1.toLong).sum
     override def sizeInBytes(): java.util.OptionalLong =
       java.util.OptionalLong.of(math.max(bytes, 1L))
     override def numRows(): java.util.OptionalLong =
@@ -4341,11 +4258,6 @@ object GraftLogOffset {
 }
 
 object GraftLogScan {
-  /** In-memory expansion guess for gzip'd TSV (decompressed bytes per
-    * on-disk byte) — statistics need only the right order of
-    * magnitude to pick broadcast vs shuffle. */
-  val GzipExpansion = 4L
-
   /** A filter is usable for file skipping when it is a comparison on a
     * stats-bearing (numeric) top-level column, or an equality/IN on a
     * string column (pruned by the per-file bloom, when present). */
@@ -4372,8 +4284,8 @@ object GraftLogScan {
   }
 
   /** Conservative range check: false ONLY when the file's [min, max]
-    * cannot contain a matching row. Entries without stats always may
-    * match (legacy manifests). Comparison in BigDecimal so long stats
+    * cannot contain a matching row. An entry without a column's stats
+    * always may match on it. Comparison in BigDecimal so long stats
     * beyond 2^53 don't lose precision through a double detour. */
   def mayMatch(schema: StructType, e: LogEntry, rawF: Filter): Boolean = {
     // A file written before a RENAME COLUMN keyed its cells, stats,
@@ -4420,7 +4332,7 @@ object GraftLogScan {
       case In(a, _) => Some(a)
       case _ => None
     }
-    if (attr.exists(a => e.cols.nonEmpty && !e.cols.contains(a)))
+    if (attr.exists(a => !e.cols.contains(a)))
       return false
     // NULL comparison values match nothing (three-valued logic), but
     // deleteWhere routes raw convertible filters here — treat them as
@@ -4841,7 +4753,7 @@ object GraftLogNdv {
         // a pre-rename file keys the column's stats under its former
         // name — resolve before deciding the column is absent
         val local = GraftLog.fileLocalName(schema, e, f.name)
-        val absent = e.cols.nonEmpty && !e.cols.contains(local)
+        val absent = !e.cols.contains(local)
         val sketch =
           if (dv) None
           else if (absent) Some(new Array[Byte](M))
@@ -5087,15 +4999,14 @@ object GraftLogPartValue {
     }
 }
 
-/** `cols` = the file's own column list from its manifest entry (empty
-  * for pre-evolution entries: the file carries the full table schema).
-  * `start`/`length` bound a BYTE RANGE of a splittable (gcol) part: a
-  * block belongs to the task whose range contains its start offset
-  * (the parquet/FileScanRDD split rule), so a 10 GB part fans out over
+/** `cols` = the file's own column list from its manifest entry.
+  * `start`/`length` bound a BYTE RANGE of the part: a block belongs to
+  * the task whose range contains its start offset (the
+  * parquet/FileScanRDD split rule), so a 10 GB part fans out over
   * many tasks instead of serializing into one. The defaults read the
-  * whole file (non-splittable legacy parts, streaming, groups). */
+  * whole file (small parts, streaming, groups). */
 case class GraftLogPartition(dir: String, file: String,
-    cols: Seq[String] = Seq.empty, dvFile: Option[String] = None,
+    cols: Seq[String], dvFile: Option[String] = None,
     start: Long = 0L, length: Long = Long.MaxValue)
     extends InputPartition
 
@@ -5131,30 +5042,27 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
       s"unexpected partition $other")
   }
 
-  /** Projection map: required field → cell index in THIS FILE's line
-    * layout (the entry's own column list; pre-evolution entries carry
-    * the full table schema). -1 = the column post-dates the file: its
-    * rows read NULL, the schema-evolution contract. -2 = the `_file`
-    * metadata column, -3 = the `_pos` row ordinal: both served by the
-    * reader, never parsed from a cell. */
-  private def cellIndexOf(partCols: Seq[String]): (Array[Int], Int) = {
-    val fileCols: Seq[String] =
-      if (partCols.nonEmpty) partCols else tableSchema.fieldNames.toSeq
+  /** Projection map: required field → chunk index in THIS FILE's
+    * column layout (the entry's own column list). -1 = the column
+    * post-dates the file: its rows read NULL, the schema-evolution
+    * contract. -2 = the `_file` metadata column, -3 = the `_pos` row
+    * ordinal: both served by the reader, never parsed from a cell. */
+  private def cellIndexOf(fileCols: Seq[String]): Array[Int] = {
     // a file written before a RENAME COLUMN carries the column under
     // its recorded former name — resolve through the trail rather
     // than serving NULL for data the file does hold
     def indexOf(name: String): Int = fileCols.indexOf(name) match {
-      case -1 if partCols.nonEmpty =>
+      case -1 =>
         tableSchema.fields.find(_.name == name)
           .flatMap(f => GraftLog.formerNames(f).collectFirst {
             case fn if fileCols.contains(fn) => fileCols.indexOf(fn)
           }).getOrElse(-1)
       case i => i
     }
-    (required.fields.map(f =>
+    required.fields.map(f =>
       if (f.name == "_file" && !fileCols.contains("_file")) -2
       else if (f.name == "_pos" && !fileCols.contains("_pos")) -3
-      else indexOf(f.name)), fileCols.length)
+      else indexOf(f.name))
   }
 
   /** Vectorized read path — the contract Parquet's vectorized reader
@@ -5184,19 +5092,13 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
     })
     val BatchRows = 4096
 
-    /** Per-file batch filler: fills up to `max` rows into `vecs` from
-      * row 0, returns rows filled (0 = exhausted). Two shapes - the
-      * native gcol block cursor (decompresses ONLY projected chunks,
-      * honors the byte-range split, skips blocks whose footer stats
-      * refute a pushed filter) and the legacy line cursor for
-      * `.tsv(.gz)` parts. */
-    trait Cursor {
-      def fill(vecs: Array[OnHeapColumnVector], max: Int): Int
-      def close(): Unit
-    }
-
+    /** Per-file batch filler over the gcol blocks: fills up to `max`
+      * rows into `vecs` from row 0, returns rows filled (0 =
+      * exhausted). Decompresses ONLY projected chunks, honors the
+      * byte-range split, and skips blocks whose footer stats refute a
+      * pushed filter. */
     final class GcolCursor(f: String, partCols: Seq[String],
-        dv: Option[String], start: Long, length: Long) extends Cursor {
+        dv: Option[String], start: Long, length: Long) {
       private val file = new File(dir, f)
       private val ch = java.nio.channels.FileChannel.open(
         file.toPath, java.nio.file.StandardOpenOption.READ)
@@ -5206,7 +5108,7 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
       private val footer =
         try GraftColFile.readFooter(ch, file)
         catch { case e: Throwable => ch.close(); throw e }
-      private val idx: Array[Int] = cellIndexOf(partCols)._1
+      private val idx: Array[Int] = cellIndexOf(partCols)
       private val nChunks = footer.cols.length
       private val nameBytes = f.getBytes(StandardCharsets.UTF_8)
       private val dvArr: Array[Long] =
@@ -5221,8 +5123,7 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
         b.offset >= start && b.offset < rangeEnd &&
           (blockFilters.isEmpty || {
             val pseudo = LogEntry(-1L, "add", f, b.rows,
-              dataChange = true, b.stats,
-              cols = if (partCols.nonEmpty) partCols else footer.cols)
+              dataChange = true, b.stats, cols = partCols)
             blockFilters.forall(fl =>
               GraftLogScan.mayMatch(tableSchema, pseudo, fl))
           })
@@ -5347,8 +5248,7 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
         true
       }
 
-      override def fill(vecs: Array[OnHeapColumnVector],
-          max: Int): Int = {
+      def fill(vecs: Array[OnHeapColumnVector], max: Int): Int = {
         var r = 0
         while (r < max) {
           if (plainCells == null || rowIn >= blockRows) {
@@ -5425,107 +5325,19 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
         }
         r
       }
-      override def close(): Unit = ch.close()
-    }
-
-    final class LineCursor(f: String, cols: Seq[String],
-        dv: Option[String]) extends Cursor {
-      private val in = GraftLogReaderFactory.openLines(dir, f)
-      private val ixNc = cellIndexOf(cols)
-      private val idx: Array[Int] = ixNc._1
-      private val nCells = math.max(ixNc._2, 1)
-      private val bounds = new Array[Int](nCells + 2)
-      private val nameBytes = f.getBytes(StandardCharsets.UTF_8)
-      private val dvArr: Array[Long] =
-        dv.map(GraftLogDv.read(dir, _)).getOrElse(Array.empty)
-      private var dvPtr = 0
-      private var ord = -1L
-
-      /** Next non-DV'd line; null = done. `ord` always describes the
-        * line just returned. EVERY line counts as a row — an empty
-        * line IS a single-column empty-string cell (well-formed files
-        * never yield spurious empties), and skipping it would both
-        * drop the row and shift every later DV ordinal by one. */
-      private def readLine(): String = {
-        while (true) {
-          val l = in.readLine()
-          if (l == null) return null
-          ord += 1
-          if (dvPtr < dvArr.length && dvArr(dvPtr) == ord) dvPtr += 1
-          else return l
-        }
-        null // unreachable
-      }
-
-      override def fill(vecs: Array[OnHeapColumnVector],
-          max: Int): Int = {
-        var r = 0
-        var line = readLine()
-        while (line != null) {
-          // tab walk: cell ci spans (bounds(ci), bounds(ci+1))
-          var nt = 0; var i = 0
-          bounds(0) = -1
-          val len = line.length
-          while (i < len && nt < nCells) {
-            if (line.charAt(i) == '\t') { nt += 1; bounds(nt) = i }
-            i += 1
-          }
-          bounds(nt + 1) = len
-          val cellCount = nt + 1
-          var j = 0
-          while (j < tag.length) {
-            val ci = idx(j)
-            if (ci == -2) vecs(j).putByteArray(r, nameBytes)
-            else if (ci == -3) vecs(j).putLong(r, ord)
-            else if (ci < 0 || ci >= cellCount) vecs(j).putNull(r)
-            else {
-              val s = bounds(ci) + 1; val e = bounds(ci + 1)
-              if (e - s == 1 && line.charAt(s) == '\u0000')
-                vecs(j).putNull(r) // the null sentinel cell
-              else tag(j) match {
-                case 0 => vecs(j).putLong(r,
-                  java.lang.Long.parseLong(line, s, e, 10))
-                case 1 => vecs(j).putInt(r,
-                  java.lang.Integer.parseInt(line, s, e, 10))
-                case 2 => vecs(j).putDouble(r,
-                  java.lang.Double.parseDouble(line.substring(s, e)))
-                case _ => vecs(j).putByteArray(r,
-                  line.substring(s, e).getBytes(StandardCharsets.UTF_8))
-              }
-            }
-            j += 1
-          }
-          r += 1
-          if (r >= max) return r
-          line = readLine()
-        }
-        r
-      }
-      override def close(): Unit = in.close()
+      def close(): Unit = ch.close()
     }
 
     new PartitionReader[ColumnarBatch] {
       private var fi = 0
-      private var cur: Cursor = _
+      private var cur: GcolCursor = _
       private var batch: ColumnarBatch = _
 
       private def advance(): Boolean = {
         if (cur != null) return true
         if (fi >= files.size) return false
         val (f, cols, dv, start, length) = files(fi); fi += 1
-        cur =
-          if (GraftColFile.isCol(f))
-            new GcolCursor(f, cols, dv, start, length)
-          else {
-            // mirror the row path's guard: LineCursor has no range
-            // support, so a byte-range split reaching it would
-            // re-read the whole legacy file once PER split and
-            // silently duplicate rows N-fold
-            require(start == 0L && length == Long.MaxValue,
-              s"byte-range split of non-columnar part $f " +
-                s"($start+$length) — the line path cannot honor ranges")
-            new LineCursor(f, cols, dv)
-          }
+        cur = new GcolCursor(f, cols, dv, start, length)
         true
       }
 
@@ -5556,7 +5368,7 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     p match {
       case part: GraftLogPartition =>
-        fileReader(part.dir, part.file, part.cols, part.dvFile,
+        gcolRowReader(part.dir, part.file, part.cols, part.dvFile,
           part.start, part.length)
       // a partition-value group: chain its files through one reader
       case g: GraftLogGroupPartition =>
@@ -5568,7 +5380,7 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
               if (cur == null) {
                 if (i >= g.files.size) return false
                 val (f, cols, dv) = g.files(i)
-                cur = fileReader(g.dir, f, cols, dv)
+                cur = gcolRowReader(g.dir, f, cols, dv)
                 i += 1
               }
               if (cur.next()) return true
@@ -5581,22 +5393,6 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
         }
       case other => throw new IllegalArgumentException(
         s"unexpected partition $other")
-    }
-
-  private def fileReader(dir: String, file: String,
-      partCols: Seq[String], dvFile: Option[String],
-      start: Long = 0L,
-      length: Long = Long.MaxValue): PartitionReader[InternalRow] =
-    if (GraftColFile.isCol(file))
-      gcolRowReader(dir, file, partCols, dvFile, start, length)
-    else {
-      // a legacy line part has no sub-file structure to split on —
-      // a ranged partition reaching here would re-read the whole
-      // file per split and silently duplicate rows N-fold
-      require(start == 0L && length == Long.MaxValue,
-        s"byte-range split of non-columnar part $file " +
-          s"($start+$length) — the line path cannot honor ranges")
-      lineRowReader(dir, file, partCols, dvFile)
     }
 
   /** Row reader over the NATIVE gcol blocks — the streaming source's
@@ -5623,7 +5419,7 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
       if (length == Long.MaxValue) Long.MaxValue else start + length
     val footer = fullFooter.copy(blocks = fullFooter.blocks.filter(
       b => b.offset >= start && b.offset < rangeEnd))
-    val (cellIdx, _) = cellIndexOf(partCols)
+    val cellIdx = cellIndexOf(partCols)
     val nChunks = footer.cols.length
     val fileName = UTF8String.fromString(file)
     val dvArr: Array[Long] =
@@ -5700,90 +5496,4 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
       override def close(): Unit = ch.close()
     }
   }
-
-  private def lineRowReader(dir: String, file: String,
-      partCols: Seq[String],
-      dvFile: Option[String]): PartitionReader[InternalRow] = {
-    // ONE projection map for both read paths — cellIndexOf carries
-    // the schema-evolution and rename-trail resolution, so the row
-    // reader (the streaming source's path) serves renamed columns
-    // from pre-rename files exactly like the columnar batch path.
-    val (cellIdx, _) = cellIndexOf(partCols)
-    val fileName = UTF8String.fromString(file)
-    val dvArr: Array[Long] =
-      dvFile.map(GraftLogDv.read(dir, _)).getOrElse(Array.empty)
-    new PartitionReader[InternalRow] {
-      private val in = GraftLogReaderFactory.openLines(dir, file)
-      private var current: InternalRow = _
-      private var dvPtr = 0
-      private var ord = -1L
-      override def next(): Boolean = {
-        var line: String = null
-        var found = false
-        while (!found) {
-          line = in.readLine()
-          if (line == null) return false
-          // every line is a row (empty = single-column empty cell) —
-          // same ordinal contract as the vectorized and line cursors
-          ord += 1
-          if (dvPtr < dvArr.length && dvArr(dvPtr) == ord) dvPtr += 1
-          else found = true
-        }
-        val cells = line.split("\t", -1)
-        // Decode ONLY the projected columns — column pruning's payoff
-        // in a row format is skipped parsing (a columnar format would
-        // skip the I/O too; the scan-level contract is the same).
-        val vals = new Array[Any](required.fields.length)
-        var j = 0
-        while (j < vals.length) {
-          val ci = cellIdx(j)
-          if (ci == -2) { vals(j) = fileName; j += 1 }
-          else if (ci == -3) { vals(j) = java.lang.Long.valueOf(ord); j += 1 }
-          else {
-          // ci >= cells.length = a cols-less entry read under a WIDER
-          // schema (e.g. the typed feed's _change_type): NULL, same
-          // as the columnar path's bounds guard
-          val cell = if (ci < 0 || ci >= cells.length) GraftLog.NullCell
-            else cells(ci)
-          vals(j) =
-            if (cell == GraftLog.NullCell) null
-            else required.fields(j).dataType match {
-              case LongType => cell.toLong
-              case IntegerType => cell.toInt
-              case DoubleType => cell.toDouble
-              case StringType => UTF8String.fromString(cell)
-              case other => throw new IllegalArgumentException(
-                s"graft-log does not decode $other")
-            }
-          j += 1
-          }
-        }
-        current = new GenericInternalRow(vals)
-        true
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = in.close()
-    }
-  }
-}
-
-object GraftLogReaderFactory {
-  /** Line reader dispatching on extension: `.gcol` parts (current
-    * writer) reconstruct TSV lines from the columnar blocks, `.gz`
-    * parts (the pre-r10 writer) stream through GZIPInputStream, bare
-    * `.tsv` (legacy tables) read plain — mixed-vintage tables read
-    * file by file with no rewrite. */
-  def openLines(dir: String, file: String): TextLines =
-    if (GraftColFile.isCol(file))
-      GraftColFile.lineReader(new File(dir, file))
-    else {
-      val raw = Files.newInputStream(Paths.get(dir, file))
-      val in = if (file.endsWith(".gz")) new GZIPInputStream(raw) else raw
-      val br =
-        new BufferedReader(new InputStreamReader(in, StandardCharsets.UTF_8))
-      new TextLines {
-        override def readLine(): String = br.readLine()
-        override def close(): Unit = br.close()
-      }
-    }
 }

@@ -71,6 +71,21 @@ class CdfTypedSpec extends SparkSpec {
       .filter(col("_change_type") === "delete").count() == 0L)
   }
 
+  test("a typed-feed scan reports the exact size of its entries: " +
+      "CDC sidecars keep the writer's #raw stat") {
+    val dir = tmp(); mkTable(dir)
+    GraftLog.mergeUpsert(spark, dir, spark.range(5).selectExpr("id",
+      "id * 100 AS v"), "id")
+    val es = GraftLog.typedChangedEntriesBetween(dir, -1L, Long.MaxValue)
+    assert(es.exists(_.action == "cdc"), "the merge must publish sidecars")
+    val raw = es.map(_.stats(GraftLog.RawBytesKey)._1.toLong).sum
+    val scan = spark.read.format(Fmt).option("path", dir)
+      .option("changesFromVersion", "-1")
+      .option("readChangeFeed", "true").load()
+    val sz = scan.queryExecution.optimizedPlan.stats.sizeInBytes
+    assert(sz == BigInt(raw), s"sizeInBytes $sz != sum of #raw $raw")
+  }
+
   test("unconditional DELETE records every vanished row") {
     val dir = tmp(); mkTable(dir, n = 30)
     val v = GraftLog.currentVersion(dir)

@@ -95,42 +95,33 @@ class ColumnEvolutionSpec extends SparkSpec {
       (5L until 2000L).sum + (0L until 5L).map(_ + 50000).sum)
   }
 
-  test("drop guard scans checkpoints: a cols-less add that survives " +
-      "ONLY in a checkpoint still rejects the drop after expireLog") {
+  test("a cols-less add line is rejected at parse") {
     val dir = tmp()
     spark.range(0, 50).selectExpr("id", "id AS a").coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save()
-    spark.range(50, 100).selectExpr("id", "id AS a").coalesce(1)
-      .write.format(Fmt).option("path", dir).mode("append").save()
-    // doctor v0's add into a cols-less record (the legacy positional
-    // shape): blank the 7th TSV field of its entry lines
+    // blank the column record (the 7th TSV field) of v0's add — the
+    // positional shape no writer produces: reading it by position
+    // under a later schema would serve the wrong column's cells
     val c0 = new java.io.File(dir, f"_commit.${0L}%020d")
     val doctored = new String(
       java.nio.file.Files.readAllBytes(c0.toPath),
       java.nio.charset.StandardCharsets.UTF_8).linesIterator.map { l =>
         val cells = l.split("\t", -1)
-        if (cells.length >= 7 && cells(1) == "add") {
-          cells(6) = ""; cells.mkString("\t")
-        } else l
-      }.mkString("\n")
-    java.nio.file.Files.write(c0.toPath,
-      doctored.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // fold the doctored add into a checkpoint, then expire the
-    // commit files — it now lives ONLY inside the checkpoint
-    GraftLog.writeCheckpoint(dir, GraftLog.currentVersion(dir))
-    assert(GraftLog.expireLog(dir,
-      GraftLog.currentVersion(dir) + 1) > 0)
-    assert(GraftLog.entries(dir).forall(e =>
-      !(e.isAdd && e.cols.isEmpty)),
-      "precondition: no cols-less add visible outside the checkpoint")
-    // the guard must scan checkpoints too: narrowing the schema
-    // would shift the positional read of the checkpointed file
-    val e = intercept[IllegalArgumentException] {
-      GraftLog.dropColumn(dir, "a")
-    }
-    assert(e.getMessage.contains("no column record"))
-    // the table itself still reads fine — only the drop is blocked
-    assert(read(dir).count() == 100L)
+        if (cells(1) == "add") cells(6) = ""
+        cells.mkString("\t")
+      }.toSeq
+    java.nio.file.Files.write(c0.toPath, doctored.mkString("\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val addLine = doctored.find(_.split("\t", -1)(1) == "add").get
+    val e = intercept[IllegalArgumentException](
+      graft.sources.LogEntry.parse(addLine))
+    assert(e.getMessage.contains("no column record") &&
+      e.getMessage.contains(addLine), e.getMessage)
+    // every read of the table fails the same way — none is positional
+    val eSnap = intercept[IllegalArgumentException](
+      GraftLog.entriesAsOf(dir, Long.MaxValue))
+    assert(eSnap.getMessage.contains("no column record"))
+    intercept[Exception](read(dir).agg(sum(col("a"))).collect())
   }
 
   test("drop: the column vanishes, cells purge on compaction, and " +

@@ -10,8 +10,8 @@ import graft.sources.{GraftColFile, GraftLog}
 /** The gcol columnar part-file payload: multi-block round trips, byte-
   * range splitting (one big part fans out over tasks WITHOUT changing
   * the data), footer block stats (the in-file skipping index), global
-  * row ordinals under splits (deletion vectors / `_pos`), and mixed-
-  * vintage tables (legacy `.tsv.gz` parts beside gcol parts). */
+  * row ordinals under splits (deletion vectors / `_pos`), and loud
+  * failure on any part file that is not gcol. */
 class GcolSpec extends SparkSpec {
   private val Fmt = "graft.sources.GraftLogSource"
   private def tmp(): String =
@@ -137,39 +137,6 @@ class GcolSpec extends SparkSpec {
     assert(got.getLong(2) == keep.sum)
   }
 
-  test("mixed-vintage table: legacy tsv.gz parts read beside gcol parts") {
-    val dir = tmp()
-    spark.range(0, 100).toDF("id")
-      .withColumn("v", col("id").cast("double"))
-      .coalesce(1)
-      .write.format(Fmt).option("path", dir).mode("append").save()
-    // forge a legacy part: gzip TSV + a manifest entry for it, exactly
-    // what a pre-gcol writer left behind
-    val legacy = "part-legacy-0000.tsv.gz"
-    val gz = new java.util.zip.GZIPOutputStream(
-      java.nio.file.Files.newOutputStream(
-        java.nio.file.Paths.get(dir, legacy)))
-    gz.write((100 until 150).map(i => s"$i\t${i.toDouble}")
-      .mkString("\n").concat("\n").getBytes("UTF-8"))
-    gz.close()
-    GraftLog.append(dir,
-      Seq(graft.sources.GraftLogCommit(legacy, 50L,
-        Map("id" -> ("100", "149"), "v" -> ("100.0", "149.0")),
-        Seq("id", "v"))),
-      spark.read.format(Fmt).option("path", dir).load().schema,
-      truncate = false)
-    val back = spark.read.format(Fmt).option("path", dir).load()
-    assert(back.count() == 150L)
-    assert(back.agg(sum(col("id"))).head.getLong(0) ==
-      (0L until 150L).sum)
-    // compaction rewrites BOTH vintages into one current-layout gcol
-    assert(GraftLog.compact(dir) == 2)
-    val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
-    assert(live.size == 1 && GraftColFile.isCol(live.head.file))
-    assert(spark.read.format(Fmt).option("path", dir).load()
-      .agg(sum(col("id"))).head.getLong(0) == (0L until 150L).sum)
-  }
-
   test("dictionary encoding: low-NDV chunks go dict, high-NDV stay " +
       "plain, values identical") {
     val dir = tmp()
@@ -205,8 +172,7 @@ class GcolSpec extends SparkSpec {
       (0L until 50000L).filter(_ % 5 == 0).sum)
     // the line-reader shim (compaction / row reader path) decodes
     // dict chunks identically
-    val in = graft.sources.GraftLogReaderFactory.openLines(
-      dir, part.getName)
+    val in = GraftColFile.lineReader(part)
     val first = in.readLine(); in.close()
     assert(first == "0\t0.0\tt0\t0", s"unexpected first line: $first")
   }
@@ -234,8 +200,7 @@ class GcolSpec extends SparkSpec {
       (0L until 30000L).map(i => (i % 9) * 0.5).sum) < 1e-6)
     // the line shim renders each distinct's canonical text once —
     // identical to what the plain writer would have stored
-    val in = graft.sources.GraftLogReaderFactory.openLines(
-      dir, part.getName)
+    val in = GraftColFile.lineReader(part)
     val l0 = in.readLine(); val l1 = in.readLine(); in.close()
     assert(l0 == "0\t0.0" && l1 == "1\t0.5",
       s"unexpected lines: $l0 / $l1")
@@ -315,44 +280,6 @@ class GcolSpec extends SparkSpec {
     val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
     assert(live.forall(_.cols == Seq("id", "level", "weight")))
     checks()
-  }
-
-  test("a byte-range split of a LEGACY part fails loudly on BOTH " +
-      "read paths instead of duplicating rows") {
-    import graft.sources.{GraftLogPartition, GraftLogReaderFactory}
-    val dir = tmp()
-    // forge a legacy gzip-TSV part (the pre-gcol vintage)
-    val legacy = "part-legacy-0000.tsv.gz"
-    val gz = new java.util.zip.GZIPOutputStream(
-      java.nio.file.Files.newOutputStream(
-        java.nio.file.Paths.get(dir, legacy)))
-    gz.write((0 until 50).map(i => s"$i\t${i.toDouble}")
-      .mkString("\n").concat("\n").getBytes("UTF-8"))
-    gz.close()
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("v",
-        org.apache.spark.sql.types.DoubleType)))
-    // the planner never ranges non-gcol files today; this pins the
-    // LATENT path so a future planner change fails loudly, not by
-    // silently re-reading the whole file once per split
-    val rowFac = new GraftLogReaderFactory(schema, schema)
-    intercept[IllegalArgumentException] {
-      rowFac.createReader(GraftLogPartition(
-        dir, legacy, Seq("id", "v"), None, 10L, 100L))
-    }
-    val colFac =
-      new GraftLogReaderFactory(schema, schema, columnar = true)
-    val cr = colFac.createColumnarReader(GraftLogPartition(
-      dir, legacy, Seq("id", "v"), None, 10L, 100L))
-    intercept[IllegalArgumentException] { cr.next() }
-    // the full range still reads fine on both paths
-    val ok = rowFac.createReader(GraftLogPartition(
-      dir, legacy, Seq("id", "v"), None))
-    var n = 0
-    try while (ok.next()) n += 1 finally ok.close()
-    assert(n == 50)
   }
 
   test("task-wide write buffer cap: a partitioned task holding many " +
@@ -439,43 +366,37 @@ class GcolSpec extends SparkSpec {
   test("non-canonical numeric cells fall back to plain text, values " +
       "byte-preserved through compaction") {
     val dir = tmp()
-    spark.range(0, 100).toDF("id")
-      .withColumn("v", col("id").cast("double"))
+    spark.range(0, 100).selectExpr("id", "CAST(id AS INT) AS v")
       .coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save()
-    // forge a legacy tsv part whose numeric cells are NOT canonical
-    // renderings ('007' reparses to '7') — binary encoding would
-    // silently rewrite the cell text, so such chunks must stay plain
-    val gz = new java.util.zip.GZIPOutputStream(
-      java.nio.file.Files.newOutputStream(
-        java.nio.file.Paths.get(dir, "part-legacy-0001.tsv.gz")))
-    gz.write("007\t3.50\n200\t4.5\n".getBytes("UTF-8"))
-    gz.close()
-    GraftLog.append(dir,
-      Seq(graft.sources.GraftLogCommit("part-legacy-0001.tsv.gz", 2L,
-        Map.empty, Seq("id", "v"))),
-      spark.read.format(Fmt).option("path", dir).load().schema,
-      truncate = false)
-    // values read correctly from the mixed table
-    val back = spark.read.format(Fmt).option("path", dir).load()
-    assert(back.count() == 102L)
-    assert(back.filter(col("id") === 7L).count() == 2L) // 7 and '007'
-    // compaction streams the junk cells through the gcol writer: the
-    // id/v chunks containing them must NOT be binary (enc 0), while
-    // canonical-only blocks may binary-encode freely
+    // widening INT -> DOUBLE is metadata-only: the old file keeps its
+    // int cells ('7'), which are NOT the canonical DOUBLE rendering
+    // ('7.0') — binary encoding would silently rewrite the cell text,
+    // so a chunk holding them must stay plain
+    GraftLog.widenColumn(dir, "v",
+      org.apache.spark.sql.types.DoubleType)
+    spark.range(100, 200).selectExpr("id", "CAST(id AS DOUBLE) + 0.5 AS v")
+      .coalesce(1)
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    // compaction streams the int cells through the gcol writer under
+    // the DOUBLE type: the v chunk holding them must NOT be binary
+    // (enc 0), while the canonical id chunk may binary-encode freely
     assert(GraftLog.compact(dir) == 2)
     val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
     val footer = GraftColFile.readFooter(
       new File(dir, live.head.file))
-    // whichever block holds the junk rows is plain for both columns
     assert(footer.blocks.exists(b =>
-      b.encOf(footer.cols.indexOf("id")) == 0 &&
-        b.encOf(footer.cols.indexOf("v")) == 0),
+      b.encOf(footer.cols.indexOf("v")) == 0),
       footer.blocks.map(_.encs.toSeq).toString)
+    val lines = GraftColFile.lineReader(new File(dir, live.head.file))
+    val first = try lines.readLine() finally lines.close()
+    assert(first == "0\t0", s"cell text must survive as written: $first")
     val after = spark.read.format(Fmt).option("path", dir).load()
-    assert(after.count() == 102L)
+    assert(after.count() == 200L)
+    assert(after.filter(col("v") === 7.0).count() == 1L)
     assert(after.agg(sum(col("v"))).head.getDouble(0) ==
-      (0 until 100).map(_.toDouble).sum + 3.5 + 4.5)
+      (0 until 100).map(_.toDouble).sum +
+        (100 until 200).map(_ + 0.5).sum)
   }
 
   test("corrupt part files fail loudly with a descriptive error, " +
@@ -502,6 +423,30 @@ class GcolSpec extends SparkSpec {
         Option(e.getMessage).toSeq ++ msgs(e.getCause))
     assert(msgs(err).exists(m => m.contains("gcol")),
       s"expected a descriptive gcol error, got: ${msgs(err)}")
+    // a part that is not gcol at all (a gzip TSV file committed to the
+    // log) fails the same way on the batch and the streaming read
+    val tsv = tmp()
+    val tsvPart = "part-0000.tsv.gz"
+    val gz = new java.util.zip.GZIPOutputStream(
+      java.nio.file.Files.newOutputStream(
+        java.nio.file.Paths.get(tsv, tsvPart)))
+    gz.write((0 until 50).map(i => s"$i\n").mkString.getBytes("UTF-8"))
+    gz.close()
+    val idSchema = spark.range(1).schema
+    GraftLog.append(tsv, Seq(graft.sources.GraftLogCommit(tsvPart, 50L,
+      Map(GraftLog.RawBytesKey -> ("140", "n")), Seq("id"))),
+      idSchema, truncate = false)
+    val errBatch = intercept[org.apache.spark.SparkException] {
+      spark.read.format(Fmt).option("path", tsv).load()
+        .agg(sum(col("id"))).collect()
+    }
+    assert(msgs(errBatch).exists(_.contains("not a gcol file")),
+      msgs(errBatch))
+    val rowFac =
+      new graft.sources.GraftLogReaderFactory(idSchema, idSchema)
+    val errRow = intercept[IllegalArgumentException](rowFac.createReader(
+      graft.sources.GraftLogPartition(tsv, tsvPart, Seq("id"))))
+    assert(errRow.getMessage.contains("not a gcol file"))
   }
 
   test("eight concurrent lock-free appends all commit exactly once") {

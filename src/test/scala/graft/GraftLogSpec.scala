@@ -989,31 +989,43 @@ class GraftLogSpec extends SparkSpec {
     assert(back.filter(col("id") === 5).count() == 0)
   }
 
-  test("legacy ts-less manifest history is not backdated by new commits") {
-    val dir = tmp()
+  test("older log layouts are rejected loudly, never read as empty: " +
+      "a flat _manifest table and a 7-field commit line") {
+    import graft.sources.GraftLog
+    def commit0(dir: String) =
+      java.nio.file.Paths.get(dir, f"_commit.${0L}%020d")
+    // a flat-manifest table: the commit file's lines moved into
+    // `_manifest`, no commit files left
+    val flat = tmp()
     series(50).coalesce(1)
-      .write.format(Fmt).option("path", dir).mode("append").save()
-    // demote the commit file to a pre-ts 7-field flat `_manifest` —
-    // a genuine legacy-vintage table (flat manifest, no commit files)
-    val cPath = java.nio.file.Paths.get(dir,
-      f"_commit.${0L}%020d")
-    val mPath = java.nio.file.Paths.get(dir, "_manifest")
-    val legacy = new String(java.nio.file.Files.readAllBytes(cPath))
-      .linesIterator.map { l =>
-        val f = l.split("\t", -1); f.take(7).mkString("\t")
-      }.mkString("\n")
-    java.nio.file.Files.write(mPath, legacy.getBytes)
-    java.nio.file.Files.delete(cPath)
-    assert(graft.sources.GraftLog.versionTimestamps(dir)
-      .forall(_._2 == -1L))
-    // a new append stamps ITSELF, not the legacy version
-    series(20).coalesce(1)
-      .write.format(Fmt).option("path", dir).mode("append").save()
-    val vts = graft.sources.GraftLog.versionTimestamps(dir).toMap
-    assert(vts(0L) == -1L, "legacy version must keep its unknown stamp")
-    assert(vts(1L) > 0L, "the new commit must be stamped")
-    // unknown-age versions read as older than every stamped commit
-    assert(graft.sources.GraftLog.versionAtTimestamp(dir, vts(1L) - 1) == 0L)
+      .write.format(Fmt).option("path", flat).mode("append").save()
+    val mPath = java.nio.file.Paths.get(flat, "_manifest")
+    java.nio.file.Files.move(commit0(flat), mPath)
+    val eSnap = intercept[IllegalArgumentException](
+      GraftLog.entriesAsOf(flat, Long.MaxValue))
+    assert(eSnap.getMessage.contains(mPath.toString), eSnap.getMessage)
+    // history reads (t$history, TIMESTAMP AS OF, vacuum's referenced
+    // set) fail the same way
+    val eHist = intercept[IllegalArgumentException](
+      GraftLog.versionTimestamps(flat))
+    assert(eHist.getMessage.contains("_manifest"))
+    val eRead = intercept[Exception](readBack(flat).count())
+    def msgs(t: Throwable): Seq[String] =
+      Option(t).toSeq.flatMap(e =>
+        Option(e.getMessage).toSeq ++ msgs(e.getCause))
+    assert(msgs(eRead).exists(_.contains("_manifest")), msgs(eRead))
+    // a ts-less 7-field commit line: the parse names the line
+    val short = tmp()
+    series(50).coalesce(1)
+      .write.format(Fmt).option("path", short).mode("append").save()
+    val line7 = new String(java.nio.file.Files.readAllBytes(
+      commit0(short))).linesIterator.next().split("\t", -1)
+      .take(7).mkString("\t")
+    java.nio.file.Files.write(commit0(short), line7.getBytes)
+    val eLine = intercept[IllegalArgumentException](
+      GraftLog.entriesAsOf(short, Long.MaxValue))
+    assert(eLine.getMessage.contains("unparseable graft-log manifest " +
+      s"line: $line7"), eLine.getMessage)
   }
 
   test("copy-on-write delete drops the range, rewrites a file subset") {
@@ -1430,7 +1442,8 @@ class GraftLogSpec extends SparkSpec {
     val schema = readBack(dir).schema
     (0 until 110).foreach { i =>
       GraftLog.commitNew(dir, schema)(v =>
-        Seq(LogEntry.add(v, s"phantom-$i", 0L, Map.empty)))
+        Seq(LogEntry.add(v, s"phantom-$i", 0L, Map.empty,
+          cols = schema.fieldNames.toSeq)))
       GraftLog.commitNew(dir, schema)(v =>
         Seq(LogEntry.remove(v, s"phantom-$i")))
     }
@@ -1666,7 +1679,8 @@ class GraftLogSpec extends SparkSpec {
     // no snapshot ever plans them): checkpoints land every 10 commits
     (2 to 25).foreach { i =>
       GraftLog.commitNew(dir, schema)(v =>
-        Seq(LogEntry.add(v, s"ph-$i", 0L, Map.empty),
+        Seq(LogEntry.add(v, s"ph-$i", 0L, Map.empty,
+          cols = schema.fieldNames.toSeq),
           LogEntry.remove(v, s"ph-$i")))
     }
     def segs = new java.io.File(dir).listFiles()
@@ -1924,7 +1938,8 @@ class GraftLogSpec extends SparkSpec {
           if (latch.getCount > 0) {
             latch.countDown(); latch.await(10, TimeUnit.SECONDS)
           }
-          Seq(LogEntry.add(v, s"part-race-$tag", 1L, Map.empty))
+          Seq(LogEntry.add(v, s"part-race-$tag", 1L, Map.empty,
+            cols = schema.fieldNames.toSeq))
         }
         ()
       })
@@ -2198,7 +2213,8 @@ class GraftLogSpec extends SparkSpec {
     val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
       .filter(_.file.startsWith("part-")).take(1)
     GraftLog.appendToBranch(dir, "fix2",
-      live.map(e => graft.sources.GraftLogCommit(e.file, e.rows)),
+      live.map(e => graft.sources.GraftLogCommit(e.file, e.rows,
+        cols = e.cols)),
       graft.sources.GraftLog.storedSchema(dir).get)
     GraftLog.commitTxn(dir, s"branch:fix2@$fork2", 1L)
     val crash = intercept[IllegalStateException] {
