@@ -584,23 +584,9 @@ object GraftExtensions {
       // small lose their two sorts. Bounded by the advisory partition
       // size so a "small" build side is one AQE itself would coalesce.
       .config(
-        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.props.getOrElse("spark.graft.shjLocalMapThreshold", "64m"))
-      // AQE partition coalescing: keep Spark's default
-      // parallelismFirst=true. r16 set this false (guide §2.2 "fewer,
-      // larger reduce partitions"), which coalesces any shuffle under
-      // the 64 MB advisory size to ONE partition — and that serializes
-      // the per-round aggregates of the iterative queries: r17 A/B
-      // under the bench's own `.count()` action measured graph_pagerank
-      // 1.83 s (false) vs 0.91 s (true) min-of-4, graph_kcore_peel
-      // 1.10 vs 0.97, and the driver's r16 run regressed exactly the
-      // small-shuffle family (pagerank 0.68→2.24, window_rank_topk
-      // 0.14→0.52, dedup_exact 0.13→0.27). At 100 TB the flag is moot:
-      // post-shuffle partitions exceed the advisory size, so the
-      // coalescer never consults parallelismFirst there — false only
-      // changes (and hurt) the small-data regime. Kept overridable for
-      // cluster deployments that want byte-sized task counts.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.props.getOrElse("spark.graft.coalesceParallelismFirst",
-          "true"))
+        "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "64m")
+      // Spark's default coalescePartitions.parallelismFirst=true must
+      // stay: false coalesces every shuffle under the 64 MB advisory
+      // size to ONE partition, which serialized the iterative queries'
+      // per-round aggregates (r17: graph_pagerank 1.83 s vs 0.91 s).
 }

@@ -347,28 +347,9 @@ object Dedup {
   }
 
   val queries: Map[String, Q] = Map(
-    // Exact dedup: hash-aggregate on the full text.
-    // spark.graft.dedup.exactHash=true swaps the GROUP KEY for
-    // xxhash64(text) — the 100 TB shape: the map-side partial
-    // aggregate then shuffles 8 bytes per distinct document instead
-    // of the full text (collisions ~n²/2⁶⁴; a collision merges two
-    // distinct texts into one group — at 10¹² docs P[any] < 3%, and
-    // production pipelines pair this with a within-group verify at
-    // the consumer). Default OFF so the committed oracle groups on
-    // the exact key; DedupSpec pins row-identity of both forms.
-    "dedup_exact" -> ((s, d) => {
-      val byHash =
-        s.conf.getOption("spark.graft.dedup.exactHash").contains("true")
-      val key = if (byHash) xxhash64(col("text")) else col("text")
-      Tables.documents(s, d)
-        .groupBy(key.as("k"))
-        .agg(min(col("doc_id")).as("keep_id"),
-          count(lit(1)).as("n_copies"),
-          // all group members share one text (modulo 64-bit collision),
-          // so MIN(length) ≡ length of the group's text
-          min(length(col("text"))).as("text_len"))
-        .select(col("keep_id"), col("n_copies"), col("text_len"))
-    }),
+    // Exact dedup: hash-aggregate on xxhash64(text), the 100 TB shape
+    // (see exactDuplicates).
+    "dedup_exact" -> ((s, d) => exactDuplicates(s, d)),
 
     // MinHash LSH candidates verified by exact word-shingle Jaccard.
     // est_ok asserts the estimator is within 0.2 of truth on every
@@ -460,58 +441,8 @@ object Dedup {
 
     // Exact duplicated-SPAN detection (the substring-dedup class of
     // Lee et al. 2022, "Deduplicating Training Data Makes Language
-    // Models Better": near-dup docs share whole documents; copied
-    // boilerplate shares SPANS). Every overlapping 8-word window is a
-    // span key; a span occurring in ≥2 distinct documents marks each as
-    // carrying copied text. One token scan → window explode →
-    // per-doc-distinct spans → span-keyed count — the only shuffles are
-    // on span keys, never doc×doc. At 100 TB the span string is
-    // replaced by xxhash64(span) so the shuffle carries 8 bytes per
-    // window (collisions ~n²/2⁶⁴, negligible); the string form here
-    // keeps the DuckDB oracle exact.
-    "dedup_substring_spans" -> ((s, d) => {
-      // tokenization runs ABOVE the fanout exchange (parallel across
-      // the session's cores, not on the single pre-shuffle scan task)
-      // and the exploded span frame is materialized ONCE: it feeds
-      // BOTH the span aggregate and the probe join below, whose
-      // exchanges have different children (partial-agg vs bare
-      // project), so ReuseExchange cannot dedupe them — uncheckpointed,
-      // the dominant tokenize+window-explode pipeline ran twice.
-      //
-      // spark.graft.dedup.spanHash=true swaps the shuffled span key
-      // for xxhash64(span): ~8 bytes per window instead of the ~50-byte
-      // 8-word string, the 100 TB shape (collisions ~n²/2⁶⁴ — at 10¹²
-      // windows P[any] < 3%, and a collision only inflates one doc's
-      // span COUNT by 1, it cannot merge documents). Default OFF so
-      // the committed oracle stays bit-exact; row-set equality of both
-      // forms is pinned by DedupSpec at test SF.
-      val hashSpans =
-        s.conf.getOption("spark.graft.dedup.spanHash").contains("true")
-      val spanKey =
-        if (hashSpans) xxhash64(col("span0")) else col("span0")
-      val wins = fanout(Tables.documents(s, d)
-          .select(col("doc_id"), col("text")))
-        .select(col("doc_id"), Corpus.toksOf(col("text")).as("tk"))
-        .select(col("doc_id"),
-          explode(array_distinct(Corpus.wordGrams(col("tk"), 8)))
-            .as("span0"))
-        .select(col("doc_id"), spanKey.as("span"))
-        .localCheckpoint()
-      // Two exchanges of the span frame (the aggregate + the probe
-      // join) — measured ~2× over linear at 8×, and DELIBERATE: the
-      // single-shuffle alternative (collect_list(doc_id) per span,
-      // explode the survivors) materializes every span's full doc
-      // list in one task, so one viral span — boilerplate shared by
-      // millions of documents at 100 TB — blows task memory, while
-      // the join form streams it.
-      val shared = wins.groupBy(col("span"))
-        .agg(count(lit(1)).as("n_docs"))
-        .filter(col("n_docs") >= 2)
-      wins.join(shared, "span")
-        .groupBy(col("doc_id"))
-        .agg(count(lit(1)).as("n_dup_spans"),
-          max(col("n_docs")).as("max_span_spread"))
-    }),
+    // Models Better"; see substringSpans).
+    "dedup_substring_spans" -> ((s, d) => substringSpans(s, d)),
 
     // Hard-negative mining for contrastive training (DPR/E5-style
     // retrieval encoders): per anchor document, the most lexically
@@ -545,6 +476,82 @@ object Dedup {
           col("jaccard"))
     })
   )
+
+  /** `value`, or a loud failure when the group merged two distinct
+    * texts under one key. Each hashed group carries `h_min`/`h_max`,
+    * the extremes of its raw values' Murmur3 `hash` — independent of
+    * `xxhash64`, so a collision slipping past both needs a 64-bit and
+    * a 32-bit collision on the same pair. A silent merge would drop a
+    * document (exact) or invent a shared span (spans). */
+  private def collisionChecked(value: Column, what: String): Column =
+    when(col("h_min") =!= col("h_max"), raise_error(lit(
+      s"dedup: xxhash64 collision merged two distinct $what into one " +
+        "group; refusing to return merged rows")))
+      .otherwise(value)
+
+  /** dedup_exact: one row per distinct text with its lowest doc_id, copy
+    * count and length, grouped on `key(text)`. The query's `xxhash64`
+    * key is 8 bytes per document whatever its length, so the map-side
+    * partial aggregate shuffles hashes, never text (collisions ~n²/2⁶⁴,
+    * caught by [[collisionChecked]]). A test passes a deliberately
+    * colliding key to drive the check. */
+  def exactDuplicates(s: SparkSession, d: String,
+      key: Column => Column = xxhash64(_)): DataFrame =
+    Tables.documents(s, d)
+      .groupBy(key(col("text")).as("k"))
+      .agg(min(col("doc_id")).as("keep_id"),
+        count(lit(1)).as("n_copies"),
+        // all group members share one text, so MIN(length) is the
+        // length of the group's text
+        min(length(col("text"))).as("text_len"),
+        min(hash(col("text"))).as("h_min"),
+        max(hash(col("text"))).as("h_max"))
+      .select(collisionChecked(col("keep_id"), "texts").as("keep_id"),
+        col("n_copies"), col("text_len"))
+
+  /** dedup_substring_spans: every overlapping 8-word window is a span;
+    * a span occurring in >= 2 distinct documents marks each as carrying
+    * copied text. One token scan, window explode, per-doc-distinct
+    * spans, span-keyed count: the only shuffles are on span keys, never
+    * doc x doc, and the key is `key(span)` — `xxhash64` in the query,
+    * ~8 bytes per window instead of the ~50-byte 8-word string. */
+  def substringSpans(s: SparkSession, d: String,
+      key: Column => Column = xxhash64(_)): DataFrame = {
+    // tokenization runs ABOVE the fanout exchange (parallel across
+    // the session's cores, not on the single pre-shuffle scan task)
+    // and the exploded span frame is materialized ONCE: it feeds
+    // BOTH the span aggregate and the probe join below, whose
+    // exchanges have different children (partial-agg vs bare
+    // project), so ReuseExchange cannot dedupe them — uncheckpointed,
+    // the dominant tokenize+window-explode pipeline ran twice.
+    val wins = fanout(Tables.documents(s, d)
+        .select(col("doc_id"), col("text")))
+      .select(col("doc_id"), Corpus.toksOf(col("text")).as("tk"))
+      .select(col("doc_id"),
+        explode(array_distinct(Corpus.wordGrams(col("tk"), 8)))
+          .as("span0"))
+      .select(col("doc_id"), key(col("span0")).as("span"),
+        hash(col("span0")).as("span_h"))
+      .localCheckpoint()
+    // Two exchanges of the span frame (the aggregate + the probe
+    // join) — measured ~2× over linear at 8×, and DELIBERATE: the
+    // single-shuffle alternative (collect_list(doc_id) per span,
+    // explode the survivors) materializes every span's full doc
+    // list in one task, so one viral span — boilerplate shared by
+    // millions of documents at 100 TB — blows task memory, while
+    // the join form streams it. A collision puts two distinct spans
+    // in one group of >= 2 rows, so the count filter never hides it.
+    val shared = wins.groupBy(col("span"))
+      .agg(count(lit(1)).as("n_docs"),
+        min(col("span_h")).as("h_min"), max(col("span_h")).as("h_max"))
+      .filter(col("n_docs") >= 2)
+      .select(col("span"),
+        collisionChecked(col("n_docs"), "spans").as("n_docs"))
+    wins.join(shared, "span")
+      .groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_dup_spans"),
+        max(col("n_docs")).as("max_span_spread"))
+  }
 
   /** Shared by dedup_ngram_jaccard: character-5-gram Jaccard > 0.5 over
     * MinHash LSH candidate pairs. Gram sets are intersected as xxhash64

@@ -723,9 +723,9 @@ object Similarity {
     // only against the C nearest PRECEDING cell members in vec_id
     // order (a banded self-join on within-cell rank), bounding the
     // pair population to n·C — linear, at the cost of missing a dup
-    // whose witness sits further than C back in the cell. Same
-    // pattern as `spark.graft.dedup.spanHash`: default OFF so the
-    // committed DuckDB oracle replays the exact unbounded form;
+    // whose witness sits further than C back in the cell. Default
+    // OFF so the committed DuckDB oracle replays the exact unbounded
+    // form;
     // SimilaritySpec pins row-identity of both forms at a cap that
     // does not bind, and the monotone drop property at one that does.
     "dedup_semdedup" -> ((s, d) => {

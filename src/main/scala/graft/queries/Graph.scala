@@ -109,7 +109,7 @@ object Graph {
   /** Parse a Spark byte-string conf value ("64MB", "10485760");
     * negative / unparsable reads as -1 (the kill-switch sentinel). */
   private def bytesOf(v: String): Long = {
-    val t = if (v == null) "" else v.trim
+    val t = v.trim
     if (t.isEmpty || t.startsWith("-")) -1L
     else try org.apache.spark.network.util.JavaUtils
       .byteStringAsBytes(t)
@@ -119,8 +119,7 @@ object Graph {
   /** The broadcast budget for graph-shaped build sides, resolved in
     * order: 0 when the session's broadcast switch is off
     * (`autoBroadcastJoinThreshold = -1` stays an operational kill
-    * switch); the explicit `spark.graft.graph.broadcastBytes` when
-    * set; an EXPLICITLY-SET session threshold exactly as set (the
+    * switch); an EXPLICITLY-SET session threshold exactly as set (the
     * operator follows the user's sizing decision — the pin's 1 KB, a
     * production 256 MB, and a deliberately pinned 10 MB all count:
     * explicitness is read from the conf settings map via the shim,
@@ -135,12 +134,9 @@ object Graph {
     val sess = bytesOf(
       s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
     if (sess <= 0L) 0L
-    else Option(s.conf.get("spark.graft.graph.broadcastBytes", null))
-      .map(bytesOf).filter(_ > 0L)
-      .getOrElse(
-        if (org.apache.spark.sql.GraftPlanShim.isConfSet(s,
-            "spark.sql.autoBroadcastJoinThreshold")) sess
-        else 64L << 20)
+    else if (org.apache.spark.sql.GraftPlanShim.isConfSet(s,
+        "spark.sql.autoBroadcastJoinThreshold")) sess
+    else 64L << 20
   }
 
   /** STATS-DRIVEN broadcast hint: the caller passes an estimated

@@ -620,11 +620,9 @@ object Formats {
                  SELECT id, id FROM range(2000)""")
         s.sql("""CALL graftq.system.create_branch(
                  table => 'ns.brch_t', name => 'dev')""")
-        s.conf.set(GraftLog.BranchConf, "dev")
-        try
+        Tables.withConf(s, GraftLog.BranchConf, "dev")(
           s.sql("""INSERT INTO graftq.ns.brch_t
-                   SELECT id + 2000, id FROM range(500)""")
-        finally s.conf.unset(GraftLog.BranchConf)
+                   SELECT id + 2000, id FROM range(500)"""))
         val mainN = s.sql(
           "SELECT COUNT(*) FROM graftq.ns.brch_t").head.getLong(0)
         val v = s.sql("""CALL graftq.system.fast_forward(
@@ -732,14 +730,12 @@ object Formats {
         s.sql("CREATE TABLE graftq.ns.wap_t (id BIGINT, v BIGINT)")
         s.sql("""INSERT INTO graftq.ns.wap_t
                  SELECT id, id FROM range(0, 4000)""")
-        s.conf.set(GraftLog.WapConf, "r9audit")
-        val a =
-          try {
-            s.sql("""INSERT INTO graftq.ns.wap_t
-                     SELECT id + 4000, 1 FROM range(0, 1000)""")
-            s.sql("SELECT COUNT(*) FROM graftq.ns.wap_t")
-              .head.getLong(0)
-          } finally s.conf.unset(GraftLog.WapConf)
+        val a = Tables.withConf(s, GraftLog.WapConf, "r9audit") {
+          s.sql("""INSERT INTO graftq.ns.wap_t
+                   SELECT id + 4000, 1 FROM range(0, 1000)""")
+          s.sql("SELECT COUNT(*) FROM graftq.ns.wap_t")
+            .head.getLong(0)
+        }
         val base = s.sql("SELECT COUNT(*) FROM graftq.ns.wap_t")
           .head.getLong(0)
         s.sql("""CALL graftq.system.publish_staged(
@@ -847,9 +843,9 @@ object Formats {
           .coalesce(1)
           .write.format("graft.sources.GraftLogSource")
           .option("path", dir).mode("append").save())
-        s.conf.set("spark.graft.log.compactTargetBytes", "15000")
-        try GraftLog.compact(dir)
-        finally s.conf.unset("spark.graft.log.compactTargetBytes")
+        GraftLog.setProperties(dir,
+          Map("graft.compact.target-bytes" -> "15000"))
+        GraftLog.compact(dir)
       }
       val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
       s.read.format("graft.sources.GraftLogSource")
@@ -2194,20 +2190,15 @@ object Formats {
     val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
     val ready = live.size == 1 && GraftColFile.isCol(live.head.file) &&
       live.head.rows == 500000L && live.head.cols.contains("tag")
-    if (!ready) {
-      val prior = s.conf.getOption("spark.graft.log.blockBytes")
-      s.conf.set("spark.graft.log.blockBytes", (64L << 10).toString)
-      // tag: 7 distinct values — every block dictionary-encodes it,
-      // so the dict decode path sits under the DuckDB oracle too
-      try s.range(0, 500000).selectExpr("id", "id * 3 AS v",
+    // tag: 7 distinct values — every block dictionary-encodes it, so
+    // the dict decode path sits under the DuckDB oracle too
+    if (!ready) Tables.withConf(s, "spark.graft.log.blockBytes",
+        (64L << 10).toString) {
+      s.range(0, 500000).selectExpr("id", "id * 3 AS v",
           "concat('t', id % 7) AS tag")
         .coalesce(1)
         .write.format("graft.sources.GraftLogSource")
         .option("path", dir).mode("overwrite").save()
-      finally prior match {
-        case Some(v) => s.conf.set("spark.graft.log.blockBytes", v)
-        case None => s.conf.unset("spark.graft.log.blockBytes")
-      }
     }
     dir
   }
@@ -2222,21 +2213,15 @@ object Formats {
     * Closes ADVICE r9: no query fixture may leak a planner conf into
     * the shared bench/verify session (order-independence). */
   private def withConfMaterialized(s: SparkSession, key: String,
-      value: String)(body: => DataFrame): DataFrame = {
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, value)
-    try {
+      value: String)(body: => DataFrame): DataFrame =
+    Tables.withConf(s, key, value) {
       val df = body
       val rows = df.collect().toIndexedSeq
       s.createDataFrame(
         new java.util.ArrayList[org.apache.spark.sql.Row](
           scala.jdk.CollectionConverters.SeqHasAsJava(rows).asJava),
         df.schema)
-    } finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
     }
-  }
 
   /** Shared catalog warehouse root for the SQL fixtures (conf set as a
     * side effect). The version suffix is bumped whenever the on-disk

@@ -653,11 +653,39 @@ object GraftLog {
     * [[currentVersion]] an O(1)-reads operation. */
   private def listVersioned(dir: String,
       prefix: String): Seq[(Long, File)] =
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(prefix) &&
+    versioned(listDir(dir), prefix)
+
+  private def listDir(dir: String): Seq[File] =
+    Option(new File(dir).listFiles()).getOrElse(Array.empty[File]).toSeq
+
+  private def versioned(files: Seq[File],
+      prefix: String): Seq[(Long, File)] =
+    files.filter(f => f.getName.startsWith(prefix) &&
         !f.getName.contains(".tmp."))
       .map(f => f.getName.substring(prefix.length).toLong -> f)
-      .sortBy(_._1).toSeq
+      .sortBy(_._1)
+
+  /** A table's commit and checkpoint files from ONE directory listing,
+    * each version-ascending. */
+  private case class LogListing(commits: Seq[(Long, File)],
+      checkpoints: Seq[(Long, File)]) {
+    /** See [[oldestReplayableVersion]]. */
+    def oldestReplayable: Long =
+      (commits ++ checkpoints).map(_._1).minOption.getOrElse(-1L)
+  }
+
+  /** The flat `_manifest` file of the pre-commit-file layout is no
+    * longer read. A table that still has one fails here, on every
+    * snapshot and history read, instead of reading as empty — an empty
+    * history would also leave vacuum with no referenced part files. */
+  private def listLog(dir: String): LogListing = {
+    val files = listDir(dir)
+    require(!files.exists(_.getName == "_manifest"),
+      s"${new File(dir, "_manifest")}: graft-log no longer reads the " +
+        "flat-manifest table layout")
+    LogListing(versioned(files, CommitPrefix),
+      versioned(files, CheckpointPrefix))
+  }
 
   private def readEntryLines(f: File): Seq[LogEntry] =
     new String(Files.readAllBytes(f.toPath), StandardCharsets.UTF_8)
@@ -676,16 +704,6 @@ object GraftLog {
       toVersion: Long): Seq[LogEntry] =
     commitsBetween(dir, fromVersion, toVersion)
       .flatMap { case (_, f) => readEntryLines(f) }
-
-  /** The flat `_manifest` file of the pre-commit-file layout is no
-    * longer read. A table that still has one fails here, on every
-    * snapshot and history read, instead of reading as empty — an empty
-    * history would also leave vacuum with no referenced part files. */
-  private def requireCommitLayout(dir: String): Unit = {
-    val m = new File(dir, "_manifest")
-    require(!m.exists(),
-      s"$m: graft-log no longer reads the flat-manifest table layout")
-  }
 
   private case class Checkpoint(version: Long, maxTs: Long,
       live: Seq[LogEntry])
@@ -711,10 +729,8 @@ object GraftLog {
     * resolution, vacuum's referenced set. Snapshot PLANNING never
     * calls this; it goes through [[snapshotAsOf]]'s checkpoint+tail
     * read. */
-  def entries(dir: String): Seq[LogEntry] = {
-    requireCommitLayout(dir)
-    entriesBetween(dir, -1L, Long.MaxValue)
-  }
+  def entries(dir: String): Seq[LogEntry] =
+    listLog(dir).commits.flatMap { case (_, f) => readEntryLines(f) }
 
   /** Live data files at the current version (removes applied). */
   def committedFiles(dir: String): Seq[String] =
@@ -758,19 +774,19 @@ object GraftLog {
     // Horizon guard: replaying a version below everything the
     // retained log covers (history expired by [[expireLog]]) must
     // fail loudly, not return a silently empty snapshot.
-    val oldest = oldestReplayableVersion(dir)
+    val log = listLog(dir)
+    val oldest = log.oldestReplayable
     if (oldest > 0L && version < oldest)
       throw new IllegalArgumentException(
         s"version $version of $dir predates the retained log " +
           s"(oldest replayable: $oldest — history was expired)")
-    val ckpt = listVersioned(dir, CheckpointPrefix)
-      .filter(_._1 <= version).lastOption
+    val ckpt = log.checkpoints.filter(_._1 <= version).lastOption
       .map { case (v, f) => readCheckpoint(v, f) }
     val latest =
       scala.collection.mutable.LinkedHashMap.empty[String, LogEntry]
     ckpt.foreach(_.live.foreach(e => latest(e.file) = e))
     val floor = ckpt.map(_.version).getOrElse(-1L)
-    val tail = commitsBetween(dir, floor, version)
+    val tail = log.commits.filter { case (v, _) => v > floor && v <= version }
     tail.foreach { case (_, f) =>
       readEntryLines(f).foreach(e => applyEntry(latest, e))
     }
@@ -1011,11 +1027,9 @@ object GraftLog {
 
   /** Newest committed version — filename listing only. */
   def currentVersion(dir: String): Long = {
-    val cv = listVersioned(dir, CommitPrefix).lastOption
-      .map(_._1).getOrElse(-1L)
-    val kv = listVersioned(dir, CheckpointPrefix).lastOption
-      .map(_._1).getOrElse(-1L)
-    math.max(cv, kv)
+    val log = listLog(dir)
+    (log.commits.lastOption ++ log.checkpoints.lastOption).map(_._1)
+      .maxOption.getOrElse(-1L)
   }
 
   def nextVersion(dir: String): Long = currentVersion(dir) + 1
@@ -1189,18 +1203,9 @@ object GraftLog {
 
   /** Oldest version the retained log can still reconstruct: 0 while
     * the full history (`_commit.0`) survives, else the oldest
-    * remaining checkpoint. -1 = empty table (no horizon to violate).
-    * Every snapshot read passes here, so this is where a flat-manifest
-    * table is rejected. */
-  def oldestReplayableVersion(dir: String): Long = {
-    requireCommitLayout(dir)
-    if (listVersioned(dir, CommitPrefix).headOption.exists(_._1 == 0L)) 0L
-    else {
-      val floors = listVersioned(dir, CheckpointPrefix).map(_._1) ++
-        listVersioned(dir, CommitPrefix).map(_._1)
-      floors.minOption.getOrElse(-1L)
-    }
-  }
+    * remaining checkpoint. -1 = empty table (no horizon to violate). */
+  def oldestReplayableVersion(dir: String): Long =
+    listLog(dir).oldestReplayable
 
   // ---- named refs (tags): human-named pins into the version log ----
   // `VERSION AS OF 'gold'` instead of a raw number — the Iceberg
@@ -1254,9 +1259,9 @@ object GraftLog {
   // TBLPROPERTIES, stored as one `_properties` file (k=v lines,
   // atomic replace). Properties are metadata-plane configuration —
   // the table-level override axis Delta/Iceberg use for maintenance
-  // policy; `graft.compact.target-bytes` is consulted by [[compact]]
-  // ahead of the session conf, so a table's layout policy travels
-  // with the table, not the session that happens to run maintenance.
+  // policy; `graft.compact.target-bytes` sets [[compact]]'s output
+  // size, so a table's layout policy travels with the table, not the
+  // session that happens to run maintenance.
   val PropsFile = "_properties"
 
   /** Lineage identity: a fresh UUID stamped by every overwrite — the
@@ -1746,9 +1751,13 @@ object GraftLog {
     * Returns the deleted names. */
   def vacuum(dir: String, minAgeMs: Long = DefaultVacuumRetentionMs,
       expireHistory: Boolean = false): Seq[String] = synchronized {
-    val ckptLive =
-      if (expireHistory) Seq.empty
-      else listVersioned(dir, CheckpointPrefix)
+    val history = entries(dir)
+    // the files the kept history names: the current snapshot under
+    // expireHistory; else all of history plus the checkpoint live
+    // sets (after expireLog they may be the ONLY reference)
+    val kept =
+      if (expireHistory) entriesAsOf(dir, Long.MaxValue)
+      else history ++ listVersioned(dir, CheckpointPrefix)
         .flatMap { case (v, f) => readCheckpoint(v, f).live }
     // staged (write-audit-publish) part files are referenced by their
     // `_staged.<id>` side file, not by any commit — a pending audit
@@ -1759,22 +1768,12 @@ object GraftLog {
     val branched = branches(dir).keys.toSeq
       .flatMap(branchEntries(dir, _)).filter(_.isAdd)
     val referenced =
-      ((if (expireHistory) entriesAsOf(dir, Long.MaxValue)
-        else entries(dir).filter(_.isAdd) ++ ckptLive) ++ staged ++
-        branched)
-        .map(_.file).toSet
-    val cutoff = System.currentTimeMillis() - minAgeMs
+      (kept.filter(_.isAdd) ++ staged ++ branched).map(_.file).toSet
     // DV sidecars follow the part-file rules: referenced = every DV
     // named anywhere in the kept history (current snapshot only under
     // expireHistory), aged orphans and superseded DVs reclaimed.
-    val refDv =
-      (if (expireHistory) entriesAsOf(dir, Long.MaxValue)
-       else entries(dir) ++ ckptLive).flatMap(e =>
-        e.stats.get(DvKey).map(_._1).filter(_.nonEmpty)).toSet
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("dv-") &&
-        !refDv.contains(f.getName) && f.lastModified() <= cutoff)
-      .foreach(_.delete())
+    val refDv = kept.flatMap(e =>
+      e.stats.get(DvKey).map(_._1).filter(_.nonEmpty)).toSet
     // CDC sidecars: referenced while any retained commit names them
     // (the typed feed reads commit files directly, so the reference
     // set is the full kept ledger) — under BOTH modes (ADVICE r9):
@@ -1783,25 +1782,23 @@ object GraftLog {
     // set under expireHistory left admitted typed-feed/replication
     // reads dying on a missing file. Sidecars of commits expireLog
     // already deleted are absent from entries() and get reclaimed.
-    val refCdc =
-      entries(dir).filter(_.action == "cdc").map(_.file).toSet
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith(CdcPrefix) &&
-        !refCdc.contains(f.getName) && f.lastModified() <= cutoff)
-      .foreach(_.delete())
+    val refCdc = history.filter(_.action == "cdc").map(_.file).toSet
+    // one listing, taken after every referenced set is known
+    val cutoff = System.currentTimeMillis() - minAgeMs
+    val aged = listDir(dir).filter(_.lastModified() <= cutoff)
+    def reap(orphan: String => Boolean): Seq[String] =
+      aged.filter(f => orphan(f.getName))
+        .map { f => f.delete(); f.getName }
+    reap(n => n.startsWith("dv-") && !refDv.contains(n))
+    reap(n => n.startsWith(CdcPrefix) && !refCdc.contains(n))
     // Stale metadata temps from crashed writers: a CAS loser deletes
     // its temp commit file, but a crash between write and link leaves
     // one (same for an interrupted atomicWrite). Invisible to readers
     // (the `.tmp.` infix is filtered at listing), reclaimed here past
     // the same retention horizon that protects in-flight writers.
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.contains(".tmp.") &&
-        f.lastModified() <= cutoff)
-      .foreach(_.delete())
-    Option(new File(dir).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.getName.startsWith("part-") &&
-        !referenced.contains(f.getName) && f.lastModified() <= cutoff)
-      .map { f => f.delete(); f.getName }.toSeq
+    reap(_.contains(".tmp."))
+    reap(n => n.startsWith("part-") && !n.contains(".tmp.") &&
+      !referenced.contains(n))
   }
 
   /** Compaction (small-file OPTIMIZE): rewrite the current snapshot's
@@ -1844,18 +1841,12 @@ object GraftLog {
     if (groups.forall(_._2.size <= 1)) return 0
 
     // Output files ROLL at a target uncompressed size, so no group
-    // compacts into one unbounded 100 GB file. Conf'able for tests;
+    // compacts into one unbounded 100 GB file. The target is the
+    // `graft.compact.target-bytes` table property — layout policy
+    // belongs to the table, not to whichever session runs maintenance;
     // the default keeps small fixtures at one file per group.
-    // table property beats session conf beats default: layout policy
-    // belongs to the table, not to whichever session runs maintenance
     val targetBytes = propertiesOf(dir).get("graft.compact.target-bytes")
-      .map(_.toLong)
-      .orElse(scala.util.Try(
-          org.apache.spark.sql.SparkSession.active).toOption
-        .flatMap(s => Option(
-          s.conf.get("spark.graft.log.compactTargetBytes", null)))
-        .map(_.toLong))
-      .getOrElse(128L << 20)
+      .map(_.toLong).getOrElse(128L << 20)
 
     // Every output any group closes is registered here BEFORE the
     // group returns: on a parallel failure the sweep deletes from

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanShim, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -98,7 +98,9 @@ object Tables {
     * TIMESTAMP(NANOS) column in the same session silently yields
     * LongType instead of the loud PARQUET_TYPE_ILLEGAL error. Spark
     * offers no per-stream read option for this conf today; if one
-    * lands, scope it to the stream's options instead. */
+    * lands, scope it to the stream's options instead. This is the one
+    * session conf a library call leaves changed; TablesSchemaSpec pins
+    * that it is this entry alone, and only for a nanos fixture. */
   def eventsStream(s: SparkSession, d: String,
       watermark: Option[String] = None): DataFrame = {
     val schema = withNanosAsLong(s)(schemaOf(s, s"$d/events.parquet"))
@@ -115,19 +117,11 @@ object Tables {
     if (schema("ts").dataType == org.apache.spark.sql.types.LongType)
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val rdr = s.readStream.schema(schema)
-    // Replay rate limit: bound each micro-batch to N source files so a
-    // historical fixture drains as a sequence of watermark-advancing
-    // batches instead of one giant one — the shape a live stream has,
-    // and what tools.StreamScaleProbe measures state/latency under.
-    // Unset (every production read) the source keeps its default.
-    s.conf.getOption("spark.graft.stream.maxFilesPerTrigger")
-      .foreach(rdr.option("maxFilesPerTrigger", _))
     // The driver fixtures store events as a single FILE
     // `events.parquet`; Spark-written fixtures (the amplified replay
     // corpora) are a DIRECTORY of part files under the same name. The
     // glob-filter form only matches the file layout — a directory is
-    // streamed directly (it holds nothing but event parts), which also
-    // gives the file-source one part per listing entry to rate-limit.
+    // streamed directly (it holds nothing but event parts).
     val evDir = new java.io.File(d, "events.parquet")
     val raw = normalizeEventTs(
       if (evDir.isDirectory) rdr.parquet(evDir.getPath)
@@ -157,10 +151,19 @@ object Tables {
     * every later parquet read in the session — ADVICE r2). There is no
     * per-read option for this conf (verified: the option-shaped read
     * still throws PARQUET_TYPE_ILLEGAL). */
-  def withNanosAsLong[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, "true")
+  def withNanosAsLong[T](s: SparkSession)(body: => T): T =
+    withConf(s, "spark.sql.legacy.parquet.nanosAsLong", "true")(body)
+
+  /** Runs `body` with one session conf set, then puts back exactly what
+    * was there: the caller's explicit value, or no entry at all when
+    * the key was unset (`getOption` would report the conf's default,
+    * and restoring that would leave an explicit entry behind), also
+    * when `body` throws. */
+  def withConf[T](s: SparkSession, key: String, value: String)(
+      body: => T): T = {
+    val prior =
+      if (GraftPlanShim.isConfSet(s, key)) Some(s.conf.get(key)) else None
+    s.conf.set(key, value)
     try body
     finally prior match {
       case Some(v) => s.conf.set(key, v)

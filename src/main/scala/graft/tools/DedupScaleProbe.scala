@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
   *
   * Reports per-rep wall with interleaved controls (a fixed base-corpus
   * scan), executed-plan BHJ/SMJ counts, resolve_clusters convergence
-  * rounds, substring_spans under BOTH span-key forms (exact string vs
-  * the xxhash64 conf), and the artifact-chain populations (band index /
+  * rounds, and the artifact-chain populations (band index /
   * LSH candidates / verified pairs) at base vs N× — candidates must
   * grow ~linearly or the banding is broken. Rep 1 at N× pays the
   * one-time N× artifact build; rep 2+ is the steady state the bench
@@ -180,18 +179,6 @@ object DedupScaleProbe {
       println(f"[dscale] $tag rep=$r ctrl=$c%.2f $n=$t%.2f " +
         s"bhj=$bhj smj=$smj peak_task_mb=${peakMem.get() >> 20}$extra")
     }
-    // substring_spans with the 8-byte hashed span key (the 100 TB
-    // shuffle shape) at both scales, against the string-key runs above
-    spark.conf.set("spark.graft.dedup.spanHash", "true")
-    for (dir <- Seq(base, amp); r <- 1 to 2) {
-      val c = control()
-      val df = graft.SparkEntry.queries("dedup_substring_spans")(spark, dir)
-      val t = time(df.write.mode("overwrite").format("noop").save())
-      val tag = if (dir == base) "base" else s"${copies}x"
-      println(f"[dscale] $tag rep=$r ctrl=$c%.2f " +
-        f"dedup_substring_spans[spanHash]=$t%.2f")
-    }
-    spark.conf.unset("spark.graft.dedup.spanHash")
     spark.stop()
   }
 }

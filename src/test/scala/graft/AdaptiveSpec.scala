@@ -28,4 +28,11 @@ class AdaptiveSpec extends SparkSpec {
       s"AQE should coalesce $configured partitions for 25 rows, " +
         s"got $shufflePartitions")
   }
+
+  test("a builder session reads the SHJ map threshold and coalescing mode") {
+    assert(spark.conf.get(
+      "spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold") == "64m")
+    assert(spark.conf.get(
+      "spark.sql.adaptive.coalescePartitions.parallelismFirst") == "true")
+  }
 }

@@ -1,41 +1,53 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Corpus, Dedup}
 import graft.sources.Tables
 
-/** MinHash/SimHash correctness that the DuckDB oracle can't express
-  * (xxhash64 signatures): recall against exact Jaccard, determinism,
+/** Dedup correctness that the DuckDB oracle can't express (xxhash64
+  * keys and signatures): hashed keys against exact-key grouping, the
+  * loud collision check, recall against exact Jaccard, determinism,
   * and hamming-band pigeonhole guarantees. */
 class DedupSpec extends SparkSpec {
 
-  test("spanHash=true (8-byte shuffled span keys, the 100 TB shape) " +
-      "returns the exact same rows as the default string keys") {
-    val q = Dedup.queries("dedup_substring_spans")
-    val exact = q(spark, sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    spark.conf.set("spark.graft.dedup.spanHash", "true")
-    try {
-      val hashed = q(spark, sf0001).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-      assert(hashed.toSeq == exact.toSeq,
-        "xxhash64 span keys must be row-identical at test SF")
-      assert(exact.nonEmpty, "fixture must contain shared spans")
-    } finally spark.conf.unset("spark.graft.dedup.spanHash")
+  private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
+    df.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
+
+  test("hashed dedup keys match grouping on the exact text and span") {
+    val docs = Tables.documents(spark, sf0001)
+    val exactRef = docs.groupBy(col("text"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"),
+        min(length(col("text"))).as("text_len"))
+      .select(col("keep_id"), col("n_copies"), col("text_len"))
+    val exact = sortedRows(Dedup.queries("dedup_exact")(spark, sf0001))
+    assert(exact.nonEmpty)
+    assert(exact == sortedRows(exactRef))
+
+    val spans = docs.select(col("doc_id"), explode(array_distinct(
+      Corpus.wordGrams(Corpus.toksOf(col("text")), 8))).as("span"))
+    val shared = spans.groupBy(col("span"))
+      .agg(count(lit(1)).as("n_docs")).filter(col("n_docs") >= 2)
+    val spanRef = spans.join(shared, "span").groupBy(col("doc_id"))
+      .agg(count(lit(1)).as("n_dup_spans"),
+        max(col("n_docs")).as("max_span_spread"))
+    val hashed =
+      sortedRows(Dedup.queries("dedup_substring_spans")(spark, sf0001))
+    assert(hashed.nonEmpty, "fixture must contain shared spans")
+    assert(hashed == sortedRows(spanRef))
   }
 
-  test("exactHash=true (8-byte group keys, the 100 TB shape) returns " +
-      "the exact same rows as grouping on the full text") {
-    val q = Dedup.queries("dedup_exact")
-    def rows() = q(spark, sf0001).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(_._1)
-    val exact = rows()
-    spark.conf.set("spark.graft.dedup.exactHash", "true")
-    try {
-      assert(rows().toSeq == exact.toSeq,
-        "xxhash64 group keys must be row-identical at test SF")
-      assert(exact.nonEmpty)
-    } finally spark.conf.unset("spark.graft.dedup.exactHash")
+  test("a colliding dedup key fails both dedup queries loudly") {
+    // length(text) puts every two texts (or spans) of one length in
+    // one group: the Murmur3 range check must fail the query
+    val byLength = (c: Column) => length(c)
+    for (q <- Seq(Dedup.exactDuplicates(spark, sf0001, byLength),
+        Dedup.substringSpans(spark, sf0001, byLength))) {
+      val e = intercept[Exception](q.collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).flatMap(t => Option(t.getMessage))
+      assert(msgs.exists(_.contains("xxhash64 collision")), e)
+    }
   }
 
   test("minhash estimate tracks exact shingle Jaccard on planted dups") {

@@ -1782,9 +1782,8 @@ class GraftLogSpec extends SparkSpec {
     // three commits so compaction has work; ~90k chars of rows total
     (1 to 3).foreach(_ => series(1000).coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save())
-    spark.conf.set("spark.graft.log.compactTargetBytes", "20000")
-    try GraftLog.compact(dir)
-    finally spark.conf.unset("spark.graft.log.compactTargetBytes")
+    GraftLog.setProperties(dir, Map("graft.compact.target-bytes" -> "20000"))
+    GraftLog.compact(dir)
     val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
     assert(live.size > 1,
       s"a 20k target over ~90k chars must roll: got ${live.size} file(s)")

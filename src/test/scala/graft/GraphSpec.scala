@@ -132,28 +132,23 @@ class GraphSpec extends SparkSpec {
       s"an under-budget adjacency must carry the broadcast hint:\n" +
         hinted.take(800))
     try {
-      // memory-pressure analog: an operator-scoped budget far below
-      // the adjacency estimate — the gate must DROP the forced hint...
-      spark.conf.set("spark.graft.graph.broadcastBytes", "1024")
+      // memory-pressure analog (the bounded-memory executor): an
+      // explicit session threshold far below the adjacency estimate
+      // lowers the graph budget with it — the gate must DROP the
+      // forced hint, and the whole plan runs as sort-merge with no
+      // hint left to force a build-side allocation
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
       val d2 = runQ("graph_triangles")
       val rows2 = d2.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(rows2 == rows, "the budget must change strategy, never a row")
       assert(!d2.queryExecution.optimizedPlan.toString
         .contains("strategy=broadcast"),
         "an over-budget adjacency must not carry a forced broadcast hint")
-      // ...and with the session's own threshold also lowered (the
-      // bounded-memory executor), the whole plan runs as sort-merge —
-      // no hint survives to force a build-side allocation
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
-      val d3 = runQ("graph_triangles")
-      val rows3 = d3.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(rows3 == rows)
-      val p3 = d3.queryExecution.executedPlan.toString
-      assert(p3.contains("SortMergeJoin") &&
-        !p3.contains("BroadcastHashJoin"),
-        s"bounded-memory session must degrade to SMJ:\n${p3.take(800)}")
+      val p2 = d2.queryExecution.executedPlan.toString
+      assert(p2.contains("SortMergeJoin") &&
+        !p2.contains("BroadcastHashJoin"),
+        s"bounded-memory session must degrade to SMJ:\n${p2.take(800)}")
     } finally {
-      spark.conf.unset("spark.graft.graph.broadcastBytes")
       priorExplicit match {
         case Some(v) =>
           spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)

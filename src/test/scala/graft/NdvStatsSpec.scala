@@ -125,9 +125,8 @@ class NdvStatsSpec extends SparkSpec {
         LessThan("id", 12000L))))
     assert(usedDv, "the delete must leave a deletion vector")
     // small roll target so the compaction emits MULTIPLE outputs
-    spark.conf.set("spark.graft.log.compactTargetBytes", "40000")
-    try assert(GraftLog.compact(dir) == 3)
-    finally spark.conf.unset("spark.graft.log.compactTargetBytes")
+    GraftLog.setProperties(dir, Map("graft.compact.target-bytes" -> "40000"))
+    assert(GraftLog.compact(dir) == 3)
     val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
     assert(live.size >= 2, s"expected rolled outputs, got ${live.size}")
     // every rolled output carries the full stats spine — min/max,

@@ -11,7 +11,8 @@ import graft.sources.Tables
 /** The resolve-once contract of `sources.Tables`: a table's Parquet
   * schema is inferred once per (path, file fingerprint, Parquet confs),
   * later reads pass it to the reader and run no job, and every read is
-  * still a fresh relation. */
+  * still a fresh relation. Also the session confs its reads touch:
+  * `withConf` scoping, and the one conf `eventsStream` leaves set. */
 class TablesSchemaSpec extends SparkSpec {
   private def tmpDir(): String =
     java.nio.file.Files.createTempDirectory("graft-tables-schema").toString
@@ -48,12 +49,15 @@ class TablesSchemaSpec extends SparkSpec {
     assert(again.as[String].collect().sorted.toSeq == Seq("x", "y"))
   }
 
-  test("an int64-nanos events.parquet reads as TimestampType each time; " +
-      "the nanos-as-long schema stays out of plain reads") {
+  private val micros = Seq(1700000000123456L, 1700000003000000L)
+  private val NanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+
+  /** A fresh fixture dir whose events.parquet stores `ts` as int64
+    * TIMESTAMP(NANOS), one row per [[micros]] value (+789 ns). */
+  private def nanosEventsDir(): String = {
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
-    val micros = Seq(1700000000123456L, 1700000003000000L)
     val dir = tmpDir()
     val schema = MessageTypeParser.parseMessageType(
       "message events { required int64 event_id; " +
@@ -66,7 +70,27 @@ class TablesSchemaSpec extends SparkSpec {
       w.write(groups.newGroup().append("event_id", 1L)
         .append("ts", m * 1000L + 789L))
     } finally w.close()
+    dir
+  }
 
+  /** `body`'s change to the session's explicit confs, run from a
+    * session where `key` is unset; the prior value is put back. */
+  private def confDiff(key: String)(body: => Unit): Set[(String, String)] = {
+    val prior = spark.conf.getAll.get(key)
+    spark.conf.unset(key)
+    try {
+      val before = spark.conf.getAll.toSet
+      body
+      (spark.conf.getAll.toSet -- before) ++ (before -- spark.conf.getAll)
+    } finally prior match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("an int64-nanos events.parquet reads as TimestampType each time; " +
+      "the nanos-as-long schema stays out of plain reads") {
+    val dir = nanosEventsDir()
     for (_ <- 1 to 2) {
       val ev = Tables.events(spark, dir)
       assert(ev.schema("ts").dataType == TimestampType)
@@ -75,12 +99,37 @@ class TablesSchemaSpec extends SparkSpec {
     }
     // an earlier streaming read may have left the conf set on the
     // shared session; a plain read is one made without it
-    val key = "spark.sql.legacy.parquet.nanosAsLong"
-    val prior = spark.conf.getOption(key)
-    spark.conf.unset(key)
-    try {
+    assert(confDiff(NanosKey) {
       val plain = Try(Tables.table(spark, dir, "events").schema("ts").dataType)
       assert(plain != Success(LongType), plain)
-    } finally prior.foreach(spark.conf.set(key, _))
+    }.isEmpty)
+  }
+
+  test("withConf restores a prior value, unsets a new key, restores on a throw") {
+    // a registered key, whose getOption reports its default while unset
+    assert(confDiff(NanosKey) {
+      Tables.withConf(spark, NanosKey, "true")(())
+      assert(!spark.conf.getAll.contains(NanosKey))
+      spark.conf.set(NanosKey, "false")
+      assert(Tables.withConf(spark, NanosKey, "true")(
+        spark.conf.get(NanosKey)) == "true")
+      assert(spark.conf.get(NanosKey) == "false")
+      intercept[IllegalStateException](
+        Tables.withConf(spark, NanosKey, "true")(
+          throw new IllegalStateException("body failed")))
+      assert(spark.conf.get(NanosKey) == "false")
+      spark.conf.unset(NanosKey)
+    }.isEmpty)
+  }
+
+  test("eventsStream leaves the session's confs unchanged on a " +
+      "non-nanos fixture") {
+    assert(confDiff(NanosKey)(Tables.eventsStream(spark, sf0001)).isEmpty)
+  }
+
+  test("eventsStream on a nanos fixture leaves exactly nanosAsLong=true") {
+    val dir = nanosEventsDir()
+    assert(confDiff(NanosKey)(Tables.eventsStream(spark, dir)) ==
+      Set(NanosKey -> "true"))
   }
 }
