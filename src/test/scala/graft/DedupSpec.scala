@@ -14,16 +14,13 @@ class DedupSpec extends SparkSpec {
   private def sortedRows(df: DataFrame): Seq[Seq[Any]] =
     df.collect().map(_.toSeq).toSeq.sortBy(_.head.asInstanceOf[Long])
 
-  test("hashed dedup keys match grouping on the exact text and span") {
+  // The next two names keep the former spark.graft.dedup.*Hash confs:
+  // the 8-byte hashed keys are now the only path, and each query is
+  // checked against a plain Spark reference grouped on the exact text
+  // or span, built here.
+  test("spanHash=true (8-byte shuffled span keys, the 100 TB shape) " +
+      "returns the exact same rows as the default string keys") {
     val docs = Tables.documents(spark, sf0001)
-    val exactRef = docs.groupBy(col("text"))
-      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"),
-        min(length(col("text"))).as("text_len"))
-      .select(col("keep_id"), col("n_copies"), col("text_len"))
-    val exact = sortedRows(Dedup.queries("dedup_exact")(spark, sf0001))
-    assert(exact.nonEmpty)
-    assert(exact == sortedRows(exactRef))
-
     val spans = docs.select(col("doc_id"), explode(array_distinct(
       Corpus.wordGrams(Corpus.toksOf(col("text")), 8))).as("span"))
     val shared = spans.groupBy(col("span"))
@@ -35,6 +32,17 @@ class DedupSpec extends SparkSpec {
       sortedRows(Dedup.queries("dedup_substring_spans")(spark, sf0001))
     assert(hashed.nonEmpty, "fixture must contain shared spans")
     assert(hashed == sortedRows(spanRef))
+  }
+
+  test("exactHash=true (8-byte group keys, the 100 TB shape) returns " +
+      "the exact same rows as grouping on the full text") {
+    val exactRef = Tables.documents(spark, sf0001).groupBy(col("text"))
+      .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_copies"),
+        min(length(col("text"))).as("text_len"))
+      .select(col("keep_id"), col("n_copies"), col("text_len"))
+    val exact = sortedRows(Dedup.queries("dedup_exact")(spark, sf0001))
+    assert(exact.nonEmpty)
+    assert(exact == sortedRows(exactRef))
   }
 
   test("a colliding dedup key fails both dedup queries loudly") {
