@@ -11,16 +11,6 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.types._
 
-/** The whole contract a line-oriented part-file consumer gets: the
-  * next TSV line (null at EOF) and close. Deliberately NOT a
-  * Reader/BufferedReader — the gcol-backed implementation synthesizes
-  * lines from columnar blocks and has no char-stream to delegate the
-  * other 10 Reader methods to. */
-trait TextLines {
-  def readLine(): String
-  def close(): Unit
-}
-
 /** `gcol` v1 — the graft-log COLUMNAR part-file container, the
   * round-10 replacement for whole-file gzip'd TSV. The row payload
   * keeps the table's canonical cell encoding (the strings the TSV
@@ -96,8 +86,8 @@ object GraftColFile {
   def isCol(file: String): Boolean = file.endsWith(Extension)
 
   /** UTF-8 byte length without encoding — the raw-size stat is named
-    * RawBytesKey and drives byte-targeted rolls (compaction target,
-    * block size), so counting UTF-16 units would under-count CJK-heavy
+    * RawBytesKey and drives byte-targeted rolls (file target, block
+    * size), so counting UTF-16 units would under-count CJK-heavy
     * data up to 3x and roll files past their configured byte budget. */
   private[graft] def utf8Len(s: String): Int = {
     var i = 0
@@ -250,13 +240,13 @@ object GraftColFile {
     /** Typed-binary payload for a numeric chunk — taken ONLY when
       * every non-null cell round-trips losslessly through its
       * canonical rendering (Long.toString / Double.toString), so the
-      * decoded chunk can reproduce the exact cell text (compaction
-      * remaps, NDV hashing, and the oracle all see identical bytes).
-      * A non-canonical cell — an INT cell like '7' compacted into a
-      * column widened to DOUBLE, whose rendering is '7.0' — falls back
-      * to plain text for the whole chunk. Layout: [ceil(rows/8) null
-      * bitmap][8B LE per row] — nulls carry a zero slot. Returns null
-      * when ineligible. */
+      * decoded chunk can reproduce the exact cell text (NDV hashing
+      * and the oracle see identical bytes). A non-canonical cell — an
+      * INT-style '7' under a DOUBLE column, whose rendering is '7.0' —
+      * falls back to plain text for the whole chunk, so a chunk
+      * always reads back the text it was given. Layout: [ceil(rows/8)
+      * null bitmap][8B LE per row] — nulls carry a zero slot. Returns
+      * null when ineligible. */
     private def tryBinary(cells: ArrayBuffer[String],
         t: Int): Array[Byte] = {
       val n = cells.length
@@ -415,7 +405,7 @@ object GraftColFile {
     }
 
     /** Raw characters buffered + flushed so far — the caller's file-
-      * roll axis (compaction bounds output files by raw size). */
+      * roll axis (every write bounds its files by raw size). */
     def rawChars: Long = flushedChars + chars
 
     /** Raw characters currently BUFFERED (unflushed block) — the
@@ -647,51 +637,6 @@ object GraftColFile {
         i += 1
       }
       PlainChunk(out)
-    }
-  }
-
-  /** Line reader over a gcol file: reconstructs each row's
-    * tab-joined cells block by block (bounded memory — one block's
-    * cells live at a time). Compaction's remap/rewrite stream reads
-    * parts through it. Returns
-    * the narrow [[TextLines]] contract, not a BufferedReader: only
-    * readLine/close exist, so a future consumer reaching for read()/
-    * lines()/ready() fails to compile instead of silently getting an
-    * empty delegate's answer. */
-  def lineReader(f: File): TextLines = {
-    val ch = FileChannel.open(f.toPath, StandardOpenOption.READ)
-    // a corrupt/truncated part must not leak the just-opened channel:
-    // readFooter throws before the TextLines exists, so the caller's
-    // close() could never reach it
-    val footer =
-      try readFooter(ch, f)
-      catch { case e: Throwable => ch.close(); throw e }
-    new TextLines {
-      private var bi = 0
-      private var row = 0
-      private var rowsInBlock = 0
-      private var cols: Array[Chunk] = _
-      private val sb = new java.lang.StringBuilder
-      override def readLine(): String = {
-        while (cols == null || row >= rowsInBlock) {
-          if (bi >= footer.blocks.length) return null
-          val b = footer.blocks(bi); bi += 1
-          cols = Array.tabulate(footer.cols.length)(
-            readChunk(ch, b, _))
-          rowsInBlock = b.rows.toInt
-          row = 0
-        }
-        sb.setLength(0)
-        var c = 0
-        while (c < cols.length) {
-          if (c > 0) sb.append('\t')
-          sb.append(cols(c).cell(row))
-          c += 1
-        }
-        row += 1
-        sb.toString
-      }
-      override def close(): Unit = ch.close()
     }
   }
 

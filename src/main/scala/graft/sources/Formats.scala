@@ -826,13 +826,12 @@ object Formats {
           lit(GraftLog.currentVersion(dir)).as("current_version"))
     }),
 
-    // Size-bounded compaction: gzip'd TSV is not splittable, so a
-    // compacted file IS the read-parallelism granule — outputs must
-    // roll at a target size instead of fusing a partition into one
-    // unbounded file. Fixture: 3 single-file commits (~60k chars),
-    // compact under a 15k-char target; the snapshot must land in >1
-    // rolled file, every row must survive, and the folded group
-    // stats must still serve the exact global extremes.
+    // Size-bounded compaction: outputs roll at the table's target size
+    // instead of fusing a partition into one unbounded file. Fixture:
+    // 3 single-file commits (~60k chars), compact under a 15k-char
+    // target; the snapshot must land in >1 rolled file, every row must
+    // survive, and the per-file stats must still serve the exact
+    // global extremes.
     "sink_log_compact_target" -> ((s, d) => {
       val dir = graft.core.ArtifactCache.fixtureScratch("log_ctarget", d)
       val done = GraftLog.entries(dir).exists(!_.isAdd)
@@ -2259,20 +2258,13 @@ object Formats {
     new scala.collection.concurrent.TrieMap[String, Long]()
 
   /** Recursive fixture wipe: plain `listFiles().foreach(_.delete())`
-    * silently no-ops on non-empty SUBDIRECTORIES (a crashed merge or
-    * compaction from a prior session leaves `__rewrite-*`/`__cdc-*`
-    * scratch dirs behind), so the "wiped" fixture would keep stale
-    * litter across every rebuild. */
-  private def wipeDir(dir: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete()
-    }
-    val root = new java.io.File(dir)
-    if (root.exists())
-      Option(root.listFiles()).getOrElse(Array.empty).foreach(rm)
-  }
+    * silently no-ops on non-empty SUBDIRECTORIES (a process killed
+    * mid-rewrite leaves its `__rewrite-*`/`__cdc-*` scratch table
+    * behind), so the "wiped" fixture would keep stale litter across
+    * every rebuild. */
+  private def wipeDir(dir: String): Unit =
+    Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+      .foreach(GraftLog.deleteTree)
 
   /** Cross-session fixture gate for MULTI-STATEMENT builds: a
     * completion marker in the table's properties, stamped only after

@@ -495,7 +495,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         sch
       // `ALTER TABLE t SET TBLPROPERTIES (...)` / UNSET — stored in
       // the table's `_properties` file; `graft.compact.target-bytes`
-      // steers compaction's output-file roll for THIS table.
+      // sets the size at which THIS table's part files roll, on every
+      // write (appends, rewrites, compaction).
       case (sch, set: TableChange.SetProperty) =>
         GraftLog.setProperties(dir, Map(set.property -> set.value))
         sch

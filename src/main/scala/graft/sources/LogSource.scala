@@ -280,10 +280,8 @@ object GraftLog {
       col.getBytes(StandardCharsets.UTF_8))
   }
 
-  /** TSV cell encoding of SQL NULL — a control char no demo string
-    * carries (the codec already bans tabs/newlines in strings). Needed
-    * once schemas evolve: a compacted row may lack a value for a column
-    * added after it was written. */
+  /** Cell encoding of SQL NULL — a control char no demo string
+    * carries (the codec already bans tabs/newlines in strings). */
   val NullCell = "\u0000"
 
   /** The stored table schema, if the table exists. */
@@ -1007,22 +1005,48 @@ object GraftLog {
     * row-level commit they describe become visible atomically. Each
     * file is only moved, so its entry keeps the writer's exact
     * [[RawBytesKey]] size for the typed-feed scan's CBO estimate. */
-  private def stageCdc(spark: org.apache.spark.sql.SparkSession,
-      dir: String, changes: org.apache.spark.sql.DataFrame): Seq[LogEntry] = {
-    val scratch = s"$dir/__cdc-${UUID.randomUUID()}"
-    changes.write.format("graft.sources.GraftLogSource")
-      .option("path", scratch).mode("overwrite").save()
-    val fresh = entriesAsOf(scratch, Long.MaxValue).filter(_.rows > 0L)
-    val out = fresh.map { e =>
-      val cdcName = CdcPrefix + e.file.stripPrefix("part-")
-      Files.move(Paths.get(scratch, e.file), Paths.get(dir, cdcName))
-      LogEntry(-1L, "cdc", cdcName, e.rows, dataChange = false,
-        e.stats.filter(_._1 == RawBytesKey), cols = e.cols)
-    }
-    Option(new File(scratch).listFiles()).getOrElse(Array.empty)
-      .foreach(_.delete())
-    new File(scratch).delete()
-    out
+  private def stageCdc(dir: String,
+      changes: org.apache.spark.sql.DataFrame): Seq[LogEntry] = {
+    def cdcName(part: String) = CdcPrefix + part.stripPrefix("part-")
+    writeScratch(dir, CdcScratchPrefix, changes)(cdcName).map(e =>
+      LogEntry(-1L, "cdc", cdcName(e.file), e.rows, dataChange = false,
+        e.stats.filter(_._1 == RawBytesKey), cols = e.cols))
+  }
+
+  /** Scratch-table name prefixes under a table directory: a rewrite's
+    * replacement rows and its CDC sidecars are written as a scratch
+    * graft-log table first (full stats and column records for free),
+    * then their part files move into the table. */
+  private val RewriteScratchPrefix = "__rewrite-"
+  private val CdcScratchPrefix = "__cdc-"
+
+  /** Write `df` through the normal writer into a fresh scratch table
+    * `<dir>/<prefix><uuid>` (`setup` runs on it first), move its
+    * non-empty part files into `dir` under `rename(file)`, and return
+    * their scratch entries. The scratch directory is deleted whether
+    * the write succeeds or fails (a failed task's corrupt input or a
+    * rejected overwrite); only a killed process leaves one, for
+    * [[vacuum]] to reap past the retention horizon. */
+  private def writeScratch(dir: String, prefix: String,
+      df: org.apache.spark.sql.DataFrame,
+      setup: String => Unit = _ => ())(
+      rename: String => String): Seq[LogEntry] = {
+    val scratch = ensureDir(s"$dir/$prefix${UUID.randomUUID()}")
+    try {
+      setup(scratch)
+      df.write.format("graft.sources.GraftLogSource")
+        .option("path", scratch).mode("overwrite").save()
+      val fresh = entriesAsOf(scratch, Long.MaxValue).filter(_.rows > 0L)
+      fresh.foreach(e => Files.move(Paths.get(scratch, e.file),
+        Paths.get(dir, rename(e.file))))
+      fresh
+    } finally deleteTree(new File(scratch))
+  }
+
+  /** Delete a file, or a directory with everything under it. */
+  private[graft] def deleteTree(f: File): Unit = {
+    Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(deleteTree)
+    f.delete()
   }
 
   /** Newest committed version — filename listing only. */
@@ -1259,10 +1283,19 @@ object GraftLog {
   // TBLPROPERTIES, stored as one `_properties` file (k=v lines,
   // atomic replace). Properties are metadata-plane configuration —
   // the table-level override axis Delta/Iceberg use for maintenance
-  // policy; `graft.compact.target-bytes` sets [[compact]]'s output
-  // size, so a table's layout policy travels with the table, not the
-  // session that happens to run maintenance.
+  // policy; `graft.compact.target-bytes` sets the size at which every
+  // write's part files roll (appends, rewrites, [[compact]]), so a
+  // table's layout policy travels with the table, not the session
+  // that happens to run maintenance.
   val PropsFile = "_properties"
+
+  /** Table property: raw characters ([[RawBytesKey]]) at which a part
+    * file closes and the writer opens the next one. */
+  val TargetBytesProp = "graft.compact.target-bytes"
+
+  def targetBytesOf(dir: String): Long =
+    propertiesOf(dir).get(TargetBytesProp).map(_.toLong)
+      .getOrElse(128L << 20)
 
   /** Lineage identity: a fresh UUID stamped by every overwrite — the
     * only operation that restarts the version axis. A version number
@@ -1748,7 +1781,8 @@ object GraftLog {
     * snapshot's files are kept — reclaiming pre-compaction parts at
     * the documented price that time travel to versions needing the
     * deleted files now fails loudly (Delta's VACUUM semantics).
-    * Returns the deleted names. */
+    * Orphaned DV and CDC sidecars, metadata temps and scratch tables
+    * past the same horizon go too. Returns the deleted part names. */
   def vacuum(dir: String, minAgeMs: Long = DefaultVacuumRetentionMs,
       expireHistory: Boolean = false): Seq[String] = synchronized {
     val history = entries(dir)
@@ -1785,299 +1819,85 @@ object GraftLog {
     val refCdc = history.filter(_.action == "cdc").map(_.file).toSet
     // one listing, taken after every referenced set is known
     val cutoff = System.currentTimeMillis() - minAgeMs
-    val aged = listDir(dir).filter(_.lastModified() <= cutoff)
+    def isScratch(n: String) = n.startsWith(RewriteScratchPrefix) ||
+      n.startsWith(CdcScratchPrefix)
+    // a scratch table is as old as its newest file: the directory's
+    // own mtime stops moving while a rewrite streams into a part file
+    // it already created
+    val aged = listDir(dir).filter(f =>
+      (if (isScratch(f.getName)) f +: listDir(f.getPath) else Seq(f))
+        .forall(_.lastModified() <= cutoff))
     def reap(orphan: String => Boolean): Seq[String] =
       aged.filter(f => orphan(f.getName))
-        .map { f => f.delete(); f.getName }
+        .map { f => deleteTree(f); f.getName }
     reap(n => n.startsWith("dv-") && !refDv.contains(n))
     reap(n => n.startsWith(CdcPrefix) && !refCdc.contains(n))
     // Stale metadata temps from crashed writers: a CAS loser deletes
     // its temp commit file, but a crash between write and link leaves
     // one (same for an interrupted atomicWrite). Invisible to readers
     // (the `.tmp.` infix is filtered at listing), reclaimed here past
-    // the same retention horizon that protects in-flight writers.
+    // the same retention horizon that protects in-flight writers —
+    // and so are the scratch tables of a process killed mid-rewrite.
     reap(_.contains(".tmp."))
+    reap(isScratch)
     reap(n => n.startsWith("part-") && !n.contains(".tmp.") &&
       !referenced.contains(n))
   }
 
-  /** Compaction (small-file OPTIMIZE): rewrite the current snapshot's
-    * part files into ONE part, published as a new version that removes
-    * the inputs and adds the compacted file with dataChange=false —
-    * readers of the new snapshot open one file instead of N, older
-    * snapshots still see the original parts (until an expireHistory
-    * vacuum), and the change feed sees no new rows. Stats merge from
-    * the input entries (min of mins, max of maxes) when every input
-    * carries them. The maintenance pass a streaming sink needs run
-    * daily: per-epoch commits accumulate unboundedly many small files
-    * whose open/listing cost comes to dominate scans. Returns the
-    * number of files compacted away (0 = nothing to do). */
+  /** Compaction (small-file OPTIMIZE): rewrite the current snapshot
+    * into as few part files as the `graft.compact.target-bytes` table
+    * property allows, published as a new version that removes the
+    * inputs and adds the outputs with dataChange=false — readers of
+    * the new snapshot open a few files instead of N, older snapshots
+    * still see the original parts (until an expireHistory vacuum),
+    * and the change feed sees no new rows. The rewrite is a plan for
+    * [[rewriteFiles]], like every copy-on-write maintenance op: the
+    * reader applies each file's deletion vector and column trail, and
+    * the writer re-encodes the cells in the current layout, stamps
+    * exact per-file stats and rolls its output at the target. A
+    * partitioned table's scratch write routes per value (one file per
+    * value, partition record intact — the Iceberg per-partition
+    * compaction shape); an unpartitioned read coalesces to
+    * ⌈raw size ÷ target⌉ tasks. The maintenance pass a streaming sink
+    * needs run daily: per-epoch commits accumulate unboundedly many
+    * small files whose open/listing cost comes to dominate scans.
+    * Returns the number of files compacted away (0 = nothing to do). */
   def compact(dir: String): Int = synchronized {
+    requireNoWap("compaction"); requireNoBranch("compaction")
     // optimistic-concurrency base: same-JVM maintenance serializes on
     // the object lock, but a CROSS-PROCESS delete/merge racing this
     // compaction must be detected at publish, not silently undone
     val compactBase = currentVersion(dir)
     val live = entriesAsOf(dir, Long.MaxValue)
-    if (live.size <= 1) return 0
-    val schema = DataType.fromJson(new String(
-      Files.readAllBytes(Paths.get(dir, SchemaFile)),
-      StandardCharsets.UTF_8)).asInstanceOf[StructType]
-    val curCols = schema.fieldNames.toSeq
-    // Partition-aware: a partitioned table compacts PER VALUE (one
-    // output file per partition-value group, its partition record and
-    // grouped stats intact), so nightly compaction never forfeits
-    // storage-partitioned joins — the Iceberg per-partition compaction
-    // shape. An unpartitioned table (or one with pre-partitioning
-    // files whose grouping is unknowable) compacts to one file.
-    val groups: Seq[(Option[(String, Any)], Seq[LogEntry])] =
-      partitionColOf(dir) match {
-        case Some(c) if live.forall(e =>
-            GraftLogPartValue.of(e, c).isDefined) =>
-          live.groupBy(e => GraftLogPartValue.of(e, c).get).toSeq
-            .map { case (v, es) => (Some(c -> v), es) }
-        case _ => Seq((None, live))
-      }
+    val pcol = partitionColOf(dir)
+    // one group per partition value when every file carries its
+    // record; otherwise (unpartitioned, or files written before the
+    // table was partitioned) the whole snapshot is one group
+    val groups = pcol match {
+      case Some(c) if live.forall(GraftLogPartValue.of(_, c).isDefined) =>
+        live.groupBy(GraftLogPartValue.of(_, c)).values
+      case _ => Seq(live)
+    }
     // nothing to do when every group is already a single file
-    if (groups.forall(_._2.size <= 1)) return 0
-
-    // Output files ROLL at a target uncompressed size, so no group
-    // compacts into one unbounded 100 GB file. The target is the
-    // `graft.compact.target-bytes` table property — layout policy
-    // belongs to the table, not to whichever session runs maintenance;
-    // the default keeps small fixtures at one file per group.
-    val targetBytes = propertiesOf(dir).get("graft.compact.target-bytes")
-      .map(_.toLong).getOrElse(128L << 20)
-
-    // Every output any group closes is registered here BEFORE the
-    // group returns: on a parallel failure the sweep deletes from
-    // this ledger, not from the futures — a future cancelled just as
-    // its task completed reads isCancelled and its get() throws, so
-    // future-based reaping would strand exactly those outputs.
-    val produced = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-    def writeGroup(entries: Seq[LogEntry],
-        pv: Option[(String, Any)]): Seq[LogEntry] = {
-      val pvStat = pv.fold(Map.empty[String, (String, String)]) {
-        case (c, v) => Map(GraftLogPartValue.key(c) ->
-          GraftLogPartValue.encode(v))
-      }
-      // Every output file's stats are computed EXACTLY from the cells
-      // streaming through it — the same [[GraftLogCellStats]] tracker
-      // the append writer runs — never folded from the inputs'
-      // manifest entries. Folding was unsound whenever an input
-      // carried a deletion vector (the deleted rows may have held the
-      // extremum / distinct values / nulls), so it had to drop ALL
-      // stats in exactly the post-DELETE case maintenance exists for:
-      // the big compacted files a maintained 100 TB table is mostly
-      // made of lost range skipping, metadata-only MIN/MAX/COUNT, and
-      // CBO cardinalities. Recomputing is exact for every input
-      // vintage (DV'd, evolved, renamed — the cells are already
-      // remapped to the current layout below), gives each ROLLED
-      // output its own file-tight range instead of the group-wide
-      // fold, and keeps the exact additive null count on every output.
-      val done = scala.collection.mutable.ArrayBuffer.empty[LogEntry]
-      val curTypes = schema.fields.map(_.dataType).toSeq
-      var outName: String = null
-      var out: GraftColFile.Writer = null
-      var tracker: GraftLogCellStats = null
-      def open(): Unit = {
-        outName = s"part-${UUID.randomUUID()}${GraftColFile.Extension}"
-        out = new GraftColFile.Writer(Paths.get(dir, outName),
-          curCols, curTypes)
-        tracker = new GraftLogCellStats(schema)
-      }
-      def closeCurrent(): Unit = if (out != null) {
-        val raw = out.rawChars
-        val rows = out.finish()
-        produced.add(outName)
-        done += LogEntry.add(-1L, outName, rows,
-          tracker.finish() ++ pvStat +
-            (GraftLog.RawBytesKey -> (raw.toString, "n")),
-          dataChange = false, cols = curCols)
-        out = null
-        tracker = null
-      }
-      def writeLine(l: String): Unit = {
-        if (out == null) open()
-        // current-layout lines carry exactly curCols cells; a short
-        // split (trailing empties) pads with the null sentinel
-        val cells = l.split("\t", -1)
-        val full =
-          if (cells.length == curCols.length) cells
-          else Array.tabulate(curCols.length)(i =>
-            if (i < cells.length) cells(i) else NullCell)
-        tracker.add(full)
-        out.write(full)
-        if (out.rawChars >= targetBytes) closeCurrent()
-      }
-      // Rewrite every live row into the CURRENT column layout: a file
-      // written before an evolution has fewer cells, so its rows pad
-      // the later columns with the null sentinel. Files already in the
-      // current layout stream through unmodified.
-      try {
-        try entries.foreach { e =>
-          val remap: Option[Array[Int]] =
-            if (e.cols == curCols) None
-            else Some(schema.fields.map(f =>
-              e.cols.indexOf(
-                GraftLog.fileLocalName(schema, e, f.name))).toArray)
-          // materialize the file's deletion vector: DV'd ordinals are
-          // dropped here and the compacted output carries no DV — the
-          // maintenance pass that keeps DVs from accumulating (Delta's
-          // PURGE inside OPTIMIZE)
-          val dvArr = GraftLog.dvOf(e)
-            .map { case (f, _) => GraftLogDv.read(dir, f) }
-            .getOrElse(Array.empty[Long])
-          var dvPtr = 0
-          var ord = -1L
-          val in = GraftColFile.lineReader(new File(dir, e.file))
-          try {
-            var line = in.readLine()
-            // EVERY line is a row — including the empty line a
-            // single-column table's empty-string cell produces
-            // (well-formed files never yield spurious empties:
-            // readLine drops terminators and EOF reads null, and the
-            // gcol lineReader emits exactly rowCount lines). Skipping
-            // empties desynchronized `ord` from the deletion vector's
-            // ordinals and silently dropped the row from every
-            // line-path scan while the columnar path served it.
-            while (line != null) {
-              {
-                ord += 1
-                // a cancelled parallel group must ABORT promptly (and
-                // self-clean via the catch below) — gzip streams never
-                // check the interrupt flag on their own
-                if ((ord & 0xfff) == 0L && Thread.interrupted())
-                  throw new InterruptedException(
-                    "compaction group cancelled")
-                if (dvPtr < dvArr.length && dvArr(dvPtr) == ord)
-                  dvPtr += 1
-                else {
-                  val outLine = remap match {
-                    case None => line
-                    case Some(idx) =>
-                      val cells = line.split("\t", -1)
-                      idx.map(i => if (i < 0) NullCell else cells(i))
-                        .mkString("\t")
-                  }
-                  writeLine(outLine)
-                }
-              }
-              line = in.readLine()
-            }
-          } finally in.close()
-        } finally closeCurrent()
-        // a group whose every row was DV-deleted still publishes one
-        // empty file so the group's partition record survives
-        // compaction
-        if (done.isEmpty) { open(); closeCurrent() }
-        done.toSeq
-      } catch {
-        // a failing group deletes its OWN already-closed outputs (and
-        // the open one) before propagating, so a parallel compaction's
-        // cleanup never strands them until vacuum
-        case t: Throwable =>
-          if (out != null) {
-            try out.abort() catch { case _: Throwable => () }
-            new File(dir, outName).delete()
-          }
-          done.foreach(le => new File(dir, le.file).delete())
-          throw t
-      }
-    }
-
-    // Groups compact in PARALLEL (bounded pool): a partitioned table's
-    // nightly OPTIMIZE is one independent rewrite per partition value,
-    // and running them serially through one thread made the driver the
-    // bottleneck — 64 values = 64× one group's wall time. Each
-    // writeGroup touches only its own inputs/outputs (all state is
-    // local), so the only coordination is ordering the results
-    // deterministically and cleaning up every group's files if any
-    // group fails. The single-group (unpartitioned) case stays on this
-    // thread — its stream is inherently serial (outputs roll at the
-    // size target across input-file boundaries). At cluster scale the
-    // same per-group unit is the executor-task boundary; the bounded
-    // local pool is its single-node expression.
-    val fresh: Seq[LogEntry] =
-      if (groups.size <= 1)
-        groups.flatMap { case (pv, es) => writeGroup(es, pv) }
+    if (groups.forall(_.size <= 1)) return 0
+    val schema = storedSchema(dir).getOrElse(
+      throw new IllegalArgumentException(
+        s"graft-log table not found at $dir"))
+    val spark = org.apache.spark.sql.SparkSession.active
+    // read exactly the captured snapshot (see repartitionTable)
+    val picked = spark.read.format("graft.sources.GraftLogSource")
+      .option("path", dir)
+      .option("pickFiles", live.map(_.file).mkString(","))
+      .load()
+    val replacement =
+      if (pcol.isDefined) picked
       else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(groups.size, 8))
-        // Results are reaped in COMPLETION order (not submission
-        // order): waiting on futures in sequence would sit behind an
-        // earlier group's full rewrite before noticing a later
-        // group's failure. The index threads each result back to its
-        // submission slot so the published entry order stays
-        // deterministic.
-        val ecs = new java.util.concurrent.ExecutorCompletionService[
-          (Int, Seq[LogEntry])](pool)
-        val groupSeq = groups.toIndexedSeq
-        val futs = groupSeq.zipWithIndex.map { case ((pv, es), i) =>
-          ecs.submit(new java.util.concurrent.Callable[
-              (Int, Seq[LogEntry])] {
-            override def call(): (Int, Seq[LogEntry]) =
-              (i, writeGroup(es, pv))
-          })
-        }
-        try {
-          val byIdx = new Array[Seq[LogEntry]](groupSeq.size)
-          var done = 0
-          while (done < groupSeq.size) {
-            val (i, r) = ecs.take().get() // first failure, promptly
-            byIdx(i) = r
-            done += 1
-          }
-          byIdx.toSeq.flatten
-        } catch {
-          case e @ (_: java.util.concurrent.ExecutionException |
-                    _: InterruptedException) =>
-            // Fail fast AND clean deterministically: stop the pool
-            // (queued groups never start), CANCEL undone futures
-            // (running groups abort at their per-line interrupt
-            // check or run out their short remainder), await the
-            // drain, then delete every file in the `produced` ledger
-            // — sibling outputs, whether their group completed, was
-            // cancelled mid-flight, or completed DESPITE the cancel
-            // (its future reads isCancelled, so reaping via get()
-            // would strand exactly that case). The failing group
-            // already deleted its own files in writeGroup's catch (a
-            // double delete is a no-op). The sweep runs ONLY when the
-            // drain actually completed: a straggler still inside a
-            // gzip read could otherwise close and register NEW part
-            // files after the sweep iterated — deleting under a live
-            // writer. On a timed-out drain the outputs stay for
-            // vacuum (the manifest never references them).
-            pool.shutdownNow()
-            futs.foreach(f => if (!f.isDone) f.cancel(true))
-            // an interrupt delivered DURING the drain wait must not
-            // replace the original failure or skip the sweep — treat
-            // it as a timed-out drain (flag restored for the caller)
-            val drained =
-              try pool.awaitTermination(30,
-                java.util.concurrent.TimeUnit.SECONDS)
-              catch {
-                case _: InterruptedException =>
-                  Thread.currentThread().interrupt(); false
-              }
-            if (drained) produced.forEach(f => new File(dir, f).delete())
-            throw (e match {
-              case ee: java.util.concurrent.ExecutionException =>
-                Option(ee.getCause).getOrElse(ee)
-              case other => other
-            })
-        } finally pool.shutdown()
+        val raw = live.map(_.stats(RawBytesKey)._1.toLong).sum
+        val target = targetBytesOf(dir)
+        picked.coalesce(math.max(1L, (raw + target - 1) / target).toInt)
       }
-    try commitNew(dir, schema) { v =>
-      requireNoFileConflicts(dir, compactBase, v,
-        live.map(_.file).toSet, "compaction")
-      live.map(e => LogEntry.remove(v, e.file)) ++
-        fresh.map(_.copy(version = v))
-    } catch {
-      case e: GraftConcurrentModificationException =>
-        fresh.foreach(f => new File(dir, f.file).delete())
-        throw e
-    }
+    rewriteFiles(dir, live, replacement, schema,
+      dataChange = false, baseVersion = compactBase)
     live.size
   }
 
@@ -2322,7 +2142,7 @@ object GraftLog {
           .withColumn(ChangeTypeCol, lit("insert"))
         Some(pre.unionByName(post).unionByName(ins))
       }
-    rewriteFiles(spark, dir, affected, merged, schema, txn = txn,
+    rewriteFiles(dir, affected, merged, schema, txn = txn,
       cdcChanges = cdc, baseVersion = rewriteBase)
     (affected.size, live.size)
   }
@@ -2361,7 +2181,7 @@ object GraftLog {
       else Some(picked.filter(col(keyCol) >= lo && col(keyCol) < hi)
         .withColumn(ChangeTypeCol,
           org.apache.spark.sql.functions.lit("delete")))
-    rewriteFiles(spark, dir, affected, remaining, schema,
+    rewriteFiles(dir, affected, remaining, schema,
       cdcChanges = cdc, baseVersion = rewriteBase)
     (affected.size, live.size)
   }
@@ -2397,7 +2217,7 @@ object GraftLog {
         // is metadata-only
         val cdcEntries =
           if (!cdfEnabled(dir)) Seq.empty
-          else stageCdc(spark, dir,
+          else stageCdc(dir,
             spark.read.format("graft.sources.GraftLogSource")
               .option("path", dir).load()
               .withColumn(ChangeTypeCol, lit("delete")))
@@ -2420,7 +2240,7 @@ object GraftLog {
       if (!cdfEnabled(dir)) None
       else Some(picked.filter(coalesce(cond, lit(false)))
         .withColumn(ChangeTypeCol, lit("delete")))
-    rewriteFiles(spark, dir, affected, remaining, schema,
+    rewriteFiles(dir, affected, remaining, schema,
       cdcChanges = cdc, baseVersion = rewriteBase)
     (affected.size, live.size)
   }
@@ -2487,7 +2307,7 @@ object GraftLog {
     // position scan above, so the feed never double-reports)
     val cdcEntries =
       if (!cdfEnabled(dir)) Seq.empty
-      else stageCdc(spark, dir,
+      else stageCdc(dir,
         spark.read.format("graft.sources.GraftLogSource")
           .option("path", dir)
           .option("pickFiles", touched.map(_.file).mkString(","))
@@ -2570,6 +2390,7 @@ object GraftLog {
   def optimizeZorder(spark: org.apache.spark.sql.SparkSession,
       dir: String, xCol: String, yCol: String, bits: Int = 8,
       nFiles: Int = 16): Int = {
+    requireNoWap("OPTIMIZE ZORDER"); requireNoBranch("OPTIMIZE ZORDER")
     import org.apache.spark.sql.functions.col
     val schema = storedSchema(dir).getOrElse(throw new IllegalArgumentException(
       s"graft-log table not found at $dir"))
@@ -2592,7 +2413,7 @@ object GraftLog {
         graft.functions.ZOrder.zValue(col(xCol), col(yCol), bits))
       .repartitionByRange(nFiles, col("__graft_z"))
       .drop("__graft_z")
-    rewriteFiles(spark, dir, live, replacement, schema,
+    rewriteFiles(dir, live, replacement, schema,
       dataChange = false, baseVersion = rewriteBase)
     live.size
   }
@@ -2637,19 +2458,13 @@ object GraftLog {
     // table's own declaration flips only AFTER the rewrite commits —
     // a crashed evolution leaves the old declaration intact and a
     // retry re-runs instead of silently no-opping on the early return
-    rewriteFiles(spark, dir, live, replacement, schema,
+    rewriteFiles(dir, live, replacement, schema,
       dataChange = false, partitionOverride = Some(col),
       baseVersion = rewriteBase)
     setPartitionCol(dir, col, allowChange = true)
     live.size
   }
 
-  /** Shared commit tail for copy-on-write maintenance: write the
-    * replacement rows through the normal writer into a scratch log
-    * (full stats/cols commit messages for free), adopt its part files,
-    * and publish remove(old) + add(new) as one version. Zero-row parts
-    * are dropped, not published. `dataChange = false` marks a pure
-    * layout rewrite (same rows) that the change feed must skip. */
   /** Optimistic-concurrency guard for row-level rewrites: between the
     * snapshot the rewrite PLANNED against (`baseVersion`) and the
     * version it is CLAIMING, no other commit may have touched a file
@@ -2733,8 +2548,13 @@ object GraftLog {
           " — replan against the current snapshot and retry")
   }
 
-  private[graft] def rewriteFiles(spark: org.apache.spark.sql.SparkSession,
-      dir: String, old: Seq[LogEntry],
+  /** Shared commit tail for copy-on-write maintenance: write the
+    * replacement rows through the normal writer into a scratch log
+    * (full stats/cols commit messages for free), adopt its part files,
+    * and publish remove(old) + add(new) as one version. Zero-row parts
+    * are dropped, not published. `dataChange = false` marks a pure
+    * layout rewrite (same rows) that the change feed must skip. */
+  private[graft] def rewriteFiles(dir: String, old: Seq[LogEntry],
       replacement: org.apache.spark.sql.DataFrame,
       schema: StructType, dataChange: Boolean = true,
       txn: Option[(String, Long)] = None,
@@ -2751,23 +2571,21 @@ object GraftLog {
     val base =
       if (baseVersion != UnsetBase) baseVersion else currentVersion(dir)
     // typed CDC sidecars publish in the SAME commit as the rewrite
-    val cdcEntries = cdcChanges.map(stageCdc(spark, dir, _))
+    val cdcEntries = cdcChanges.map(stageCdc(dir, _))
       .getOrElse(Seq.empty)
-    val scratch = s"$dir/__rewrite-${UUID.randomUUID()}"
-    // a partitioned table's maintenance rewrite keeps routing rows per
-    // value (the scratch table inherits the declaration — or the
-    // partition-evolution override), so rewritten files keep their
-    // partition record and SPJ grouping survives merge/delete —
-    // compaction on a partitioned table yields one file per VALUE,
-    // the Iceberg per-partition compaction shape
-    partitionOverride.orElse(partitionColOf(dir))
-      .foreach(setPartitionCol(scratch, _))
-    replacement.write.format("graft.sources.GraftLogSource")
-      .option("path", scratch).mode("overwrite").save()
-    val fresh = entriesAsOf(scratch, Long.MaxValue).filter(_.rows > 0L)
-    fresh.foreach { e =>
-      Files.move(Paths.get(scratch, e.file), Paths.get(dir, e.file))
-    }
+    // The scratch table inherits the table's layout policy. Its
+    // partition declaration (or the partition-evolution override)
+    // keeps a rewrite routing rows per value, so rewritten files keep
+    // their partition record and SPJ grouping survives merge/delete —
+    // compaction on a partitioned table yields one file per VALUE.
+    // Its roll target keeps rewritten files at the table's size.
+    val fresh = writeScratch(dir, RewriteScratchPrefix, replacement,
+      setup = scratch => {
+        partitionOverride.orElse(partitionColOf(dir))
+          .foreach(setPartitionCol(scratch, _))
+        propertiesOf(dir).get(TargetBytesProp).foreach(t =>
+          writeProperties(scratch, Map(TargetBytesProp -> t)))
+      })(identity)
     try commitNew(dir, storedSchema(dir).getOrElse(schema)) { v =>
       requireNoFileConflicts(dir, base, v,
         old.map(_.file).toSet, "rewrite")
@@ -2789,10 +2607,6 @@ object GraftLog {
         fresh.foreach(f => new File(dir, f.file).delete())
         cdcEntries.foreach(c => new File(dir, c.file).delete())
         throw e
-    } finally {
-      Option(new File(scratch).listFiles()).getOrElse(Array.empty)
-        .foreach(_.delete())
-      new File(scratch).delete()
     }
   }
 
@@ -3572,21 +3386,20 @@ class GraftLogStreamingWrite(dir: String, schema: StructType,
   }
 }
 
+/** One written part file, as its commit entry will record it. */
 case class GraftLogCommit(file: String, rows: Long,
     stats: Map[String, (String, String)] = Map.empty,
     cols: Seq[String])
-    extends WriterCommitMessage
 
-/** A partitioned writer task commits SEVERAL files (one per partition
-  * value it saw); an unpartitioned task commits one. */
+/** The files a writer task commits: one per partition value it saw
+  * (one in all when unpartitioned), plus each file it rolled. */
 case class GraftLogTaskCommit(files: Seq[GraftLogCommit])
     extends WriterCommitMessage
 
 object GraftLogCommit {
-  /** Every file commit in a message batch, both shapes. */
+  /** Every file commit in a message batch. */
   def all(messages: Array[WriterCommitMessage]): Seq[GraftLogCommit] =
     messages.toSeq.flatMap {
-      case c: GraftLogCommit => Seq(c)
       case t: GraftLogTaskCommit => t.files
       case _ => Seq.empty
     }
@@ -3738,24 +3551,36 @@ class GraftLogWriterFactory(dir: String, schema: StructType,
   private val taskBufferChars: Long = GraftLog.byteConf(
     "spark.graft.log.taskBufferBytes", 64L << 20)
 
-  /** One part file in flight: gcol block writer + per-column stats +
-    * blooms. The unit a partitioned task keeps one of PER VALUE it
-    * sees. */
+  /** Raw characters at which a part file closes and the next row
+    * opens a fresh one: the table's [[GraftLog.TargetBytesProp]],
+    * read ONCE here on the driver like [[blockChars]]. Every write
+    * rolls at it — appends, copy-on-write rewrites and compaction. */
+  private val targetChars: Long = GraftLog.targetBytesOf(dir)
+
+  /** The part files of one partition value (or of the whole task when
+    * unpartitioned): the file in flight — gcol block writer +
+    * per-column stats + blooms — and the files it already rolled. */
   private class PartFile(partValue: Option[Any]) {
-    val file = s"part-${UUID.randomUUID()}${GraftColFile.Extension}"
-    private val out = {
+    private val rolled =
+      scala.collection.mutable.ArrayBuffer.empty[GraftLogCommit]
+    private var file: String = _
+    private var out: GraftColFile.Writer = _
+    // Per-column min/max, NDV-sized blooms, HLL sketches and null
+    // counts, fed the canonical cells as they stream through.
+    private var tracker: GraftLogCellStats = _
+    open()
+
+    private def open(): Unit = {
+      file = s"part-${UUID.randomUUID()}${GraftColFile.Extension}"
       GraftLog.ensureDir(dir)
-      new GraftColFile.Writer(Paths.get(dir, file),
+      out = new GraftColFile.Writer(Paths.get(dir, file),
         schema.fieldNames.toSeq, schema.fields.map(_.dataType).toSeq,
         blockChars)
+      tracker = new GraftLogCellStats(schema)
     }
-    private var rows = 0L
-    // Per-column min/max, NDV-sized blooms, HLL sketches and null
-    // counts — the SAME tracker compaction runs over its rolled
-    // outputs, fed the canonical cells as they stream through.
-    private val tracker = new GraftLogCellStats(schema)
 
     def write(row: InternalRow): Unit = {
+      if (out == null) open()
       val cells = schema.fields.zipWithIndex.map { case (f, i) =>
         if (row.isNullAt(i)) GraftLog.NullCell
         else f.dataType match {
@@ -3770,12 +3595,12 @@ class GraftLogWriterFactory(dir: String, schema: StructType,
       }
       tracker.add(cells)
       out.write(cells)
-      rows += 1
+      if (out.rawChars >= targetChars) close()
     }
 
-    def finish(): GraftLogCommit = {
-      out.finish()
-      val fileStats = tracker.finish()
+    private def close(): Unit = {
+      val raw = out.rawChars
+      val rows = out.finish()
       // the file's identity-partition value, when this is a
       // partitioned write — what the scan groups on for SPJ
       val pvStat = (partitionCol, partValue) match {
@@ -3783,23 +3608,31 @@ class GraftLogWriterFactory(dir: String, schema: StructType,
           Map(GraftLogPartValue.key(c) -> GraftLogPartValue.encode(v))
         case _ => Map.empty[String, (String, String)]
       }
-      val rawStat = Map(GraftLog.RawBytesKey ->
-        (out.rawChars.toString, "n"))
-      GraftLogCommit(file, rows,
-        fileStats ++ pvStat ++ rawStat,
+      rolled += GraftLogCommit(file, rows,
+        tracker.finish() ++ pvStat +
+          (GraftLog.RawBytesKey -> (raw.toString, "n")),
         schema.fieldNames.toSeq)
+      out = null
+    }
+
+    def finish(): Seq[GraftLogCommit] = {
+      if (out != null) close()
+      rolled.toSeq
     }
 
     def abort(): Unit = {
-      out.abort()
-      new File(dir, file).delete()
+      if (out != null) {
+        out.abort()
+        new File(dir, file).delete()
+      }
+      rolled.foreach(c => new File(dir, c.file).delete())
     }
 
     /** Raw chars currently buffered in the open block. */
-    def buffered: Long = out.bufferedChars
+    def buffered: Long = if (out == null) 0L else out.bufferedChars
 
     /** Flush the open block early — task-memory relief. */
-    def relieve(): Unit = out.flushNow()
+    def relieve(): Unit = if (out != null) out.flushNow()
   }
 
   override def createWriter(partitionId: Int,
@@ -3871,9 +3704,8 @@ class GraftLogWriterFactory(dir: String, schema: StructType,
           }
         }
       }
-      override def commit(): WriterCommitMessage =
-        if (partIdx.isEmpty) single.finish()
-        else GraftLogTaskCommit(perValue.values.map(_.finish()).toSeq)
+      override def commit(): WriterCommitMessage = GraftLogTaskCommit(
+        (Option(single) ++ perValue.values).flatMap(_.finish()).toSeq)
       override def abort(): Unit = {
         if (single != null) single.abort()
         perValue.values.foreach(_.abort())
@@ -3933,7 +3765,7 @@ class GraftLogScan(dir: String, tableSchema: StructType,
 
   /** Partition-value file groups, when the planned files can be
     * grouped soundly: the table declares an identity partition column
-    * and EVERY planned file carries its value record (a compaction or
+    * and EVERY planned file carries its value record (a
     * pre-partitioning file without one disables grouping — correct,
     * just unco-located). Each group becomes ONE input partition whose
     * `partitionKey` is the value, and the scan reports
@@ -4613,8 +4445,8 @@ object GraftLogBloom {
   * register sketch is MERGEABILITY: the union of two files' value
   * sets is exactly the register-wise max of their sketches, so the
   * table-level NDV is computable from metadata alone — per scan,
-  * post-file-skipping, with no data I/O — and compaction folds input
-  * sketches instead of dropping them. NDV feeds the DSv2
+  * post-file-skipping, with no data I/O — and a compacted file's
+  * sketch equals that merge. NDV feeds the DSv2
   * `Statistics.columnStats()` surface Catalyst's CBO reads for join
   * ordering and selectivity at 100 TB (SPARK-41378), and the `t$stats`
   * metadata table. Null counts ride along under `col#nulls` (exact,
@@ -4776,11 +4608,11 @@ object GraftLogNdv {
   * a graft-log part file stores — min/max for numeric columns,
   * NDV-sized blooms for equality-prunable columns (string AND
   * integral; see below), an HLL NDV sketch plus exact null count for
-  * every column. Both write paths run it: the append writer
-  * ([[GraftLogWriterFactory]]) feeds the cells it is about to encode,
-  * and COMPACTION feeds the cells it streams into each rolled output —
-  * so maintenance outputs carry file-EXACT stats instead of a fold of
-  * their inputs' manifests. That is what keeps a maintained table
+  * every column. The one part-file writer ([[GraftLogWriterFactory]])
+  * feeds it the cells it is about to encode — appends and every
+  * maintenance rewrite alike, compaction included — so maintenance
+  * outputs carry file-EXACT stats instead of a fold of their inputs'
+  * manifests. That is what keeps a maintained table
   * prunable: folding manifest stats had to drop EVERYTHING when any
   * input carried a deletion vector (the deleted rows may have held the
   * extremum, the distinct values, the nulls), which meant exactly the

@@ -140,7 +140,7 @@ object WarehouseStream {
     // as-of; rewriteFiles checks conflicts over (base, publish] and —
     // fullReplace — treats ANY concurrent data commit as a conflict
     // when the plan's snapshot was empty (see the pin comment above)
-    try graft.sources.GraftLog.rewriteFiles(spark, dimDir, retired,
+    try graft.sources.GraftLog.rewriteFiles(dimDir, retired,
       out, out.schema, baseVersion = base, fullReplace = true)
     finally dim.unpersist()
   }

@@ -27,6 +27,19 @@ class GcolSpec extends SparkSpec {
     }
   }
 
+  /** Every row's cells in a part file, decoded chunk by chunk. */
+  private def cellsOf(part: File): Seq[Seq[String]] = {
+    val ch = java.nio.channels.FileChannel.open(part.toPath)
+    try {
+      val footer = GraftColFile.readFooter(ch, part)
+      footer.blocks.flatMap { b =>
+        val chunks = footer.cols.indices
+          .map(GraftColFile.readChunk(ch, b, _))
+        (0 until b.rows.toInt).map(r => chunks.map(_.cell(r)))
+      }
+    } finally ch.close()
+  }
+
   /** One part file with many small blocks. */
   private def writeOneBigPart(dir: String, n: Long): Unit =
     withConf("spark.graft.log.blockBytes", (16L << 10).toString) {
@@ -170,11 +183,9 @@ class GcolSpec extends SparkSpec {
     assert(back.filter(col("nullable").isNull).count() == 40000L)
     assert(back.agg(sum(col("nullable"))).head.getLong(0) ==
       (0L until 50000L).filter(_ % 5 == 0).sum)
-    // the line-reader shim (compaction / row reader path) decodes
-    // dict chunks identically
-    val in = GraftColFile.lineReader(part)
-    val first = in.readLine(); in.close()
-    assert(first == "0\t0.0\tt0\t0", s"unexpected first line: $first")
+    // the chunk decoder renders dict cells as the text written
+    val first = cellsOf(part).head
+    assert(first == Seq("0", "0.0", "t0", "0"), s"unexpected first row: $first")
   }
 
   test("typed dictionaries: low-NDV DOUBLE chunks carry binary " +
@@ -198,12 +209,11 @@ class GcolSpec extends SparkSpec {
       (0L until 30000L).count(_ % 9 == 7))
     assert(math.abs(back.agg(sum(col("price"))).head.getDouble(0) -
       (0L until 30000L).map(i => (i % 9) * 0.5).sum) < 1e-6)
-    // the line shim renders each distinct's canonical text once —
+    // the decoder renders each distinct's canonical text once —
     // identical to what the plain writer would have stored
-    val in = GraftColFile.lineReader(part)
-    val l0 = in.readLine(); val l1 = in.readLine(); in.close()
-    assert(l0 == "0\t0.0" && l1 == "1\t0.5",
-      s"unexpected lines: $l0 / $l1")
+    val rows = cellsOf(part).take(2)
+    assert(rows == Seq(Seq("0", "0.0"), Seq("1", "0.5")),
+      s"unexpected rows: $rows")
   }
 
   test("the row reader honors byte-range splits: ranged partitions " +
@@ -363,34 +373,53 @@ class GcolSpec extends SparkSpec {
     assert(c.stats.get(GraftLog.RawBytesKey).exists(_._1.toLong > 0L))
   }
 
-  test("non-canonical numeric cells fall back to plain text, values " +
-      "byte-preserved through compaction") {
+  test("non-canonical numeric cells fall back to plain text: the " +
+      "encoder reads back the cell text it was given") {
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    val part = new File(tmp(), s"part-enc${GraftColFile.Extension}")
+    // 'i' is an INT rendering, NOT the canonical DOUBLE one ('i.0'):
+    // binary encoding would silently rewrite the cell text, so the
+    // chunk holding such cells must stay plain (enc 0), while the
+    // canonical id chunk binary-encodes
+    val w = new GraftColFile.Writer(part.toPath, Seq("id", "v"),
+      Seq(LongType, DoubleType))
+    (0 until 100).foreach(i => w.write(Array(i.toString,
+      if (i < 50) i.toString else java.lang.Double.toString(i + 0.5))))
+    assert(w.finish() == 100L)
+    val footer = GraftColFile.readFooter(part)
+    assert(footer.blocks.forall(_.encOf(footer.cols.indexOf("v")) == 0),
+      footer.blocks.map(_.encs.toSeq).toString)
+    assert(footer.blocks.forall(_.encOf(footer.cols.indexOf("id")) == 2),
+      footer.blocks.map(_.encs.toSeq).toString)
+    val cells = cellsOf(part)
+    assert(cells.size == 100)
+    assert(cells(7) == Seq("7", "7"), s"cell text must survive: ${cells(7)}")
+    assert(cells(70) == Seq("70", "70.5"))
+  }
+
+  test("compaction rewrites a widened column's cells canonically, " +
+      "values exact") {
     val dir = tmp()
     spark.range(0, 100).selectExpr("id", "CAST(id AS INT) AS v")
       .coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save()
     // widening INT -> DOUBLE is metadata-only: the old file keeps its
-    // int cells ('7'), which are NOT the canonical DOUBLE rendering
-    // ('7.0') — binary encoding would silently rewrite the cell text,
-    // so a chunk holding them must stay plain
+    // int cells ('7'), which read as DOUBLE 7.0
     GraftLog.widenColumn(dir, "v",
       org.apache.spark.sql.types.DoubleType)
     spark.range(100, 200).selectExpr("id", "CAST(id AS DOUBLE) + 0.5 AS v")
       .coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save()
-    // compaction streams the int cells through the gcol writer under
-    // the DOUBLE type: the v chunk holding them must NOT be binary
-    // (enc 0), while the canonical id chunk may binary-encode freely
     assert(GraftLog.compact(dir) == 2)
     val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
-    val footer = GraftColFile.readFooter(
-      new File(dir, live.head.file))
-    assert(footer.blocks.exists(b =>
-      b.encOf(footer.cols.indexOf("v")) == 0),
+    assert(live.size == 1)
+    // the writer renders each DOUBLE value canonically, so the INT
+    // vintage's '7' is now '7.0' and the whole v chunk binary-encodes
+    val part = new File(dir, live.head.file)
+    val footer = GraftColFile.readFooter(part)
+    assert(footer.blocks.forall(_.encOf(footer.cols.indexOf("v")) == 3),
       footer.blocks.map(_.encs.toSeq).toString)
-    val lines = GraftColFile.lineReader(new File(dir, live.head.file))
-    val first = try lines.readLine() finally lines.close()
-    assert(first == "0\t0", s"cell text must survive as written: $first")
+    assert(cellsOf(part).filter(_.head == "7") == Seq(Seq("7", "7.0")))
     val after = spark.read.format(Fmt).option("path", dir).load()
     assert(after.count() == 200L)
     assert(after.filter(col("v") === 7.0).count() == 1L)

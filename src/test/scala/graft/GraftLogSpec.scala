@@ -401,13 +401,13 @@ class GraftLogSpec extends SparkSpec {
     // process). Drive rewriteFiles directly: the public ops serialize
     // same-JVM, so the race is simulated by pre-planning both.
     val base = GraftLog.currentVersion(dir)
-    GraftLog.rewriteFiles(spark, dir, live,
+    GraftLog.rewriteFiles(dir, live,
       readBack(dir).filter(col("id") < 1500), schema,
       baseVersion = base)
     val winner = readBack(dir).count()
     assert(winner == 1500L)
     val err = intercept[GraftConcurrentModificationException] {
-      GraftLog.rewriteFiles(spark, dir, live,
+      GraftLog.rewriteFiles(dir, live,
         readBack(dir).filter(col("id") < 1000), schema,
         baseVersion = base)
     }
@@ -444,7 +444,7 @@ class GraftLogSpec extends SparkSpec {
     // the check cannot verify the folded span — it must abort
     // retryably, NOT pass silently and resurrect overwritten rows
     val err = intercept[GraftConcurrentModificationException] {
-      GraftLog.rewriteFiles(spark, dir, live,
+      GraftLog.rewriteFiles(dir, live,
         readBack(dir).filter(col("id") < 100), schema,
         baseVersion = base)
     }
@@ -690,7 +690,7 @@ class GraftLogSpec extends SparkSpec {
       .write.format(Fmt).option("path", dir).mode("append").save()
     val schema = graft.sources.GraftLog.storedSchema(dir).get
     intercept[graft.sources.GraftConcurrentModificationException](
-      graft.sources.GraftLog.rewriteFiles(spark, dir, Seq.empty,
+      graft.sources.GraftLog.rewriteFiles(dir, Seq.empty,
         spark.range(10, 20).selectExpr("id", "id AS v"), schema,
         baseVersion = base, fullReplace = true))
     // the aborted rewrite stranded nothing: only the bootstrap's rows
@@ -1186,10 +1186,9 @@ class GraftLogSpec extends SparkSpec {
     val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
     assert(live.size > 8, "need multi-file groups to compact")
     // corrupt ONE group's input so its rewrite throws mid-stream —
-    // the parallel pool must propagate the failure promptly AND
-    // every group's uncommitted outputs must be deleted (the failing
-    // group cleans its own in writeGroup's catch; completed siblings
-    // are reaped by the pool's failure sweep)
+    // the failure must propagate AND every group's uncommitted
+    // outputs must be deleted (failed writer tasks abort their files;
+    // the scratch table they were written into is removed)
     val victim = live.head.file
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, victim),
@@ -1201,9 +1200,75 @@ class GraftLogSpec extends SparkSpec {
       .get.map(_.getName).filter(_.startsWith("part-")).toSet
     assert(afterFiles == beforeFiles,
       s"failed compaction stranded outputs: ${afterFiles -- beforeFiles}")
+    assert(scratchDirs(dir).isEmpty,
+      s"failed compaction left scratch tables: ${scratchDirs(dir)}")
     // the manifest is untouched — no version was published
     assert(GraftLog.entriesAsOf(dir, Long.MaxValue)
       .map(_.file).toSet == live.map(_.file).toSet)
+  }
+
+  private def scratchDirs(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles().toSeq.map(_.getName)
+      .filter(n => n.startsWith("__rewrite-") || n.startsWith("__cdc-"))
+
+  test("a copy-on-write DELETE over a corrupt part fails and leaves " +
+      "no scratch table behind") {
+    import graft.sources.GraftLog
+    import org.apache.spark.sql.sources.LessThan
+    val dir = tmp()
+    spark.range(0, 2000).selectExpr("id", "id * 2 AS v").repartition(2)
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    val v0 = GraftLog.currentVersion(dir)
+    GraftLog.entriesAsOf(dir, Long.MaxValue).foreach(e =>
+      java.nio.file.Files.write(java.nio.file.Paths.get(dir, e.file),
+        Array.fill[Byte](64)(0x7f)))
+    intercept[Exception](
+      GraftLog.deleteWhere(spark, dir, Array(LessThan("id", 10L))))
+    assert(scratchDirs(dir).isEmpty,
+      s"failed rewrite left scratch tables: ${scratchDirs(dir)}")
+    assert(GraftLog.currentVersion(dir) == v0)
+  }
+
+  test("vacuum reaps scratch tables past the retention horizon") {
+    import graft.sources.GraftLog
+    val dir = tmp()
+    series(100).write.format(Fmt).option("path", dir).mode("append").save()
+    // what a process killed mid-rewrite leaves: a scratch table with
+    // a written part file
+    for (name <- Seq("__rewrite-dead", "__cdc-dead")) {
+      val scratch = new java.io.File(dir, name)
+      series(10).write.format(Fmt).option("path", scratch.getPath)
+        .mode("append").save()
+    }
+    // inside the default horizon a scratch table may be in flight
+    GraftLog.vacuum(dir)
+    assert(scratchDirs(dir).size == 2)
+    GraftLog.vacuum(dir, minAgeMs = 0L)
+    assert(scratchDirs(dir).isEmpty,
+      s"vacuum left scratch tables: ${scratchDirs(dir)}")
+    assert(readBack(dir).count() == 100)
+  }
+
+  test("compaction and OPTIMIZE ZORDER refuse to run under WAP or a " +
+      "branch, and commit nothing") {
+    import graft.sources.GraftLog
+    val dir = tmp()
+    for (_ <- 1 to 2)
+      series(100).coalesce(1)
+        .write.format(Fmt).option("path", dir).mode("append").save()
+    val v0 = GraftLog.currentVersion(dir)
+    for (conf <- Seq(GraftLog.WapConf, GraftLog.BranchConf)) {
+      spark.conf.set(conf, "audit1")
+      try {
+        val c = intercept[IllegalStateException](GraftLog.compact(dir))
+        assert(c.getMessage.contains("compaction"), c.getMessage)
+        val z = intercept[IllegalStateException](
+          GraftLog.optimizeZorder(spark, dir, "id", "bucket"))
+        assert(z.getMessage.contains("OPTIMIZE ZORDER"), z.getMessage)
+      } finally spark.conf.unset(conf)
+      assert(GraftLog.currentVersion(dir) == v0)
+    }
+    assert(GraftLog.compact(dir) == 2)
   }
 
   test("parallel per-group compaction: 16 values with DVs and a " +
@@ -1798,6 +1863,30 @@ class GraftLogSpec extends SparkSpec {
       org.apache.spark.sql.functions.min("id"),
       org.apache.spark.sql.functions.max("id")).head
     assert(agg.getLong(0) == 0L && agg.getLong(1) == 999L)
+  }
+
+  test("an append larger than the table's target rolls into several " +
+      "files, every row intact") {
+    import graft.sources.GraftLog
+    val dir = tmp()
+    series(10).write.format(Fmt).option("path", dir).mode("append").save()
+    GraftLog.setProperties(dir, Map("graft.compact.target-bytes" -> "20000"))
+    // one task, ~90k chars of rows
+    series(3000).coalesce(1)
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    val added = GraftLog.entries(dir)
+      .filter(e => e.isAdd && e.version == GraftLog.currentVersion(dir))
+    assert(added.size > 1,
+      s"a 20k target over ~90k chars must roll: got ${added.size} file(s)")
+    assert(added.map(_.rows).sum == 3000L)
+    // each file closes at the first row that reaches the target
+    added.foreach(e => assert(
+      e.stats(GraftLog.RawBytesKey)._1.toLong < 20000L + 100L,
+      s"${e.file} overshot the target: ${e.stats(GraftLog.RawBytesKey)}"))
+    val back = readBack(dir)
+    assert(back.count() == 3010L)
+    assert(back.agg(sum(col("id"))).head.getLong(0) ==
+      (0L until 10L).sum + (0L until 3000L).sum)
   }
 
   test("write-audit-publish: staged appends invisible until published") {

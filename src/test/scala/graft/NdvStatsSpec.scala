@@ -6,7 +6,8 @@ import graft.sources.{GraftLog, GraftLogNdv}
 
 /** The manifest NDV/null-count stats contract: per-file HLL sketches
   * merge to an accurate table-level distinct count at metadata cost,
-  * survive compaction (as do blooms, by OR-fold), shrink with file
+  * survive compaction (its writer recomputes them, and the blooms,
+  * exactly from the rewritten cells), shrink with file
   * skipping through the DSv2 `columnStats()` surface, and read back
   * through the `t$stats` metadata table. */
 class NdvStatsSpec extends SparkSpec {
@@ -219,13 +220,14 @@ class NdvStatsSpec extends SparkSpec {
     assert(live.size == 1, "three parts compact to one")
     val after = GraftLogNdv.mergedColumnStats(
       GraftLog.storedSchema(dir).get, live)
-    // the folded sketch IS the register-max of the inputs, so the
-    // estimate is identical, and the additive null count is preserved
+    // the rewritten file's sketch is recomputed over the same values,
+    // so it IS the register-max of the inputs: the estimate is
+    // identical, and the additive null count is preserved
     assert(after("id")._1 == before("id")._1)
     assert(after("tag")._1 == before("tag")._1)
     assert(after("gap")._2 == before("gap")._2)
-    // blooms OR-fold: a post-compaction string-equality scan still
-    // has a bloom to consult (present and well-formed)
+    // a post-compaction string-equality scan still has a bloom to
+    // consult (present and well-formed)
     assert(live.head.stats.contains(
       graft.sources.GraftLogBloom.key("tag")))
     assert(graft.sources.GraftLogBloom.mayContain(
@@ -302,7 +304,8 @@ class NdvStatsSpec extends SparkSpec {
       .flatMap(_.stats.get(GraftLogBloom.key("tag"))).map(_._1)
     assert(tagBlooms.exists(_.length == GraftLogBloom.MinBits / 64 * 16),
       "a 7-value column folds to the floor size")
-    // mixed-size compaction: fold to the smallest input, stay sound
+    // compacting mixed-size inputs: the output's bloom is recomputed
+    // over every surviving value, so it holds both inputs' members
     assert(GraftLog.compact(dir) == 2)
     val merged = GraftLog.entriesAsOf(dir, Long.MaxValue)
     assert(merged.size == 1)
@@ -312,7 +315,7 @@ class NdvStatsSpec extends SparkSpec {
       GraftLogBloom.mayContain(merged.head, "tag", s"u$i")) &&
       (0 until 7).forall(i =>
         GraftLogBloom.mayContain(merged.head, "tag", s"t$i")),
-      "the OR-fold across mixed sizes is a superset of both inputs")
+      "the compacted bloom is a superset of both inputs")
   }
 
   test("columnStats shrink with file skipping and reach the scan") {
