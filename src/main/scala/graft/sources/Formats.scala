@@ -46,9 +46,6 @@ object Formats {
   def readOrc(spark: SparkSession, path: String): DataFrame =
     spark.read.orc(path)
 
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   /** Partitioned-by-column Parquet layout (hive-style directories) —
     * the layout that makes partition pruning work on a date/key column
     * at scale. */
@@ -67,51 +64,6 @@ object Formats {
     df.write.mode(SaveMode.Overwrite)
       .bucketBy(nBuckets, byCol).sortBy(byCol)
       .option("path", path).format("parquet").saveAsTable(table)
-
-  /** Small-file compaction — the table-maintenance pass a lake runs
-    * continuously: streaming sinks and over-parallel writes leave
-    * thousands of tiny files whose per-file open/footer/listing cost
-    * comes to dominate scans at 100 TB. Rewrites the directory into
-    * ⌈bytes / targetBytes⌉ files via a round-robin repartition
-    * (uniform output sizes), then swaps directories. Returns the
-    * output file count. At scale, run per partition directory so each
-    * swap is bounded by one partition's data, and take a table lock
-    * (or use a transactional table format) for the swap window —
-    * rename is atomic per directory on HDFS-like filesystems. */
-  def compact(spark: SparkSession, path: String,
-      targetBytes: Long = 128L << 20): Int = {
-    // an inferring read, not Tables.schemaOf: this call swaps the
-    // directory's files, so a schema cached under their fingerprint
-    // would never be hit again
-    val df = spark.read.parquet(path)
-    val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    val nFiles = ((bytes + targetBytes - 1) / targetBytes)
-      .max(1).min(10000).toInt
-    val target = new org.apache.hadoop.fs.Path(path)
-    // resolve the PATH's filesystem, not the cluster default: with
-    // fs.defaultFS=hdfs:// a file:/ or s3a:// table would otherwise
-    // pay the full rewrite and then die in the swap with "Wrong FS"
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = new org.apache.hadoop.fs.Path(path + "__compacting")
-    val retired = new org.apache.hadoop.fs.Path(path + "__retired")
-    df.repartition(nFiles).write.mode(SaveMode.Overwrite)
-      .parquet(tmp.toString)
-    // swap via two renames with the OLD data parked aside, never a
-    // delete-then-rename: a crash (or a false rename return) between
-    // a delete and the rename would leave NO copy at the published
-    // path. Here every failure mode leaves either the old directory
-    // in place or the old copy recoverable at __retired.
-    fs.delete(retired, true) // clear a previous run's parked copy
-    if (!fs.rename(target, retired))
-      throw new java.io.IOException(s"compaction swap failed for $path" +
-        " (could not retire the current directory)")
-    if (!fs.rename(tmp, target)) {
-      fs.rename(retired, target) // restore — old data was never lost
-      throw new java.io.IOException(s"compaction swap failed for $path")
-    }
-    fs.delete(retired, true)
-    nFiles
-  }
 
   /** Co-located join over pre-bucketed tables, as an inventory query:
     * the values match a plain join (the oracle), the point is the plan —
@@ -420,7 +372,8 @@ object Formats {
     // SupportsTruncate — one atomic version replaces the table's
     // contents (readers see all-old or all-new, never a mix), and the
     // table stays appendable after. Gated boolean: the overwrite is
-    // ONE commit (no partial visibility window in the log).
+    // ONE commit (no partial visibility window in the log) and the
+    // replaced rows stay time-travelable below it.
     "sql_catalog_insert_overwrite" -> ((s, d) => {
       val wh = catalogWarehouse(s, d)
       val dir = s"$wh/ns/iow_t"
@@ -435,12 +388,15 @@ object Formats {
         s.sql("""INSERT OVERWRITE graftq.ns.iow_t
                  SELECT /*+ REPARTITION(1) */ id, id * 9
                  FROM range(0, 200)""")
+        // the overwrite is exactly one more version, and the history
+        // below it still reads the 1,000 replaced rows
+        val oneVersion = GraftLog.currentVersion(dir) == vBefore + 1
+        val historyKept = s.sql(
+          s"SELECT * FROM graftq.ns.iow_t VERSION AS OF $vBefore")
+          .count() == 1000L
         s.sql("""INSERT INTO graftq.ns.iow_t
                  SELECT id, id * 9 FROM range(200, 250)""")
-        // overwrite resets the lineage to a fresh version 0 commit —
-        // exactly one version between it and the follow-up append
-        GraftLog.currentVersion(dir) == vBefore + 1 ||
-          GraftLog.currentVersion(dir) == 1L
+        oneVersion && historyKept
       }
       s.sql("""SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
                CAST(SUM(v) AS BIGINT) AS sum_v

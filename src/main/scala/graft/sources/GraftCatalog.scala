@@ -138,7 +138,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!d.isDirectory) throw new NoSuchNamespaceException(ns)
     Option(d.listFiles()).getOrElse(Array.empty)
       // dot-prefixed siblings are in-flight CTAS stagings / retired
-      // replace lineages — layout-internal, never catalog-visible
+      // replaced tables — layout-internal, never catalog-visible
       .filter(f => !f.getName.startsWith(".") &&
         new File(f, GraftLog.SchemaFile).exists())
       .map(f => Identifier.of(ns, f.getName))
@@ -314,18 +314,16 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
           abortStagedChanges()
           throw new TableAlreadyExistsException(ident)
         }
-        // The replacement RESTARTS the version axis, so it must carry
-        // a FRESH lineage tag (stamped on the staged dir BEFORE the
-        // swap — no window where the new table is visible under the
-        // old tag): every incremental consumer (MV, replication,
-        // streaming offsets) keys its applied-through marker on the
-        // lineage, and a replace that kept the old tag would let a
-        // marker silently merge new-lineage deltas into pre-replace
-        // state once the new head passed it — the exact hole the
-        // overwrite path already stamps against (appendImpl).
-        GraftLog.setProperties(tmp.getPath, Map(
-          GraftLog.LineageProp -> java.util.UUID.randomUUID().toString))
-        // retire the old lineage only now, with the replacement fully
+        // The replacement CONTINUES the old table's version axis (its
+        // snapshot becomes one checkpoint at the old head + 1, with no
+        // history below it): every incremental consumer's
+        // applied-through marker then sits below the new horizon and
+        // re-bootstraps or fails loudly, instead of reading the
+        // replacement's restarted versions as the old table's. Done on
+        // the staged dir BEFORE the swap, so no window shows the new
+        // table on the old axis.
+        GraftLog.continueVersions(tmp.getPath, dest.getPath)
+        // retire the old table only now, with the replacement fully
         // built: the one non-atomic window is between these two
         // renames (crash = table briefly absent, old data parked in
         // the `.retired-*` sibling for manual recovery — never lost,

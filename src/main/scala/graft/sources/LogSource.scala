@@ -68,8 +68,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    selective` reads a fraction of the files and decodes a fraction
   *    of each line. Pushed filters remain Spark-side residuals — file
   *    skipping is conservative, never row-exact.
-  *  - `truncate()` (overwrite mode) retires the old log and commits
-  *    only the new files (a fresh lineage at version 0).
+  *  - `truncate()` (overwrite mode) commits ONE version that removes
+  *    every file live at its parent and adds the new files; history
+  *    before it stays time-travelable.
   *
   * Cells are canonical text (long/int/double/string columns; strings
   * must not contain tabs/newlines — a demo codec, not a production
@@ -266,9 +267,12 @@ object GraftLog {
     writeConstraints(dir, cs.filterNot(_._1 == name))
   }
 
-  /** `allowChange` = an overwrite (truncate) commit: the table lineage
-    * resets, so redeclaring a different partition column is legal — an
-    * APPEND to an already-partitioned table must keep the layout. */
+  /** `allowChange` = an overwrite (truncate) or a partition evolution:
+    * every live file is replaced, so redeclaring a different partition
+    * column is legal — an APPEND to an already-partitioned table must
+    * keep the layout. Older versions keep their files, whose partition
+    * records name the old column; scans of them fall back to ungrouped
+    * reads (see `GraftLogScan.groups`). */
   def setPartitionCol(dir: String, col: String,
       allowChange: Boolean = false): Unit = {
     ensureDir(dir)
@@ -372,8 +376,8 @@ object GraftLog {
     * name of a renamed live column, or a dropped column's tombstone:
     * old files still carry cells under it, and a new column taking
     * the name would silently resurrect their stale values. Called by
-    * every non-truncating write path that merges an incoming schema
-    * (an overwrite replaces all data, so it frees the names). */
+    * every write path that merges an incoming schema, an overwrite
+    * included: the versions below it still hold the old files. */
   def requireNoReservedAdds(dir: String, merged: StructType): Unit =
     storedSchema(dir).foreach { stored =>
       val fresh = merged.fieldNames.toSet -- stored.fieldNames.toSet
@@ -838,9 +842,6 @@ object GraftLog {
   def entriesAsOf(dir: String, version: Long): Seq[LogEntry] =
     snapshotAsOf(dir, version).entries
 
-  def filesAsOf(dir: String, version: Long): Seq[String] =
-    entriesAsOf(dir, version).map(_.file)
-
   /** Change data feed on an append-only table: the data-changing files
     * committed AFTER `fromVersion` (exclusive) up to `toVersion`
     * (inclusive) ARE the delta — an incremental consumer reads exactly
@@ -882,17 +883,29 @@ object GraftLog {
   /** TRUE when (fromVersion, toVersion] contains a change an
     * insert-only consumer cannot replay from the add feed: a
     * row-level rewrite (removes paired with dataChange adds), a
-    * metadata-only delete (removes with no adds), a RESTORE
+    * metadata-only delete (removes with no adds), an overwrite
+    * (removes of every live file plus the new adds), a RESTORE
     * (dataChange re-adds), or a deletion-vector assignment. Pure
     * layout rewrites (compaction, z-order: removes paired with ONLY
     * dataChange=false adds) stay replayable — they change no visible
     * rows. O(span) commit-file walk. */
   def spanHasNonAppendChanges(dir: String, fromVersion: Long,
       toVersion: Long): Boolean =
-    entriesBetween(dir, fromVersion, toVersion).groupBy(_.version)
-      .values.exists(changesBeyondAppends)
+    unreplayableVersions(dir, fromVersion, toVersion, typed = false)
+      .nonEmpty
 
-  /** The rule behind [[spanHasNonAppendChanges]] for ONE version's
+  /** The versions in (fromVersion, toVersion] a change-feed consumer
+    * cannot replay, ascending: every version whose changes go beyond
+    * appends for the add feed; for the typed feed (`typed`), only those
+    * that also published no CDC sidecars. */
+  def unreplayableVersions(dir: String, fromVersion: Long,
+      toVersion: Long, typed: Boolean): Seq[Long] =
+    entriesBetween(dir, fromVersion, toVersion).groupBy(_.version)
+      .collect { case (v, es) if changesBeyondAppends(es) &&
+          !(typed && es.exists(_.action == "cdc")) => v }
+      .toSeq.sorted
+
+  /** The rule behind [[unreplayableVersions]] for ONE version's
     * entries: removes paired with dataChange adds or with no adds at
     * all, or any deletion-vector action. */
   private def changesBeyondAppends(es: Seq[LogEntry]): Boolean = {
@@ -906,14 +919,12 @@ object GraftLog {
 
   /** TRUE when version `v` changed visible rows beyond appends
     * WITHOUT publishing CDC sidecars — the one span shape the typed
-    * feed cannot express exactly (e.g. Spark's SQL UPDATE/MERGE
-    * replace-data plan on a CDF-enabled table): its rewrite adds
+    * feed cannot express exactly (an overwrite, or Spark's SQL
+    * UPDATE/MERGE replace-data plan on a CDF-enabled table): its adds
     * would re-deliver carried rows as inserts. A typed consumer must
     * re-seed from the snapshot at `v` instead. */
-  def versionLacksCdcCoverage(dir: String, v: Long): Boolean = {
-    val es = entriesBetween(dir, v - 1, v)
-    !es.exists(_.action == "cdc") && changesBeyondAppends(es)
-  }
+  def versionLacksCdcCoverage(dir: String, v: Long): Boolean =
+    unreplayableVersions(dir, v - 1, v, typed = true).nonEmpty
 
   /** Typed change feed: the TSV column carrying each CDC row's change
     * kind (insert | update_preimage | update_postimage | delete). */
@@ -1056,8 +1067,6 @@ object GraftLog {
       .maxOption.getOrElse(-1L)
   }
 
-  def nextVersion(dir: String): Long = currentVersion(dir) + 1
-
   /** Max commit stamp across all known history — the clamp base that
     * keeps version→timestamp strictly monotone. O(tail): the latest
     * checkpoint's header covers everything at-or-below it. */
@@ -1080,17 +1089,15 @@ object GraftLog {
     * object lock — cheaper than churning the retry loop. Every
     * [[CheckpointInterval]]-th commit also writes a reconciled
     * checkpoint. Returns the committed version. */
-  def commitNew(dir: String, schema: StructType,
-      remergeSchema: Boolean = true)(
+  def commitNew(dir: String, schema: StructType)(
       mk: Long => Seq[LogEntry]): Long = synchronized {
-    commitNewUnlocked(dir, schema, remergeSchema)(mk)
+    commitNewUnlocked(dir, schema)(mk)
   }
 
   /** The lock-free body — `private[graft]` so the concurrency spec can
     * drive two racing committers through the file CAS alone. `mk`
     * may be invoked more than once (once per claimed version). */
-  private[graft] def commitNewUnlocked(dir: String, schema: StructType,
-      remergeSchema: Boolean = true)(
+  private[graft] def commitNewUnlocked(dir: String, schema: StructType)(
       mk: Long => Seq[LogEntry]): Long = {
     ensureDir(dir)
     var attempts = 0
@@ -1099,13 +1106,11 @@ object GraftLog {
       // one each time: two cross-process schema-evolving commits would
       // otherwise race read-modify-write on `_schema` and the loser's
       // new column silently vanish from the table (mergeSchemas is
-      // additive-at-tail, so remerging is idempotent). A truncate
-      // replaces the schema wholesale instead (remergeSchema=false).
+      // additive-at-tail, so remerging is idempotent). An overwrite
+      // merges the same way: older versions still hold every stored
+      // column, so none may leave the schema.
       val stored = storedSchema(dir)
-      val persisted =
-        if (remergeSchema)
-          stored.map(mergeSchemas(_, schema)).getOrElse(schema)
-        else schema
+      val persisted = stored.map(mergeSchemas(_, schema)).getOrElse(schema)
       // write ONLY when the content changes: a same-schema (pure)
       // append re-writing identical bytes would race a concurrent
       // schema-evolving commit's read-modify-write and clobber its
@@ -1114,8 +1119,8 @@ object GraftLog {
         atomicWrite(Paths.get(dir, SchemaFile),
           persisted.json.getBytes(StandardCharsets.UTF_8))
       val v = currentVersion(dir) + 1
-      // an empty entry list is legal exactly once: the version-0
-      // commit of a truncate-to-empty (overwrite with zero rows)
+      // an empty entry list is legal: an overwrite with zero rows of a
+      // table that holds no live file still commits its version
       val es = mk(v)
       val now = math.max(System.currentTimeMillis(), maxTsKnown(dir) + 1)
       val stamped = es.map(e => if (e.ts < 0) e.copy(ts = now) else e)
@@ -1169,9 +1174,10 @@ object GraftLog {
   private def maybeCheckpoint(dir: String, v: Long): Unit = {
     val cached = lastCkptCache.getOrDefault(dir, Long.MinValue)
     // trust the cache only while versions grow PAST it: a commit at
-    // v <= cached means another process reset the lineage (overwrite
-    // restarts at 0) — a stale-HIGH value would then suppress every
-    // checkpoint of the new lineage, so fall through and re-list
+    // v <= cached means the table at this path was dropped and
+    // recreated (versions restart at 0 only then) — a stale-HIGH value
+    // would suppress every checkpoint of the new table, so fall
+    // through and re-list
     if (cached != Long.MinValue && v > cached &&
         v - cached < CheckpointInterval)
       return
@@ -1192,12 +1198,14 @@ object GraftLog {
     * processes checkpointing the same version is harmless. */
   def writeCheckpoint(dir: String, v: Long): Unit = {
     val snap = snapshotAsOf(dir, v)
-    val live = snap.entries ++ snap.txns
-    val content = (s"#checkpoint v=$v maxTs=${maxTsKnown(dir)}" +:
-      live.map(_.serialize)).mkString("\n")
-    atomicWrite(Paths.get(dir, versionedName(CheckpointPrefix, v)),
-      content.getBytes(StandardCharsets.UTF_8))
+    putCheckpoint(dir, v, maxTsKnown(dir), snap.entries ++ snap.txns)
   }
+
+  private def putCheckpoint(dir: String, v: Long, maxTs: Long,
+      live: Seq[LogEntry]): Unit =
+    atomicWrite(Paths.get(dir, versionedName(CheckpointPrefix, v)),
+      (s"#checkpoint v=$v maxTs=$maxTs" +: live.map(_.serialize))
+        .mkString("\n").getBytes(StandardCharsets.UTF_8))
 
   /** Expire log segments (Delta's log retention / Iceberg's
     * expire-snapshots for the metadata side): delete every commit
@@ -1223,6 +1231,25 @@ object GraftLog {
         (commits.map(_._2) ++ older.map(_._2)).foreach(_.delete())
         commits.size + older.size
     }
+  }
+
+  /** Make the table at `dir` continue the version axis of the table at
+    * `replaced`: fold `dir`'s current snapshot into one checkpoint at
+    * `replaced`'s head + 1 and delete every other commit and checkpoint
+    * file — the state [[expireLog]] leaves. REPLACE TABLE swaps a
+    * staged directory in; continuing the axis keeps every consumer's
+    * applied-through marker below the new horizon, so each one
+    * re-bootstraps or fails loudly instead of reading the
+    * replacement's versions as the old table's. */
+  def continueVersions(dir: String, replaced: String): Unit = {
+    val v = currentVersion(replaced) + 1
+    val snap = snapshotAsOf(dir, Long.MaxValue)
+    val maxTs = math.max(maxTsKnown(dir), maxTsKnown(replaced))
+    putCheckpoint(dir, v, maxTs,
+      (snap.entries ++ snap.txns).map(_.copy(version = v)))
+    val log = listLog(dir)
+    (log.commits ++ log.checkpoints.filter(_._1 != v))
+      .foreach(_._2.delete())
   }
 
   /** Oldest version the retained log can still reconstruct: 0 while
@@ -1296,62 +1323,6 @@ object GraftLog {
   def targetBytesOf(dir: String): Long =
     propertiesOf(dir).get(TargetBytesProp).map(_.toLong)
       .getOrElse(128L << 20)
-
-  /** Lineage identity: a fresh UUID stamped by every overwrite — the
-    * only operation that restarts the version axis. A version number
-    * is only meaningful WITHIN one lineage, so any consumer that
-    * persists an applied-through version (materialized view,
-    * replication, external checkpoint) must persist this tag beside
-    * it and re-bootstrap on mismatch: carried across an overwrite,
-    * the marker would otherwise pass every horizon/span guard once
-    * the NEW lineage's head grows past it, and the consumer would
-    * silently merge new-lineage deltas into old-lineage state.
-    * Absent (never-overwritten tables, legacy) reads as "". */
-  val LineageProp = "graft.lineage"
-
-  def lineageOf(dir: String): String =
-    propertiesOf(dir).getOrElse(LineageProp, "")
-
-  /** Consistent (currentVersion, lineage) pair — ONE planning-time
-    * read instead of several per micro-batch, and atomic against an
-    * overwrite racing between the two file reads: the lineage is
-    * re-read after the version and the pair retried on mismatch, so a
-    * new-lineage version can never be stamped with the old lineage
-    * tag (which would let a checkpointed offset silently cross the
-    * overwrite). */
-  def versionAndLineage(dir: String): (Long, String) = {
-    var attempts = 0
-    while (attempts < 5) {
-      val before = lineageOf(dir)
-      val v = currentVersion(dir)
-      val after = lineageOf(dir)
-      if (before == after) return (v, after)
-      attempts += 1
-    }
-    // Five straight sandwiches torn by concurrent overwrites: return
-    // NOTHING rather than a (version, lineage) pair that may cross an
-    // overwrite — the exact mis-stamping this function exists to
-    // prevent. Retryable: the planner/caller re-invokes on its next
-    // cycle, and overwrite storms are transient by nature.
-    throw new IllegalStateException(
-      s"could not read a consistent (version, lineage) pair for $dir " +
-        "after 5 attempts — concurrent overwrites in progress; retry")
-  }
-
-  /** THE lineage guard every consumer that persists an applied-through
-    * version of a source table must pass (see [[LineageProp]]): the
-    * marker is meaningful only when the lineage tag persisted beside
-    * it matches the source's CURRENT lineage. Mismatch (the source
-    * was overwritten since the marker) returns None — the caller
-    * re-bootstraps (materialized view, replication) or fails loudly
-    * (streaming offsets, which cannot re-seed a checkpoint). Marker
-    * ABSENCE stays caller-domain: -1 means "no marker yet" for the
-    * txn-marker consumers but is a real "from the beginning" offset
-    * for the stream. One definition, three consumers — a fourth
-    * consumer adopts the guard by construction, not by convention. */
-  def guardedMarker(marker: Long, markerLineage: String,
-      srcLineage: String): Option[Long] =
-    if (markerLineage == srcLineage) Some(marker) else None
 
   def propertiesOf(dir: String): Map[String, String] = {
     val f = new File(dir, PropsFile)
@@ -1588,17 +1559,6 @@ object GraftLog {
     listVersioned(dir, branchPrefix(name))
       .flatMap { case (_, f) => readEntryLines(f) }
 
-  /** The branch's visible snapshot: main AT THE FORK + branch commits
-    * replayed on top (main commits after the fork never leak in). */
-  def branchSnapshot(dir: String, name: String): Seq[LogEntry] = {
-    val fork = forkOf(dir, name)
-    val latest =
-      scala.collection.mutable.LinkedHashMap.empty[String, LogEntry]
-    snapshotAsOf(dir, fork).entries.foreach(e => latest(e.file) = e)
-    branchEntries(dir, name).foreach(e => applyEntry(latest, e))
-    latest.valuesIterator.filter(_.isAdd).toSeq
-  }
-
   /** Append a batch to the branch as its own commit — the same
     * hard-link CAS as mainline commits, version-numbered in the
     * branch's own lineage (fork+1, fork+2, ...). Schema evolution is
@@ -1724,49 +1684,6 @@ object GraftLog {
     ensureDir(dir)
     atomicWrite(Paths.get(dir, SchemaFile),
       schema.json.getBytes(StandardCharsets.UTF_8))
-  }
-
-  /** Overwrite semantics: a truncate resets the table to a NEW lineage
-    * (version 0) — all commit files and checkpoints are retired. */
-  /** Wipe the version lineage for an overwrite. Deletion order is
-    * NEWEST-first (checkpoints, then commits descending) so any crash
-    * mid-reset leaves a CONSISTENT older snapshot — an unordered
-    * delete could drop `_commit.0` first and
-    * leave a tail whose removes dangle and whose horizon guard passes,
-    * a silently corrupt replay. The overwrite itself stays non-atomic
-    * across the reset→commit pair (a crash between them leaves an
-    * empty table — the new rows were never committed); full atomicity
-    * would need history-preserving overwrites. */
-  private def resetLineage(dir: String): Unit = {
-    ensureDir(dir)
-    // the new lineage restarts at version 0 — a carried-over cached
-    // checkpoint version would suppress the fresh lineage's first
-    // checkpoints
-    lastCkptCache.remove(dir)
-    val files = Option(new File(dir).listFiles())
-      .getOrElse(Array.empty)
-    def versionOf(f: File, prefix: String): Long =
-      f.getName.stripPrefix(prefix).takeWhile(_.isDigit) match {
-        case "" => -1L; case d => d.toLong
-      }
-    files.filter(_.getName.startsWith(CheckpointPrefix))
-      .sortBy(f => -versionOf(f, CheckpointPrefix)).foreach(_.delete())
-    files.filter(_.getName.startsWith(CommitPrefix))
-      .sortBy(f => -versionOf(f, CommitPrefix)).foreach(_.delete())
-    // Version-anchored side state dies WITH the lineage it indexed
-    // (ADVICE r9): a ref pinned at `gold=5` in the retired lineage
-    // must not silently resolve against the new lineage once it
-    // reaches version 5 (wrong snapshot, no error), a branch tip or
-    // pending WAP stage must not republish retired-lineage rows, and
-    // per-version CDC sidecars describe commits that no longer exist.
-    // Deleting them makes every dead handle fail loudly ("no such
-    // ref/branch/staged id") instead of resolving to the wrong data.
-    files.filter(f => f.getName == RefsFile ||
-        f.getName == BranchesFile ||
-        f.getName.startsWith("_branch.") ||
-        f.getName.startsWith(StagedPrefix) ||
-        f.getName.startsWith(CdcPrefix))
-      .foreach(_.delete())
   }
 
   /** Vacuum: delete unreferenced part files — orphans from
@@ -2570,9 +2487,6 @@ object GraftLog {
     // re-open the scratch-write window a pre-planned caller closed).
     val base =
       if (baseVersion != UnsetBase) baseVersion else currentVersion(dir)
-    // typed CDC sidecars publish in the SAME commit as the rewrite
-    val cdcEntries = cdcChanges.map(stageCdc(dir, _))
-      .getOrElse(Seq.empty)
     // The scratch table inherits the table's layout policy. Its
     // partition declaration (or the partition-evolution override)
     // keeps a rewrite routing rows per value, so rewritten files keep
@@ -2586,6 +2500,18 @@ object GraftLog {
         propertiesOf(dir).get(TargetBytesProp).foreach(t =>
           writeProperties(scratch, Map(TargetBytesProp -> t)))
       })(identity)
+    // the uncommitted replacement files and staged CDC sidecars are
+    // invisible orphans when the rewrite fails before its link —
+    // reclaim them now rather than leaving them for vacuum's retention
+    // horizon
+    def reclaim(es: Seq[LogEntry]): Unit =
+      es.foreach(f => new File(dir, f.file).delete())
+    // typed CDC sidecars publish in the SAME commit as the rewrite;
+    // staged only once the replacement is written, so a failed
+    // replacement write leaves none behind
+    val cdcEntries =
+      try cdcChanges.map(stageCdc(dir, _)).getOrElse(Seq.empty)
+      catch { case e: Throwable => reclaim(fresh); throw e }
     try commitNew(dir, storedSchema(dir).getOrElse(schema)) { v =>
       requireNoFileConflicts(dir, base, v,
         old.map(_.file).toSet, "rewrite")
@@ -2601,71 +2527,46 @@ object GraftLog {
         txn.map { case (app, tv) => LogEntry.txn(v, app, tv) }.toSeq
     } catch {
       case e: GraftConcurrentModificationException =>
-        // the uncommitted replacement files and staged CDC sidecars
-        // are invisible orphans — reclaim them now rather than
-        // leaving them for vacuum's retention horizon
-        fresh.foreach(f => new File(dir, f.file).delete())
-        cdcEntries.foreach(c => new File(dir, c.file).delete())
-        throw e
+        reclaim(fresh ++ cdcEntries); throw e
     }
   }
 
-  /** Batch commit. Truncate resets history to a NEW lineage (version
-    * 0) — overwrite is a new table, not an addendum. An append with
-    * extra columns evolves the stored schema additively
-    * ([[mergeSchemas]]); each entry records its file's own column list
-    * so readers decode every vintage. An empty non-truncating append
-    * is a no-op; a truncate with zero files is a legitimate empty
-    * table (empty version-0 commit).
+  /** Batch commit. An append with extra columns evolves the stored
+    * schema additively ([[mergeSchemas]]); each entry records its
+    * file's own column list so readers decode every vintage. An empty
+    * non-truncating append is a no-op. A truncate (overwrite) is ONE
+    * ordinary version that removes every file live at its parent and
+    * adds the new ones — with zero files it empties the table. History
+    * before it stays time-travelable, and incremental consumers see it
+    * as a non-append version ([[unreplayableVersions]]), the same as a
+    * DELETE or MERGE.
     *
-    * Concurrency: a PURE append runs LOCK-FREE — fresh part files are
-    * new UUIDs, so two appends can never touch the same file; the
-    * version CAS in [[commitNewUnlocked]] orders them and BOTH commit
-    * without queueing on a table lock (the Delta/Iceberg
-    * disjoint-append rule: appends conflict with nothing). Only two
-    * shapes still take the JVM lock: truncate (the lineage reset +
-    * version-0 commit must not interleave with anything) and a
-    * txn-bearing append (the idempotence read-check must not race its
-    * own marker's commit within this JVM; cross-process idempotence
-    * rides the marker replay as before). */
+    * Concurrency: appends and overwrites run LOCK-FREE — fresh part
+    * files are new UUIDs, so no two writes touch the same file; the
+    * version CAS in [[commitNewUnlocked]] orders them and every one
+    * commits without queueing on a lock (the Delta/Iceberg
+    * disjoint-append rule). An overwrite reads its parent snapshot per
+    * claimed version, so an append that wins the race to a version is
+    * removed by the overwrite that follows it, never resurrected. Two
+    * shapes still take the JVM lock: a schema-evolving write and a
+    * txn-bearing append (the idempotence read-check must
+    * not race its own marker's commit within this JVM; cross-process
+    * idempotence rides the marker replay as before). */
   def append(dir: String, fresh: Seq[GraftLogCommit], schema: StructType,
       truncate: Boolean, txn: Option[(String, Long)] = None): Unit = {
     require(txn.isEmpty || !truncate,
-      "txnAppId/txnVersion apply to appends only — an overwrite " +
-        "resets the lineage and would wipe the idempotence markers")
-    // a SCHEMA-EVOLVING append (or a first write) also takes the JVM
-    // lock: two evolving appends racing the _schema read-modify-write
-    // could silently drop one's new column; same-schema appends never
-    // write _schema at all (commitNewUnlocked skips identical bytes)
+      "txnAppId/txnVersion apply to appends only — replaying an " +
+        "overwrite already leaves the same rows")
+    // a SCHEMA-EVOLVING write (or a first write) takes the JVM lock:
+    // two evolving writes racing the _schema read-modify-write could
+    // silently drop one's new column; same-schema writes never write
+    // _schema at all (commitNewUnlocked skips identical bytes)
     lazy val evolving = storedSchema(dir)
       .forall(s => mergeSchemas(s, schema) != s)
-    if (truncate) synchronized {
-      // truncate additionally excludes the LOCK-FREE appends via the
-      // table's write lock: resetLineage's delete sequence must not
-      // interleave with a concurrent append's version claim (a commit
-      // could land mid-wipe and survive into — or be wrongly deleted
-      // from — the new lineage)
-      val w = rwLockFor(dir).writeLock()
-      w.lock()
-      try appendImpl(dir, fresh, schema, truncate, txn)
-      finally w.unlock()
-    } else if (txn.isDefined || evolving)
+    if (txn.isDefined || evolving)
       synchronized { appendImpl(dir, fresh, schema, truncate, txn) }
-    else {
-      // PURE append — lock-free among appends (shared read lock only
-      // fences truncate's lineage wipe); the version CAS orders them
-      val r = rwLockFor(dir).readLock()
-      r.lock()
-      try appendImpl(dir, fresh, schema, truncate, txn)
-      finally r.unlock()
-    }
+    else appendImpl(dir, fresh, schema, truncate, txn)
   }
-
-  private val tableLocks = new java.util.concurrent.ConcurrentHashMap[
-    String, java.util.concurrent.locks.ReentrantReadWriteLock]()
-  private def rwLockFor(dir: String) =
-    tableLocks.computeIfAbsent(dir,
-      _ => new java.util.concurrent.locks.ReentrantReadWriteLock())
 
   private def appendImpl(dir: String, fresh: Seq[GraftLogCommit],
       schema: StructType, truncate: Boolean,
@@ -2677,21 +2578,28 @@ object GraftLog {
     // never double-append its micro-batch.
     if (txn.exists { case (a, v) => lastTxnVersion(dir, a) >= v }) return
     if (fresh.isEmpty && !truncate && txn.isEmpty) return
-    val merged = if (truncate) schema
-      else storedSchema(dir).map(mergeSchemas(_, schema)).getOrElse(schema)
-    if (!truncate) requireNoReservedAdds(dir, merged)
-    // an overwrite replaces every row, so previously-dropped names
-    // hold no live cells anywhere — the tombstones lift with the data
-    if (truncate) {
-      removeProperties(dir, Seq(DroppedColsProp))
-      resetLineage(dir)
-      setProperties(dir,
-        Map(LineageProp -> UUID.randomUUID().toString))
-    }
-    commitNewUnlocked(dir, merged, remergeSchema = !truncate)(v =>
-      fresh.map(c => LogEntry.add(v, c.file, c.rows, c.stats,
-        cols = c.cols)) ++
-        txn.map { case (a, tv) => LogEntry.txn(v, a, tv) }.toSeq)
+    val merged =
+      storedSchema(dir).map(mergeSchemas(_, schema)).getOrElse(schema)
+    // dropped-column tombstones hold across an overwrite too: older
+    // versions (time travel, RESTORE) still serve the dropped cells
+    requireNoReservedAdds(dir, merged)
+    commitNewUnlocked(dir, merged)(
+      appendEntries(dir, _, fresh, truncate, txn))
+  }
+
+  /** The entries of an append (or, with `truncate`, an overwrite)
+    * claiming version `v`. An overwrite removes every file live at
+    * `v - 1`, read per claimed version, so whatever won the versions
+    * before it is retired too. */
+  private[graft] def appendEntries(dir: String, v: Long,
+      fresh: Seq[GraftLogCommit], truncate: Boolean,
+      txn: Option[(String, Long)] = None): Seq[LogEntry] = {
+    val retired =
+      if (!truncate) Seq.empty
+      else entriesAsOf(dir, v - 1).map(e => LogEntry.remove(v, e.file))
+    retired ++ fresh.map(c => LogEntry.add(v, c.file, c.rows, c.stats,
+      cols = c.cols)) ++
+      txn.map { case (a, tv) => LogEntry.txn(v, a, tv) }.toSeq
   }
 
   /** Commit timestamp of each version: the (shared) stamp its entries
@@ -3414,8 +3322,8 @@ class GraftLogWriteBuilder(dir: String, schema: StructType,
       txn)
   override def build(): Write = {
     // a conflicting partition re-declaration on an APPEND fails at
-    // plan time, before any part file is written (overwrite resets
-    // lineage and may relayout)
+    // plan time, before any part file is written (an overwrite
+    // replaces every live file and may relayout)
     if (!truncate)
       GraftLog.partitionColOf(dir).foreach(stored =>
         require(partitionCol.forall(_ == stored),
@@ -3463,7 +3371,8 @@ class GraftLogBatchWrite(dir: String, schema: StructType,
     // APPEND stages instead of committing (part files written,
     // entries parked in the `_staged.<id>` side file — invisible
     // until `CALL system.publish_staged`). An overwrite cannot stage
-    // (truncation is a visible lineage reset) — loud, not silent.
+    // (a staging holds only adds; the files an overwrite removes are
+    // known only at its commit) — loud, not silent.
     val branch = GraftLog.activeBranch()
     branch.foreach(b => require(GraftLog.activeWapId().isEmpty,
       s"a session cannot write with both a WAP id and branch '$b' " +
@@ -3503,8 +3412,8 @@ class GraftLogBatchWrite(dir: String, schema: StructType,
         } else {
           // persist the partition declaration with the first
           // partitioned commit, so readers (and later writers) resolve
-          // it from the table; an overwrite resets lineage and may
-          // redeclare a different column
+          // it from the table; an overwrite replaces every live file
+          // and may redeclare a different column
           partitionCol.foreach(
             GraftLog.setPartitionCol(dir, _, allowChange = truncate))
           GraftLog.append(dir, GraftLogCommit.all(messages), schema,
@@ -3959,7 +3868,9 @@ class GraftLogScan(dir: String, tableSchema: StructType,
   * committed in that version span — the change-data-feed listing — so
   * an incremental consumer reads each appended row once, never rescans
   * history, and a compaction (dataChange=false) passes through the
-  * stream invisibly. Offsets checkpoint as the version number, so a
+  * stream invisibly. A version that changes rows beyond appends (an
+  * overwrite, DELETE, MERGE or RESTORE) fails the query loudly, as
+  * Delta's source does. Offsets checkpoint as the version number, so a
   * restarted query resumes from the last committed version (the same
   * recovery contract as Delta's streaming source). At 100 TB the
   * per-batch work is bounded by the append rate, not the table size. */
@@ -3970,23 +3881,13 @@ class GraftLogMicroBatchStream(dir: String, tableSchema: StructType,
     extends MicroBatchStream with SupportsTriggerAvailableNow {
   // Trigger.AvailableNow: pin the target offset at query start so the
   // run drains exactly the versions committed before it began, then
-  // stops — concurrent commits land in the next run. The pin carries
-  // version AND lineage as one consistent pair — each planning call
-  // reads the `_properties` file at most once (not several times per
-  // micro-batch on commit-dense streams), and an overwrite racing the
-  // reads can never stamp a new-lineage version with the old tag
-  // (GraftLog.versionAndLineage re-reads the lineage around the
-  // version and retries on mismatch).
-  private var pinned: Option[(Long, String)] = None
+  // stops — concurrent commits land in the next run.
+  private var pinned: Option[Long] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    pinned = Some(GraftLog.versionAndLineage(dir))
-  override def initialOffset(): StreamOffset =
-    GraftLogOffset(startVersion,
-      pinned.map(_._2).getOrElse(GraftLog.lineageOf(dir)))
-  override def latestOffset(): StreamOffset = {
-    val (v, lin) = pinned.getOrElse(GraftLog.versionAndLineage(dir))
-    GraftLogOffset(v, lin)
-  }
+    pinned = Some(GraftLog.currentVersion(dir))
+  override def initialOffset(): StreamOffset = GraftLogOffset(startVersion)
+  override def latestOffset(): StreamOffset =
+    GraftLogOffset(pinned.getOrElse(GraftLog.currentVersion(dir)))
   // SupportsAdmissionControl (via SupportsTriggerAvailableNow):
   // option("maxVersionsPerBatch", k) caps each micro-batch at k
   // versions — the throttled-backfill knob (Delta maxFilesPerTrigger):
@@ -3996,11 +3897,10 @@ class GraftLogMicroBatchStream(dir: String, tableSchema: StructType,
   // option each batch drains to the head.
   override def latestOffset(start: StreamOffset,
       limit: org.apache.spark.sql.connector.read.streaming.ReadLimit): StreamOffset = {
-    val (head, lin) =
-      pinned.getOrElse(GraftLog.versionAndLineage(dir))
+    val head = pinned.getOrElse(GraftLog.currentVersion(dir))
     val s = start.asInstanceOf[GraftLogOffset].version
     GraftLogOffset(maxVersionsPerBatch.fold(head)(k =>
-      math.min(head, s + math.max(1L, k))), lin)
+      math.min(head, s + math.max(1L, k))))
   }
   override def deserializeOffset(json: String): StreamOffset =
     GraftLogOffset.parse(json)
@@ -4018,35 +3918,25 @@ class GraftLogMicroBatchStream(dir: String, tableSchema: StructType,
   // (replication, CDC merge) rely on.
   override def planInputPartitions(start: StreamOffset,
       end: StreamOffset): Array[InputPartition] = {
-    val so = start.asInstanceOf[GraftLogOffset]
-    val s = so.version
+    val s = start.asInstanceOf[GraftLogOffset].version
     val e = end.asInstanceOf[GraftLogOffset].version
-    // An offset from a RETIRED lineage cannot resume: the source was
-    // overwritten, versions restarted, and draining (s, e] of the new
-    // lineage would silently skip its first s versions (Delta's
-    // failOnDataLoss contract — restart from a fresh checkpoint or
-    // re-seed the consumer). BOTH offsets are checked against the
-    // source's CURRENT lineage (one `_properties` read per planning
-    // call), not merely against each other: on a checkpoint restore
-    // Spark re-plans the last uncommitted batch with start AND end
-    // deserialized from the WAL, so after an overwrite the two stale
-    // offsets agree with each other while the version files on disk
-    // belong to the NEW lineage — an offsets-only comparison would
-    // silently drain new-table rows as a continuation of the old
-    // stream. The shared GraftLog.guardedMarker is the comparator.
-    val lineage = GraftLog.lineageOf(dir)
-    if (GraftLog.guardedMarker(s, so.lineage, lineage).isEmpty ||
-        GraftLog.guardedMarker(e,
-          end.asInstanceOf[GraftLogOffset].lineage, lineage).isEmpty)
-      throw new IllegalStateException(
-        s"streaming checkpoint for $dir holds offset v$s of a " +
-          "RETIRED lineage (the table was overwritten since the " +
-          "checkpoint) — the span cannot be replayed; restart the " +
-          "query from a fresh checkpoint")
     // a checkpointed offset below the retained horizon cannot replay
     // (expire-log truncated those commits) — fail the query loudly
     // instead of silently serving only the surviving tail
     GraftLog.requireSpanReplayable(dir, s)
+    // nor can a version whose changes the feed cannot express: an
+    // overwrite, DELETE, MERGE or RESTORE would be delivered as its
+    // added rows alone, with the rows it removed still counted
+    // downstream (the typed feed expresses them where CDC sidecars
+    // were published)
+    GraftLog.unreplayableVersions(dir, s, e, typed).headOption.foreach {
+      v => throw new IllegalStateException(
+        s"stream over $dir cannot replay version $v: it changes rows " +
+          "beyond appends" + (if (typed) " and published no CDC " +
+          "sidecars" else "") + " — restart the query from a fresh " +
+          "checkpoint with changesFromVersion at or past it, after " +
+          "re-seeding the consumer from a snapshot")
+    }
     val entries =
       if (typed) GraftLog.typedChangedEntriesBetween(dir, s, e)
       else GraftLog.changedEntriesBetween(dir, s, e)
@@ -4057,27 +3947,20 @@ class GraftLogMicroBatchStream(dir: String, tableSchema: StructType,
   override def stop(): Unit = ()
 }
 
-/** Streaming offset: a table version PLUS the lineage it belongs to
-  * (see [[GraftLog.LineageProp]]) — a version number is meaningless
-  * across an overwrite, so a restarted query whose checkpoint
-  * predates a source overwrite must fail loudly instead of silently
-  * draining a fragment of the new lineage. Legacy checkpoints (plain
-  * version JSON) parse with an empty lineage, which equals the tag of
-  * any never-overwritten source — so they keep resuming unchanged,
-  * and start failing exactly when an overwrite actually happened. */
-case class GraftLogOffset(version: Long, lineage: String = "")
-    extends StreamOffset {
-  override def json(): String =
-    if (lineage.isEmpty) version.toString else s"$version@$lineage"
+/** Streaming offset: a table version. */
+case class GraftLogOffset(version: Long) extends StreamOffset {
+  override def json(): String = version.toString
 }
 
 object GraftLogOffset {
-  def parse(json: String): GraftLogOffset = {
-    val i = json.indexOf('@')
-    if (i < 0) GraftLogOffset(json.toLong)
-    else GraftLogOffset(json.substring(0, i).toLong,
-      json.substring(i + 1))
-  }
+  /** A plain version number. The older `<version>@<uuid>` form fails
+    * loudly: it predates history-keeping overwrites. */
+  def parse(json: String): GraftLogOffset =
+    json.trim.toLongOption.map(GraftLogOffset(_)).getOrElse(
+      throw new IllegalArgumentException(
+        s"graft-log stream offset '$json' is not a version number " +
+          "(the older `<version>@<uuid>` offset form cannot resume) " +
+          "— restart the query from a fresh checkpoint"))
 }
 
 object GraftLogScan {

@@ -60,9 +60,6 @@ object MaterializedAgg {
   /** Stable writer identity for the marker: one view table has one
     * maintainer. */
   private val AppId = "materialized-agg"
-  /** MV-side property carrying the SOURCE lineage the marker belongs
-    * to (see [[GraftLog.LineageProp]]). */
-  private val SrcLineageProp = "graft.mv.src-lineage"
 
   private def aggOf(src: DataFrame, keyCol: String,
       sumCols: Seq[String], minMaxCols: Seq[String],
@@ -96,27 +93,9 @@ object MaterializedAgg {
       keyCol: String, sumCols: Seq[String],
       mvBuckets: Int = 4, minMaxCols: Seq[String] = Nil,
       distinctCols: Seq[String] = Nil): Refresh = {
-    // head and lineage as ONE consistent pair: read separately, an
-    // overwrite racing between the two calls pairs the OLD lineage's
-    // (large) head with the NEW lineage tag — the bootstrap would
-    // then commit marker=oldHead under the new tag, and every new-
-    // lineage append below that number would read as a noop until
-    // the new head grew past it.
-    val (head, srcLineage) = GraftLog.versionAndLineage(srcDir)
+    val head = GraftLog.currentVersion(srcDir)
     val srcTotal = GraftLog.entriesAsOf(srcDir, Long.MaxValue).size
     val last = GraftLog.lastTxnVersion(mvDir, AppId)
-    // A marker is only meaningful WITHIN one source lineage: an
-    // overwrite restarts the version axis, and once the NEW lineage's
-    // head grows past the old marker every horizon/span guard below
-    // passes — the view would silently merge new-lineage deltas into
-    // old-lineage totals. The shared GraftLog.guardedMarker compares
-    // the lineage tag persisted beside the marker against the
-    // source's current one; a mismatch forces re-bootstrap.
-    val guarded = GraftLog.guardedMarker(last,
-      GraftLog.propertiesOf(mvDir).getOrElse(SrcLineageProp, ""),
-      srcLineage)
-    def stampLineage(): Unit =
-      GraftLog.setProperties(mvDir, Map(SrcLineageProp -> srcLineage))
     // A marker below the source's retained horizon means the change
     // feed can no longer prove completeness for the span — fall back
     // to a full re-bootstrap instead of silently missing changes.
@@ -125,9 +104,10 @@ object MaterializedAgg {
     // so the oldest replayable change span starts one past it — a
     // marker of horizon-1 would silently omit version `horizon`. A
     // span containing non-append changes (row-level rewrite, restore,
-    // DV delete) also re-bootstraps: the add feed cannot express the
-    // retraction, and replaying it would re-count carried rows.
-    val replayable = guarded.exists(_ >= 0) &&
+    // DV delete, overwrite) also re-bootstraps: the add feed cannot
+    // express the retraction, and replaying it would re-count carried
+    // rows.
+    val replayable = last >= 0 &&
       (horizon <= 0L || last >= horizon) &&
       !(last < head &&
         GraftLog.spanHasNonAppendChanges(srcDir, last, head))
@@ -144,7 +124,6 @@ object MaterializedAgg {
       full.write.format(Fmt).option("path", mvDir)
         .mode("overwrite").save()
       GraftLog.commitTxn(mvDir, AppId, head)
-      stampLineage()
       val mvFiles = GraftLog.entriesAsOf(mvDir, Long.MaxValue).size
       Refresh(head, "bootstrap", srcTotal, srcTotal, mvFiles, mvFiles)
     } else if (head <= last) {
@@ -154,9 +133,7 @@ object MaterializedAgg {
       val deltaEntries = GraftLog.changedEntriesBetween(srcDir, last, head)
       lazy val mvTotal = GraftLog.entriesAsOf(mvDir, Long.MaxValue).size
       if (deltaEntries.isEmpty) {
-        // versions advanced with no data change (compaction, markers);
-        // no lineage re-stamp — this branch is reachable only when the
-        // guard already proved the stored tag equals the current one
+        // versions advanced with no data change (compaction, markers)
         GraftLog.commitTxn(mvDir, AppId, head)
         return Refresh(head, "noop", 0, srcTotal, 0, mvTotal)
       }
@@ -218,8 +195,7 @@ object MaterializedAgg {
                     graft.functions.HllSketchStr.emptyEncoded)))
                 .as(s"hll_$c")))): _*)
       // merge returns the MV's live file count — no second manifest
-      // parse; and no lineage re-stamp (the guard above already
-      // proved the stored tag current)
+      // parse
       val (rewritten, total) =
         try GraftLog.mergeUpsert(spark, mvDir, combined,
           keyCol, txn = Some(AppId -> head))

@@ -40,13 +40,6 @@ object Replication {
 
   private val Fmt = "graft.sources.GraftLogSource"
   private val AppId = "graft-replication"
-  /** Mirror-side property carrying the SOURCE lineage the marker
-    * belongs to (see [[GraftLog.LineageProp]]): a source overwrite
-    * restarts the version axis, and a marker carried across it would
-    * pass the horizon guard once the new head grows past it — the
-    * mirror would then replay a fragment of the new lineage into
-    * pre-overwrite rows. Mismatch forces re-bootstrap. */
-  private val SrcLineageProp = "graft.repl.src-lineage"
 
   def sync(spark: SparkSession, srcDir: String, dstDir: String,
       keyCol: String): Sync = {
@@ -55,41 +48,27 @@ object Replication {
     require(GraftLog.cdfEnabled(srcDir),
       s"replication needs graft.cdf.enabled=true on $srcDir — " +
         "without typed CDC, deletes cannot propagate")
-    // head and lineage as ONE consistent pair (the same mis-stamp
-    // shape the MV refresh guards): an overwrite racing two separate
-    // reads would pair the OLD lineage's large head with the NEW tag,
-    // and the bootstrap below would commit marker=oldHead under the
-    // new lineage — every new-lineage append under that number would
-    // then read as a noop
-    val (head, srcLineage) = GraftLog.versionAndLineage(srcDir)
+    val head = GraftLog.currentVersion(srcDir)
     val last = GraftLog.lastTxnVersion(dstDir, AppId)
     val horizon = GraftLog.oldestReplayableVersion(srcDir)
-    // the shared lineage guard (GraftLog.guardedMarker): a marker
-    // carried across a source overwrite reads as absent, forcing the
-    // re-bootstrap below instead of replaying a new-lineage fragment
-    // into pre-overwrite rows
-    val guarded = GraftLog.guardedMarker(last,
-      GraftLog.propertiesOf(dstDir).getOrElse(SrcLineageProp, ""),
-      srcLineage)
     // expire-history deletes the commit file AT the pivot checkpoint
     // (its changes survive only folded into the snapshot), so the
     // oldest replayable CHANGE SPAN starts one past the horizon: a
     // marker of horizon-1 would silently skip version `horizon`
-    val replayable = guarded.exists(_ >= 0) &&
+    val replayable = last >= 0 &&
       (horizon <= 0L || last >= horizon)
     if (GraftLog.storedSchema(dstDir).isEmpty || !replayable) {
       spark.read.format(Fmt).option("path", srcDir).load()
         .write.format(Fmt).option("path", dstDir)
         .mode("overwrite").save()
       GraftLog.commitTxn(dstDir, AppId, head)
-      GraftLog.setProperties(dstDir, Map(SrcLineageProp -> srcLineage))
       return Sync(head, "bootstrap", 0)
     }
     if (head <= last) return Sync(last, "noop", 0)
     val versions = GraftLog.versionsBetween(srcDir, last, head)
     versions.foreach { v =>
-      // a version that changed rows WITHOUT sidecars (Spark's SQL
-      // UPDATE/MERGE replace-data plan cannot emit them) would replay
+      // a version that changed rows WITHOUT sidecars (an overwrite;
+      // Spark's SQL UPDATE/MERGE replace-data plan) would replay
       // its carried rewrite rows as inserts — re-seed from the
       // snapshot at v instead of applying a wrong change set
       if (GraftLog.versionLacksCdcCoverage(srcDir, v)) {

@@ -125,16 +125,15 @@ object WarehouseStream {
         col("v.is_current").as("is_current"),
         col("v.last_eid").as("last_eid"))
     // publish as ONE atomic commit: remove every pre-batch file and
-    // add the rewrite in the same version — the overwrite path's
-    // reset-then-commit pair left a crash window where the whole
-    // dimension vanished, and this also keeps the dimension's own
-    // history time-travelable per micro-batch. rewriteFiles is the
-    // shared copy-on-write tail: scratch write, file adoption, ONE
-    // remove+add commit — WITH the conflict guard a hand-rolled
-    // replace lacks (a concurrent commit between snapshotting
-    // `retired` and publishing would otherwise leave its files live
-    // beside the full rewrite, serving rows twice) and with scratch
-    // cleanup on every failure path.
+    // add the rewrite in the same version, which keeps the
+    // dimension's own history time-travelable per micro-batch.
+    // rewriteFiles is the shared copy-on-write tail: scratch write,
+    // file adoption, ONE remove+add commit — WITH the conflict guard
+    // an overwrite lacks (the rewrite is derived from the snapshot it
+    // read, so a concurrent commit between snapshotting `retired` and
+    // publishing must abort it, not be silently dropped or served
+    // twice beside the full rewrite) and with scratch cleanup on every
+    // failure path.
     val out = hist.unionByName(merged)
     // retired = the files of the SAME pinned version the dim was read
     // as-of; rewriteFiles checks conflicts over (base, publish] and —

@@ -158,17 +158,20 @@ class ColumnEvolutionSpec extends SparkSpec {
     }
     assert(err2.getMessage != null &&
       err2.getMessage.contains("previously used"))
-    // an OVERWRITE replaces all data, so the tombstones lift: the
-    // truncate itself pads to the advertised (id, w) schema — Spark's
-    // write resolution — and the next append may then re-take 'junk'
+    // an OVERWRITE keeps history — time travel and RESTORE still
+    // reach files holding the dropped cells — so the tombstones hold
+    // across it: an overwrite carrying the dropped name rejects too
+    val err3 = intercept[Exception] {
+      spark.range(0, 10).selectExpr("id", "id AS w", "id AS junk")
+        .write.format(Fmt).option("path", dir).mode("overwrite").save()
+    }
+    assert(err3.getMessage != null &&
+      err3.getMessage.contains("previously used"))
     spark.range(0, 10).selectExpr("id", "id AS w")
       .write.format(Fmt).option("path", dir).mode("overwrite").save()
-    assert(!GraftLog.propertiesOf(dir)
-      .contains(GraftLog.DroppedColsProp))
-    spark.range(10, 20).selectExpr("id", "id AS w", "id AS junk")
-      .write.format(Fmt).option("path", dir).mode("append").save()
-    assert(read(dir).columns.toSeq == Seq("id", "w", "junk"))
-    assert(read(dir).count() == 20L)
+    assert(GraftLog.droppedNames(dir).contains("junk"))
+    assert(read(dir).columns.toSeq == Seq("id", "w"))
+    assert(read(dir).count() == 10L)
   }
 
   test("rename: the STREAMING read path resolves the trail too, and " +

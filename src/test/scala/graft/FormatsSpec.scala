@@ -10,25 +10,6 @@ class FormatsSpec extends SparkSpec {
   private def tmp(name: String): String =
     Files.createTempDirectory(s"graft_fmt_$name").toString
 
-  test("compaction collapses small files and preserves the table") {
-    val p = tmp("compact")
-    val src = Tables.customer(spark, sf001)
-    src.repartition(64).write.mode("overwrite").parquet(p)
-    def parts(dir: String) = new java.io.File(dir).listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    assert(parts(p) == 64)
-    val before = src.count()
-    val sumBefore = Tables.customer(spark, sf001)
-      .agg(sum(col("c_acctbal").cast("decimal(18,2)"))).head.getDecimal(0)
-    Formats.compact(spark, p)
-    val back = spark.read.parquet(p)
-    assert(parts(p) < 8, s"still ${parts(p)} files after compaction")
-    assert(back.count() == before)
-    assert(back.schema == src.schema)
-    assert(back.agg(sum(col("c_acctbal").cast("decimal(18,2)")))
-      .head.getDecimal(0) == sumBefore)
-  }
-
   test("csv round-trip preserves rows and schema") {
     val src = Tables.customer(spark, sf0001)
     val p = tmp("csv")

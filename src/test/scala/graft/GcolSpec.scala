@@ -329,11 +329,11 @@ class GcolSpec extends SparkSpec {
   }
 
   test("a poisoned checkpoint-version cache cannot suppress the " +
-      "fresh lineage's checkpoints (cross-process overwrite)") {
+      "recreated table's checkpoints (drop and recreate at one path)") {
     val dir = tmp()
-    // simulate another process having committed far ahead before a
-    // cross-process overwrite reset the lineage: this JVM's cache
-    // still holds the OLD lineage's high version for the same dir
+    // simulate another process having committed far ahead before the
+    // table was dropped and recreated at the same path: this JVM's
+    // cache still holds the OLD table's high version for the same dir
     GraftLog.lastCkptCache.put(dir, 100L)
     for (k <- 0 until 12)
       spark.range(k * 10, k * 10 + 10).toDF("id").coalesce(1)

@@ -1161,20 +1161,44 @@ class GraftCatalogSpec extends SparkSpec {
       .head.getLong(0) == 2L)
   }
 
-  test("REPLACE TABLE stamps a FRESH lineage: a marker persisted " +
-      "against the old table cannot silently survive the replace") {
+  test("REPLACE TABLE continues the version axis: a view's marker " +
+      "from before it re-bootstraps even after the head passes it") {
+    import graft.sources.{GraftLog, MaterializedAgg}
     spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.dbl")
     spark.sql("DROP TABLE IF EXISTS graftcat.dbl.rt")
-    spark.sql("CREATE TABLE graftcat.dbl.rt AS SELECT 1L AS id")
+    spark.sql("CREATE TABLE graftcat.dbl.rt AS " +
+      "SELECT id, id % 3 AS k, id AS v FROM range(0, 30)")
+    spark.sql("INSERT INTO graftcat.dbl.rt " +
+      "SELECT id, id % 3, id FROM range(30, 60)")
     val dir = s"$wh/dbl/rt"
-    val before = graft.sources.GraftLog.lineageOf(dir)
-    spark.sql("REPLACE TABLE graftcat.dbl.rt AS SELECT 2L AS id")
-    val after = graft.sources.GraftLog.lineageOf(dir)
-    // the version axis restarted, so the tag MUST change (the empty
-    // "never overwritten" tag matching itself across the replace is
-    // exactly the silent-merge hole the lineage guard exists to close)
-    assert(after != before && after.nonEmpty,
-      s"lineage must change across REPLACE: '$before' -> '$after'")
-    assert(spark.sql("SELECT id FROM graftcat.dbl.rt").head.getLong(0) == 2L)
+    val mv = java.nio.file.Files.createTempDirectory("graft-rt-mv").toString
+    assert(MaterializedAgg.refresh(spark, dir, mv, "k", Seq("v")).mode ==
+      "bootstrap")
+    assert(GraftLog.currentVersion(dir) == 1L)
+    spark.sql("REPLACE TABLE graftcat.dbl.rt AS " +
+      "SELECT id, id % 3 AS k, -id AS v FROM range(100, 110)")
+    // the replacement is one checkpoint at the old head + 1 with no
+    // history below it: time travel into the old table fails as
+    // expired
+    assert(GraftLog.currentVersion(dir) == 2L)
+    assert(GraftLog.oldestReplayableVersion(dir) == 2L)
+    val err = intercept[Exception](spark.sql(
+      "SELECT * FROM graftcat.dbl.rt VERSION AS OF 1").collect())
+    assert(err.getMessage.contains("predates the retained log"),
+      err.getMessage)
+    // grow the head past the view's marker (1): the marker is below the
+    // new horizon, so the view rebuilds instead of merging the new
+    // table's appends into the old table's totals
+    spark.sql("INSERT INTO graftcat.dbl.rt " +
+      "SELECT id, id % 3, -id FROM range(110, 120)")
+    spark.sql("INSERT INTO graftcat.dbl.rt " +
+      "SELECT id, id % 3, -id FROM range(120, 130)")
+    val r = MaterializedAgg.refresh(spark, dir, mv, "k", Seq("v"))
+    assert(r.mode == "bootstrap" && r.srcVersion == 4L, s"got $r")
+    val got = spark.read.format("graft.sources.GraftLogSource")
+      .option("path", mv).load().agg(sum(col("sum_v"))).head.getLong(0)
+    assert(got == -(100L until 130L).sum)
+    assert(spark.sql("SELECT COUNT(*) FROM graftcat.dbl.rt")
+      .head.getLong(0) == 30L)
   }
 }

@@ -128,34 +128,29 @@ class GraftLogSpec extends SparkSpec {
     assert(readBack(dir).count() == 100)
   }
 
-  test("kill window inside OVERWRITE: a death between the lineage " +
-      "reset and the version-0 link leaves a consistent EMPTY table " +
-      "(never a torn mix of lineages) and the retry completes") {
+  test("kill window inside OVERWRITE: a death before the link leaves " +
+      "the old rows readable and the retry completes") {
     val dir = tmp()
     series(100).coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save()
     series(100).coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save()
     assert(readBack(dir).count() == 200)
-    // the preLink window of the truncate's version-0 commit sits
-    // exactly between resetLineage (old metadata gone) and the new
-    // lineage's first link — the overwrite protocol's documented
-    // non-atomic window (an atomic full replace is the rewrite path's
-    // remove+add single commit; DSv2 overwrite deliberately RESETS
-    // the lineage instead)
+    // the overwrite is one ordinary commit: a death before its link
+    // claims no version, so readers stay on the old snapshot
     dieInWindow(dir, "preLink",
       series(30).coalesce(1)
         .write.format(Fmt).option("path", dir).mode("overwrite").save())
-    assert(readBack(dir).count() == 0,
-      "mid-overwrite death must read as consistent-empty, not torn")
-    assert(graft.sources.GraftLog.currentVersion(dir) == -1L,
-      "no version of either lineage may be visible in the window")
-    // self-heal: retrying the overwrite lands the new lineage at v0
+    assert(readBack(dir).count() == 200,
+      "a pre-link death must leave the old rows readable")
+    assert(graft.sources.GraftLog.currentVersion(dir) == 1L,
+      "no version may be claimed by a pre-link death")
+    // self-heal: retrying the overwrite claims the next version
     series(30).coalesce(1)
       .write.format(Fmt).option("path", dir).mode("overwrite").save()
-    assert(graft.sources.GraftLog.currentVersion(dir) == 0L)
+    assert(graft.sources.GraftLog.currentVersion(dir) == 2L)
     assert(readBack(dir).count() == 30)
-    // and ordinary appends continue on the fresh lineage
+    // and ordinary appends continue after it
     series(45).filter(col("id") >= 30).coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save()
     assert(readBack(dir).count() == 45)
@@ -180,11 +175,116 @@ class GraftLogSpec extends SparkSpec {
     val v0 = spark.read.format(Fmt).option("path", dir)
       .option("asOfVersion", "0").load()
     assert(v0.count() == 100, "version 0 must be the first commit alone")
-    // overwrite starts a new lineage at version 0
+    // an overwrite is one more version; the history below it stays
     series(30).write.format(Fmt).option("path", dir)
       .mode("overwrite").save()
-    assert(graft.sources.GraftLog.currentVersion(dir) == 0L)
+    assert(graft.sources.GraftLog.currentVersion(dir) == 2L)
     assert(readBack(dir).count() == 30)
+    assert(spark.read.format(Fmt).option("path", dir)
+      .option("asOfVersion", "1").load().count() == 350)
+  }
+
+  test("an overwrite keeps history: time travel, the change feed and " +
+      "RESTORE all reach the versions before it") {
+    import graft.sources.GraftLog
+    val dir = tmp()
+    series(100).write.format(Fmt).option("path", dir).mode("append").save()
+    series(250).filter(col("id") >= 100)
+      .write.format(Fmt).option("path", dir).mode("append").save() // v1
+    series(30).write.format(Fmt).option("path", dir)
+      .mode("overwrite").save() // v2
+    assert(GraftLog.currentVersion(dir) == 2L)
+    // time travel below the overwrite
+    assert(spark.read.format(Fmt).option("path", dir)
+      .option("asOfVersion", "1").load().count() == 250)
+    // the change feed over (0, 1] still serves version 1's rows
+    val feed = spark.read.format(Fmt).option("path", dir)
+      .option("changesFromVersion", "0").option("asOfVersion", "1")
+      .load()
+    assert(feed.count() == 150 &&
+      feed.agg(min(col("id"))).head.getLong(0) == 100L)
+    // the overwrite is a non-append version to every consumer
+    assert(GraftLog.spanHasNonAppendChanges(dir, 1L, 2L))
+    assert(!GraftLog.spanHasNonAppendChanges(dir, 0L, 1L))
+    // RESTORE brings the pre-overwrite snapshot back as a new version
+    GraftLog.restore(dir, 1L)
+    assert(GraftLog.currentVersion(dir) == 3L)
+    assert(readBack(dir).exceptAll(series(250)).isEmpty &&
+      series(250).exceptAll(readBack(dir)).isEmpty)
+  }
+
+  test("an append that wins the version race ahead of an overwrite is " +
+      "removed by it, never resurrected") {
+    import graft.sources.{GraftLog, GraftLogCommit, LogEntry}
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val dir = tmp()
+    series(10).coalesce(1)
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    val schema = readBack(dir).schema
+    val cols = schema.fieldNames.toSeq
+    val before = GraftLog.entriesAsOf(dir, 0L).map(_.file)
+    // Both committers read the log head BEFORE either claims version
+    // 1 (the latch releases only when both are inside mk). The
+    // overwrite then waits until the append has linked `_commit.1`, so
+    // its own link loses the CAS and it retries at version 2 — where
+    // its entries must retire the append's file too.
+    val inside = new CountDownLatch(2)
+    val appended = new CountDownLatch(1)
+    def rendezvous(): Unit = if (inside.getCount > 0) {
+      inside.countDown(); inside.await(10, TimeUnit.SECONDS)
+    }
+    val append = new Thread(() => {
+      GraftLog.commitNewUnlocked(dir, schema) { v =>
+        rendezvous()
+        Seq(LogEntry.add(v, "part-race-append", 1L, Map.empty,
+          cols = cols))
+      }
+      appended.countDown()
+    })
+    val overwrite = new Thread(() => {
+      GraftLog.commitNewUnlocked(dir, schema) { v =>
+        rendezvous(); appended.await(10, TimeUnit.SECONDS)
+        GraftLog.appendEntries(dir, v,
+          Seq(GraftLogCommit("part-race-overwrite", 1L, cols = cols)),
+          truncate = true)
+      }
+      ()
+    })
+    Seq(append, overwrite).foreach(_.start())
+    Seq(append, overwrite).foreach(_.join(30000))
+    val es = GraftLog.entries(dir)
+    assert(es.exists(e => e.file == "part-race-append" &&
+      e.isAdd && e.version == 1L), s"the append must win v1: $es")
+    assert(GraftLog.currentVersion(dir) == 2L)
+    assert(GraftLog.entriesAsOf(dir, 2L).map(_.file) ==
+      Seq("part-race-overwrite"),
+      "the overwrite must retire every file live at its parent")
+    assert(es.filter(_.action == "remove").map(_.file).toSet ==
+      (before :+ "part-race-append").toSet)
+  }
+
+  test("time travel below an overwrite that changed the partition " +
+      "column reads the old layout's rows") {
+    import graft.sources.GraftLog
+    val dir = tmp()
+    spark.range(0, 400).selectExpr("id", "id % 4 AS k", "id % 3 AS j")
+      .write.format(Fmt).option("path", dir)
+      .option("partitionCol", "k").mode("append").save() // v0
+    spark.range(0, 90).selectExpr("id", "id % 4 AS k", "id % 3 AS j")
+      .write.format(Fmt).option("path", dir)
+      .option("partitionCol", "j").mode("overwrite").save() // v1
+    assert(GraftLog.partitionColOf(dir).contains("j"))
+    val v0 = spark.read.format(Fmt).option("path", dir)
+      .option("asOfVersion", "0").load()
+    assert(v0.count() == 400)
+    // a pushed filter and a grouping on the new key both read the old
+    // files correctly: their partition records name `k`, not `j`
+    assert(v0.filter(col("j") === 2).count() == 133)
+    val byJ = v0.groupBy(col("j")).count().collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(byJ == Map(0L -> 134L, 1L -> 133L, 2L -> 133L))
+    assert(readBack(dir).groupBy(col("j")).count().count() == 3)
+    assert(readBack(dir).count() == 90)
   }
 
   test("streaming write commits epochs exactly once across restarts") {
@@ -1229,6 +1329,30 @@ class GraftLogSpec extends SparkSpec {
     assert(GraftLog.currentVersion(dir) == v0)
   }
 
+  test("a rewrite whose replacement write fails leaves no CDC " +
+      "sidecar behind") {
+    import graft.sources.GraftLog
+    val dir = tmp()
+    series(200).coalesce(1)
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    val schema = readBack(dir).schema
+    val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
+    val boom = udf((id: Long) =>
+      if (id >= 0L) throw new IllegalStateException("replacement failed")
+      else id)
+    val changes = readBack(dir).filter(col("id") < 10)
+      .withColumn(GraftLog.ChangeTypeCol, lit("delete"))
+    intercept[Exception](GraftLog.rewriteFiles(dir, live,
+      readBack(dir).withColumn("id", boom(col("id"))), schema,
+      cdcChanges = Some(changes)))
+    val cdc = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.startsWith(GraftLog.CdcPrefix))
+    assert(cdc.isEmpty, s"orphaned CDC sidecars: ${cdc.mkString(", ")}")
+    assert(scratchDirs(dir).isEmpty)
+    assert(GraftLog.currentVersion(dir) == 0L)
+    assert(readBack(dir).count() == 200)
+  }
+
   test("vacuum reaps scratch tables past the retention horizon") {
     import graft.sources.GraftLog
     val dir = tmp()
@@ -1441,7 +1565,8 @@ class GraftLogSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("partitioned by k") ||
       Option(e.getCause).exists(_.getMessage.contains("partitioned by k")))
-    // an OVERWRITE resets lineage and may redeclare the layout
+    // an OVERWRITE replaces every live file and may redeclare the
+    // layout
     spark.range(0, 100).selectExpr("id", "id % 2 AS k")
       .write.format(Fmt).option("path", dir)
       .option("partitionCol", "id").mode("overwrite").save()
@@ -1797,9 +1922,8 @@ class GraftLogSpec extends SparkSpec {
     assert(GraftLog.refs(dir).isEmpty)
   }
 
-  test("overwrite retires version-anchored side state: a ref, a " +
-      "branch, and a staged WAP id all fail loudly afterwards " +
-      "instead of resolving against the new lineage") {
+  test("overwrite keeps version-anchored side state: a ref, a branch " +
+      "and a staged WAP id still resolve against the history") {
     import graft.sources.GraftLog
     val dir = tmp()
     series(100).coalesce(1)
@@ -1812,33 +1936,23 @@ class GraftLogSpec extends SparkSpec {
     try series(30).coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save()
     finally spark.conf.unset(GraftLog.WapConf)
-    // truncate: a NEW lineage from version 0
+    // the overwrite is version 2; versions never restart, so `gold=1`
+    // keeps naming the pre-overwrite snapshot
     series(10).coalesce(1)
       .write.format(Fmt).option("path", dir).mode("overwrite").save()
-    // grow the new lineage to version 1 so a surviving `gold=1`
-    // WOULD silently resolve — the hazard under test
     series(20).coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save()
-    assert(GraftLog.currentVersion(dir) == 1L)
-    val eRef = intercept[IllegalArgumentException] {
-      spark.read.format(Fmt).option("path", dir)
-        .option("asOfVersion", "gold").load().count()
-    }
-    assert(eRef.getMessage.contains("no ref 'gold'"),
-      s"a retired-lineage ref must die with its lineage: $eRef")
-    val eBr = intercept[IllegalArgumentException] {
-      spark.read.format(Fmt).option("path", dir)
-        .option("branch", "dev").load().count()
-    }
-    assert(eBr.getMessage.contains("no branch 'dev'"))
-    val eWap = intercept[IllegalArgumentException] {
-      GraftLog.publishStaged(dir, "aud9")
-    }
-    assert(eWap.getMessage.contains("no staged write"),
-      "publishing a retired-lineage WAP id must fail, not " +
-        s"republish retired rows: $eWap")
-    // the new lineage itself is healthy
+    assert(GraftLog.currentVersion(dir) == 3L)
+    assert(spark.read.format(Fmt).option("path", dir)
+      .option("asOfVersion", "gold").load().count() == 160)
+    // the branch still reads main AT ITS FORK (v1)
+    assert(spark.read.format(Fmt).option("path", dir)
+      .option("branch", "dev").load().count() == 160)
+    // publishing the audit appends its staged rows onto the current
+    // (post-overwrite) snapshot, as an append committed now would
     assert(readBack(dir).count() == 30)
+    assert(GraftLog.publishStaged(dir, "aud9") == (4L, 1))
+    assert(readBack(dir).count() == 60)
   }
 
   test("compaction rolls outputs at the target size — files stay splittable-sized") {

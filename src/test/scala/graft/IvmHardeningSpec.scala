@@ -61,18 +61,17 @@ class IvmHardeningSpec extends SparkSpec {
     seed(0, 100); seed(100, 100); seed(200, 100) // head = 2
     val r0 = MaterializedAgg.refresh(spark, src, mv, "k", Seq("v"))
     assert(r0.mode == "bootstrap" && r0.srcVersion == 2L)
-    // OVERWRITE: a brand-new lineage, entirely different rows
+    // OVERWRITE: version 3 removes every row and adds new ones
     spark.range(5000, 5400).selectExpr("id", "id % 5 AS k", "id AS v")
       .coalesce(1).write.format(Fmt).option("path", src)
-      .mode("overwrite").save() // new-lineage v0
-    // grow the NEW lineage PAST the old marker: without a lineage
-    // tag, horizon (0) and span guards all pass and the refresh would
-    // merge a new-lineage fragment into pre-overwrite totals
-    seed(5400, 50); seed(5450, 50); seed(5500, 50) // head = 3 > 2
-    assert(GraftLog.currentVersion(src) > r0.srcVersion)
+      .mode("overwrite").save()
+    // appends after it: the span (2, head] holds the overwrite, a
+    // non-append version the add feed cannot replay
+    seed(5400, 50); seed(5450, 50); seed(5500, 50) // head = 6
+    assert(GraftLog.currentVersion(src) == 6L)
     val r1 = MaterializedAgg.refresh(spark, src, mv, "k", Seq("v"))
     assert(r1.mode == "bootstrap",
-      s"a marker from a retired lineage must re-bootstrap, got " +
+      s"a span holding an overwrite must re-bootstrap, got " +
         s"${r1.mode}")
     val got = spark.read.format(Fmt).option("path", mv).load()
       .select(col("k"), col("n_rows"), col("sum_v"))
@@ -84,9 +83,9 @@ class IvmHardeningSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .toSet
     assert(got == want,
-      "the rebuilt view must reflect ONLY the new lineage")
-    // and once re-bootstrapped, the new lineage refreshes
-    // incrementally again
+      "the rebuilt view must reflect ONLY the post-overwrite rows")
+    // and once re-bootstrapped, the view refreshes incrementally
+    // again
     seed(6000, 50)
     val r2 = MaterializedAgg.refresh(spark, src, mv, "k", Seq("v"))
     assert(r2.mode == "incremental", s"got ${r2.mode}")
@@ -102,19 +101,21 @@ class IvmHardeningSpec extends SparkSpec {
     seed(0); seed(100); seed(200)
     GraftLog.setProperties(src, Map("graft.cdf.enabled" -> "true"))
     assert(Replication.sync(spark, src, dst, "id").mode == "bootstrap")
-    // overwrite, re-enable CDF on the new lineage, grow past marker
+    // the overwrite (version 3) publishes no CDC sidecars, so the
+    // incremental sync re-seeds the mirror from the snapshot at 3 and
+    // applies the appends after it as ordinary typed changes
     spark.range(9000, 9100).selectExpr("id", "id AS v").coalesce(1)
       .write.format(Fmt).option("path", src).mode("overwrite").save()
-    GraftLog.setProperties(src, Map("graft.cdf.enabled" -> "true"))
     seed(9100); seed(9200); seed(9300)
+    assert(GraftLog.versionLacksCdcCoverage(src, 3L))
     val s1 = Replication.sync(spark, src, dst, "id")
-    assert(s1.mode == "bootstrap",
-      s"retired-lineage marker must re-seed the mirror, got ${s1.mode}")
+    assert(s1.mode == "incremental" && s1.versionsApplied == 4,
+      s"the overwrite must re-seed inside the sync, got $s1")
     val a = spark.read.format(Fmt).option("path", dst).load()
       .orderBy("id").collect().map(_.getLong(0)).toSeq
     val b = spark.read.format(Fmt).option("path", src).load()
       .orderBy("id").collect().map(_.getLong(0)).toSeq
-    assert(a == b, "mirror must equal the new-lineage source exactly")
+    assert(a == b, "mirror must equal the post-overwrite source exactly")
   }
 
   test("a streaming checkpoint from a retired lineage fails loudly " +
@@ -130,8 +131,8 @@ class IvmHardeningSpec extends SparkSpec {
         .start()
       try q.awaitTermination() finally q.stop()
     }
-    drain() // offset committed at the OLD lineage's head
-    // overwrite restarts the version axis, then grow past the offset
+    drain() // offset committed at version 0
+    // an overwrite (version 1), then appends after it
     spark.range(900, 950).selectExpr("id", "id AS v").coalesce(1)
       .write.format(Fmt).option("path", src).mode("overwrite").save()
     spark.range(950, 1000).selectExpr("id", "id AS v").coalesce(1)
@@ -144,19 +145,17 @@ class IvmHardeningSpec extends SparkSpec {
     def chain(t: Throwable): Seq[String] =
       if (t == null) Nil else t.getMessage +: chain(t.getCause)
     assert(chain(err).exists(m =>
-      m != null && m.contains("RETIRED lineage")),
-      s"resume must fail on the lineage change: ${chain(err)}")
+      m != null && m.contains("cannot replay version 1")),
+      s"resume must fail on the overwrite: ${chain(err)}")
   }
 
   test("a checkpoint-restored UNCOMMITTED batch fails loudly after a " +
       "source overwrite — stale start AND end offsets agreeing with " +
       "each other is not enough") {
     // The WAL-replay shape: Spark re-plans the last uncommitted batch
-    // with BOTH offsets deserialized from the checkpoint, so after an
-    // overwrite the two stale offsets carry the SAME retired lineage
-    // and an offsets-only comparison passes — while the version files
-    // on disk belong to the new lineage. The guard must consult the
-    // source's CURRENT lineage.
+    // with BOTH offsets deserialized from the checkpoint. Their span
+    // holds the overwrite, so planning it must fail on the log itself,
+    // whatever the offsets say.
     val src = tmp()
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
@@ -167,9 +166,7 @@ class IvmHardeningSpec extends SparkSpec {
       .write.format(Fmt).option("path", src).mode("append").save()
     spark.range(100, 200).selectExpr("id", "id AS v").coalesce(1)
       .write.format(Fmt).option("path", src).mode("append").save()
-    val staleLineage = GraftLog.lineageOf(src)
-    // overwrite: version axis restarts, lineage tag changes, and the
-    // new lineage grows back past the stale offsets' span
+    // overwrite (version 2), then an append (version 3)
     spark.range(900, 950).selectExpr("id", "id AS v").coalesce(1)
       .write.format(Fmt).option("path", src).mode("overwrite").save()
     spark.range(950, 1000).selectExpr("id", "id AS v").coalesce(1)
@@ -178,10 +175,21 @@ class IvmHardeningSpec extends SparkSpec {
       src, schema, schema, startVersion = -1L)
     val err = intercept[IllegalStateException](
       stream.planInputPartitions(
-        graft.sources.GraftLogOffset(0L, staleLineage),
-        graft.sources.GraftLogOffset(1L, staleLineage)))
-    assert(err.getMessage.contains("RETIRED lineage"),
+        graft.sources.GraftLogOffset(1L),
+        graft.sources.GraftLogOffset(3L)))
+    assert(err.getMessage.contains("cannot replay version 2"),
       s"stale-WAL replay must fail loudly: ${err.getMessage}")
+    // the spans on either side of the overwrite still plan
+    assert(stream.planInputPartitions(graft.sources.GraftLogOffset(0L),
+      graft.sources.GraftLogOffset(1L)).length == 1)
+    assert(stream.planInputPartitions(graft.sources.GraftLogOffset(2L),
+      graft.sources.GraftLogOffset(3L)).length == 1)
+    // an offset of the older `<version>@<uuid>` form fails loudly and
+    // names itself
+    val old = "1@5a1f0c8e-77d4-4c1e-9c53-0d3f7b1e2a90"
+    val errOld = intercept[IllegalArgumentException](
+      stream.deserializeOffset(old))
+    assert(errOld.getMessage.contains(s"'$old'"), errOld.getMessage)
   }
 
   test("a span with a source DELETE re-bootstraps the view — the add " +
