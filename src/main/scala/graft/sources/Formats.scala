@@ -969,7 +969,7 @@ object Formats {
 
     // Streaming CDC APPLY — the closing loop of the change-data story:
     // a DERIVED table maintained by streaming the source table's
-    // version feed through foreachBatch + copy-on-write MERGE (the
+    // version feed through foreachBatch + merge-on-read MERGE (the
     // Delta "CDC to downstream table" pattern). Run 1 bootstraps the
     // derived table from the initial snapshot; a second source commit
     // carries updates AND inserts; run 2 resumes from the checkpoint,
@@ -977,7 +977,7 @@ object Formats {
     // oracle recomputes the final derived state in closed form, so a
     // replayed row, missed update, or dropped insert is a hash miss.
     // At 100 TB per-run work is bounded by the append rate (the
-    // version feed), and the merge rewrite by the touched key range
+    // version feed), and the merge by the touched key range
     // (manifest stats) — a derived table maintained at delta cost.
     "sink_log_stream_cdc_apply" -> ((s, d) => {
       val base = graft.core.ArtifactCache.fixtureScratch("log_cdc", d)
@@ -1252,16 +1252,19 @@ object Formats {
         lit(metaOnly).as("meta_only"))
     }),
 
-    // Copy-on-write MERGE (Delta MERGE INTO in miniature): an update
-    // batch upserts into a range-layout table, and the manifest stats
-    // double as the merge's file-targeting index — only files whose
-    // [min, max] can contain a matched key rewrite (bounded_rewrite
-    // gates <= half the files), and a second, purely-out-of-range
-    // insert batch rewrites ZERO files (pure_insert_rewrites). The
+    // Merge-on-read MERGE (Delta MERGE INTO in miniature; the query
+    // keeps its copy-on-write name as its oracle key): an update batch
+    // upserts into a range-layout table, and the manifest stats double
+    // as the merge's file-targeting index — only files whose [min, max]
+    // can contain a matched key are scanned, and only files holding a
+    // matched row are touched, by a deletion vector that hides it
+    // (bounded_rewrite gates <= half the files); the batch lands as new
+    // part files in the same commit. A second, purely-out-of-range
+    // insert batch touches ZERO files (pure_insert_rewrites). The
     // oracle recomputes the final table from closed form, so a lost
-    // carried row, a missed update, or a dropped insert is a hash
+    // untouched row, a missed update, or a dropped insert is a hash
     // miss; the pre-merge snapshot stays time-travelable. At 100 TB
-    // this bounds MERGE write amplification to the touched key range —
+    // this bounds MERGE write amplification to the batch and its DVs —
     // the property that makes daily upserts affordable. Merges run
     // once per session; repeat trials measure the merged read.
     "sink_log_merge_cow" -> ((s, d) => {
@@ -2078,7 +2081,7 @@ object Formats {
       cache: scala.collection.concurrent.TrieMap[String, T],
       dir: String)(build: => T): T =
     cache.getOrElseUpdate(dir, { wipeDir(dir); build })
-  // (filesRewrittenByUpdate, filesTotal, filesRewrittenByPureInsert)
+  // (filesTouchedByUpdate, filesTotal, filesTouchedByPureInsert)
   private val mergeStats =
     new scala.collection.concurrent.TrieMap[String, (Int, Int, Int)]()
   // (tagReadRows, logExpired, horizonFailsLoudly)

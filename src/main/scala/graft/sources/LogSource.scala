@@ -1054,6 +1054,22 @@ object GraftLog {
     } finally deleteTree(new File(scratch))
   }
 
+  /** Write `df` as uncommitted part files of `dir`, laid out like the
+    * table's own writes: the scratch table inherits the table's
+    * partition declaration (or the partition-evolution override), so
+    * rows route per value and every file keeps its partition record
+    * (SPJ grouping survives merge/delete; compaction of a partitioned
+    * table yields one file per VALUE), and its roll target, so files
+    * keep the table's size. */
+  private def writeParts(dir: String, df: org.apache.spark.sql.DataFrame,
+      partitionOverride: Option[String] = None): Seq[LogEntry] =
+    writeScratch(dir, RewriteScratchPrefix, df, setup = scratch => {
+      partitionOverride.orElse(partitionColOf(dir))
+        .foreach(setPartitionCol(scratch, _))
+      propertiesOf(dir).get(TargetBytesProp).foreach(t =>
+        writeProperties(scratch, Map(TargetBytesProp -> t)))
+    })(identity)
+
   /** Delete a file, or a directory with everything under it. */
   private[graft] def deleteTree(f: File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty[File]).foreach(deleteTree)
@@ -1775,9 +1791,9 @@ object GraftLog {
     * partitioned table's scratch write routes per value (one file per
     * value, partition record intact — the Iceberg per-partition
     * compaction shape); an unpartitioned read coalesces to
-    * ⌈raw size ÷ target⌉ tasks. The maintenance pass a streaming sink
-    * needs run daily: per-epoch commits accumulate unboundedly many
-    * small files whose open/listing cost comes to dominate scans.
+    * ⌈live raw size ÷ target⌉ tasks. The maintenance pass a streaming
+    * sink needs run daily: per-epoch commits accumulate unboundedly
+    * many small files whose open/listing cost comes to dominate scans.
     * Returns the number of files compacted away (0 = nothing to do). */
   def compact(dir: String): Int = synchronized {
     requireNoWap("compaction"); requireNoBranch("compaction")
@@ -1809,7 +1825,13 @@ object GraftLog {
     val replacement =
       if (pcol.isDefined) picked
       else {
-        val raw = live.map(_.stats(RawBytesKey)._1.toLong).sum
+        // live bytes: a file's raw size scaled by the share of its rows
+        // no deletion vector hides (DV'd rows are not rewritten)
+        val raw = live.map { e =>
+          val r = e.stats(RawBytesKey)._1.toLong
+          if (e.rows <= 0L) r
+          else (BigInt(r) * effectiveRows(e) / e.rows).toLong
+        }.sum
         val target = targetBytesOf(dir)
         picked.coalesce(math.max(1L, (raw + target - 1) / target).toInt)
       }
@@ -1818,33 +1840,39 @@ object GraftLog {
     live.size
   }
 
-  /** Copy-on-write MERGE (Delta `MERGE INTO` in miniature): upsert a
-    * batch of full-schema rows into the table by KEY, rewriting ONLY
-    * the part files whose manifest [min, max] range on the key can
-    * contain a matched key — numeric keys by the manifest [min, max]
-    * range, string keys by the per-file blooms — so the stats written
-    * for scan pruning double as the merge's file-targeting index,
-    * which is exactly how Delta bounds a MERGE's write amplification.
-    * Matched rows are replaced
-    * by their update row, unmatched table rows are carried unchanged,
-    * unmatched update rows are inserted. The rewrite is one
-    * distributed full-outer join of the affected files against the
-    * update batch (at 100 TB: affected-side shuffle is bounded by the
-    * touched key range, and a small update batch broadcasts); the
-    * commit publishes remove(affected) + add(rewritten) as one new
-    * version, so readers switch snapshots atomically and time travel
-    * to the pre-merge version keeps working. Merge adds carry
-    * dataChange=true: the CDF re-delivers carried rows from rewritten
-    * files (the append-only feed's documented limit; Delta annotates
-    * per-row change types to avoid this). Returns
-    * (filesRewritten, filesTotal). */
+  /** Merge-on-read MERGE (Delta `MERGE INTO` in miniature, in the
+    * Delta-DV / Iceberg-v2 upsert shape): upsert a batch of full-schema
+    * rows into the table by KEY without rewriting the files that hold
+    * the replaced rows. Matched table rows are replaced by their update
+    * row, unmatched table rows stay as they are, unmatched update rows
+    * are inserted.
+    *
+    * File targeting reads the stats written for scan pruning: numeric
+    * keys probe each file's manifest [min, max] range (and the integral
+    * bloom) with the batch's distinct key SET, string keys probe the
+    * per-file blooms, so only files that can hold a matched key are
+    * scanned. One position scan of those files finds the matched rows;
+    * [[hideAndAppend]] hides them with one deletion vector per touched
+    * file and writes the batch once as new part files, and ONE version
+    * publishes the DVs, the batch adds, the typed CDC sidecars and the
+    * txn marker. Readers switch snapshots atomically and the pre-merge
+    * version stays time-travelable. Write amplification is the batch
+    * plus its DVs, not the touched files. Over `maxPositions` matched
+    * rows the touched files are rewritten instead (minus the matched
+    * rows, plus the batch), as one copy-on-write commit; compaction
+    * folds accumulated DVs away either way. A DV commit is a non-append
+    * version, so the add feed and its stream refuse to replay it; the
+    * typed feed carries its exact pre/post images and inserts where
+    * CDC is on. Returns (filesTouched, filesTotal). */
   def mergeUpsert(spark: org.apache.spark.sql.SparkSession, dir: String,
       updates: org.apache.spark.sql.DataFrame,
       keyCol: String,
-      txn: Option[(String, Long)] = None): (Int, Int) = {
+      txn: Option[(String, Long)] = None,
+      maxPositions: Int = MaxDvPositions): (Int, Int) = {
     requireNoWap("MERGE"); requireNoBranch("MERGE")
-    import org.apache.spark.sql.functions.{col, lit, when,
-      min => fmin, max => fmax}
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{array, coalesce, col, explode,
+      lit, struct, when, min => fmin, max => fmax}
     val schema = storedSchema(dir).getOrElse(throw new IllegalArgumentException(
       s"graft-log table not found at $dir"))
     require(schema.fieldNames.contains(keyCol), s"no key column $keyCol")
@@ -1853,14 +1881,13 @@ object GraftLog {
       s"merge batch must carry the full table schema ${cols.mkString(",")}")
     // The batch is coerced to the TABLE's column types up front — the
     // Delta/SQL-MERGE cast-source-to-target contract — so matching,
-    // file targeting, CDC images, and the rewrite all see canonical
+    // file targeting, CDC images, and the batch write all see canonical
     // values: the schema check above is name-only, and a CDC frame
     // carrying the key as decimal/double would otherwise (a) hash
     // "42.00"/"42.0" against blooms that store "42" — silently
     // DROPPING a file that really holds the key, whose stale row then
     // survives beside a wrongly-inserted "unmatched" copy — and
-    // (b) write non-canonical cell text through the scratch rewrite
-    // into a long-typed column.
+    // (b) write non-canonical cell text into a long-typed column.
     //
     // The coercion must be LOSSLESS per row (Delta's ANSI
     // store-assignment policy), but a plain cast() follows the
@@ -1892,183 +1919,165 @@ object GraftLog {
           "nulled, truncated, or saturated by the coercion"))
     val up = updates.select(schema.fields.toSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
-    val rewriteBase = currentVersion(dir)
+    val mergeBase = currentVersion(dir)
     val live = entriesAsOf(dir, Long.MaxValue)
-    val keyNumeric = schema.fields.find(_.name == keyCol)
-      .exists(_.dataType match {
-        case LongType | IntegerType | DoubleType => true
-        case _ => false
-      })
-    // Stats overlap is conservative: a stat-less entry might hold any
-    // key, so it rewrites. Numeric keys bound by manifest [min, max]
-    // range; STRING keys bound by the per-file blooms the scan side
-    // already consults — a file whose bloom provably lacks EVERY
-    // update key cannot hold a matched row and is never rewritten
-    // (the string-keyed analogue of the range bound; bloomless
-    // entries — legacy, or post-compaction — rewrite conservatively).
-    val affected = if (!keyNumeric) {
-      // The probe set is driver-side, so it is capped: a batch with
-      // more distinct keys than the cap rewrites everything — such a
-      // batch admits most files through the blooms anyway.
-      val keys = up.select(col(keyCol))
-        .filter(col(keyCol).isNotNull).distinct()
-        .limit(MaxMergeProbeKeys + 1).collect().map(_.get(0).toString)
-      if (keys.length > MaxMergeProbeKeys) live
-      else if (keys.isEmpty) {
-        // EITHER an empty batch (no-op) OR only NULL-keyed rows —
-        // which match nothing and must still INSERT (losing them here
-        // would contradict the NULL-key contract below).
-        if (up.limit(1).collect().isEmpty) {
-          // no-op merge still records the txn marker (the consumer's
-          // applied-through watermark must advance past empty spans)
-          txn.foreach { case (a, tv) => commitTxn(dir, a, tv) }
-          return (0, live.size)
-        }
-        Seq.empty
-      } else {
-        // hash once per key, deserialize once per file (not k × n)
-        val keyHashes = keys.map(GraftLogBloom.packedHash)
-        live.filter(e => GraftLogBloom.mayContainAny(e,
-          GraftLog.fileLocalName(schema, e, keyCol), keyHashes))
-      }
-    } else {
-      // Per-KEY file targeting, not per-batch-range: a CDC batch
-      // typically mixes a narrow update window with above-max inserts,
-      // and its GLOBAL [min, max] then spans half the table even
-      // though the actual keys touch one file. Probing each file's
-      // range with the batch's distinct key SET (driver-capped, like
-      // the string bloom probe) admits only files that can really
-      // hold a matched key. Over the cap, fall back to the global
-      // range overlap.
-      val keyRows = up.select(col(keyCol))
-        .filter(col(keyCol).isNotNull).distinct()
-        .limit(MaxMergeProbeKeys + 1).collect()
-      if (keyRows.isEmpty) {
-        // EITHER an empty batch (no-op) OR only NULL-keyed rows —
-        // which match nothing and must still INSERT (losing them here
-        // would contradict the NULL-key contract above).
-        if (up.limit(1).collect().isEmpty) {
-          // no-op merge still records the txn marker (the consumer's
-          // applied-through watermark must advance past empty spans)
-          txn.foreach { case (a, tv) => commitTxn(dir, a, tv) }
-          return (0, live.size)
-        }
-        Seq.empty
-      } else if (keyRows.length <= MaxMergeProbeKeys) {
-        val keys: Array[AnyRef] = keyRows.map(r =>
-          new java.math.BigDecimal(r.get(0).toString): AnyRef)
-        java.util.Arrays.sort(keys)
-        // Bloom probes hash the TABLE's canonical cell text — the
-        // integral `Long.toString` the writer stored. keyRows come
-        // from the LOSSLESSLY-coerced batch (`up` above), so for an
-        // integral key column r.get(0) is already the exact boxed
-        // Long/Integer whose toString IS that canonical text. Double
-        // key columns carry no blooms (writer policy), so the
-        // conjunct is skipped outright. Hashed once here; each file
-        // deserializes its bloom once.
-        val keyDt = schema.fields.find(_.name == keyCol).get.dataType
-        val integral = keyDt == LongType || keyDt == IntegerType
-        val keyHashes: Array[Long] =
-          if (!integral) Array.empty
-          else keyRows.map(r =>
-            GraftLogBloom.packedHash(r.get(0).toString))
-        live.filter { e =>
-          val local = GraftLog.fileLocalName(schema, e, keyCol)
-          val inRange = GraftLog.decStat(e, local) match {
-            case Some((lo, hi)) =>
-              // any key in [lo, hi]? first key >= lo decides
-              val i = {
-                val p = java.util.Arrays.binarySearch(keys, lo)
-                if (p >= 0) p else -(p + 1)
-              }
-              i < keys.length &&
-                keys(i).asInstanceOf[java.math.BigDecimal]
-                  .compareTo(hi) <= 0
-            case None => true
-          }
-          inRange && (!integral ||
-            GraftLogBloom.mayContainAny(e, local, keyHashes))
-        }
-      } else {
-        val lo = keyRows.map(r =>
-          new java.math.BigDecimal(r.get(0).toString)).min
-        val hi = keyRows.map(r =>
-          new java.math.BigDecimal(r.get(0).toString)).max
-        live.filter { e =>
-          GraftLog.decStat(e,
-              GraftLog.fileLocalName(schema, e, keyCol)) match {
-            case Some((mn, mx)) =>
-              mx.compareTo(lo) >= 0 && mn.compareTo(hi) <= 0
-            case None => true
-          }
-        }
-      }
+    // One aggregate job answers every batch probe: its key groups are
+    // the targeting key set, a group of more than one row is a
+    // duplicate key, the NULL group holds the NULL-keyed rows, and no
+    // group at all is an empty batch. The key set is driver-side, so
+    // the collect is capped: over MaxMergeProbeKeys keys the targeting
+    // falls back to a coarser bound, and the duplicate and NULL checks
+    // run as jobs of their own.
+    val groups = up.groupBy(col(keyCol)).count()
+      .limit(MaxMergeProbeKeys + 2).collect()
+    if (groups.isEmpty) {
+      // an empty batch is a no-op that still records the txn marker
+      // (the consumer's applied-through watermark must advance past
+      // empty spans)
+      txn.foreach { case (a, tv) => commitTxn(dir, a, tv) }
+      return (0, live.size)
     }
+    val (nullGroup, keyGroups) = groups.partition(_.isNullAt(0))
+    val capped = keyGroups.length > MaxMergeProbeKeys
     // A NULL-keyed update row never matches (SQL equality) and inserts
     // as-is — legal only when the stored key column admits NULLs;
     // against a non-nullable key it would write a row that violates
     // the table's own schema, so it rejects (the NOT NULL contract).
-    if (!schema.fields.find(_.name == keyCol).exists(_.nullable))
-      require(up.filter(col(keyCol).isNull).limit(1).collect().isEmpty,
+    if (!schema(keyCol).nullable)
+      require(nullGroup.isEmpty && (!capped ||
+          up.filter(col(keyCol).isNull).limit(1).collect().isEmpty),
         s"merge batch carries a NULL key but table column $keyCol is " +
           "non-nullable")
     // A key matched by MORE than one update row would silently
-    // duplicate the table row through the join — reject loudly, the
-    // Delta MERGE multiple-source-rows-matched contract. (NULL-keyed
-    // update rows are exempt: equality never matches them, so each is
-    // an independent insert.)
-    val dup = up.filter(col(keyCol).isNotNull)
-      .groupBy(col(keyCol)).count()
-      .filter(col("count") > 1).limit(1).collect()
+    // duplicate the table row — reject loudly, the Delta MERGE
+    // multiple-source-rows-matched contract. (NULL-keyed update rows
+    // are exempt: equality never matches them, so each is an
+    // independent insert.)
+    val dup = keyGroups.find(_.getLong(1) > 1L).orElse(
+      if (!capped) None
+      else up.filter(col(keyCol).isNotNull).groupBy(col(keyCol)).count()
+        .filter(col("count") > 1).limit(1).collect().headOption)
     require(dup.isEmpty,
-      s"merge batch has duplicate key ${if (dup.isEmpty) "" else dup.head.get(0)}: " +
+      s"merge batch has duplicate key ${dup.map(_.get(0)).getOrElse("")}: " +
         "each key may match at most one update row")
-    val cur = spark.read.format("graft.sources.GraftLogSource")
-      .option("path", dir)
-      .option("pickFiles", affected.map(_.file).mkString(","))
-      .load()
-    // The side marker (not the key) discriminates update rows: a
-    // NULL-keyed update row never joins, and keying the when() on
-    // u.key would turn it into an all-NULL row and drop its payload.
-    val u = up.select(cols.map(col): _*)
-      .withColumn("__graft_u", lit(true))
-    val merged = cur.alias("t")
-      .join(u.alias("u"), col(s"t.$keyCol") === col(s"u.$keyCol"),
-        "full_outer")
-      .select(cols.map(f => when(col("__graft_u").isNotNull,
-        col(s"u.$f")).otherwise(col(s"t.$f")).as(f)): _*)
-    // Typed CDC (table opt-in): matched keys emit pre/post images,
-    // unmatched update rows (incl. the never-matching NULL-keyed
-    // ones) emit inserts. `cur` covers every possibly-matching file
-    // by the stats admission above, so the classification is exact.
+    val keys = keyGroups.map(_.get(0))
+    val keyDt = schema(keyCol).dataType
+    // Stats overlap is conservative: a stat-less entry might hold any
+    // key, so it is scanned. A file whose range or bloom provably lacks
+    // EVERY batch key cannot hold a matched row and is never touched
+    // (bloomless entries — legacy, or post-compaction — are scanned).
+    val affected =
+      if (keys.isEmpty) Seq.empty // only NULL keys: they match nothing
+      else if (capped) keyDt match {
+        // over the cap, string keys scan every file (such a batch
+        // admits most files through the blooms anyway) and numeric
+        // keys every file overlapping the batch's global [min, max]
+        case LongType | IntegerType | DoubleType =>
+          val b = up.agg(fmin(col(keyCol)), fmax(col(keyCol))).head()
+          val lo = new java.math.BigDecimal(b.get(0).toString)
+          val hi = new java.math.BigDecimal(b.get(1).toString)
+          live.filter { e =>
+            GraftLog.decStat(e,
+                GraftLog.fileLocalName(schema, e, keyCol)) match {
+              case Some((mn, mx)) =>
+                mx.compareTo(lo) >= 0 && mn.compareTo(hi) <= 0
+              case None => true
+            }
+          }
+        case _ => live
+      } else keyDt match {
+        // Per-KEY file targeting, not per-batch-range: a CDC batch
+        // typically mixes a narrow update window with above-max
+        // inserts, and its GLOBAL [min, max] then spans half the table
+        // even though the actual keys touch one file.
+        case LongType | IntegerType | DoubleType =>
+          val sorted: Array[AnyRef] = keys.map(k =>
+            new java.math.BigDecimal(k.toString): AnyRef)
+          java.util.Arrays.sort(sorted)
+          // Bloom probes hash the TABLE's canonical cell text — the
+          // integral `Long.toString` the writer stored. The keys come
+          // from the LOSSLESSLY-coerced batch, so for an integral key
+          // column each is already the exact boxed Long/Integer whose
+          // toString IS that canonical text. Double key columns carry
+          // no blooms (writer policy), so the conjunct is skipped
+          // outright. Hashed once here; each file deserializes its
+          // bloom once.
+          val integral = keyDt == LongType || keyDt == IntegerType
+          val keyHashes: Array[Long] =
+            if (!integral) Array.empty
+            else keys.map(k => GraftLogBloom.packedHash(k.toString))
+          live.filter { e =>
+            val local = GraftLog.fileLocalName(schema, e, keyCol)
+            val inRange = GraftLog.decStat(e, local) match {
+              case Some((lo, hi)) =>
+                // any key in [lo, hi]? first key >= lo decides
+                val i = {
+                  val p = java.util.Arrays.binarySearch(sorted, lo)
+                  if (p >= 0) p else -(p + 1)
+                }
+                i < sorted.length &&
+                  sorted(i).asInstanceOf[java.math.BigDecimal]
+                    .compareTo(hi) <= 0
+              case None => true
+            }
+            inRange && (!integral ||
+              GraftLogBloom.mayContainAny(e, local, keyHashes))
+          }
+        case _ =>
+          // hash once per key, deserialize once per file (not k × n)
+          val keyHashes = keys.map(k => GraftLogBloom.packedHash(k.toString))
+          live.filter(e => GraftLogBloom.mayContainAny(e,
+            GraftLog.fileLocalName(schema, e, keyCol), keyHashes))
+      }
+    // The matched table rows are those whose key is among the batch's
+    // non-NULL keys: a left-semi join with the batch, written as the
+    // probe's key set IN-list (pushed into the scan, which skips blocks
+    // by it) or, over the cap, as a join.
+    val (hit, keep) =
+      if (!capped) {
+        val in = coalesce(col(keyCol).isin(keys.toIndexedSeq: _*), lit(false))
+        ((s: DataFrame) => s.filter(in), (s: DataFrame) => s.filter(!in))
+      } else {
+        val bk = up.select(col(keyCol).as("__graft_k"))
+          .filter(col("__graft_k").isNotNull)
+        val on = col(keyCol) === col("__graft_k")
+        ((s: DataFrame) => s.join(bk, on, "left_semi"),
+          (s: DataFrame) => s.join(bk, on, "left_anti"))
+      }
+    // Typed CDC (table opt-in), from one join of the batch against the
+    // matched table rows: a matched update row emits the hidden row's
+    // pre-image and its own post-image, an unmatched one (NULL keys
+    // included) an insert. The scan covers every file holding a
+    // matched row, so the classification is exact.
     val cdc =
       if (!cdfEnabled(dir)) None
-      else {
-        val matched = cur.alias("t").join(u.alias("u"),
-          col(s"t.$keyCol") === col(s"u.$keyCol"), "inner")
-        val pre = matched.select(cols.map(f =>
-          col(s"t.$f").as(f)): _*)
-          .withColumn(ChangeTypeCol, lit("update_preimage"))
-        val post = matched.select(cols.map(f =>
-          col(s"u.$f").as(f)): _*)
-          .withColumn(ChangeTypeCol, lit("update_postimage"))
-        val ins = u.alias("u").join(
-            cur.select(col(keyCol)).alias("t"),
-            col(s"u.$keyCol") === col(s"t.$keyCol"), "left_anti")
-          .select(cols.map(col): _*)
-          .withColumn(ChangeTypeCol, lit("insert"))
-        Some(pre.unionByName(post).unionByName(ins))
+      else Some { (s: DataFrame) =>
+        val t = hit(s).select(col(keyCol).as("__graft_k"),
+          struct(cols.map(col): _*).as("__graft_t"))
+        def image(row: String => org.apache.spark.sql.Column,
+            kind: String) =
+          struct(cols.map(f => row(f).as(f)) :+
+            lit(kind).as(ChangeTypeCol): _*)
+        up.join(t, col(keyCol) === col("__graft_k"), "left_outer")
+          .select(explode(
+            when(col("__graft_t").isNull, array(image(col, "insert")))
+              .otherwise(array(
+                image(f => col("__graft_t").getField(f),
+                  "update_preimage"),
+                image(col, "update_postimage")))).as("__graft_c"))
+          .select(col("__graft_c.*"))
       }
-    rewriteFiles(dir, affected, merged, schema, txn = txn,
-      cdcChanges = cdc, baseVersion = rewriteBase)
-    (affected.size, live.size)
+    val (touched, _) = hideAndAppend(spark, dir, schema, mergeBase,
+      affected, hit, keep, Some(up), cdc, txn, maxPositions, "MERGE")
+    (touched, live.size)
   }
 
   /** Copy-on-write DELETE of the key range [lo, hi): rewrites only the
     * part files whose stats overlap the range, dropping the in-range
     * rows; out-of-range files survive untouched (zero write
-    * amplification outside the predicate's reach). Same commit shape
-    * as [[mergeUpsert]]. Returns (filesRewritten, filesTotal). */
+    * amplification outside the predicate's reach). Publishes
+    * remove(affected) + add(rewritten) as one version through
+    * [[rewriteFiles]]. Returns (filesRewritten, filesTotal). */
   def deleteRange(spark: org.apache.spark.sql.SparkSession, dir: String,
       keyCol: String, lo: Long, hi: Long): (Int, Int) = {
     requireNoWap("DELETE"); requireNoBranch("DELETE")
@@ -2174,8 +2183,9 @@ object GraftLog {
     * exactly, MIN/MAX pushdown disables itself on DV'd files (stats
     * may be stale), and compaction materializes the deletes and drops
     * the DVs. Positions are collected on the driver and capped at
-    * [[MaxDvPositions]] — a larger delete falls back to the
-    * copy-on-write rewrite (returned flag says which path ran).
+    * `maxPositions` — a larger delete falls back to the copy-on-write
+    * rewrite (returned flag says which path ran). Same commit as a
+    * merge-on-read [[mergeUpsert]] ([[hideAndAppend]]), with no batch.
     * A repeated delete is a cheap no-op: already-deleted rows are
     * invisible to the position scan. Returns
     * (filesTouched, filesTotal, usedDv). */
@@ -2193,67 +2203,103 @@ object GraftLog {
     val live = entriesAsOf(dir, Long.MaxValue)
     val affected = live.filter(e =>
       filters.forall(f => GraftLogScan.mayMatch(schema, e, f)))
-    if (affected.isEmpty) return (0, live.size, true)
-    val cond = filters.map(filterToColumn).reduce(_ && _)
-    // position scan: the `_pos` metadata column is the row's physical
-    // ordinal within its part file (stable across DV state — already
-    // deleted ordinals are skipped by the reader, so re-deletes are
-    // no-ops and unions with the existing DV are disjoint-safe)
-    val hits = spark.read.format("graft.sources.GraftLogSource")
-      .option("path", dir)
-      .option("pickFiles", affected.map(_.file).mkString(","))
-      .load()
-      .filter(coalesce(cond, lit(false)))
-      .select(org.apache.spark.sql.functions.col("_file"),
-        org.apache.spark.sql.functions.col("_pos"))
-      .limit(maxPositions + 1)
-      .collect()
+    val cond = coalesce(filters.map(filterToColumn).reduce(_ && _),
+      lit(false))
+    // typed CDC rides the DV commit too: the deleted rows are exactly
+    // the predicate's matches in the touched files (re-deletes never
+    // reach it — already-DV'd ordinals are invisible to the scan, so
+    // the feed never double-reports)
+    val cdc =
+      if (!cdfEnabled(dir)) None
+      else Some((s: org.apache.spark.sql.DataFrame) =>
+        s.filter(cond).withColumn(ChangeTypeCol, lit("delete")))
+    val (touched, usedDv) = hideAndAppend(spark, dir, schema, morBase,
+      affected, _.filter(cond), _.filter(!cond), batch = None, cdc,
+      txn = None, maxPositions, "merge-on-read DELETE")
+    (touched, live.size, usedDv)
+  }
+
+  /** The one merge-on-read commit of MoR DELETE and MERGE. A position
+    * scan of `affected` collects the `_file` and `_pos` of the rows
+    * `hit` selects. `_pos` is a row's physical ordinal in its part
+    * file, stable across DV state: the reader skips ordinals a DV
+    * already hides, so a repeated op matches nothing new and the union
+    * with a file's existing DV is disjoint-safe. Each touched file gets
+    * one DV (its existing one plus the new positions), and ONE version
+    * publishes the DVs, the `batch` rows as new part files (laid out
+    * like the table's own writes), the typed CDC sidecars (`cdc` of a
+    * scan of the touched files) and the txn marker. Over
+    * `maxPositions` matched rows the driver-held DV would outgrow its
+    * purpose, so the affected files are rewritten copy-on-write
+    * instead: their `keep` rows plus the batch, in one [[rewriteFiles]]
+    * commit. Returns (filesTouched, usedDv). */
+  private def hideAndAppend(spark: org.apache.spark.sql.SparkSession,
+      dir: String, schema: StructType, base: Long,
+      affected: Seq[LogEntry],
+      hit: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      keep: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+      batch: Option[org.apache.spark.sql.DataFrame],
+      cdc: Option[org.apache.spark.sql.DataFrame =>
+        org.apache.spark.sql.DataFrame],
+      txn: Option[(String, Long)], maxPositions: Int,
+      op: String): (Int, Boolean) = {
+    import org.apache.spark.sql.functions.col
+    def scan(es: Seq[LogEntry]) =
+      spark.read.format("graft.sources.GraftLogSource")
+        .option("path", dir)
+        .option("pickFiles", es.map(_.file).mkString(","))
+        .load()
+    val hits =
+      if (affected.isEmpty) Array.empty[org.apache.spark.sql.Row]
+      else hit(scan(affected).select(col("*"), col("_file"), col("_pos")))
+        .select(col("_file"), col("_pos"))
+        .limit(maxPositions + 1)
+        .collect()
     if (hits.length > maxPositions) {
-      // too many positions for a healthy DV — the COW rewrite IS the
-      // bounded path here
-      val (r, t) = deleteWhere(spark, dir, filters)
-      return (r, t, false)
+      // too many positions for a healthy DV — the copy-on-write
+      // rewrite IS the bounded path here
+      val s = scan(affected)
+      val kept = keep(s)
+      rewriteFiles(dir, affected, batch.fold(kept)(kept.unionByName(_)),
+        schema, txn = txn, cdcChanges = cdc.map(_(s)), baseVersion = base)
+      return (affected.size, false)
     }
-    if (hits.isEmpty) return (0, live.size, true)
     val byFile = hits.groupBy(_.getString(0))
       .map { case (f, rs) => f -> rs.map(_.getLong(1)) }
     val touched = affected.filter(e => byFile.contains(e.file))
-    // typed CDC rides the DV commit too: the deleted rows are exactly
-    // the predicate's matches in the touched files (re-deletes never
-    // reach here — already-DV'd ordinals are invisible to the
-    // position scan above, so the feed never double-reports)
+    if (touched.isEmpty && batch.isEmpty && txn.isEmpty) return (0, true)
+    val fresh = batch.map(writeParts(dir, _)).getOrElse(Seq.empty)
+    // uncommitted batch parts and staged CDC sidecars are invisible
+    // orphans when the commit fails — reclaim them now rather than
+    // leaving them for vacuum's retention horizon
+    def reclaim(es: Seq[LogEntry]): Unit =
+      es.foreach(f => new File(dir, f.file).delete())
     val cdcEntries =
-      if (!cdfEnabled(dir)) Seq.empty
-      else stageCdc(dir,
-        spark.read.format("graft.sources.GraftLogSource")
-          .option("path", dir)
-          .option("pickFiles", touched.map(_.file).mkString(","))
-          .load()
-          .filter(coalesce(cond, lit(false)))
-          .withColumn(ChangeTypeCol, lit("delete")))
+      try cdc.map(f => stageCdc(dir, f(scan(touched)))).getOrElse(Seq.empty)
+      catch { case e: Throwable => reclaim(fresh); throw e }
     try commitNew(dir, schema) { v =>
       // cross-process race: another rewrite retiring a touched file
       // between the position scan and this commit would make the DV
-      // annotate a dead add (silently lost delete) — abort retryably.
+      // annotate a dead add (silently lost rows) — abort retryably.
       // An orphaned dv-* file from the abort is unreferenced and aged
       // out by vacuum.
-      requireNoFileConflicts(dir, morBase, v,
-        touched.map(_.file).toSet, "merge-on-read DELETE")
+      requireNoFileConflicts(dir, base, v, touched.map(_.file).toSet, op)
       touched.map { e =>
         val merged = (dvOf(e).map { case (f, _) =>
           GraftLogDv.read(dir, f) }.getOrElse(Array.empty[Long]) ++
           byFile(e.file)).distinct.sorted
         LogEntry.dv(v, e.file,
           Some((GraftLogDv.write(dir, merged), merged.length.toLong)))
-      } ++ cdcEntries.map(_.copy(version = v))
+      } ++
+        fresh.map(e => LogEntry.add(v, e.file, e.rows, e.stats,
+          cols = e.cols)) ++
+        cdcEntries.map(_.copy(version = v)) ++
+        txn.map { case (a, tv) => LogEntry.txn(v, a, tv) }.toSeq
     } catch {
       case e: GraftConcurrentModificationException =>
-        // reclaim the staged CDC sidecars promptly (same as the
-        // rewrite path) instead of leaving them to vacuum's horizon
-        cdcEntries.foreach(c => new File(dir, c.file).delete())
-        throw e
+        reclaim(fresh ++ cdcEntries); throw e
     }
-    (touched.size, live.size, true)
+    (touched.size, true)
   }
 
   /** The predicate subset [[deleteWhere]] can replay as a Column —
@@ -2487,19 +2533,7 @@ object GraftLog {
     // re-open the scratch-write window a pre-planned caller closed).
     val base =
       if (baseVersion != UnsetBase) baseVersion else currentVersion(dir)
-    // The scratch table inherits the table's layout policy. Its
-    // partition declaration (or the partition-evolution override)
-    // keeps a rewrite routing rows per value, so rewritten files keep
-    // their partition record and SPJ grouping survives merge/delete —
-    // compaction on a partitioned table yields one file per VALUE.
-    // Its roll target keeps rewritten files at the table's size.
-    val fresh = writeScratch(dir, RewriteScratchPrefix, replacement,
-      setup = scratch => {
-        partitionOverride.orElse(partitionColOf(dir))
-          .foreach(setPartitionCol(scratch, _))
-        propertiesOf(dir).get(TargetBytesProp).foreach(t =>
-          writeProperties(scratch, Map(TargetBytesProp -> t)))
-      })(identity)
+    val fresh = writeParts(dir, replacement, partitionOverride)
     // the uncommitted replacement files and staged CDC sidecars are
     // invisible orphans when the rewrite fails before its link —
     // reclaim them now rather than leaving them for vacuum's retention
@@ -2832,7 +2866,7 @@ class GraftLogTable(dir: String, writeSchema: StructType,
     val lo = Option(options.get("changesFromVersion")).map(_.toLong)
       .getOrElse(-1L)
     // maintenance-internal: restrict the scan to named manifest files
-    // (copy-on-write MERGE/DELETE read exactly the files they rewrite)
+    // (row-level MERGE/DELETE scan exactly the files they target)
     val pick = Option(options.get("pickFiles"))
       .map(_.split(",").filter(_.nonEmpty).toSet)
     // streaming admission control: at most this many versions per

@@ -44,7 +44,8 @@ object MaterializedAgg {
   /** What a refresh did: `mode` ∈ bootstrap | incremental | noop;
     * `deltaFiles` = source part files scanned; `srcFilesTotal` = live
     * source files at the head (the bound a full recompute would pay);
-    * `rewrittenMvFiles` = the merge's write amplification;
+    * `rewrittenMvFiles` = the view files the merge touched (a DV
+    * each, or a rewrite over the DV position cap);
     * `mvFilesTotal` = the MV's live file count AFTER the refresh —
     * the same point in time in every mode (bootstrap counts the files
     * the overwrite wrote, noop the current snapshot, incremental the
@@ -156,7 +157,7 @@ object MaterializedAgg {
       // groups: an IN-list of the delta's keys (driver-capped like the
       // merge's probe set) pushes into the view scan, where file
       // stats/blooms skip untouched files — the read-side twin of the
-      // merge's bounded rewrite. Over the cap, the join itself still
+      // merge's bounded file targeting. Over the cap, the join itself still
       // bounds the OUTPUT; only the view scan widens.
       val deltaKeys = delta.select(col(keyCol)).distinct()
         .limit(GraftLog.MaxMergeProbeKeys + 1).collect().map(_.get(0))

@@ -30,7 +30,7 @@ class CdfTypedSpec extends SparkSpec {
       "CASE WHEN id < 3 THEN id ELSE id + 1000 END AS id",
       "id * 100 AS v")
     GraftLog.mergeUpsert(spark, dir, updates, "id")
-    val changes = feed(dir, from = 0L)
+    def changes(d: String) = feed(d, from = 0L)
       .select(col("_change_type"), col("id"), col("v"))
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
       .toSet
@@ -38,12 +38,20 @@ class CdfTypedSpec extends SparkSpec {
       (0L until 3L).map(k => ("update_preimage", k, k * 10)).toSet ++
         (0L until 3L).map(k => ("update_postimage", k, k * 100)) ++
         Seq(("insert", 1003L, 300L), ("insert", 1004L, 400L))
-    assert(changes == expected,
+    assert(changes(dir) == expected,
       "the typed feed must be exactly preimages + postimages + " +
-        s"inserts — got $changes")
+        s"inserts — got ${changes(dir)}")
     // the v0 append still reads as pure inserts
     val v0 = feed(dir).filter(col("_change_type") === "insert").count()
     assert(v0 == 100 + 2, "append rows insert; carried rows invisible")
+    // the merge hid its matched rows with a DV; the copy-on-write
+    // fallback over the position cap publishes the same typed rows
+    assert(GraftLog.entries(dir).exists(_.action == "dv"))
+    val cow = tmp(); mkTable(cow)
+    GraftLog.mergeUpsert(spark, cow, updates, "id", maxPositions = 1)
+    assert(GraftLog.entries(cow).exists(_.action == "remove"))
+    assert(changes(cow) == expected,
+      s"the rewrite fallback's typed feed differs: ${changes(cow)}")
   }
 
   test("copy-on-write and merge-on-read DELETE both emit typed " +
@@ -107,10 +115,11 @@ class CdfTypedSpec extends SparkSpec {
     assert(!new java.io.File(dir).listFiles()
       .exists(_.getName.startsWith(GraftLog.CdcPrefix)),
       "CDC is strictly opt-in")
-    // merge rewrite re-delivers carried rows as inserts — the
-    // documented append-only limit, unchanged for opted-out tables
+    // without sidecars a merge version reads as its added rows: the
+    // batch's 2 update rows as inserts (the append-only limit; the
+    // rows its deletion vector hides do not show)
     assert(feed(dir, from = 0L)
-      .filter(col("_change_type") === "insert").count() == 50L)
+      .filter(col("_change_type") === "insert").count() == 2L)
   }
 
   test("replication: the mirror follows updates AND deletes at delta " +

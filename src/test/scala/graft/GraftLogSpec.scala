@@ -723,7 +723,7 @@ class GraftLogSpec extends SparkSpec {
       .agg(count(lit(1))).head.getLong(0) > 0L)
   }
 
-  test("copy-on-write merge rewrites only stats-affected files; " +
+  test("merge-on-read merge touches only stats-affected files; " +
       "upserts and inserts land, history survives") {
     val dir = tmp()
     spark.range(0, 4000).selectExpr("id", "id AS v")
@@ -752,6 +752,213 @@ class GraftLogSpec extends SparkSpec {
       spark.range(5000, 5100).selectExpr("id", "-id AS v"), "id")
     assert(r2 == 0, s"pure out-of-range insert must rewrite 0 files, got $r2")
     assert(readBack(dir).count() == 4200)
+  }
+
+  test("a DV merge rewrites no part file and leaves the pre-merge " +
+      "version time-travelable") {
+    import graft.sources.GraftLog
+    val dir = tmp()
+    spark.range(0, 4000).selectExpr("id", "id AS v")
+      .repartitionByRange(4, col("id"))
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    val before = GraftLog.entriesAsOf(dir, Long.MaxValue).map(_.file).toSet
+    val v0 = GraftLog.currentVersion(dir)
+    val (touched, total) = GraftLog.mergeUpsert(spark, dir,
+      spark.range(1000, 1100).selectExpr("id", "-id AS v")
+        .unionAll(spark.range(4000, 4010).selectExpr("id", "-id AS v")),
+      "id")
+    assert(touched == 1 && total == 4, s"got $touched/$total")
+    val v1 = GraftLog.currentVersion(dir)
+    assert(v1 == v0 + 1, "a merge is one commit")
+    val commit = GraftLog.entries(dir).filter(_.version == v1)
+    assert(!commit.exists(_.action == "remove"),
+      "a DV merge retires no part file")
+    assert(commit.count(_.action == "dv") == 1)
+    val after = GraftLog.entriesAsOf(dir, Long.MaxValue)
+    assert(before.subsetOf(after.map(_.file).toSet))
+    assert(after.filterNot(e => before(e.file)).map(_.rows).sum == 110L,
+      "the batch is written once, as new part files")
+    assert(after.flatMap(GraftLog.dvOf).map(_._2) == Seq(100L),
+      "the touched file hides exactly the 100 matched rows")
+    val back = readBack(dir)
+    assert(back.count() == 4010)
+    assert(back.agg(sum(col("v"))).head.getLong(0) ==
+      (0L until 1000L).sum - (1000L until 1100L).sum +
+        (1100L until 4000L).sum - (4000L until 4010L).sum)
+    val old = spark.read.format(Fmt).option("path", dir)
+      .option("asOfVersion", v0.toString).load()
+    assert(old.count() == 4000 && old.filter(col("v") < 0).count() == 0,
+      "the pre-merge version reads every original row")
+  }
+
+  test("a key updated by two successive merges ends up DV'd inside " +
+      "the first merge's batch file") {
+    import graft.sources.GraftLog
+    val dir = tmp()
+    spark.range(0, 1000).selectExpr("id", "id AS v").coalesce(1)
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    val original = GraftLog.entriesAsOf(dir, Long.MaxValue).head.file
+    GraftLog.mergeUpsert(spark, dir,
+      spark.range(10, 20).selectExpr("id", "-id AS v").coalesce(1), "id")
+    val batch1 = GraftLog.entriesAsOf(dir, Long.MaxValue)
+      .filter(_.file != original)
+    assert(batch1.size == 1 && batch1.head.rows == 10L)
+    val (touched, _) = GraftLog.mergeUpsert(spark, dir,
+      spark.range(15, 16).selectExpr("id", "id * 1000 AS v"), "id")
+    assert(touched == 1, "only the first batch file holds key 15")
+    val live = GraftLog.entriesAsOf(dir, Long.MaxValue)
+      .map(e => e.file -> GraftLog.dvOf(e).map(_._2)).toMap
+    assert(live(batch1.head.file) == Some(1L),
+      "key 15 is hidden inside the first merge's batch file")
+    assert(live(original) == Some(10L), "the original DV is unchanged")
+    val back = readBack(dir)
+    assert(back.count() == 1000)
+    assert(back.filter(col("id") === 15).head.getLong(1) == 15000L)
+    assert(back.filter(col("id") >= 10 && col("id") < 20 &&
+      col("id") =!= 15 && col("v") =!= -col("id")).count() == 0)
+  }
+
+  test("a merge after a MoR DELETE on the same file unions both DVs") {
+    import graft.sources.GraftLog
+    import org.apache.spark.sql.sources.LessThan
+    val dir = tmp()
+    spark.range(0, 1000).selectExpr("id", "id AS v").coalesce(1)
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    val file = GraftLog.entriesAsOf(dir, Long.MaxValue).head.file
+    GraftLog.deleteWhereMoR(spark, dir, Array(LessThan("id", 10L)))
+    GraftLog.mergeUpsert(spark, dir,
+      spark.range(20, 30).selectExpr("id", "-id AS v"), "id")
+    val e = GraftLog.entriesAsOf(dir, Long.MaxValue)
+      .find(_.file == file).get
+    val (dvFile, n) = GraftLog.dvOf(e).get
+    assert(n == 20L)
+    assert(graft.sources.GraftLogDv.read(dir, dvFile).toSeq ==
+      ((0L until 10L) ++ (20L until 30L)),
+      "the merge's DV holds the delete's positions and its own")
+    val back = readBack(dir)
+    assert(back.count() == 990)
+    assert(back.filter(col("id") < 10).count() == 0)
+    assert(back.filter(col("id") >= 20 && col("id") < 30 &&
+      col("v") =!= -col("id")).count() == 0)
+    // a deleted key merged back is invisible to the position scan, so
+    // it inserts
+    val (touched, _) = GraftLog.mergeUpsert(spark, dir,
+      spark.range(5, 6).selectExpr("id", "-id AS v"), "id")
+    assert(touched == 0)
+    assert(readBack(dir).filter(col("id") === 5).count() == 1)
+  }
+
+  test("NULL-keyed batch rows insert beside a DV merge and match no " +
+      "NULL-keyed table row") {
+    import graft.sources.GraftLog
+    val dir = tmp()
+    spark.range(0, 100).selectExpr(
+        "CASE WHEN id = 0 THEN NULL ELSE id END AS id", "id AS v")
+      .coalesce(1).write.format(Fmt).option("path", dir)
+      .mode("append").save()
+    val (touched, _) = GraftLog.mergeUpsert(spark, dir, spark.sql(
+        "SELECT CAST(NULL AS BIGINT) AS id, CAST(-1 AS BIGINT) AS v")
+      .unionAll(spark.range(5, 6).selectExpr("id", "-id AS v")), "id")
+    assert(touched == 1)
+    assert(GraftLog.entriesAsOf(dir, Long.MaxValue)
+      .flatMap(GraftLog.dvOf).map(_._2) == Seq(1L),
+      "only the matched key 5 is hidden")
+    val back = readBack(dir)
+    assert(back.count() == 101)
+    assert(back.filter(col("id").isNull).select(col("v")).collect()
+      .map(_.getLong(0)).sorted.toSeq == Seq(-1L, 0L))
+    assert(back.filter(col("id") === 5).head.getLong(1) == -5L)
+  }
+
+  test("a merge over the maxPositions cap rewrites the touched files " +
+      "copy-on-write in one commit") {
+    import graft.sources.GraftLog
+    val dir = tmp()
+    spark.range(0, 4000).selectExpr("id", "id AS v")
+      .repartitionByRange(4, col("id"))
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    val v0 = GraftLog.currentVersion(dir)
+    val (touched, total) = GraftLog.mergeUpsert(spark, dir,
+      spark.range(0, 300).selectExpr("id", "-id - 1 AS v")
+        .unionAll(spark.range(5000, 5005).selectExpr("id", "-id AS v")),
+      "id", maxPositions = 100)
+    assert(touched == 1 && total == 4, s"got $touched/$total")
+    assert(GraftLog.currentVersion(dir) == v0 + 1)
+    val commit = GraftLog.entries(dir).filter(_.version == v0 + 1)
+    assert(commit.count(_.action == "remove") == 1)
+    assert(!commit.exists(_.action == "dv"))
+    assert(GraftLog.entriesAsOf(dir, Long.MaxValue)
+      .forall(e => GraftLog.dvOf(e).isEmpty))
+    val back = readBack(dir)
+    assert(back.count() == 4005)
+    assert(back.filter(col("v") < 0).count() == 305)
+    assert(back.filter(col("id") >= 300 && col("id") < 4000 &&
+      col("v") =!= col("id")).count() == 0)
+  }
+
+  test("a merge batch over the probe-key cap still reaches every file " +
+      "holding one of its keys") {
+    import graft.sources.GraftLog
+    val dir = tmp()
+    spark.range(0, 30000).selectExpr("id", "id AS v")
+      .repartitionByRange(3, col("id"))
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    // 12000 distinct keys at both ends of the key range: over the
+    // driver-side cap, so targeting falls back to the batch's global
+    // [min, max], which must span both ends
+    val batch = spark.range(0, 6000).selectExpr("id", "-id - 1 AS v")
+      .unionAll(spark.range(24000, 30000).selectExpr("id", "-id AS v"))
+    assert(12000 > GraftLog.MaxMergeProbeKeys)
+    GraftLog.setProperties(dir, Map("graft.cdf.enabled" -> "true"))
+    val v0 = GraftLog.currentVersion(dir)
+    GraftLog.mergeUpsert(spark, dir, batch, "id")
+    val back = readBack(dir)
+    assert(back.count() == 30000)
+    assert(back.select(col("id")).distinct().count() == 30000)
+    assert(back.filter(col("v") < 0).count() == 12000)
+    // the typed feed classifies through the same semi-join
+    val kinds = GraftLog.typedChanges(spark, dir, v0)
+      .groupBy(col("_change_type")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(kinds == Map("update_preimage" -> 12000L,
+      "update_postimage" -> 12000L), s"typed feed: $kinds")
+    // the duplicate-key check still runs over the cap
+    val dup = spark.range(0, 12000).selectExpr("id", "id AS v")
+      .unionAll(spark.range(7, 8).selectExpr("id", "id AS v"))
+    val e = intercept[IllegalArgumentException](
+      GraftLog.mergeUpsert(spark, dir, dup, "id"))
+    assert(e.getMessage.contains("duplicate"))
+  }
+
+  test("a graft-log stream across a DV-merge span fails loudly") {
+    import graft.sources.GraftLog
+    val src = tmp(); val sink = tmp(); val ckpt = tmp()
+    spark.range(0, 100).selectExpr("id", "id AS v").coalesce(1)
+      .write.format(Fmt).option("path", src).mode("append").save()
+    def drain(): Unit = {
+      val q = spark.readStream.format(Fmt).option("path", src).load()
+        .writeStream.format(Fmt).option("path", sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start()
+      try q.awaitTermination() finally q.stop()
+    }
+    drain() // offset committed at version 0
+    GraftLog.mergeUpsert(spark, src,
+      spark.range(0, 5).selectExpr("id", "-id AS v"), "id") // v1
+    assert(GraftLog.entries(src).exists(e =>
+      e.version == 1L && e.action == "dv"))
+    spark.range(100, 150).selectExpr("id", "id AS v").coalesce(1)
+      .write.format(Fmt).option("path", src).mode("append").save()
+    val err = intercept[
+        org.apache.spark.sql.streaming.StreamingQueryException](drain())
+    def chain(t: Throwable): Seq[String] =
+      if (t == null) Nil else t.getMessage +: chain(t.getCause)
+    assert(chain(err).exists(m =>
+      m != null && m.contains("cannot replay version 1")),
+      s"the stream must refuse the DV merge: ${chain(err)}")
+    assert(readBack(sink).count() == 100,
+      "nothing past the DV merge reached the sink")
   }
 
   test("a single-column EMPTY-STRING cell is a row on every path, " +
@@ -1008,6 +1215,9 @@ class GraftLogSpec extends SparkSpec {
       .mergeUpsert(spark, dir, upd, "k")
     assert(total == 2 && rewritten == 1,
       s"blooms must refute the untouched file: rewrote $rewritten/$total")
+    assert(graft.sources.GraftLog.entriesAsOf(dir, Long.MaxValue)
+      .flatMap(graft.sources.GraftLog.dvOf).map(_._2) == Seq(10L),
+      "only the matched rows of the admitted file are hidden")
     val back = readBack(dir)
     assert(back.count() == 101)
     assert(back.filter(col("k") === "knew").count() == 1)
