@@ -1840,6 +1840,24 @@ object GraftLog {
     live.size
   }
 
+  /** Small-file bound of the tables incremental merges maintain (a
+    * materialized view, a replication mirror), which no maintenance
+    * pass of their own compacts. Every merge-on-read merge leaves a
+    * batch file and deletion vectors behind, so their maintainers
+    * compact once more than this many live files sit under half the
+    * roll target (Delta's auto-compaction, file-count trigger). */
+  val AutoCompactSmallFiles = 16
+
+  /** [[compact]] `dir` when it holds more than [[AutoCompactSmallFiles]]
+    * live files under half its roll target. Returns the number of
+    * files compacted away (0 = under the bound). */
+  def compactIfFragmented(dir: String): Int = {
+    val half = targetBytesOf(dir) / 2
+    val small = entriesAsOf(dir, Long.MaxValue).count(e =>
+      e.stats.get(RawBytesKey).forall(_._1.toLong < half))
+    if (small > AutoCompactSmallFiles) compact(dir) else 0
+  }
+
   /** Merge-on-read MERGE (Delta `MERGE INTO` in miniature, in the
     * Delta-DV / Iceberg-v2 upsert shape): upsert a batch of full-schema
     * rows into the table by KEY without rewriting the files that hold
@@ -1853,7 +1871,8 @@ object GraftLog {
     * per-file blooms, so only files that can hold a matched key are
     * scanned. One position scan of those files finds the matched rows;
     * [[hideAndAppend]] hides them with one deletion vector per touched
-    * file and writes the batch once as new part files, and ONE version
+    * file and writes the batch once as new part files (one task when
+    * the batch is under the probe cap), and ONE version
     * publishes the DVs, the batch adds, the typed CDC sidecars and the
     * txn marker. Readers switch snapshots atomically and the pre-merge
     * version stays time-travelable. Write amplification is the batch
@@ -1863,12 +1882,18 @@ object GraftLog {
     * folds accumulated DVs away either way. A DV commit is a non-append
     * version, so the add feed and its stream refuse to replay it; the
     * typed feed carries its exact pre/post images and inserts where
-    * CDC is on. Returns (filesTouched, filesTotal). */
+    * CDC is on. Targeting, the position scan and the DV union all read
+    * one snapshot, `baseVersion` (the head when unset): a commit since
+    * then that hides, moves or retires a row this merge matched touches
+    * a file the merge touches too, so the merge aborts retryably
+    * instead of re-inserting the key beside it. Returns
+    * (filesTouched, filesTotal), both counted in that snapshot. */
   def mergeUpsert(spark: org.apache.spark.sql.SparkSession, dir: String,
       updates: org.apache.spark.sql.DataFrame,
       keyCol: String,
       txn: Option[(String, Long)] = None,
-      maxPositions: Int = MaxDvPositions): (Int, Int) = {
+      maxPositions: Int = MaxDvPositions,
+      baseVersion: Long = UnsetBase): (Int, Int) = {
     requireNoWap("MERGE"); requireNoBranch("MERGE")
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{array, coalesce, col, explode,
@@ -1919,8 +1944,9 @@ object GraftLog {
           "nulled, truncated, or saturated by the coercion"))
     val up = updates.select(schema.fields.toSeq.map(f =>
       col(f.name).cast(f.dataType).as(f.name)): _*)
-    val mergeBase = currentVersion(dir)
-    val live = entriesAsOf(dir, Long.MaxValue)
+    val mergeBase =
+      if (baseVersion != UnsetBase) baseVersion else currentVersion(dir)
+    val live = entriesAsOf(dir, mergeBase)
     // One aggregate job answers every batch probe: its key groups are
     // the targeting key set, a group of more than one row is a
     // duplicate key, the NULL group holds the NULL-keyed rows, and no
@@ -2067,8 +2093,15 @@ object GraftLog {
                 image(col, "update_postimage")))).as("__graft_c"))
           .select(col("__graft_c.*"))
       }
+    // Under the probe cap the batch is small (the probe collected
+    // every group), so it writes as one task: one part file per
+    // partition value, not one per batch partition.
+    val batch =
+      if (!capped && groups.map(_.getLong(1)).sum <= MaxMergeProbeKeys)
+        up.coalesce(1)
+      else up
     val (touched, _) = hideAndAppend(spark, dir, schema, mergeBase,
-      affected, hit, keep, Some(up), cdc, txn, maxPositions, "MERGE")
+      affected, hit, keep, Some(batch), cdc, txn, maxPositions, "MERGE")
     (touched, live.size)
   }
 
@@ -2187,11 +2220,13 @@ object GraftLog {
     * rewrite (returned flag says which path ran). Same commit as a
     * merge-on-read [[mergeUpsert]] ([[hideAndAppend]]), with no batch.
     * A repeated delete is a cheap no-op: already-deleted rows are
-    * invisible to the position scan. Returns
-    * (filesTouched, filesTotal, usedDv). */
+    * invisible to the position scan. Plans against one snapshot,
+    * `baseVersion` (the head when unset), as [[mergeUpsert]] does.
+    * Returns (filesTouched, filesTotal, usedDv). */
   def deleteWhereMoR(spark: org.apache.spark.sql.SparkSession,
       dir: String, filters: Array[Filter],
-      maxPositions: Int = MaxDvPositions): (Int, Int, Boolean) = {
+      maxPositions: Int = MaxDvPositions,
+      baseVersion: Long = UnsetBase): (Int, Int, Boolean) = {
     requireNoWap("DELETE"); requireNoBranch("DELETE")
     import org.apache.spark.sql.functions.{coalesce, lit}
     val schema = storedSchema(dir).getOrElse(
@@ -2199,8 +2234,9 @@ object GraftLog {
         s"graft-log table not found at $dir"))
     require(filters.nonEmpty && filters.forall(convertible),
       s"unsupported MoR DELETE predicate: ${filters.mkString(", ")}")
-    val morBase = currentVersion(dir)
-    val live = entriesAsOf(dir, Long.MaxValue)
+    val morBase =
+      if (baseVersion != UnsetBase) baseVersion else currentVersion(dir)
+    val live = entriesAsOf(dir, morBase)
     val affected = live.filter(e =>
       filters.forall(f => GraftLogScan.mayMatch(schema, e, f)))
     val cond = coalesce(filters.map(filterToColumn).reduce(_ && _),
@@ -2221,10 +2257,14 @@ object GraftLog {
 
   /** The one merge-on-read commit of MoR DELETE and MERGE. A position
     * scan of `affected` collects the `_file` and `_pos` of the rows
-    * `hit` selects. `_pos` is a row's physical ordinal in its part
-    * file, stable across DV state: the reader skips ordinals a DV
-    * already hides, so a repeated op matches nothing new and the union
-    * with a file's existing DV is disjoint-safe. Each touched file gets
+    * `hit` selects. Every scan here reads snapshot `base`, the one the
+    * op planned against, never the head: a row a concurrent commit
+    * hid or moved after `base` is still found in its file, that file
+    * is touched, and the conflict check below aborts the op. `_pos`
+    * is a row's physical ordinal in its part file, stable across DV
+    * state: the reader skips ordinals a DV already hides, so a
+    * repeated op matches nothing new and the union with a file's
+    * existing DV is disjoint-safe. Each touched file gets
     * one DV (its existing one plus the new positions), and ONE version
     * publishes the DVs, the `batch` rows as new part files (laid out
     * like the table's own writes), the typed CDC sidecars (`cdc` of a
@@ -2244,11 +2284,12 @@ object GraftLog {
       txn: Option[(String, Long)], maxPositions: Int,
       op: String): (Int, Boolean) = {
     import org.apache.spark.sql.functions.col
-    def scan(es: Seq[LogEntry]) =
-      spark.read.format("graft.sources.GraftLogSource")
+    def scan(es: Seq[LogEntry]) = {
+      val r = spark.read.format("graft.sources.GraftLogSource")
         .option("path", dir)
         .option("pickFiles", es.map(_.file).mkString(","))
-        .load()
+      (if (base < 0L) r else r.option("asOfVersion", base.toString)).load()
+    }
     val hits =
       if (affected.isEmpty) Array.empty[org.apache.spark.sql.Row]
       else hit(scan(affected).select(col("*"), col("_file"), col("_pos")))
@@ -2278,11 +2319,11 @@ object GraftLog {
       try cdc.map(f => stageCdc(dir, f(scan(touched)))).getOrElse(Seq.empty)
       catch { case e: Throwable => reclaim(fresh); throw e }
     try commitNew(dir, schema) { v =>
-      // cross-process race: another rewrite retiring a touched file
-      // between the position scan and this commit would make the DV
-      // annotate a dead add (silently lost rows) — abort retryably.
-      // An orphaned dv-* file from the abort is unreferenced and aged
-      // out by vacuum.
+      // cross-process race: another commit that retired a touched
+      // file, or hid rows in it, after `base` would make the DV
+      // annotate a dead add or drop the other DV (silently lost or
+      // duplicated rows) — abort retryably. An orphaned dv-* file from
+      // the abort is unreferenced and aged out by vacuum.
       requireNoFileConflicts(dir, base, v, touched.map(_.file).toSet, op)
       touched.map { e =>
         val merged = (dvOf(e).map { case (f, _) =>

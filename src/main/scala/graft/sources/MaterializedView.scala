@@ -32,8 +32,10 @@ import org.apache.spark.sql.functions._
   *    zero scans.
   *
   * At 100 TB the refresh cost is O(append since last refresh) +
-  * O(view files holding touched groups): a derived aggregate
-  * maintained at delta cost. Limits (documented, loud):
+  * O(view files holding touched groups), plus a compaction amortized
+  * over many refreshes once the merges' batch files and deletion
+  * vectors pile up ([[GraftLog.compactIfFragmented]]): a derived
+  * aggregate maintained at delta cost. Limits (documented, loud):
   * NULL group keys are excluded from the view (a NULL key can never
   * merge — SQL equality would re-insert it every refresh), and the
   * source feed must be append-only between refreshes — a source whose
@@ -46,13 +48,13 @@ object MaterializedAgg {
     * source files at the head (the bound a full recompute would pay);
     * `rewrittenMvFiles` = the view files the merge touched (a DV
     * each, or a rewrite over the DV position cap);
-    * `mvFilesTotal` = the MV's live file count AFTER the refresh —
-    * the same point in time in every mode (bootstrap counts the files
-    * the overwrite wrote, noop the current snapshot, incremental the
-    * post-merge total straight from mergeUpsert's commit — no second
-    * manifest parse). Telemetry comparing refresh reports across
-    * versions should treat it as the post-refresh state, never the
-    * pre-merge count. */
+    * `mvFilesTotal` = the MV's live file count: bootstrap counts the
+    * files the overwrite wrote and noop the current snapshot, both
+    * after the refresh; incremental reports mergeUpsert's filesTotal,
+    * the view snapshot the merge planned against, BEFORE its batch
+    * files land (no second manifest parse). That is the base
+    * `rewrittenMvFiles` is bounded against; the post-refresh count is
+    * higher by the merge's batch files. */
   case class Refresh(srcVersion: Long, mode: String, deltaFiles: Int,
       srcFilesTotal: Int, rewrittenMvFiles: Int, mvFilesTotal: Int)
 
@@ -195,12 +197,13 @@ object MaterializedAgg {
                   coalesce(col(s"m.hll_$c"), lit(
                     graft.functions.HllSketchStr.emptyEncoded)))
                 .as(s"hll_$c")))): _*)
-      // merge returns the MV's live file count — no second manifest
-      // parse
+      // merge returns the MV's live file count as it planned — no
+      // second manifest parse
       val (rewritten, total) =
         try GraftLog.mergeUpsert(spark, mvDir, combined,
           keyCol, txn = Some(AppId -> head))
         finally delta.unpersist()
+      GraftLog.compactIfFragmented(mvDir)
       Refresh(head, "incremental", deltaEntries.size, srcTotal,
         rewritten, total)
     }

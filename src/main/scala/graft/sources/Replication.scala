@@ -27,7 +27,10 @@ import org.apache.spark.sql.functions._
   * At 100 TB: per-sync work is O(changed rows since last sync) on the
   * source side and O(touched mirror files) on the destination side
   * (the merge/delete stats+bloom bounding) — the mirror is a replica
-  * maintained at the source's write rate, not its size.
+  * maintained at the source's write rate, not its size. The merges'
+  * batch files and deletion vectors are folded away by a compaction
+  * once they pile up ([[GraftLog.compactIfFragmented]]), amortized
+  * over many syncs.
   *
   * Assumes `keyCol` is unique in the source (the same contract
   * [[GraftLog.mergeUpsert]] enforces on its batches): a source append
@@ -118,6 +121,7 @@ object Replication {
       } finally ch.unpersist()
       }
     }
+    GraftLog.compactIfFragmented(dstDir)
     Sync(head, "incremental", versions.size)
   }
 

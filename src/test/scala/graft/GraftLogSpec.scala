@@ -798,8 +798,10 @@ class GraftLogSpec extends SparkSpec {
     spark.range(0, 1000).selectExpr("id", "id AS v").coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save()
     val original = GraftLog.entriesAsOf(dir, Long.MaxValue).head.file
+    // a small batch writes as one file, however many partitions it has
     GraftLog.mergeUpsert(spark, dir,
-      spark.range(10, 20).selectExpr("id", "-id AS v").coalesce(1), "id")
+      spark.range(10, 20).selectExpr("id", "-id AS v").repartition(4),
+      "id")
     val batch1 = GraftLog.entriesAsOf(dir, Long.MaxValue)
       .filter(_.file != original)
     assert(batch1.size == 1 && batch1.head.rows == 10L)
@@ -816,6 +818,42 @@ class GraftLogSpec extends SparkSpec {
     assert(back.filter(col("id") === 15).head.getLong(1) == 15000L)
     assert(back.filter(col("id") >= 10 && col("id") < 20 &&
       col("id") =!= 15 && col("v") =!= -col("id")).count() == 0)
+  }
+
+  test("tables maintained by incremental merges compact once more " +
+      "than AutoCompactSmallFiles small files pile up") {
+    import graft.sources.{GraftLog, MaterializedAgg}
+    val dir = tmp()
+    def append(n: Int): Unit = (1 to n).foreach { i =>
+      spark.range(i * 10, i * 10 + 10).selectExpr("id", "id AS v")
+        .coalesce(1).write.format(Fmt).option("path", dir)
+        .mode("append").save()
+    }
+    append(GraftLog.AutoCompactSmallFiles)
+    assert(GraftLog.compactIfFragmented(dir) == 0)
+    append(1)
+    assert(GraftLog.compactIfFragmented(dir) ==
+      GraftLog.AutoCompactSmallFiles + 1)
+    assert(GraftLog.entriesAsOf(dir, Long.MaxValue).size == 1)
+    assert(readBack(dir).count() == 10L * (GraftLog.AutoCompactSmallFiles + 1))
+    // a view bootstrapped as more small files than the bound compacts
+    // on its first incremental refresh, rows intact
+    val src = s"${tmp()}/src"; val mv = s"${tmp()}/mv"
+    spark.range(0, 3000).selectExpr("id", "id % 50 AS bucket", "id AS v")
+      .repartition(4).write.format(Fmt).option("path", src)
+      .mode("append").save()
+    MaterializedAgg.refresh(spark, src, mv, "bucket", Seq("v"),
+      mvBuckets = GraftLog.AutoCompactSmallFiles + 4)
+    spark.range(3000, 3500).selectExpr("id", "id % 10 AS bucket", "id AS v")
+      .coalesce(1).write.format(Fmt).option("path", src)
+      .mode("append").save()
+    val r1 = MaterializedAgg.refresh(spark, src, mv, "bucket", Seq("v"),
+      mvBuckets = GraftLog.AutoCompactSmallFiles + 4)
+    assert(r1.mode == "incremental")
+    assert(GraftLog.entriesAsOf(mv, Long.MaxValue).size == 1)
+    val view = readBack(mv).agg(sum(col("n_rows")), sum(col("sum_v")))
+      .head()
+    assert(view.getLong(0) == 3500L && view.getLong(1) == (0L until 3500L).sum)
   }
 
   test("a merge after a MoR DELETE on the same file unions both DVs") {
@@ -846,6 +884,68 @@ class GraftLogSpec extends SparkSpec {
       spark.range(5, 6).selectExpr("id", "-id AS v"), "id")
     assert(touched == 0)
     assert(readBack(dir).filter(col("id") === 5).count() == 1)
+  }
+
+  test("a merge or MoR DELETE planned before a concurrent DV or " +
+      "compaction of its matched file aborts retryably") {
+    import graft.sources.{GraftLog, GraftConcurrentModificationException}
+    import org.apache.spark.sql.sources.EqualTo
+    def upd(k: Long, v: Long) =
+      spark.range(k, k + 1).selectExpr("id", s"CAST($v AS BIGINT) AS v")
+    def rowsOf(dir: String, k: Long) =
+      readBack(dir).filter(col("id") === k).select("v").collect()
+        .map(_.getLong(0)).toSeq
+    def retryable(body: => Unit): Unit = {
+      val err = intercept[GraftConcurrentModificationException](body)
+      assert(err.getMessage.contains("replan"),
+        s"conflict error must say it is retryable: ${err.getMessage}")
+    }
+    // Each op plans against `base`; another writer's commit lands
+    // before the op's position scan. At the head the matched row is
+    // gone from its file, so only a scan of the planned snapshot
+    // touches that file and trips the conflict check.
+    // 1. a concurrent merge hides key 10 and re-adds it elsewhere
+    val a = tmp()
+    spark.range(0, 1000).selectExpr("id", "id AS v").coalesce(1)
+      .write.format(Fmt).option("path", a).mode("append").save()
+    val baseA = GraftLog.currentVersion(a)
+    GraftLog.mergeUpsert(spark, a, upd(10, -10), "id")
+    retryable(GraftLog.mergeUpsert(spark, a, upd(10, -100), "id",
+      baseVersion = baseA))
+    assert(rowsOf(a, 10) == Seq(-10L), "no lost update, no duplicate key")
+    assert(readBack(a).count() == 1000)
+    // 2. a concurrent MoR DELETE hides the key, then compaction retires
+    // its file: the merge must not re-insert the deleted key
+    val b = tmp()
+    spark.range(0, 500).selectExpr("id", "id AS v").coalesce(1)
+      .write.format(Fmt).option("path", b).mode("append").save()
+    spark.range(500, 1000).selectExpr("id", "id AS v").coalesce(1)
+      .write.format(Fmt).option("path", b).mode("append").save()
+    val baseB = GraftLog.currentVersion(b)
+    GraftLog.deleteWhereMoR(spark, b, Array(EqualTo("id", 10L)))
+    assert(GraftLog.compact(b) == 2)
+    retryable(GraftLog.mergeUpsert(spark, b, upd(10, -100), "id",
+      baseVersion = baseB))
+    assert(rowsOf(b, 10).isEmpty)
+    assert(readBack(b).count() == 999)
+    // 3. a MoR DELETE planned before a concurrent merge of its key
+    val c = tmp()
+    spark.range(0, 1000).selectExpr("id", "id AS v").coalesce(1)
+      .write.format(Fmt).option("path", c).mode("append").save()
+    val baseC = GraftLog.currentVersion(c)
+    GraftLog.mergeUpsert(spark, c, upd(10, -10), "id")
+    retryable(GraftLog.deleteWhereMoR(spark, c, Array(EqualTo("id", 10L)),
+      baseVersion = baseC))
+    assert(rowsOf(c, 10) == Seq(-10L))
+    // a concurrent commit on a file holding no matched row is no
+    // conflict: the delete hides key 10 in the first merge's batch
+    // file, the planned merge touches only the original file
+    val baseC2 = GraftLog.currentVersion(c)
+    GraftLog.deleteWhereMoR(spark, c, Array(EqualTo("id", 10L)))
+    GraftLog.mergeUpsert(spark, c, upd(20, -20), "id",
+      baseVersion = baseC2)
+    assert(rowsOf(c, 20) == Seq(-20L) && rowsOf(c, 10).isEmpty)
+    assert(readBack(c).count() == 999)
   }
 
   test("NULL-keyed batch rows insert beside a DV merge and match no " +
