@@ -1159,7 +1159,7 @@ object Formats {
           .selectExpr("id", "id + 50000 AS v")
           .union(s.range(5000, 5030).selectExpr("id", "id AS v")),
           "id")
-        GraftLog.deleteRange(s, src, "id", 100L, 140L)
+        deleteIds(s, src, 100L, 140L)
         val s1 = Replication.sync(s, src, dst, "id")
         (s0.mode == "bootstrap" && s1.mode == "incremental" &&
            s1.versionsApplied == 2,
@@ -1291,12 +1291,14 @@ object Formats {
     }),
 
     // SQL DML on the custom format: `DELETE FROM` through the catalog
-    // lands in the copy-on-write deleteWhere (SupportsDelete) — the
-    // manifest stats bound the rewrite to the files the predicate can
-    // touch, and the `t$files` listing exposes exactly how many files
-    // the delete retired (n_removes, gated <= 2 of the 4-file range
-    // layout). Re-running the DELETE is a no-op: the rewritten file's
-    // refreshed stats no longer overlap the predicate. The oracle
+    // lands in the merge-on-read deleteWhereMoR (SupportsDelete) — the
+    // manifest stats bound the position scan to the files the
+    // predicate can touch, and the matched rows are hidden by one
+    // deletion vector per touched file, so the `t$files` listing
+    // exposes exactly how many files the delete touched
+    // (bounded_rewrite: 1 or 2 DV entries over the 4-file range
+    // layout, and no file retired). Re-running the DELETE is a no-op:
+    // the hidden rows are invisible to the position scan. The oracle
     // recomputes the surviving rows from closed form.
     "sql_catalog_delete" -> ((s, d) => {
       val wh = catalogWarehouse(s, d)
@@ -1315,8 +1317,9 @@ object Formats {
         SELECT CAST(COUNT(*) AS BIGINT) AS n_rows,
                CAST(SUM(id) AS BIGINT) AS sum_id,
                CAST(SUM(v) AS BIGINT) AS sum_v,
-               (SELECT COUNT(*) <= 2 FROM graftq.ns.`del_t$files`
-                WHERE action = 'remove') AS bounded_rewrite
+               (SELECT COUNT_IF(action = 'dv') BETWEEN 1 AND 2
+                  AND COUNT_IF(action = 'remove') = 0
+                FROM graftq.ns.`del_t$files`) AS bounded_rewrite
         FROM graftq.ns.del_t""")
     }),
 
@@ -1939,12 +1942,14 @@ object Formats {
           lit(pruned).as("bloom_pruned"))
     }),
 
-    // Copy-on-write DELETE: drop a key range by rewriting only the
-    // stats-affected file subset — files outside the predicate's reach
-    // survive byte-identical (zero write amplification beyond the
-    // touched range). Closed-form oracle over the surviving rows; the
-    // bounded_rewrite gate pins the file-targeting behavior that makes
-    // GDPR-style deletes affordable on a 100 TB table.
+    // Copy-on-write DELETE (`maxPositions = 0` forces the rewrite a
+    // DELETE falls back to past its position cap): drop a key range by
+    // rewriting only the stats-affected file subset — files outside the
+    // predicate's reach survive byte-identical (zero write
+    // amplification beyond the touched range). Closed-form oracle over
+    // the surviving rows; the bounded_rewrite gate pins the
+    // file-targeting behavior that makes GDPR-style deletes affordable
+    // on a 100 TB table.
     "sink_log_delete_cow" -> ((s, d) => {
       val dir = graft.core.ArtifactCache.fixtureScratch("log_delete", d)
       val (r, t) = rebuildOnce(deleteStats, dir) {
@@ -1952,7 +1957,8 @@ object Formats {
           .repartitionByRange(8, col("id"))
           .write.format("graft.sources.GraftLogSource")
           .option("path", dir).mode("overwrite").save()
-        GraftLog.deleteRange(s, dir, "id", 5000, 7000)
+        val (r, t, _) = deleteIds(s, dir, 5000L, 7000L, maxPositions = 0)
+        (r, t)
       }
       s.read.format("graft.sources.GraftLogSource")
         .option("path", dir).load()
@@ -1965,7 +1971,7 @@ object Formats {
     // position deletes): two stacked deletes record deleted row
     // POSITIONS in sidecar DVs and commit metadata-only versions —
     // ZERO part files rewrite (gated on the live file set being
-    // bit-identical), both decode paths skip DV'd ordinals, and the
+    // bit-identical), the reader skips DV'd ordinals, and the
     // stacked deletes merge into one DV per touched file. COUNT stays
     // manifest-exact (rows minus DV cardinality). At 100 TB this is
     // what makes frequent small erasure deletes affordable: write
@@ -2058,7 +2064,7 @@ object Formats {
         .union(s.range(10000, 10050).selectExpr("id",
           "CAST(id % 10 AS BIGINT) AS bucket", "id AS v"))
       GraftLog.mergeUpsert(s, dir, batch, "id")
-      GraftLog.deleteRange(s, dir, "id", 200L, 300L)
+      deleteIds(s, dir, 200L, 300L)
       ()
     }
     dir
@@ -2071,6 +2077,13 @@ object Formats {
   private val branchStats =
     new scala.collection.concurrent.TrieMap[
       String, (Boolean, Boolean)]()
+
+  /** DELETE the `id` range [lo, hi) of the graft-log table at `dir`. */
+  private def deleteIds(s: SparkSession, dir: String, lo: Long, hi: Long,
+      maxPositions: Int = GraftLog.MaxDvPositions): (Int, Int, Boolean) =
+    GraftLog.deleteWhereMoR(s, dir, Array(
+      org.apache.spark.sql.sources.GreaterThanOrEqual("id", lo),
+      org.apache.spark.sql.sources.LessThan("id", hi)), maxPositions)
 
   /** Once-per-session fixture rebuild: the maintenance sequence's
     * observable stats feed the driver-checked result, so a stale /tmp

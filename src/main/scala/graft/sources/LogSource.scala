@@ -65,12 +65,20 @@ import org.apache.spark.unsafe.types.UTF8String
   *    [min, max] range can't satisfy them (planning-time file
   *    skipping), and `SupportsPushDownRequiredColumns` prunes the
   *    decoded columns to the projection, so `SELECT one_col WHERE
-  *    selective` reads a fraction of the files and decodes a fraction
-  *    of each line. Pushed filters remain Spark-side residuals — file
-  *    skipping is conservative, never row-exact.
+  *    selective` reads a fraction of the files and decompresses only
+  *    the projected chunks of each. One reader,
+  *    [[GraftLogReaderFactory]], serves every scan (batch and stream)
+  *    as columnar batches. Pushed filters remain Spark-side residuals —
+  *    file skipping is conservative, never row-exact.
   *  - `truncate()` (overwrite mode) commits ONE version that removes
   *    every file live at its parent and adds the new files; history
   *    before it stays time-travelable.
+  *  - Row-level changes: DELETE and the API MERGE are merge-on-read
+  *    (a deletion vector hides the matched rows; over a position cap
+  *    the touched files are rewritten instead), SQL UPDATE and MERGE
+  *    INTO rewrite their files copy-on-write. Every one of them, and
+  *    every maintenance rewrite, publishes through one conflict-checked
+  *    commit against the snapshot it read.
   *
   * Cells are canonical text (long/int/double/string columns; strings
   * must not contain tabs/newlines — a demo codec, not a production
@@ -1116,8 +1124,7 @@ object GraftLog {
   private[graft] def commitNewUnlocked(dir: String, schema: StructType)(
       mk: Long => Seq[LogEntry]): Long = {
     ensureDir(dir)
-    var attempts = 0
-    while (attempts < 64) {
+    val v = claimVersion(dir, CommitPrefix, "graft-log commit") { () =>
       // the schema persists per ATTEMPT, re-merged against the stored
       // one each time: two cross-process schema-evolving commits would
       // otherwise race read-modify-write on `_schema` and the loser's
@@ -1134,23 +1141,35 @@ object GraftLog {
       if (!stored.contains(persisted))
         atomicWrite(Paths.get(dir, SchemaFile),
           persisted.json.getBytes(StandardCharsets.UTF_8))
-      val v = currentVersion(dir) + 1
-      // an empty entry list is legal: an overwrite with zero rows of a
-      // table that holds no live file still commits its version
+      currentVersion(dir) + 1
+    }(mk)
+    maybeCheckpoint(dir, v)
+    v
+  }
+
+  /** The one version claim, shared by mainline and branch commits:
+    * write the entries `mk` builds for the version `next` names to a
+    * temp file and CLAIM `<prefix><v>` with a hard link. link(2) fails
+    * EEXIST atomically, so the loser of a race re-reads the head and
+    * retries at the next version. An empty entry list is legal (an
+    * overwrite with zero rows of a table that holds no live file still
+    * commits its version). Returns the claimed version. */
+  private def claimVersion(dir: String, prefix: String, what: String)(
+      next: () => Long)(mk: Long => Seq[LogEntry]): Long = {
+    var attempts = 0
+    while (attempts < 64) {
+      val v = next()
       val es = mk(v)
       val now = math.max(System.currentTimeMillis(), maxTsKnown(dir) + 1)
       val stamped = es.map(e => if (e.ts < 0) e.copy(ts = now) else e)
-      val tmp = Paths.get(dir,
-        s"$CommitPrefix$v.tmp.${UUID.randomUUID()}")
+      val tmp = Paths.get(dir, s"$prefix$v.tmp.${UUID.randomUUID()}")
       Files.write(tmp, stamped.map(_.serialize).mkString("\n")
         .getBytes(StandardCharsets.UTF_8))
       crashWindow(dir, "preLink") // crash-torture hook (no-op unarmed)
       try {
-        Files.createLink(
-          Paths.get(dir, versionedName(CommitPrefix, v)), tmp)
+        Files.createLink(Paths.get(dir, versionedName(prefix, v)), tmp)
         crashWindow(dir, "postLink")
         Files.delete(tmp)
-        maybeCheckpoint(dir, v)
         return v
       } catch {
         case _: java.nio.file.FileAlreadyExistsException =>
@@ -1160,7 +1179,7 @@ object GraftLog {
       }
     }
     throw new IllegalStateException(
-      s"graft-log commit to $dir lost the version race $attempts times")
+      s"$what to $dir lost the version race $attempts times")
   }
 
   /** Crash-torture instrumentation (tools.CrashPublisher): when
@@ -1590,30 +1609,10 @@ object GraftLog {
           s"branch '$name' write would evolve the schema of $dir — " +
             "evolve with a mainline write first, then re-branch")
       }
-      var attempts = 0
-      while (attempts < 64) {
-        val v = branchHead(dir, name) + 1
-        val now = math.max(System.currentTimeMillis(), maxTsKnown(dir) + 1)
-        val es = fresh.map(c => LogEntry.add(v, c.file, c.rows, c.stats,
-          cols = c.cols).copy(ts = now))
-        val tmp = Paths.get(dir,
-          s"${branchPrefix(name)}$v.tmp.${UUID.randomUUID()}")
-        Files.write(tmp, es.map(_.serialize).mkString("\n")
-          .getBytes(StandardCharsets.UTF_8))
-        crashWindow(dir, "preLink") // same torture hook as mainline
-        try {
-          Files.createLink(
-            Paths.get(dir, versionedName(branchPrefix(name), v)), tmp)
-          crashWindow(dir, "postLink")
-          Files.delete(tmp)
-          return
-        } catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-            Files.delete(tmp); attempts += 1
-        }
-      }
-      throw new IllegalStateException(
-        s"branch '$name' commit to $dir lost the version race")
+      claimVersion(dir, branchPrefix(name), s"branch '$name' commit")(
+        () => branchHead(dir, name) + 1)(v =>
+        fresh.map(c => LogEntry.add(v, c.file, c.rows, c.stats,
+          cols = c.cols)))
     }
 
   /** Publish the branch onto main as ONE squashed commit, exactly
@@ -1795,13 +1794,12 @@ object GraftLog {
     * sink needs run daily: per-epoch commits accumulate unboundedly
     * many small files whose open/listing cost comes to dominate scans.
     * Returns the number of files compacted away (0 = nothing to do). */
-  def compact(dir: String): Int = synchronized {
+  def compact(dir: String): Int = {
     requireNoWap("compaction"); requireNoBranch("compaction")
-    // optimistic-concurrency base: same-JVM maintenance serializes on
-    // the object lock, but a CROSS-PROCESS delete/merge racing this
-    // compaction must be detected at publish, not silently undone
+    // optimistic-concurrency base: a delete or merge racing this
+    // compaction is detected at publish, not silently undone
     val compactBase = currentVersion(dir)
-    val live = entriesAsOf(dir, Long.MaxValue)
+    val live = entriesAsOf(dir, compactBase)
     val pcol = partitionColOf(dir)
     // one group per partition value when every file carries its
     // record; otherwise (unpartitioned, or files written before the
@@ -1816,12 +1814,8 @@ object GraftLog {
     val schema = storedSchema(dir).getOrElse(
       throw new IllegalArgumentException(
         s"graft-log table not found at $dir"))
-    val spark = org.apache.spark.sql.SparkSession.active
-    // read exactly the captured snapshot (see repartitionTable)
-    val picked = spark.read.format("graft.sources.GraftLogSource")
-      .option("path", dir)
-      .option("pickFiles", live.map(_.file).mkString(","))
-      .load()
+    val picked = readAt(org.apache.spark.sql.SparkSession.active, dir,
+      live, compactBase)
     val replacement =
       if (pcol.isDefined) picked
       else {
@@ -2105,138 +2099,64 @@ object GraftLog {
     (touched, live.size)
   }
 
-  /** Copy-on-write DELETE of the key range [lo, hi): rewrites only the
-    * part files whose stats overlap the range, dropping the in-range
-    * rows; out-of-range files survive untouched (zero write
-    * amplification outside the predicate's reach). Publishes
-    * remove(affected) + add(rewritten) as one version through
-    * [[rewriteFiles]]. Returns (filesRewritten, filesTotal). */
-  def deleteRange(spark: org.apache.spark.sql.SparkSession, dir: String,
-      keyCol: String, lo: Long, hi: Long): (Int, Int) = {
-    requireNoWap("DELETE"); requireNoBranch("DELETE")
-    import org.apache.spark.sql.functions.col
-    val schema = storedSchema(dir).getOrElse(throw new IllegalArgumentException(
-      s"graft-log table not found at $dir"))
-    val rewriteBase = currentVersion(dir)
-    val live = entriesAsOf(dir, Long.MaxValue)
-    val dlo = java.math.BigDecimal.valueOf(lo)
-    val dhi = java.math.BigDecimal.valueOf(hi)
-    val affected = live.filter { e =>
-      GraftLog.decStat(e,
-          GraftLog.fileLocalName(schema, e, keyCol)) match {
-        case Some((mn, mx)) =>
-          mx.compareTo(dlo) >= 0 && mn.compareTo(dhi) < 0
-        case None => true
-      }
-    }
-    if (affected.isEmpty) return (0, live.size)
-    val picked = spark.read.format("graft.sources.GraftLogSource")
-      .option("path", dir)
-      .option("pickFiles", affected.map(_.file).mkString(","))
-      .load()
-    val remaining = picked.filter(!(col(keyCol) >= lo && col(keyCol) < hi))
-    val cdc =
-      if (!cdfEnabled(dir)) None
-      else Some(picked.filter(col(keyCol) >= lo && col(keyCol) < hi)
-        .withColumn(ChangeTypeCol,
-          org.apache.spark.sql.functions.lit("delete")))
-    rewriteFiles(dir, affected, remaining, schema,
-      cdcChanges = cdc, baseVersion = rewriteBase)
-    (affected.size, live.size)
-  }
-
-  /** SQL `DELETE FROM t WHERE ...` lands here (via [[SupportsDelete]]
-    * on the table): a general copy-on-write delete over an arbitrary
-    * conjunction of convertible predicates. File targeting reuses the
-    * scan's conservative stats check — a file rewrites only if EVERY
-    * conjunct may match it — and kept rows are those where the
-    * predicate is not TRUE (false or NULL, the SQL DELETE contract).
-    * Re-running the same DELETE is a cheap no-op: the rewritten files'
-    * refreshed stats no longer overlap the predicate. Returns
-    * (filesRewritten, filesTotal). */
-  def deleteWhere(spark: org.apache.spark.sql.SparkSession, dir: String,
-      filters: Array[Filter]): (Int, Int) = {
-    requireNoWap("DELETE"); requireNoBranch("DELETE")
-    import org.apache.spark.sql.functions.{coalesce, lit}
-    val schema = storedSchema(dir).getOrElse(throw new IllegalArgumentException(
-      s"graft-log table not found at $dir"))
-    require(filters.forall(convertible),
-      s"unsupported DELETE predicate: ${filters.mkString(", ")}")
-    val rewriteBase = currentVersion(dir)
-    val live = entriesAsOf(dir, Long.MaxValue)
-    // The DSv2 contract ANDs the filter array, so an EMPTY array (or a
-    // lone AlwaysTrue — `DELETE FROM t` with no WHERE) is the
-    // unconditional delete: retire every live file in one metadata
-    // commit, no rewrite needed.
-    if (filters.isEmpty || filters.forall(_.isInstanceOf[AlwaysTrue])) {
-      if (live.nonEmpty) {
-        // typed CDC must still record the vanished rows (Delta's CDF
-        // does the same on unconditional DELETE) — the one case where
-        // the sidecar costs a table scan, because the delete itself
-        // is metadata-only
-        val cdcEntries =
-          if (!cdfEnabled(dir)) Seq.empty
-          else stageCdc(dir,
-            spark.read.format("graft.sources.GraftLogSource")
-              .option("path", dir).load()
-              .withColumn(ChangeTypeCol, lit("delete")))
-        commitNew(dir, schema)(v =>
-          live.map(e => LogEntry.remove(v, e.file)) ++
-            cdcEntries.map(_.copy(version = v)))
-      }
-      return (live.size, live.size)
-    }
-    val affected = live.filter(e =>
-      filters.forall(f => GraftLogScan.mayMatch(schema, e, f)))
-    if (affected.isEmpty) return (0, live.size)
-    val cond = filters.map(filterToColumn).reduce(_ && _)
-    val picked = spark.read.format("graft.sources.GraftLogSource")
-      .option("path", dir)
-      .option("pickFiles", affected.map(_.file).mkString(","))
-      .load()
-    val remaining = picked.filter(!coalesce(cond, lit(false)))
-    val cdc =
-      if (!cdfEnabled(dir)) None
-      else Some(picked.filter(coalesce(cond, lit(false)))
-        .withColumn(ChangeTypeCol, lit("delete")))
-    rewriteFiles(dir, affected, remaining, schema,
-      cdcChanges = cdc, baseVersion = rewriteBase)
-    (affected.size, live.size)
-  }
-
-  /** Merge-on-read DELETE via deletion vectors (Delta DV / Iceberg v2
+  /** DELETE, the one path: SQL `DELETE FROM` and `TRUNCATE TABLE`, the
+    * `delete_mor` procedure and the replication mirror all land here.
+    * Merge-on-read via deletion vectors (Delta DV / Iceberg v2
     * position-delete shape) [EXT]: instead of rewriting every affected
     * part file copy-on-write, record the DELETED ROW POSITIONS
     * per file in a sidecar `dv-*.bin` and commit one metadata version
     * of `dv` entries — write amplification drops from O(affected
     * bytes) to O(deleted positions), which is what makes frequent
     * small deletes (GDPR erasure, late-data retractions) affordable on
-    * a 100 TB table. Readers skip DV'd positions during the scan
-    * (both decoders), COUNT pushdown subtracts DV cardinality
-    * exactly, MIN/MAX pushdown disables itself on DV'd files (stats
-    * may be stale), and compaction materializes the deletes and drops
-    * the DVs. Positions are collected on the driver and capped at
-    * `maxPositions` — a larger delete falls back to the copy-on-write
-    * rewrite (returned flag says which path ran). Same commit as a
+    * a 100 TB table. File targeting reuses the scan's conservative
+    * stats check — a file is scanned only if EVERY conjunct may match
+    * it — and the deleted rows are those where the predicate is TRUE
+    * (a NULL keeps the row, the SQL DELETE contract). Readers skip
+    * DV'd positions during the scan, COUNT pushdown subtracts DV
+    * cardinality exactly, MIN/MAX pushdown disables itself on DV'd
+    * files (stats may be stale), and compaction materializes the
+    * deletes and drops the DVs. Positions are collected on the driver
+    * and capped at `maxPositions` — a larger delete (or any delete
+    * with `maxPositions = 0`) rewrites the touched files copy-on-write
+    * instead (the returned flag says which path ran). Same commit as a
     * merge-on-read [[mergeUpsert]] ([[hideAndAppend]]), with no batch.
     * A repeated delete is a cheap no-op: already-deleted rows are
-    * invisible to the position scan. Plans against one snapshot,
-    * `baseVersion` (the head when unset), as [[mergeUpsert]] does.
-    * Returns (filesTouched, filesTotal, usedDv). */
+    * invisible to the position scan. An empty filter array (or a lone
+    * AlwaysTrue: `DELETE FROM t` with no WHERE, `TRUNCATE`) is the
+    * unconditional delete, one metadata commit that retires every live
+    * file. Plans against one snapshot, `baseVersion` (the head when
+    * unset), and aborts retryably when a commit since then touched a
+    * file it touches, as [[mergeUpsert]] does. Returns (filesTouched,
+    * filesTotal, usedDv). */
   def deleteWhereMoR(spark: org.apache.spark.sql.SparkSession,
       dir: String, filters: Array[Filter],
       maxPositions: Int = MaxDvPositions,
       baseVersion: Long = UnsetBase): (Int, Int, Boolean) = {
     requireNoWap("DELETE"); requireNoBranch("DELETE")
+    import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.{coalesce, lit}
     val schema = storedSchema(dir).getOrElse(
       throw new IllegalArgumentException(
         s"graft-log table not found at $dir"))
-    require(filters.nonEmpty && filters.forall(convertible),
-      s"unsupported MoR DELETE predicate: ${filters.mkString(", ")}")
-    val morBase =
+    require(filters.forall(convertible),
+      s"unsupported DELETE predicate: ${filters.mkString(", ")}")
+    val base =
       if (baseVersion != UnsetBase) baseVersion else currentVersion(dir)
-    val live = entriesAsOf(dir, morBase)
+    val live = entriesAsOf(dir, base)
+    def deletes(s: DataFrame) = s.withColumn(ChangeTypeCol, lit("delete"))
+    // the DSv2 contract ANDs the filter array, so an empty one is TRUE
+    if (filters.forall(_.isInstanceOf[AlwaysTrue])) {
+      // typed CDC must still record the vanished rows (Delta's CDF
+      // does the same on unconditional DELETE) — the one case where
+      // the sidecar costs a table scan, because the delete itself is
+      // metadata-only
+      if (live.nonEmpty)
+        commitRewrite(dir, schema, base, "DELETE", live.map(_.file),
+          fresh = Seq.empty,
+          cdc = Option.when(cdfEnabled(dir))(
+            deletes(readAt(spark, dir, live, base))))()
+      return (live.size, live.size, false)
+    }
     val affected = live.filter(e =>
       filters.forall(f => GraftLogScan.mayMatch(schema, e, f)))
     val cond = coalesce(filters.map(filterToColumn).reduce(_ && _),
@@ -2245,22 +2165,20 @@ object GraftLog {
     // the predicate's matches in the touched files (re-deletes never
     // reach it — already-DV'd ordinals are invisible to the scan, so
     // the feed never double-reports)
-    val cdc =
-      if (!cdfEnabled(dir)) None
-      else Some((s: org.apache.spark.sql.DataFrame) =>
-        s.filter(cond).withColumn(ChangeTypeCol, lit("delete")))
-    val (touched, usedDv) = hideAndAppend(spark, dir, schema, morBase,
+    val cdc = Option.when(cdfEnabled(dir))(
+      (s: DataFrame) => deletes(s.filter(cond)))
+    val (touched, usedDv) = hideAndAppend(spark, dir, schema, base,
       affected, _.filter(cond), _.filter(!cond), batch = None, cdc,
-      txn = None, maxPositions, "merge-on-read DELETE")
+      txn = None, maxPositions, "DELETE")
     (touched, live.size, usedDv)
   }
 
-  /** The one merge-on-read commit of MoR DELETE and MERGE. A position
+  /** The one merge-on-read commit of DELETE and MERGE. A position
     * scan of `affected` collects the `_file` and `_pos` of the rows
     * `hit` selects. Every scan here reads snapshot `base`, the one the
     * op planned against, never the head: a row a concurrent commit
     * hid or moved after `base` is still found in its file, that file
-    * is touched, and the conflict check below aborts the op. `_pos`
+    * is touched, and the conflict check aborts the op. `_pos`
     * is a row's physical ordinal in its part file, stable across DV
     * state: the reader skips ordinals a DV already hides, so a
     * repeated op matches nothing new and the union with a file's
@@ -2284,66 +2202,99 @@ object GraftLog {
       txn: Option[(String, Long)], maxPositions: Int,
       op: String): (Int, Boolean) = {
     import org.apache.spark.sql.functions.col
-    def scan(es: Seq[LogEntry]) = {
-      val r = spark.read.format("graft.sources.GraftLogSource")
-        .option("path", dir)
-        .option("pickFiles", es.map(_.file).mkString(","))
-      (if (base < 0L) r else r.option("asOfVersion", base.toString)).load()
+    // The position scan is ONE job over every affected file. (A collect
+    // of a LIMIT runs Spark's incremental take instead: one job over
+    // the first file, more over the rest.) A task that alone matches
+    // more than `maxPositions` rows ships none of them; any other ships
+    // its positions grouped by file. The driver keeps at most
+    // `maxPositions` positions, and once the matches pass that it
+    // cancels the job: the copy-on-write rewrite needs no positions.
+    val hits = scala.collection.mutable.Map
+      .empty[String, scala.collection.mutable.ArrayBuffer[Long]]
+    val over = new java.util.concurrent.atomic.AtomicBoolean(false)
+    if (affected.nonEmpty) {
+      val qe = hit(readAt(spark, dir, affected, base)
+          .select(col("*"), col("_file"), col("_pos")))
+        .select(col("_file"), col("_pos")).queryExecution
+      val cap = maxPositions + 1
+      var held = 0
+      val job = new java.util.concurrent.atomic.AtomicReference[
+        org.apache.spark.SimpleFutureAction[Unit]]()
+      org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe,
+          Some("collect")) {
+        val rows = qe.toRdd
+        val f = spark.sparkContext.submitJob(rows,
+          (it: Iterator[InternalRow]) => {
+            val ps = it.take(cap)
+              .map(r => (r.getUTF8String(0).toString, r.getLong(1))).toArray
+            Option.when(ps.length < cap)(ps.groupMap(_._1)(_._2))
+          },
+          rows.partitions.indices,
+          (_: Int, part: Option[Map[String, Array[Long]]]) =>
+            if (!over.get) {
+              val n = part.fold(cap)(_.valuesIterator.map(_.length).sum)
+              if (held + n > maxPositions) {
+                over.set(true); hits.clear()
+                Option(job.get).foreach(_.cancel())
+              } else {
+                part.get.foreach { case (file, ps) =>
+                  hits.getOrElseUpdate(file,
+                    scala.collection.mutable.ArrayBuffer.empty) ++= ps }
+                held += n
+              }
+            },
+          ())
+        job.set(f)
+        if (over.get) f.cancel()
+        scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)
+        // a cancelled job fails; only a failure before the cut-over counts
+        f.value.get.failed.foreach(e => if (!over.get) throw e)
+      }
     }
-    val hits =
-      if (affected.isEmpty) Array.empty[org.apache.spark.sql.Row]
-      else hit(scan(affected).select(col("*"), col("_file"), col("_pos")))
-        .select(col("_file"), col("_pos"))
-        .limit(maxPositions + 1)
-        .collect()
-    if (hits.length > maxPositions) {
+    if (over.get) {
       // too many positions for a healthy DV — the copy-on-write
       // rewrite IS the bounded path here
-      val s = scan(affected)
+      val s = readAt(spark, dir, affected, base)
       val kept = keep(s)
       rewriteFiles(dir, affected, batch.fold(kept)(kept.unionByName(_)),
         schema, txn = txn, cdcChanges = cdc.map(_(s)), baseVersion = base)
       return (affected.size, false)
     }
-    val byFile = hits.groupBy(_.getString(0))
-      .map { case (f, rs) => f -> rs.map(_.getLong(1)) }
-    val touched = affected.filter(e => byFile.contains(e.file))
+    val touched = affected.filter(e => hits.contains(e.file))
     if (touched.isEmpty && batch.isEmpty && txn.isEmpty) return (0, true)
-    val fresh = batch.map(writeParts(dir, _)).getOrElse(Seq.empty)
-    // uncommitted batch parts and staged CDC sidecars are invisible
-    // orphans when the commit fails — reclaim them now rather than
-    // leaving them for vacuum's retention horizon
-    def reclaim(es: Seq[LogEntry]): Unit =
-      es.foreach(f => new File(dir, f.file).delete())
-    val cdcEntries =
-      try cdc.map(f => stageCdc(dir, f(scan(touched)))).getOrElse(Seq.empty)
-      catch { case e: Throwable => reclaim(fresh); throw e }
-    try commitNew(dir, schema) { v =>
-      // cross-process race: another commit that retired a touched
-      // file, or hid rows in it, after `base` would make the DV
-      // annotate a dead add or drop the other DV (silently lost or
-      // duplicated rows) — abort retryably. An orphaned dv-* file from
-      // the abort is unreferenced and aged out by vacuum.
-      requireNoFileConflicts(dir, base, v, touched.map(_.file).toSet, op)
+    // an orphaned dv-* file from an aborted commit is unreferenced and
+    // aged out by vacuum
+    commitRewrite(dir, schema, base, op, touched.map(_.file),
+      fresh = batch.map(writeParts(dir, _)).getOrElse(Seq.empty),
+      cdc = cdc.map(_(readAt(spark, dir, touched, base))), txn = txn) { v =>
       touched.map { e =>
         val merged = (dvOf(e).map { case (f, _) =>
           GraftLogDv.read(dir, f) }.getOrElse(Array.empty[Long]) ++
-          byFile(e.file)).distinct.sorted
+          hits(e.file)).distinct.sorted
         LogEntry.dv(v, e.file,
           Some((GraftLogDv.write(dir, merged), merged.length.toLong)))
-      } ++
-        fresh.map(e => LogEntry.add(v, e.file, e.rows, e.stats,
-          cols = e.cols)) ++
-        cdcEntries.map(_.copy(version = v)) ++
-        txn.map { case (a, tv) => LogEntry.txn(v, a, tv) }.toSeq
-    } catch {
-      case e: GraftConcurrentModificationException =>
-        reclaim(fresh ++ cdcEntries); throw e
+      }
     }
     (touched.size, true)
   }
 
-  /** The predicate subset [[deleteWhere]] can replay as a Column —
+  /** The files `es` of `dir` as they stood at version `base`: the one
+    * input read of every rewrite planner (compaction, OPTIMIZE ZORDER,
+    * repartitioning, and the position, rewrite and CDC scans of DELETE
+    * and MERGE). Pinned to the planned snapshot, so rows a commit adds
+    * after `base` never fold into a rewrite whose new files would sit
+    * beside theirs, and a DV committed after `base` moves nothing under
+    * the scan; the conflict check at publish decides whether the plan
+    * still stands. */
+  private def readAt(spark: org.apache.spark.sql.SparkSession, dir: String,
+      es: Seq[LogEntry], base: Long): org.apache.spark.sql.DataFrame = {
+    val r = spark.read.format("graft.sources.GraftLogSource")
+      .option("path", dir)
+      .option("pickFiles", es.map(_.file).mkString(","))
+    (if (base < 0L) r else r.option("asOfVersion", base.toString)).load()
+  }
+
+  /** The predicate subset [[deleteWhereMoR]] can replay as a Column —
     * `canDeleteWhere` gates on this, so an inexpressible DELETE fails
     * at analysis instead of deleting the wrong rows. */
   def convertible(f: Filter): Boolean = f match {
@@ -2409,10 +2360,9 @@ object GraftLog {
         s"(partitioned by ${partitionColOf(dir).getOrElse("")}): the " +
         "partition layout owns file placement")
     val rewriteBase = currentVersion(dir)
-    val live = entriesAsOf(dir, Long.MaxValue)
+    val live = entriesAsOf(dir, rewriteBase)
     if (live.isEmpty) return 0
-    val replacement = spark.read.format("graft.sources.GraftLogSource")
-      .option("path", dir).load()
+    val replacement = readAt(spark, dir, live, rewriteBase)
       .withColumn("__graft_z",
         graft.functions.ZOrder.zValue(col(xCol), col(yCol), bits))
       .repartitionByRange(nFiles, col("__graft_z"))
@@ -2436,7 +2386,7 @@ object GraftLog {
     * deleted, until vacuum's horizon passes). Returns the number of
     * files retired. */
   def repartitionTable(spark: org.apache.spark.sql.SparkSession,
-      dir: String, col: String): Int = synchronized {
+      dir: String, col: String): Int = {
     requireNoWap("repartition"); requireNoBranch("repartition")
     val schema = storedSchema(dir).getOrElse(
       throw new IllegalArgumentException(
@@ -2445,19 +2395,12 @@ object GraftLog {
       s"no column '$col' at $dir")
     if (partitionColOf(dir).contains(col)) return 0
     val rewriteBase = currentVersion(dir)
-    val live = entriesAsOf(dir, Long.MaxValue)
+    val live = entriesAsOf(dir, rewriteBase)
     if (live.isEmpty) {
       setPartitionCol(dir, col, allowChange = true)
       return 0
     }
-    // read exactly the captured snapshot (pickFiles), not "the table
-    // at execution time" — the lazy read runs inside rewriteFiles,
-    // and an unpinned scan would fold a concurrent append's rows into
-    // the rewrite while its file stayed live: duplicates
-    val replacement = spark.read.format("graft.sources.GraftLogSource")
-      .option("path", dir)
-      .option("pickFiles", live.map(_.file).mkString(","))
-      .load()
+    val replacement = readAt(spark, dir, live, rewriteBase)
     // the scratch write routes by the NEW key (override), but the
     // table's own declaration flips only AFTER the rewrite commits —
     // a crashed evolution leaves the old declaration intact and a
@@ -2468,6 +2411,10 @@ object GraftLog {
     setPartitionCol(dir, col, allowChange = true)
     live.size
   }
+
+  /** `baseVersion` sentinel for "caller did not pre-plan a base" —
+    * distinct from -1, which is a real base (empty table). */
+  private[graft] val UnsetBase: Long = Long.MinValue
 
   /** Optimistic-concurrency guard for row-level rewrites: between the
     * snapshot the rewrite PLANNED against (`baseVersion`) and the
@@ -2481,10 +2428,6 @@ object GraftLog {
     * resurrecting overwritten rows (the Delta/Iceberg
     * concurrent-modification contract). Appends never trip this:
     * fresh files are new UUIDs, disjoint from any retired set. */
-  /** `rewriteFiles` baseVersion sentinel for "caller did not pre-plan
-    * a base" — distinct from -1, which is a real base (empty table). */
-  private[graft] val UnsetBase: Long = Long.MinValue
-
   private def requireNoFileConflicts(dir: String, baseVersion: Long,
       claiming: Long, retired: Set[String], op: String): Unit = {
     if (retired.isEmpty) return
@@ -2552,10 +2495,10 @@ object GraftLog {
           " — replan against the current snapshot and retry")
   }
 
-  /** Shared commit tail for copy-on-write maintenance: write the
-    * replacement rows through the normal writer into a scratch log
-    * (full stats/cols commit messages for free), adopt its part files,
-    * and publish remove(old) + add(new) as one version. Zero-row parts
+  /** Copy-on-write rewrite: write the replacement rows through the
+    * normal writer into a scratch log (full stats/cols commit messages
+    * for free), adopt its part files, and publish remove(old) +
+    * add(new) as one version through [[commitRewrite]]. Zero-row parts
     * are dropped, not published. `dataChange = false` marks a pure
     * layout rewrite (same rows) that the change feed must skip. */
   private[graft] def rewriteFiles(dir: String, old: Seq[LogEntry],
@@ -2574,28 +2517,42 @@ object GraftLog {
     // re-open the scratch-write window a pre-planned caller closed).
     val base =
       if (baseVersion != UnsetBase) baseVersion else currentVersion(dir)
-    val fresh = writeParts(dir, replacement, partitionOverride)
-    // the uncommitted replacement files and staged CDC sidecars are
-    // invisible orphans when the rewrite fails before its link —
-    // reclaim them now rather than leaving them for vacuum's retention
-    // horizon
+    commitRewrite(dir, storedSchema(dir).getOrElse(schema), base,
+      "rewrite", old.map(_.file), writeParts(dir, replacement,
+        partitionOverride), cdcChanges, txn, dataChange, fullReplace)()
+  }
+
+  /** The one conflict-checked commit of every copy-on-write rewrite
+    * and merge-on-read change. Stages `cdc` as typed CDC sidecars once
+    * the `fresh` part files are written (a failed staging deletes
+    * them), then ONE version publishes `touch(v)` for the `touched`
+    * files (their removes by default; DVs for merge-on-read), `fresh`
+    * as adds, the sidecars and the txn marker — provided no commit
+    * since `base`, the snapshot the op read, touched one of those
+    * files ([[requireNoFileConflicts]]; with `fullReplace` and nothing
+    * touched, no data commit at all: [[requireNoDataCommits]]). A
+    * conflict aborts retryably and deletes the uncommitted parts and
+    * sidecars rather than leaving them for vacuum's horizon. */
+  private def commitRewrite(dir: String, schema: StructType, base: Long,
+      op: String, touched: Seq[String], fresh: Seq[LogEntry],
+      cdc: Option[org.apache.spark.sql.DataFrame] = None,
+      txn: Option[(String, Long)] = None, dataChange: Boolean = true,
+      fullReplace: Boolean = false)(
+      touch: Long => Seq[LogEntry] =
+        v => touched.map(LogEntry.remove(v, _))): Unit = {
     def reclaim(es: Seq[LogEntry]): Unit =
       es.foreach(f => new File(dir, f.file).delete())
-    // typed CDC sidecars publish in the SAME commit as the rewrite;
-    // staged only once the replacement is written, so a failed
-    // replacement write leaves none behind
     val cdcEntries =
-      try cdcChanges.map(stageCdc(dir, _)).getOrElse(Seq.empty)
+      try cdc.map(stageCdc(dir, _)).getOrElse(Seq.empty)
       catch { case e: Throwable => reclaim(fresh); throw e }
-    try commitNew(dir, storedSchema(dir).getOrElse(schema)) { v =>
-      requireNoFileConflicts(dir, base, v,
-        old.map(_.file).toSet, "rewrite")
+    try commitNew(dir, schema) { v =>
+      requireNoFileConflicts(dir, base, v, touched.toSet, op)
       // a full-table replace planned against an EMPTY snapshot has no
-      // retired files for the check above to defend — any concurrent
+      // touched files for the check above to defend — any concurrent
       // data commit in the span conflicts instead
-      if (fullReplace && old.isEmpty)
-        requireNoDataCommits(dir, base, v, "rewrite")
-      old.map(e => LogEntry.remove(v, e.file)) ++
+      if (fullReplace && touched.isEmpty)
+        requireNoDataCommits(dir, base, v, op)
+      touch(v) ++
         fresh.map(e => LogEntry.add(v, e.file, e.rows, e.stats,
           dataChange = dataChange, cols = e.cols)) ++
         cdcEntries.map(_.copy(version = v)) ++
@@ -2748,11 +2705,15 @@ object GraftLog {
     * operation's scan planned and adds the rewritten parts. Readers
     * either see the whole pre-op snapshot or the whole post-op one
     * (snapshot isolation holds across the rewrite), and the pre-op
-    * version stays time-travelable. Zero-row part files (a writer task
-    * that received no rows) are dropped and deleted rather than
-    * published. */
+    * version stays time-travelable. The scan read snapshot
+    * `baseVersion`, so a commit since then that touched a planned file
+    * (a DV hiding a row the rewrite carried, a compaction moving it)
+    * aborts the op retryably instead of resurrecting or duplicating
+    * rows. Zero-row part files (a writer task that received no rows)
+    * are dropped and deleted rather than published. */
   def replaceFiles(dir: String, retired: Seq[String],
-      fresh: Seq[GraftLogCommit], schema: StructType): Unit = synchronized {
+      fresh: Seq[GraftLogCommit], schema: StructType,
+      baseVersion: Long): Unit = {
     requireNoWap("row-level rewrite")
     requireNoBranch("row-level rewrite")
     val (kept, empty) = fresh.partition(_.rows > 0L)
@@ -2761,10 +2722,9 @@ object GraftLog {
     val merged =
       storedSchema(dir).map(mergeSchemas(_, schema)).getOrElse(schema)
     requireNoReservedAdds(dir, merged)
-    commitNew(dir, merged)(v =>
-      retired.map(f => LogEntry.remove(v, f)) ++
-        kept.map(c => LogEntry.add(v, c.file, c.rows, c.stats,
-          cols = c.cols)))
+    commitRewrite(dir, merged, baseVersion, "row-level rewrite", retired,
+      kept.map(c => LogEntry.add(-1L, c.file, c.rows, c.stats,
+        cols = c.cols)))()
   }
 }
 
@@ -2784,7 +2744,7 @@ class GraftLogTable(dir: String, writeSchema: StructType,
     * vanished row as a typed delete in the same commit, so downstream
     * replicas follow the wipe instead of silently diverging. */
   override def truncateTable(): Boolean = {
-    GraftLog.deleteWhere(
+    GraftLog.deleteWhereMoR(
       org.apache.spark.sql.SparkSession.active, dir, Array.empty)
     true
   }
@@ -2847,32 +2807,25 @@ class GraftLogTable(dir: String, writeSchema: StructType,
   /** SQL `UPDATE` / `MERGE INTO` (and the DELETEs `canDeleteWhere`
     * rejects) land here: Spark rewrites the command into a group-based
     * copy-on-write `ReplaceData` plan over this operation. Convertible
-    * DELETEs still take the cheaper metadata path — Spark's
+    * DELETEs still take the cheaper merge-on-read path — Spark's
     * `OptimizeMetadataOnlyDeleteFromTable` converts the rewrite back
     * through [[SupportsDelete]] when the predicate allows. */
   override def newRowLevelOperationBuilder(
       info: RowLevelOperationInfo): RowLevelOperationBuilder =
     () => new GraftLogRowLevelOperation(dir, schema(), info.command())
 
-  // SQL `DELETE FROM t WHERE ...` — stats-targeted copy-on-write by
-  // default; `SET spark.graft.log.deleteMode=mor` switches to the
-  // deletion-vector path (metadata-only commit, zero file rewrites,
-  // automatic COW fallback past the position cap — see
-  // GraftLog.deleteWhereMoR). Inexpressible predicates reject at
-  // analysis via canDeleteWhere. An unconditional `DELETE FROM t`
-  // stays the pure-metadata retire-every-file commit either way.
+  // SQL `DELETE FROM t WHERE ...` — merge-on-read: a stats-targeted
+  // deletion-vector commit that rewrites no file, switching to a
+  // copy-on-write rewrite of the touched files past the position cap
+  // (GraftLog.deleteWhereMoR). An unconditional `DELETE FROM t` is the
+  // pure-metadata retire-every-file commit. Predicates the metadata
+  // path cannot replay are refused by canDeleteWhere and rewrite
+  // through the row-level operation instead.
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     filters.forall(GraftLog.convertible)
-  override def deleteWhere(filters: Array[Filter]): Unit = {
-    val s = org.apache.spark.sql.SparkSession.active
-    val mor = s.conf.getOption("spark.graft.log.deleteMode")
-      .exists(_.trim.equalsIgnoreCase("mor"))
-    val unconditional =
-      filters.isEmpty || filters.forall(_.isInstanceOf[AlwaysTrue])
-    if (mor && !unconditional) {
-      GraftLog.deleteWhereMoR(s, dir, filters); ()
-    } else GraftLog.deleteWhere(s, dir, filters)
-  }
+  override def deleteWhere(filters: Array[Filter]): Unit =
+    GraftLog.deleteWhereMoR(
+      org.apache.spark.sql.SparkSession.active, dir, filters)
   override def schema(): StructType = {
     // Reads see the stored schema; a write whose frame carries extra
     // columns sees the stored⊕incoming merge, so Spark's append
@@ -2991,10 +2944,13 @@ class GraftLogTable(dir: String, writeSchema: StructType,
   *    rows updated, untouched rows copied). `GraftLogScan`'s
   *    residual-only pushFilters contract is exactly this: skipping is
   *    file-conservative, rows are never dropped by the reader.
-  *  - The operation instance bridges scan and write: the files the
-  *    scan PLANNED are the groups the write's commit must replace.
-  *    [[GraftLog.replaceFiles]] publishes remove(planned) +
-  *    add(rewritten) as ONE atomic version, so the manifest stats
+  *  - The operation instance bridges scan and write: its scan reads
+  *    the snapshot current when the operation was built, and the
+  *    files that scan PLANNED are the groups the write's commit must
+  *    replace. [[GraftLog.replaceFiles]] publishes remove(planned) +
+  *    add(rewritten) as ONE atomic version, conflict-checked against
+  *    that snapshot (a concurrent DV, rewrite or compaction of a
+  *    planned file aborts the operation retryably), so the manifest stats
   *    bound UPDATE write amplification the same way they bound the
   *    API-level merge: files whose [min, max] refute the condition
   *    never rewrite.
@@ -3008,6 +2964,9 @@ class GraftLogRowLevelOperation(dir: String, tableSchema: StructType,
   /** Files planned by the operation's scan — captured at scan build
     * time on the driver, consumed by the write's commit. */
   @volatile private var scannedFiles: Seq[String] = Seq.empty
+  /** The snapshot the scan reads and the commit checks conflicts
+    * against. */
+  private val base = GraftLog.currentVersion(dir)
 
   override def command(): RowLevelOperation.Command = cmd
   override def description(): String =
@@ -3029,7 +2988,7 @@ class GraftLogRowLevelOperation(dir: String, tableSchema: StructType,
     // the plan hook re-records the group set AFTER runtime group
     // filtering has narrowed it — the commit must replace exactly the
     // files the write actually read and rewrote
-    new GraftLogScanBuilder(dir, tableSchema, Long.MaxValue, -1L,
+    new GraftLogScanBuilder(dir, tableSchema, base, -1L,
       cowPlanHook = Some(fs => op.scannedFiles = fs)) {
       // defensive: a metadata-aggregate scan would bypass the file
       // bookkeeping the COW commit depends on (Spark never pushes
@@ -3063,7 +3022,8 @@ class GraftLogRowLevelOperation(dir: String, tableSchema: StructType,
           override def commit(
               messages: Array[WriterCommitMessage]): Unit =
             GraftLog.replaceFiles(dir, scannedFiles,
-              GraftLogCommit.all(messages), info.schema())
+              GraftLogCommit.all(messages), info.schema(),
+              baseVersion = base)
           override def abort(
               messages: Array[WriterCommitMessage]): Unit =
             GraftLogCommit.all(messages).foreach(c =>
@@ -3874,8 +3834,7 @@ class GraftLogScan(dir: String, tableSchema: StructType,
         }.toArray
     }
   override def createReaderFactory(): PartitionReaderFactory =
-    new GraftLogReaderFactory(tableSchema, required, columnar = true,
-      blockFilters = pushed)
+    new GraftLogReaderFactory(tableSchema, required, blockFilters = pushed)
   // Streaming read: the version log doubles as the stream's offset
   // axis. `changesFromVersion` (when set) seeds the stream past
   // history, the Delta `startingVersion` option.
@@ -4801,8 +4760,11 @@ case class GraftLogGroupPartition(dir: String, key: InternalRow,
   override def partitionKey(): InternalRow = key
 }
 
+/** The one graft-log part-file reader: columnar batches for batch
+  * scans, partition-value groups, and the plain and typed streams
+  * (a micro-batch scan is a DSv2 scan exec too, so it reads columnar
+  * the same way). `blockFilters` skip blocks by their footer stats. */
 class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
-    columnar: Boolean = false,
     blockFilters: Array[Filter] = Array.empty)
     extends PartitionReaderFactory {
 
@@ -4853,9 +4815,8 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
     * ColumnarToRow), so whole-stage codegen consumes columns without
     * per-row iterator/GenericInternalRow overhead. Decoding walks tab
     * positions in place and materializes ONLY projected cells — column
-    * pruning skips both the parse and the allocation. Batch reads only;
-    * the row reader below serves streaming and the API fallback. */
-  override def supportColumnarReads(p: InputPartition): Boolean = columnar
+    * pruning skips both the parse and the allocation. */
+  override def supportColumnarReads(p: InputPartition): Boolean = true
 
   override def createColumnarReader(p: InputPartition): PartitionReader[
       org.apache.spark.sql.vectorized.ColumnarBatch] = {
@@ -5147,134 +5108,6 @@ class GraftLogReaderFactory(tableSchema: StructType, required: StructType,
   }
 
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
-    p match {
-      case part: GraftLogPartition =>
-        gcolRowReader(part.dir, part.file, part.cols, part.dvFile,
-          part.start, part.length)
-      // a partition-value group: chain its files through one reader
-      case g: GraftLogGroupPartition =>
-        new PartitionReader[InternalRow] {
-          private var i = 0
-          private var cur: PartitionReader[InternalRow] = _
-          override def next(): Boolean = {
-            while (true) {
-              if (cur == null) {
-                if (i >= g.files.size) return false
-                val (f, cols, dv) = g.files(i)
-                cur = gcolRowReader(g.dir, f, cols, dv)
-                i += 1
-              }
-              if (cur.next()) return true
-              cur.close(); cur = null
-            }
-            false // unreachable
-          }
-          override def get(): InternalRow = cur.get()
-          override def close(): Unit = if (cur != null) cur.close()
-        }
-      case other => throw new IllegalArgumentException(
-        s"unexpected partition $other")
-    }
-
-  /** Row reader over the NATIVE gcol blocks — the streaming source's
-    * path: only PROJECTED chunks decompress (the line shim would
-    * rebuild full rows and decode every column), deletion vectors and
-    * `_pos` ride the footer's global ordinals, and dict chunks share
-    * each distinct string across the block's rows. */
-  private def gcolRowReader(dir: String, file: String,
-      partCols: Seq[String], dvFile: Option[String],
-      start: Long = 0L,
-      length: Long = Long.MaxValue): PartitionReader[InternalRow] = {
-    val f = new File(dir, file)
-    val ch = java.nio.channels.FileChannel.open(
-      f.toPath, java.nio.file.StandardOpenOption.READ)
-    val fullFooter =
-      try GraftColFile.readFooter(ch, f)
-      catch { case e: Throwable => ch.close(); throw e }
-    // honor a byte-range split exactly like the columnar cursor: a
-    // block belongs to the range containing its start offset — so if
-    // a ranged partition ever reaches the row path (columnar=false,
-    // or a future fallback) it reads its share once, not the whole
-    // file per split
-    val rangeEnd =
-      if (length == Long.MaxValue) Long.MaxValue else start + length
-    val footer = fullFooter.copy(blocks = fullFooter.blocks.filter(
-      b => b.offset >= start && b.offset < rangeEnd))
-    val cellIdx = cellIndexOf(partCols)
-    val nChunks = footer.cols.length
-    val fileName = UTF8String.fromString(file)
-    val dvArr: Array[Long] =
-      dvFile.map(GraftLogDv.read(dir, _)).getOrElse(Array.empty)
-    new PartitionReader[InternalRow] {
-      private var bi = 0
-      private var chunks: Array[GraftColFile.Chunk] = _
-      private var rowIn = 0
-      private var blockRows = 0
-      private var firstOrd = 0L
-      private var dvPtr = 0
-      private var current: InternalRow = _
-
-      private def loadBlock(): Boolean = {
-        if (bi >= footer.blocks.length) return false
-        val b = footer.blocks(bi); bi += 1
-        val byCi = cellIdx.filter(ci => ci >= 0 && ci < nChunks)
-          .distinct
-          .map(ci => ci -> GraftColFile.readChunk(ch, b, ci)).toMap
-        chunks = cellIdx.map(ci =>
-          if (ci >= 0 && ci < nChunks) byCi(ci) else null)
-        rowIn = 0
-        blockRows = b.rows.toInt
-        firstOrd = b.firstOrdinal
-        // sorted DV consumed from the block's first global ordinal
-        var lo = 0; var hi = dvArr.length
-        while (lo < hi) {
-          val m = (lo + hi) >>> 1
-          if (dvArr(m) < firstOrd) lo = m + 1 else hi = m
-        }
-        dvPtr = lo
-        true
-      }
-
-      override def next(): Boolean = {
-        while (true) {
-          if (chunks == null || rowIn >= blockRows) {
-            if (!loadBlock()) return false
-          }
-          val ord = firstOrd + rowIn
-          if (dvPtr < dvArr.length && dvArr(dvPtr) == ord) {
-            dvPtr += 1; rowIn += 1
-          } else {
-            val vals = new Array[Any](required.fields.length)
-            var j = 0
-            while (j < vals.length) {
-              val ci = cellIdx(j)
-              if (ci == -2) vals(j) = fileName
-              else if (ci == -3) vals(j) = java.lang.Long.valueOf(ord)
-              else if (ci < 0 || ci >= nChunks) vals(j) = null
-              else {
-                val cell = chunks(j).cell(rowIn)
-                vals(j) =
-                  if (cell == GraftLog.NullCell) null
-                  else required.fields(j).dataType match {
-                    case LongType => java.lang.Long.valueOf(cell)
-                    case IntegerType => java.lang.Integer.valueOf(cell)
-                    case DoubleType => java.lang.Double.valueOf(cell)
-                    case StringType => UTF8String.fromString(cell)
-                    case other => throw new IllegalArgumentException(
-                      s"graft-log does not decode $other")
-                  }
-              }
-              j += 1
-            }
-            rowIn += 1
-            current = new GenericInternalRow(vals)
-            return true
-          }
-        }
-        false // unreachable
-      }
-      override def get(): InternalRow = current
-      override def close(): Unit = ch.close()
-    }
-  }
+    throw new UnsupportedOperationException(
+      "graft-log part files are read as columnar batches only")
 }

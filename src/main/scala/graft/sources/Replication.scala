@@ -111,7 +111,7 @@ object Replication {
           GraftLog.commitTxn(dstDir, AppId, v)
         } else {
           if (delKeys.nonEmpty)
-            GraftLog.deleteWhere(spark, dstDir,
+            GraftLog.deleteWhereMoR(spark, dstDir,
               Array(org.apache.spark.sql.sources.In(keyCol, delKeys)))
           if (!upserts.isEmpty)
             GraftLog.mergeUpsert(spark, dstDir, upserts, keyCol,

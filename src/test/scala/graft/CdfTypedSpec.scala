@@ -20,6 +20,14 @@ class CdfTypedSpec extends SparkSpec {
     GraftLog.setProperties(dir, Map("graft.cdf.enabled" -> "true"))
   }
 
+  /** DELETE the `id` range [lo, hi); `maxPositions = 0` forces the
+    * copy-on-write rewrite. */
+  private def deleteIds(dir: String, lo: Long, hi: Long,
+      maxPositions: Int = GraftLog.MaxDvPositions): Unit =
+    GraftLog.deleteWhereMoR(spark, dir, Array(
+      org.apache.spark.sql.sources.GreaterThanOrEqual("id", lo),
+      org.apache.spark.sql.sources.LessThan("id", hi)), maxPositions)
+
   private def feed(dir: String, from: Long = -1L): DataFrame =
     GraftLog.typedChanges(spark, dir, from)
 
@@ -57,7 +65,8 @@ class CdfTypedSpec extends SparkSpec {
   test("copy-on-write and merge-on-read DELETE both emit typed " +
       "deletes; re-deletes never double-report") {
     val dir = tmp(); mkTable(dir)
-    GraftLog.deleteRange(spark, dir, "id", 10L, 13L)
+    deleteIds(dir, 10L, 13L, maxPositions = 0)
+    assert(GraftLog.entries(dir).exists(_.action == "remove"))
     val d1 = feed(dir, from = 0L)
       .filter(col("_change_type") === "delete")
       .select(col("id")).collect().map(_.getLong(0)).toSet
@@ -97,7 +106,7 @@ class CdfTypedSpec extends SparkSpec {
   test("unconditional DELETE records every vanished row") {
     val dir = tmp(); mkTable(dir, n = 30)
     val v = GraftLog.currentVersion(dir)
-    GraftLog.deleteWhere(spark, dir, Array.empty)
+    GraftLog.deleteWhereMoR(spark, dir, Array.empty)
     val dels = feed(dir, from = v)
       .filter(col("_change_type") === "delete").count()
     assert(dels == 30L)
@@ -134,7 +143,7 @@ class CdfTypedSpec extends SparkSpec {
     // a merge (updates+inserts), a range delete, an append
     GraftLog.mergeUpsert(spark, src, spark.range(10)
       .selectExpr("id", "id + 9999 AS v"), "id")
-    GraftLog.deleteRange(spark, src, "id", 100L, 150L)
+    deleteIds(src, 100L, 150L)
     spark.range(2000, 2100).selectExpr("id", "id AS v").coalesce(1)
       .write.format(Fmt).option("path", src).mode("append").save()
     val s1 = Replication.sync(spark, src, dst, "id")
@@ -148,7 +157,7 @@ class CdfTypedSpec extends SparkSpec {
     assert(Replication.sync(spark, src, dst, "id").mode == "noop")
     // a mass purge (unconditional delete) re-seeds rather than
     // shipping every key through the driver
-    GraftLog.deleteWhere(spark, src, Array.empty)
+    GraftLog.deleteWhereMoR(spark, src, Array.empty)
     val s2 = Replication.sync(spark, src, dst, "id")
     assert(s2.mode == "incremental")
     assert(spark.read.format(Fmt).option("path", dst).load()
@@ -239,7 +248,7 @@ class CdfTypedSpec extends SparkSpec {
     val dir = tmp(); mkTable(dir)
     GraftLog.mergeUpsert(spark, dir, spark.range(3)
       .selectExpr("id", "id * 100 AS v"), "id")
-    GraftLog.deleteRange(spark, dir, "id", 50L, 55L)
+    deleteIds(dir, 50L, 55L)
     val ckpt = tmp(); val sink = tmp()
     def drain(): Unit = {
       val q = GraftLog.typedChangesStream(spark, dir)
@@ -259,7 +268,7 @@ class CdfTypedSpec extends SparkSpec {
     assert(streamed1 == rows(feed(dir)),
       "the drained stream must equal the batch typed feed exactly")
     // new commits after the checkpoint: a restart ships ONLY those
-    GraftLog.deleteRange(spark, dir, "id", 60L, 62L)
+    deleteIds(dir, 60L, 62L)
     drain()
     val streamed2 = rows(spark.read.format(Fmt)
       .option("path", sink).load())
@@ -273,7 +282,7 @@ class CdfTypedSpec extends SparkSpec {
   test("COUNT on the typed feed answers from the sidecar rows, never " +
       "the add listing (metadata pushdown stands down)") {
     val dir = tmp(); mkTable(dir)
-    GraftLog.deleteRange(spark, dir, "id", 0L, 10L)
+    deleteIds(dir, 0L, 10L, maxPositions = 0)
     // typed feed over the delete version: 10 delete rows — a pushed
     // manifest COUNT would instead fold the rewrite's 90-row add
     assert(feed(dir, from = 0L).count() == 10L)
@@ -314,7 +323,7 @@ class CdfTypedSpec extends SparkSpec {
   test("snapshot reads never see CDC rows; vacuum keeps every sidecar " +
       "a retained commit names, under BOTH modes") {
     val dir = tmp(); mkTable(dir)
-    GraftLog.deleteRange(spark, dir, "id", 0L, 5L)
+    deleteIds(dir, 0L, 5L)
     assert(spark.read.format(Fmt).option("path", dir).load()
       .count() == 95L, "sidecar rows must not leak into snapshots")
     val cdcFiles = new java.io.File(dir).listFiles

@@ -180,8 +180,9 @@ class ColumnEvolutionSpec extends SparkSpec {
     spark.range(0, 500).selectExpr("id", "id * 2 AS v").coalesce(1)
       .write.format(Fmt).option("path", dir).mode("append").save()
     GraftLog.renameColumn(dir, "v", "w")
-    // the micro-batch stream uses the ROW reader — pre-rename files
-    // must serve their data under the new name there as well
+    // the micro-batch stream reads through the same columnar reader —
+    // pre-rename files must serve their data under the new name there
+    // as well
     val sink = tmp(); val ckpt = tmp()
     val q = spark.readStream.format(Fmt).option("path", dir).load()
       .writeStream.format(Fmt).option("path", sink)
@@ -193,7 +194,7 @@ class ColumnEvolutionSpec extends SparkSpec {
     assert(streamed.count() == 500L)
     assert(streamed.agg(sum(col("w"))).head.getLong(0) ==
       (0L until 500L).map(_ * 2).sum,
-      "the row reader must resolve the former name, not serve NULL")
+      "the stream must resolve the former name, not serve NULL")
     // renaming BACK to the own former name is safe and allowed
     GraftLog.renameColumn(dir, "w", "v")
     assert(read(dir).agg(sum(col("v"))).head.getLong(0) ==

@@ -216,8 +216,8 @@ class GcolSpec extends SparkSpec {
       s"unexpected rows: $rows")
   }
 
-  test("the row reader honors byte-range splits: ranged partitions " +
-      "tile the file exactly, no duplication") {
+  test("the columnar reader honors byte-range splits: ranged " +
+      "partitions tile the file exactly, no duplication") {
     import graft.sources.{GraftLogPartition, GraftLogReaderFactory}
     val dir = tmp()
     writeOneBigPart(dir, 20000)
@@ -229,11 +229,11 @@ class GcolSpec extends SparkSpec {
       .load().schema
     val fac = new GraftLogReaderFactory(schema, schema)
     def rowsOf(start: Long, length: Long): Long = {
-      val r = fac.createReader(GraftLogPartition(
+      val r = fac.createColumnarReader(GraftLogPartition(
         dir, part.getName, Seq("id", "v", "tag", "nullable"),
         None, start, length))
       var n = 0L
-      try while (r.next()) n += 1 finally r.close()
+      try while (r.next()) n += r.get().numRows() finally r.close()
       n
     }
     // split at a mid-block offset: [0, mid) + [mid, ∞) must tile
@@ -280,8 +280,8 @@ class GcolSpec extends SparkSpec {
         (0L until 21000L).map(i => (i % 3) * 0.25).sum) < 1e-6)
     }
     checks()
-    // the row/streaming path resolves renames identically: read one
-    // pre-rename file through the line shim and check its cells
+    // the reads above resolved the renames through the trail of a
+    // file still written under the old names
     val pre = GraftLog.entriesAsOf(dir, Long.MaxValue)
       .filter(_.cols == Seq("id", "lvl", "w"))
     assert(pre.nonEmpty, "pre-rename file must survive the rename")
@@ -453,7 +453,7 @@ class GcolSpec extends SparkSpec {
     assert(msgs(err).exists(m => m.contains("gcol")),
       s"expected a descriptive gcol error, got: ${msgs(err)}")
     // a part that is not gcol at all (a gzip TSV file committed to the
-    // log) fails the same way on the batch and the streaming read
+    // log) fails the same way
     val tsv = tmp()
     val tsvPart = "part-0000.tsv.gz"
     val gz = new java.util.zip.GZIPOutputStream(
@@ -471,11 +471,6 @@ class GcolSpec extends SparkSpec {
     }
     assert(msgs(errBatch).exists(_.contains("not a gcol file")),
       msgs(errBatch))
-    val rowFac =
-      new graft.sources.GraftLogReaderFactory(idSchema, idSchema)
-    val errRow = intercept[IllegalArgumentException](rowFac.createReader(
-      graft.sources.GraftLogPartition(tsv, tsvPart, Seq("id"))))
-    assert(errRow.getMessage.contains("not a gcol file"))
   }
 
   test("eight concurrent lock-free appends all commit exactly once") {

@@ -187,11 +187,11 @@ class GraftCatalogSpec extends SparkSpec {
       assert(t.filter(col("id") >= 500 && col("id") < 700).count() == 0)
       assert(t.agg(sum(col("v"))).head.getLong(0) ==
         2 * ((0L until 4000L).sum - (500L until 700L).sum))
-      // stats targeting: of the 4 range files, at most 2 retired
-      val removes = spark.sql(
-        """SELECT COUNT(*) FROM graftcat.db3.`d$files`
-           WHERE action = 'remove'""").head.getLong(0)
-      assert(removes >= 1 && removes <= 2, s"removes=$removes")
+      // stats targeting: of the 4 range files, at most 2 carry a DV
+      val dvFiles = graft.sources.GraftLog
+        .entriesAsOf(s"$wh/db3/d", Long.MaxValue)
+        .count(e => graft.sources.GraftLog.dvOf(e).isDefined)
+      assert(dvFiles >= 1 && dvFiles <= 2, s"dvFiles=$dvFiles")
       // NULL-predicate rows survive (DELETE drops only TRUE rows)
       spark.sql("ALTER TABLE graftcat.db3.d ADD COLUMN w BIGINT")
       spark.sql("DELETE FROM graftcat.db3.d WHERE w > 0")
@@ -312,6 +312,45 @@ class GraftCatalogSpec extends SparkSpec {
       assert(spark.sql(
         "SELECT SUM(v) FROM graftcat.db6.u VERSION AS OF 0")
         .head.getLong(0) == 31996000L)
+    }
+  }
+
+  test("a SQL UPDATE whose scanned file gains a DV mid-job aborts " +
+      "retryably and the row stays hidden") {
+    import graft.sources.{GraftConcurrentModificationException, GraftLog,
+      GraftLogDv, LogEntry}
+    withCatalog {
+      spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.race")
+      spark.sql("CREATE TABLE graftcat.race.u (id BIGINT, v BIGINT)")
+      spark.sql("""INSERT INTO graftcat.race.u
+        SELECT /*+ REPARTITION(1) */ id, id FROM range(0, 100)""")
+      val dir = s"$wh/race/u"
+      val Seq(file) = GraftLog.entriesAsOf(dir, Long.MaxValue).map(_.file)
+      val schema = GraftLog.storedSchema(dir).get
+      val pos = spark.read.format("graft.sources.GraftLogSource")
+        .option("path", dir).load().filter(col("id") === 99L)
+        .select(col("_pos")).head.getLong(0)
+      // the SET clause's UDF commits, once and while the UPDATE's job
+      // runs, a DV hiding row 99 of the file the UPDATE scanned
+      UpdateRace.fired.set(false)
+      spark.udf.register("hide_once", (v: Long) => {
+        if (UpdateRace.fired.compareAndSet(false, true))
+          GraftLog.commitNew(dir, schema)(ver => Seq(LogEntry.dv(ver, file,
+            Some((GraftLogDv.write(dir, Array(pos)), 1L)))))
+        v
+      })
+      val err = intercept[Exception](spark.sql(
+        "UPDATE graftcat.race.u SET v = hide_once(v) + 1000 WHERE id < 10"))
+      def chain(t: Throwable): Seq[Throwable] =
+        Option(t).toSeq.flatMap(e => e +: chain(e.getCause))
+      assert(chain(err).exists(_.isInstanceOf[
+        GraftConcurrentModificationException]), chain(err))
+      assert(UpdateRace.fired.get())
+      // the rewrite did not publish: row 99 stays hidden, no v moved
+      val r = spark.sql(
+        "SELECT COUNT(*), SUM(v), MAX(id) FROM graftcat.race.u").head
+      assert((r.getLong(0), r.getLong(1), r.getLong(2)) ==
+        (99L, (0L until 99L).sum, 98L), r)
     }
   }
 
@@ -771,7 +810,7 @@ class GraftCatalogSpec extends SparkSpec {
     }
   }
 
-  test("SQL DELETE under deleteMode=mor commits a DV, rewrites nothing") {
+  test("SQL DELETE commits a DV, rewrites nothing") {
     withCatalog {
       spark.sql("CREATE NAMESPACE IF NOT EXISTS graftcat.dvdb")
       spark.sql("CREATE TABLE graftcat.dvdb.t (id BIGINT, v BIGINT)")
@@ -781,11 +820,8 @@ class GraftCatalogSpec extends SparkSpec {
       val dir = s"$wh/dvdb/t"
       val before = graft.sources.GraftLog
         .entriesAsOf(dir, Long.MaxValue).map(_.file).toSet
-      spark.conf.set("spark.graft.log.deleteMode", "mor")
-      try
-        spark.sql(
-          "DELETE FROM graftcat.dvdb.t WHERE id >= 1000 AND id < 1500")
-      finally spark.conf.unset("spark.graft.log.deleteMode")
+      spark.sql(
+        "DELETE FROM graftcat.dvdb.t WHERE id >= 1000 AND id < 1500")
       val after = graft.sources.GraftLog.entriesAsOf(dir, Long.MaxValue)
       assert(after.map(_.file).toSet == before,
         "MoR SQL DELETE must not rewrite part files")
@@ -797,11 +833,13 @@ class GraftCatalogSpec extends SparkSpec {
       // the DV commit shows up in the files introspection surface
       assert(spark.sql("""SELECT COUNT(*) FROM graftcat.dvdb.`t$files`
         WHERE action = 'dv'""").head.getLong(0) == 1L)
-      // and the default mode still rewrites copy-on-write
+      // a second DELETE in another file hides its rows the same way
       spark.sql(
-        "DELETE FROM graftcat.dvdb.t WHERE id >= 2000 AND id < 2100")
-      assert(graft.sources.GraftLog.entriesAsOf(dir, Long.MaxValue)
-        .map(_.file).toSet != before)
+        "DELETE FROM graftcat.dvdb.t WHERE id >= 6000 AND id < 6100")
+      val after2 = graft.sources.GraftLog.entriesAsOf(dir, Long.MaxValue)
+      assert(after2.map(_.file).toSet == before)
+      assert(after2.count(e => graft.sources.GraftLog.dvOf(e).isDefined)
+        == 2)
       assert(spark.table("graftcat.dvdb.t").count() == 7400)
     }
   }
@@ -1201,4 +1239,9 @@ class GraftCatalogSpec extends SparkSpec {
     assert(spark.sql("SELECT COUNT(*) FROM graftcat.dbl.rt")
       .head.getLong(0) == 30L)
   }
+}
+
+/** The once-only trigger of the UPDATE race test's UDF. */
+object UpdateRace {
+  val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
 }

@@ -18,6 +18,20 @@ class GraftLogSpec extends SparkSpec {
       "concat('t', id % 7) AS tag")
   private def readBack(dir: String): DataFrame =
     spark.read.format(Fmt).option("path", dir).load()
+  /** DELETE the `id` range [lo, hi); `maxPositions = 0` forces the
+    * copy-on-write rewrite. Returns (filesTouched, filesTotal). */
+  private def deleteIds(dir: String, lo: Long, hi: Long,
+      maxPositions: Int = graft.sources.GraftLog.MaxDvPositions)
+      : (Int, Int) = {
+    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThan}
+    val (t, n, _) = graft.sources.GraftLog.deleteWhereMoR(spark, dir,
+      Array(GreaterThanOrEqual("id", lo), LessThan("id", hi)),
+      maxPositions)
+    (t, n)
+  }
+  private def dvFiles(dir: String): Int =
+    graft.sources.GraftLog.entriesAsOf(dir, Long.MaxValue)
+      .count(e => graft.sources.GraftLog.dvOf(e).isDefined)
 
   test("append round trip preserves every row and type") {
     val dir = tmp()
@@ -946,6 +960,19 @@ class GraftLogSpec extends SparkSpec {
       baseVersion = baseC2)
     assert(rowsOf(c, 20) == Seq(-20L) && rowsOf(c, 10).isEmpty)
     assert(readBack(c).count() == 999)
+    // 4. an unconditional DELETE planned before a concurrent compaction:
+    // its removes name only the retired inputs, so the compacted file
+    // would stay live with every row
+    val d = tmp()
+    spark.range(0, 500).selectExpr("id", "id AS v").coalesce(1)
+      .write.format(Fmt).option("path", d).mode("append").save()
+    spark.range(500, 1000).selectExpr("id", "id AS v").coalesce(1)
+      .write.format(Fmt).option("path", d).mode("append").save()
+    val baseD = GraftLog.currentVersion(d)
+    assert(GraftLog.compact(d) == 2)
+    retryable(GraftLog.deleteWhereMoR(spark, d, Array.empty,
+      baseVersion = baseD))
+    assert(readBack(d).count() == 1000)
   }
 
   test("NULL-keyed batch rows insert beside a DV merge and match no " +
@@ -1375,7 +1402,7 @@ class GraftLogSpec extends SparkSpec {
     val dir = tmp()
     spark.range(0, 500).selectExpr("id", "id AS v").repartition(3)
       .write.format(Fmt).option("path", dir).mode("append").save()
-    val (r, t) = graft.sources.GraftLog.deleteWhere(spark, dir,
+    val (r, t, _) = graft.sources.GraftLog.deleteWhereMoR(spark, dir,
       Array.empty)
     assert(r == t && t == 3)
     assert(readBack(dir).count() == 0)
@@ -1390,10 +1417,10 @@ class GraftLogSpec extends SparkSpec {
       .repartitionByRange(4, col("id"))
       .write.format(Fmt).option("path", dir).mode("append").save()
     import org.apache.spark.sql.sources.In
-    val (rewritten, total) = graft.sources.GraftLog.deleteWhere(
+    val (touched, total, _) = graft.sources.GraftLog.deleteWhereMoR(
       spark, dir, Array(In("id", Array(5L, null))))
-    assert(total == 4 && rewritten <= 1,
-      s"NULL member must not break stats targeting: $rewritten/$total")
+    assert(total == 4 && touched <= 1 && dvFiles(dir) == touched,
+      s"NULL member must not break stats targeting: $touched/$total")
     val back = readBack(dir)
     assert(back.count() == 3999)
     assert(back.filter(col("id") === 5).count() == 0)
@@ -1443,8 +1470,7 @@ class GraftLogSpec extends SparkSpec {
     spark.range(0, 4000).selectExpr("id", "id AS v")
       .repartitionByRange(4, col("id"))
       .write.format(Fmt).option("path", dir).mode("append").save()
-    val (rewritten, total) = graft.sources.GraftLog
-      .deleteRange(spark, dir, "id", 500, 700)
+    val (rewritten, total) = deleteIds(dir, 500, 700, maxPositions = 0)
     assert(total == 4 && rewritten < total)
     val back = readBack(dir)
     assert(back.count() == 3800)
@@ -1632,8 +1658,8 @@ class GraftLogSpec extends SparkSpec {
     GraftLog.entriesAsOf(dir, Long.MaxValue).foreach(e =>
       java.nio.file.Files.write(java.nio.file.Paths.get(dir, e.file),
         Array.fill[Byte](64)(0x7f)))
-    intercept[Exception](
-      GraftLog.deleteWhere(spark, dir, Array(LessThan("id", 10L))))
+    intercept[Exception](GraftLog.deleteWhereMoR(spark, dir,
+      Array(LessThan("id", 10L)), maxPositions = 0))
     assert(scratchDirs(dir).isEmpty,
       s"failed rewrite left scratch tables: ${scratchDirs(dir)}")
     assert(GraftLog.currentVersion(dir) == v0)
@@ -1912,7 +1938,7 @@ class GraftLogSpec extends SparkSpec {
       .option("partitionCol", "k").mode("append").save()
     // the maintenance rewrite machinery (shared by COW delete/merge)
     // must re-route rewritten rows into per-value files
-    graft.sources.GraftLog.deleteRange(spark, dir, "id", 100, 200)
+    deleteIds(dir, 100, 200, maxPositions = 0)
     val live = graft.sources.GraftLog.entriesAsOf(dir, Long.MaxValue)
     assert(live.forall(e =>
       graft.sources.GraftLogPartValue.of(e, "k").isDefined),
@@ -1967,7 +1993,8 @@ class GraftLogSpec extends SparkSpec {
     assert(mid.entries.map(_.rows).sum == 175L)
   }
 
-  test("vectorized and row decoders agree on evolution, nulls, and _file") {
+  test("the columnar decoder serves evolution, nulls, _file and " +
+      "projection order") {
     import graft.sources.{GraftLog, GraftLogPartition, GraftLogReaderFactory}
     import org.apache.spark.sql.types.{LongType, StringType, StructField,
       StructType}
@@ -1991,44 +2018,133 @@ class GraftLogSpec extends SparkSpec {
       StructField("w", LongType), StructField("tag", StringType),
       StructField("_file", StringType), StructField("id", LongType),
       StructField("v", LongType)))
-    def render(fac: GraftLogReaderFactory, columnar: Boolean): Seq[String] =
-      GraftLog.entriesAsOf(dir, Long.MaxValue).flatMap { e =>
-        val p = GraftLogPartition(dir, e.file, e.cols)
-        val rows = scala.collection.mutable.ArrayBuffer.empty[String]
-        def fmt(r: org.apache.spark.sql.catalyst.InternalRow): String =
-          required.fields.zipWithIndex.map { case (f, i) =>
+    val fac = new GraftLogReaderFactory(table, required)
+    val entries = GraftLog.entriesAsOf(dir, Long.MaxValue)
+    val rows = entries.flatMap { e =>
+      val out = scala.collection.mutable.ArrayBuffer.empty[String]
+      val rd = fac.createColumnarReader(GraftLogPartition(dir, e.file,
+        e.cols))
+      while (rd.next()) {
+        val it = rd.get().rowIterator()
+        while (it.hasNext) {
+          val r = it.next()
+          out += required.fields.zipWithIndex.map { case (f, i) =>
             if (r.isNullAt(i)) "NULL"
             else f.dataType match {
               case LongType => r.getLong(i).toString
               case _ => r.getUTF8String(i).toString
             }
           }.mkString("|")
-        if (columnar) {
-          val rd = fac.createColumnarReader(p)
-          while (rd.next()) {
-            val it = rd.get().rowIterator()
-            while (it.hasNext) rows += fmt(it.next())
-          }
-          rd.close()
-        } else {
-          val rd = fac.createReader(p)
-          while (rd.next()) rows += fmt(rd.get())
-          rd.close()
         }
-        rows
       }
-    val fac = new GraftLogReaderFactory(table, required, columnar = true)
-    val viaRows = render(fac, columnar = false)
-    val viaBatches = render(fac, columnar = true)
-    assert(viaRows.size == 700)
-    assert(viaRows == viaBatches,
-      viaRows.zip(viaBatches).collectFirst {
-        case (a, b) if a != b => s"row='$a' columnar='$b'"
-      }.getOrElse("size mismatch"))
-    // the evolution contract held: vintage-1 rows read NULL for w
-    assert(viaRows.take(500).forall(_.startsWith("NULL|")))
-    // and nulls in both decode paths surfaced (v and tag carry them)
-    assert(viaRows.exists(_.split("\\|")(1) == "NULL"))
+      rd.close()
+      out
+    }
+    // every row, in the required (w, tag, _file, id, v) order: w NULL
+    // for vintage 1, the NULLs of v and tag surfaced, _file naming the
+    // row's own part file
+    val Seq(f1, f2) = entries.map(_.file)
+    def cell(x: Option[Any]) = x.fold("NULL")(_.toString)
+    val expected = (0L until 500L).map(id => Seq("NULL",
+      cell(Option.when(id % 5 != 2)(s"t${id % 5}")), f1, id.toString,
+      cell(Option.when(id % 7 != 3)(id % 7))).mkString("|")) ++
+      (500L until 700L).map(id => Seq((id * 2).toString, s"t${id % 5}",
+        f2, id.toString, (id % 7).toString).mkString("|"))
+    assert(rows.size == 700)
+    assert(rows == expected, rows.zip(expected).collectFirst {
+      case (a, b) if a != b => s"read='$a' expected='$b'"
+    }.getOrElse("size mismatch"))
+    // the one reader has no row path
+    intercept[UnsupportedOperationException](
+      fac.createReader(GraftLogPartition(dir, f1, entries.head.cols)))
+  }
+
+  test("a DELETE's position scan over four files runs as one job") {
+    import graft.sources.GraftLog
+    import org.apache.spark.sql.sources.In
+    val dir = tmp()
+    spark.range(0, 4000).selectExpr("id", "id AS v")
+      .repartitionByRange(4, col("id"))
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    var res = (0, 0, false)
+    // one matched row in each of the four files
+    val jobs = jobsDuring {
+      res = GraftLog.deleteWhereMoR(spark, dir,
+        Array(In("id", Array(5L, 1500L, 2500L, 3500L))))
+    }
+    assert(res == (4, 4, true), res)
+    assert(jobs == 1, s"the position scan ran $jobs jobs")
+    assert(dvFiles(dir) == 4)
+    assert(readBack(dir).count() == 3996L)
+  }
+
+  test("a DELETE over the position cap in many files ships no positions " +
+    "and rewrites copy-on-write") {
+    import graft.sources.GraftLog
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+      SparkListenerTaskEnd}
+    import org.apache.spark.sql.sources.{In, LessThan}
+    val dir = tmp()
+    spark.range(0, 24000).selectExpr("id", "id AS v")
+      .repartitionByRange(12, col("id"))
+      .write.format(Fmt).option("path", dir).mode("append").save()
+    val cap = 1500
+    // the largest task result (bytes) of the first job `body` starts:
+    // the position scan
+    def scanResultBytes(body: => Unit): Long = {
+      val sc = spark.sparkContext
+      val tag = "graft.test.scanResultBytes"
+      val token = java.util.UUID.randomUUID().toString
+      val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+      val max = new java.util.concurrent.atomic.AtomicLong
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (stages.isEmpty &&
+              Option(e.properties).exists(_.getProperty(tag) == token))
+            e.stageIds.foreach(stages.add)
+        override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+          if (stages.contains(e.stageId) && e.taskMetrics != null)
+            max.accumulateAndGet(e.taskMetrics.resultSize, math.max)
+      }
+      sc.addSparkListener(listener)
+      sc.setLocalProperty(tag, token)
+      try { body; org.apache.spark.GraftTestShim.drainListeners(sc) }
+      finally {
+        sc.setLocalProperty(tag, null)
+        sc.removeSparkListener(listener)
+      }
+      max.get
+    }
+    val files = GraftLog.entriesAsOf(dir, Long.MaxValue).map(_.file).toSet
+    assert(files.size == 12)
+    // every file matches all of its ~2,000 rows, each over the cap
+    var res = (0, 0, false)
+    val bytes = scanResultBytes {
+      res = GraftLog.deleteWhereMoR(spark, dir,
+        Array(LessThan("id", 24000L)), maxPositions = cap)
+    }
+    assert(res == (12, 12, false), res)
+    assert(bytes > 0L && bytes < cap * 8L,
+      s"a scan task shipped $bytes bytes, as much as $cap positions")
+    assert(dvFiles(dir) == 0)
+    assert(readBack(dir).count() == 0L)
+    assert(GraftLog.entriesAsOf(dir, Long.MaxValue).map(_.file).toSet
+      .intersect(files).isEmpty)
+    // every file under the cap, all of them over it: 200 matches each
+    val dir2 = tmp()
+    spark.range(0, 24000).selectExpr("id", "id AS v")
+      .repartitionByRange(12, col("id"))
+      .write.format(Fmt).option("path", dir2).mode("append").save()
+    val files2 = GraftLog.entriesAsOf(dir2, Long.MaxValue).map(_.file).toSet
+    val res2 = GraftLog.deleteWhereMoR(spark, dir2,
+      Array(In("id", (0L until 24000L by 10L).toArray[Any])),
+      maxPositions = cap)
+    assert(res2 == (12, 12, false), res2)
+    assert(dvFiles(dir2) == 0)
+    assert(GraftLog.entriesAsOf(dir2, Long.MaxValue).map(_.file).toSet
+      .intersect(files2).isEmpty)
+    assert(readBack(dir2).count() == 21600L)
+    assert(readBack(dir2).filter(col("id") % 10 === 0).isEmpty)
   }
 
   test("MoR delete: deletion vector hides rows without rewriting files") {
@@ -2327,7 +2443,7 @@ class GraftLogSpec extends SparkSpec {
       // row-level mutations refuse to run mid-audit (they cannot
       // stage — silent immediate commit would break the pattern)
       intercept[IllegalStateException] {
-        GraftLog.deleteRange(spark, dir, "id", 0L, 10L)
+        deleteIds(dir, 0L, 10L)
       }
     } finally spark.conf.unset(GraftLog.WapConf)
     // no commit happened; an ordinary reader sees only v0

@@ -200,7 +200,9 @@ class IvmHardeningSpec extends SparkSpec {
       .mode("append").save()
     assert(MaterializedAgg.refresh(spark, src, mv, "k", Seq("v"))
       .mode == "bootstrap")
-    GraftLog.deleteRange(spark, src, "id", 100L, 200L)
+    GraftLog.deleteWhereMoR(spark, src, Array(
+      org.apache.spark.sql.sources.GreaterThanOrEqual("id", 100L),
+      org.apache.spark.sql.sources.LessThan("id", 200L)))
     val r = MaterializedAgg.refresh(spark, src, mv, "k", Seq("v"))
     assert(r.mode == "bootstrap",
       s"a non-append span must re-bootstrap, got ${r.mode}")
@@ -269,7 +271,8 @@ class IvmHardeningSpec extends SparkSpec {
     Replication.sync(spark, src, dst, "id")
     // an uncovered rewrite: replaceFiles (the SQL UPDATE commit
     // shape) changes rows with NO sidecars even though CDF is on
-    val live = GraftLog.entriesAsOf(src, Long.MaxValue)
+    val base = GraftLog.currentVersion(src)
+    val live = GraftLog.entriesAsOf(src, base)
     val rewritten = spark.read.format(Fmt).option("path", src).load()
       .withColumn("v", when(col("id") < 10, -col("id"))
         .otherwise(col("v")))
@@ -283,7 +286,7 @@ class IvmHardeningSpec extends SparkSpec {
     GraftLog.replaceFiles(src, live.map(_.file),
       fresh.map(e => graft.sources.GraftLogCommit(e.file, e.rows,
         e.stats, e.cols)),
-      GraftLog.storedSchema(src).get)
+      GraftLog.storedSchema(src).get, base)
     val s1 = Replication.sync(spark, src, dst, "id")
     assert(s1.mode == "incremental")
     assert(Replication.identical(spark, src, dst),
