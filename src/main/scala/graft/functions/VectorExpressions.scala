@@ -1,12 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.{FunctionIdentifier, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Cast, EvalMode, Expression, ExpressionInfo, Literal, UnaryExpression, UnsafeArrayData}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType, LongType}
 import org.apache.spark.sql.SparkSessionExtensions
 
 /** Native dot product over two `array<float>` columns.
@@ -173,6 +175,218 @@ case class SquaredL2(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): SquaredL2 =
     copy(left = newLeft, right = newRight)
+}
+
+/** The nearest centroid's id for each quantized vector — the
+  * assignment step of IVF and PQ k-means and of PQ encoding, as one
+  * fused loop: exact integer squared-L2 (the [[SquaredL2]] arithmetic)
+  * against every centroid of the vector's set, ties to the smaller id.
+  * The composed form crossed every vector with every centroid, one
+  * `graft_sqdist` row per pair, and sorted them in a `row_number`
+  * window to keep one per vector: O(n·k) materialized rows per pass
+  * where this keeps the k·d arithmetic in registers.
+  *
+  * `graft_nearest(vec_id, vec, set, ids, cents)`: `ids[set]` names the
+  * centroids of set `set` and `cents[set]` holds them flattened
+  * row-major; both are foldable (the driver passes the trained
+  * centroids as literals — IVF one set, PQ one per subspace). A
+  * malformed vector (NULL, a NULL element, or a length other than its
+  * set's dimension) has no distance to the centroids, so it throws,
+  * naming its `vec_id`. */
+case class NearestCentroid(vecId: Expression, vec: Expression,
+    set: Expression, ids: Expression, cents: Expression)
+    extends Expression {
+
+  override def children: Seq[Expression] = Seq(vecId, vec, set, ids, cents)
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_nearest"
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    def longs(dt: DataType): Boolean = dt match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    }
+    def nested(dt: DataType): Boolean = dt match {
+      case ArrayType(inner, _) => longs(inner)
+      case _ => false
+    }
+    if (vecId.dataType != LongType || set.dataType != IntegerType ||
+        !longs(vec.dataType) || !nested(ids.dataType) ||
+        !nested(cents.dataType))
+      TypeCheckResult.TypeCheckFailure(
+        "graft_nearest(vec_id, vec, set, ids, cents) requires bigint, " +
+          "array<bigint>, int, array<array<bigint>>, array<array<bigint>>, " +
+          s"got ${children.map(_.dataType.simpleString).mkString(", ")}")
+    else if (!ids.foldable || !cents.foldable)
+      TypeCheckResult.TypeCheckFailure(
+        "graft_nearest: ids and cents must be literals")
+    else TypeCheckResult.TypeCheckSuccess
+  }
+
+  @transient private lazy val table = Centroids(
+    ids.eval().asInstanceOf[ArrayData], cents.eval().asInstanceOf[ArrayData])
+
+  override def eval(input: InternalRow): Any = {
+    val id = vecId.eval(input)
+    val s = set.eval(input)
+    table.nearest(id == null, if (id == null) 0L else id.asInstanceOf[Long],
+      vec.eval(input).asInstanceOf[ArrayData],
+      s == null, if (s == null) 0 else s.asInstanceOf[Int])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("centroids", table, classOf[Centroids].getName)
+    val id = vecId.genCode(ctx)
+    val v = vec.genCode(ctx)
+    val s = set.genCode(ctx)
+    ev.copy(isNull = FalseLiteral, code = code"""
+      |${id.code}
+      |${v.code}
+      |${s.code}
+      |long ${ev.value} = $t.nearest(${id.isNull}, ${id.value},
+      |  ${v.isNull} ? null : ${v.value}, ${s.isNull}, ${s.value});
+      """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): NearestCentroid =
+    copy(vecId = c(0), vec = c(1), set = c(2), ids = c(3), cents = c(4))
+}
+
+/** [[NearestCentroid]]'s centroid sets, each sorted by id so the first
+  * strict minimum is the smaller id of a tie. */
+final class Centroids private (ids: Array[Array[Long]],
+    cents: Array[Array[Long]], dims: Array[Int]) extends Serializable {
+
+  def nearest(idNull: Boolean, id: Long, v: ArrayData,
+      setNull: Boolean, set: Int): Long = {
+    def fail(what: String): Nothing = throw new IllegalArgumentException(
+      s"graft_nearest: vec_id ${if (idNull) "NULL" else id.toString} $what")
+    if (setNull || set < 0 || set >= ids.length || ids(set).isEmpty)
+      fail(s"names centroid set ${if (setNull) "NULL" else set.toString}, " +
+        "which has no centroids")
+    if (v == null) fail("has a NULL vector")
+    val d = dims(set)
+    val n = v.numElements()
+    if (n != d) fail(s"has $n elements; the centroids of set $set have $d")
+    val x = new Array[Long](n)
+    var i = 0
+    while (i < n) {
+      if (v.isNullAt(i)) fail(s"has a NULL element at position $i")
+      x(i) = v.getLong(i)
+      i += 1
+    }
+    val c = cents(set)
+    val cid = ids(set)
+    var best = 0
+    var bestDist = 0L
+    var j = 0
+    while (j < cid.length) {
+      val off = j * d
+      var acc = 0L
+      i = 0
+      while (i < d) {
+        val e = x(i) - c(off + i)
+        acc += e * e
+        i += 1
+      }
+      if (j == 0 || acc < bestDist) { best = j; bestDist = acc }
+      j += 1
+    }
+    cid(best)
+  }
+}
+
+object Centroids {
+  def apply(ids: ArrayData, cents: ArrayData): Centroids = {
+    require(ids.numElements() == cents.numElements(),
+      s"graft_nearest: ${ids.numElements()} id sets for " +
+        s"${cents.numElements()} centroid sets")
+    val sets = (0 until ids.numElements()).map { s =>
+      require(!ids.isNullAt(s) && !cents.isNullAt(s),
+        s"graft_nearest: centroid set $s is NULL")
+      val id = ids.getArray(s).toLongArray()
+      val flat = cents.getArray(s).toLongArray()
+      require(if (id.isEmpty) flat.isEmpty else flat.length % id.length == 0,
+        s"graft_nearest: set $s holds ${flat.length} centroid elements " +
+          s"for ${id.length} ids")
+      val d = if (id.isEmpty) 0 else flat.length / id.length
+      val order = id.indices.sortBy(id(_))
+      (order.map(id(_)).toArray,
+        order.flatMap(j => flat.slice(j * d, (j + 1) * d)).toArray, d)
+    }
+    new Centroids(sets.map(_._1).toArray, sets.map(_._2).toArray,
+      sets.map(_._3).toArray)
+  }
+}
+
+/** The quantization grid the trained vector indexes live on,
+  * `round(v·1000) + 1000` per element of an `array<float>`, as one fused
+  * loop. The composed form
+  * `transform(emb, v => (round(cast(v AS double) * 1000) + 1000).cast("long"))`
+  * runs an interpreted lambda and a `BigDecimal` per element; this
+  * gives the same value or the same error. Spark rounds HALF_UP the
+  * shortest decimal that prints the double. Below 2^52 that rounds
+  * exactly as the double itself does, because a half-integer there is
+  * a double of its own; at or above 2^52, and for NaN and the
+  * infinities, the kernel takes Spark's `BigDecimal` path. A result
+  * outside the bigint range goes through Spark's `Cast` under the eval
+  * mode the composed cast would have had, so an ANSI session fails on
+  * NaN with the same error. NULL elements stay NULL. */
+case class Quantize(child: Expression,
+    evalMode: EvalMode.Value = EvalMode.fromSQLConf(SQLConf.get))
+    extends UnaryExpression {
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
+    case dt => TypeCheckResult.TypeCheckFailure(
+      s"graft_quantize requires array<float>, got ${dt.simpleString}")
+  }
+  override def dataType: DataType = ArrayType(LongType,
+    child.dataType.asInstanceOf[ArrayType].containsNull)
+  override def prettyName: String = "graft_quantize"
+
+  override def nullSafeEval(input: Any): Any =
+    quantize(input.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val self = ctx.addReferenceObj("quantize", this)
+    defineCodeGen(ctx, ev, c => s"$self.quantize($c)")
+  }
+
+  def quantize(a: ArrayData): ArrayData = {
+    val n = a.numElements()
+    val out = new Array[Long](n)
+    var hasNull = false
+    var i = 0
+    while (i < n) {
+      if (a.isNullAt(i)) hasNull = true
+      else out(i) = cell(a.getFloat(i))
+      i += 1
+    }
+    if (!hasNull) UnsafeArrayData.fromPrimitiveArray(out)
+    else new GenericArrayData(Array.tabulate[Any](n)(j =>
+      if (a.isNullAt(j)) null else out(j)))
+  }
+
+  private def cell(v: Float): Long = {
+    val y = v.toDouble * 1000
+    val r =
+      if (y.isNaN || y.isInfinite) y
+      else if (math.abs(y) < 4503599627370496.0) { // 2^52
+        val a = math.abs(y)
+        val f = math.floor(a)
+        math.copySign(if (a - f >= 0.5) f + 1 else f, y)
+      } else java.math.BigDecimal.valueOf(y)
+        .setScale(0, java.math.RoundingMode.HALF_UP).doubleValue()
+    val z = r + 1000
+    if (math.abs(z) < 9.0e18) z.toLong
+    else Cast(Literal(z), LongType, None, evalMode).eval().asInstanceOf[Long]
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Quantize =
+    copy(child = newChild)
 }
 
 /** Size of the intersection of two SORTED long arrays — the hot
@@ -425,6 +639,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       new FunctionIdentifier("graft_sqdist"),
       new ExpressionInfo(classOf[SquaredL2].getCanonicalName, "graft_sqdist"),
       (children: Seq[Expression]) => SquaredL2(children(0), children(1))))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_nearest"),
+      new ExpressionInfo(classOf[NearestCentroid].getCanonicalName,
+        "graft_nearest"),
+      (children: Seq[Expression]) => {
+        require(children.length == 5,
+          "graft_nearest(vec_id, vec, set, ids, cents) takes 5 arguments, " +
+            s"got ${children.length}")
+        NearestCentroid(children(0), children(1), children(2), children(3),
+          children(4))
+      }))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_quantize"),
+      new ExpressionInfo(classOf[Quantize].getCanonicalName, "graft_quantize"),
+      (children: Seq[Expression]) => {
+        require(children.length == 1,
+          s"graft_quantize takes 1 argument, got ${children.length}")
+        Quantize(children.head)
+      }))
     ext.injectFunction((
       new FunctionIdentifier("graft_sorted_isect"),
       new ExpressionInfo(classOf[SortedIntersectSize].getCanonicalName,

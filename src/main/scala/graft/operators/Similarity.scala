@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -42,12 +42,25 @@ object Similarity {
 
   /** Integer squared-L2 over two `array<bigint>` columns — the codegen'd
     * [[graft.functions.SquaredL2]] kernel (one fused loop; replaces the
-    * interpreted `aggregate(zip_with(...))` fold that dominated IVF/PQ
-    * training cost at the 8x scale probe). Exact long arithmetic, so
-    * centroids and codes are identical to the composed form and to the
-    * DuckDB `list_reduce` oracles. */
+    * interpreted `aggregate(zip_with(...))` fold). Exact long
+    * arithmetic, so ADC distances are identical to the DuckDB
+    * `list_reduce` oracles. */
   def sqdist(a: Column, b: Column): Column =
     call_function("graft_sqdist", a, b)
+
+  /** Trained centroids on the driver: per set (IVF has one, PQ one per
+    * subspace), each centroid's id and vector, sorted by id. */
+  private type Cents = IndexedSeq[Seq[(Long, Array[Long])]]
+
+  /** Each quantized vector's nearest centroid of its `set` — the
+    * codegen'd [[graft.functions.NearestCentroid]] kernel
+    * (`graft_nearest`): exact integer squared-L2, ties to the smaller
+    * id, the centroids passed in as literals. It fails naming the
+    * `vec_id` of a malformed vector. */
+  private def nearest(v: Column, set: Column, cents: Cents): Column =
+    call_function("graft_nearest", col("vec_id"), v, set,
+      typedLit(cents.map(_.map(_._1))),
+      typedLit(cents.map(_.flatMap(_._2.toSeq))))
 
   /** splitmix64 finalizer (public-domain PRNG, Steele et al. 2014) —
     * deterministic hyperplane source with zero driver state beyond the
@@ -84,7 +97,7 @@ object Similarity {
     * must train on the SAME grid or the composed IVFADC query would
     * route on one geometry and score on another. */
   private def quantize(emb: Column): Column =
-    transform(emb, v => (round(v.cast("double") * 1000) + 1000).cast("long"))
+    call_function("graft_quantize", emb)
 
   /** Sign-random-projection signature of an embedding column: bit `p` is
     * the sign of the dot product with precomputed hyperplane `p`.
@@ -112,6 +125,101 @@ object Similarity {
         .select(col("vec_id"), col("embedding"),
           srpSignature(col("embedding")).as("sig")))
 
+  /** The embeddings' row count, which sizes both trained indexes: one
+    * job per (session, fixture), shared by the IVF and PQ builds. */
+  private def corpusSize(s: SparkSession, d: String): Long =
+    graft.core.ArtifactCache.scalarOf(s, d, "embeddings_rows")(
+      Tables.embeddings(s, d).agg(count(lit(1))).head.getLong(0))
+
+  /** Integer k-means over the training sample `tr` (vec_id, set, v): `k`
+    * centroids per set, seeded by every (sample/k)-th member of the set
+    * BY RANK of vec_id, bounded to exactly k, then two Lloyd iterations.
+    * Rank, not raw id — the earlier `vec_id % stride` rule assumed ids
+    * dense in 0..n-1 and collapsed on a sparse id space (the 10x
+    * orthogonal-copy probe: 15 live cells where k=141); on a dense-id
+    * fixture rank == vec_id and the seeds are those of the old rule. The
+    * rank window runs over the BOUNDED sample, never the corpus. A seed
+    * is named by its vec_id (IVF) or by its rank / stride (PQ,
+    * `idByRank`).
+    *
+    * Each Lloyd pass is one job: the `graft_nearest` assignment feeds
+    * one partially aggregated sum and count per (set, cent_id, pos),
+    * which the driver collects and turns into the per-dimension integer
+    * mean — floor division on non-negative sums, so Spark and DuckDB
+    * agree; floor(a/b) on exact-integer doubles is exact since
+    * a ≤ 4e6 ≪ 2^53 and a/b can't round across an integer. That mean is
+    * the next pass's literal. A centroid no vector chose drops out, as
+    * in the oracle's GROUP BY. All integer arithmetic, so the DuckDB
+    * oracles replay the run bit for bit. */
+  private def kmeans(tr: DataFrame, sets: Int, k: Long, idByRank: Boolean,
+      what: String): Cents = {
+    // One job ranks each set and counts it: a set of sn members seeds
+    // from ranks 0, stride, ..., (k-1)·stride with stride = sn / k; a
+    // set smaller than k keeps its rank-0 row so the driver sees sn.
+    val stride = floor(col("sn") / lit(k))
+    val seeds = tr
+      .withColumn("srn",
+        row_number().over(Window.partitionBy(col("set"))
+          .orderBy(col("vec_id"))).cast("long") - 1)
+      .withColumn("sn", count(lit(1)).over(Window.partitionBy(col("set"))))
+      .filter(when(stride > 0, col("srn") % stride === 0 &&
+          col("srn") < stride * lit(k))
+        .otherwise(col("srn") === 0))
+      .select(col("set"), col("vec_id"),
+        (if (idByRank) floor(col("srn") / stride) else col("vec_id"))
+          .cast("long").as("cent_id"),
+        col("v"), col("sn"))
+      .collect()
+    val sn = seeds.map(_.getLong(4)).minOption.getOrElse(0L)
+    require(sn >= k, s"$what training sample $sn smaller than k=$k")
+    (1 to 2).foldLeft(seedSets(seeds, sets, what)) { (cents, _) =>
+      val sums = tr
+        .select(col("set"), nearest(col("v"), col("set"), cents).as("cent_id"),
+          col("v"))
+        .select(col("set"), col("cent_id"),
+          posexplode(col("v")).as(Seq("pos", "x")))
+        .groupBy(col("set"), col("cent_id"), col("pos"))
+        .agg(sum(col("x")), count(lit(1)))
+        .collect()
+      val bySet = sums.groupBy(_.getInt(0))
+      (0 until sets).map { set =>
+        bySet.getOrElse(set, Array.empty).groupBy(_.getLong(1)).toSeq
+          .map { case (id, rows) =>
+            val cq = new Array[Long](rows.length)
+            rows.foreach(r => cq(r.getInt(2)) =
+              math.floor(r.getLong(3).toDouble / r.getLong(4)).toLong)
+            id -> cq
+          }.sortBy(_._1)
+      }
+    }
+  }
+
+  /** The collected seeds (set, vec_id, cent_id, v) as centroid sets. A
+    * seed that is NULL, holds a NULL, or is shorter or longer than the
+    * other seeds of its set has no distance to the set's vectors, so it
+    * fails here, naming its vec_id. */
+  private def seedSets(rows: Array[Row], sets: Int, what: String): Cents = {
+    val bySet = rows.groupBy(_.getInt(0))
+    (0 until sets).map { set =>
+      val rs = bySet.getOrElse(set, Array.empty)
+      def len(r: Row): Int = if (r.isNullAt(3)) -1 else r.getSeq[Any](3).size
+      val dim = rs.groupBy(len).maxByOption { case (l, g) => (g.length, l) }
+        .map(_._1).getOrElse(0)
+      rs.toSeq.map { r =>
+        val v = if (r.isNullAt(3)) null else r.getSeq[Any](3)
+        val bad =
+          if (v == null) Some("is NULL")
+          else if (v.contains(null)) Some("holds a NULL")
+          else if (v.size != dim) Some(s"has ${v.size} elements; the " +
+            s"other seeds of set $set have $dim")
+          else None
+        bad.foreach(b => throw new IllegalArgumentException(
+          s"$what k-means seed vec_id ${r.get(1)} is malformed: it $b"))
+        r.getLong(2) -> v.map(_.asInstanceOf[Long]).toArray
+      }.sortBy(_._1)
+    }
+  }
+
   /** The trained IVF index — corpus → cell assignment
     * (vec_id, embedding, cent_id) — as a session+fixture artifact
     * shared by sim_ivf_ann (cell-probe search), sim_ivfpq_ann (cell
@@ -121,21 +229,19 @@ object Similarity {
     * k-means clustering per embedding space.
     *
     * Training (see the sim_ivf_ann scaladoc for the full rationale):
-    * k = ⌊√n⌋ cells seeded by every (sample/k)-th RANK of the bounded
-    * deterministic training sample (every m-th vec_id, m = max(1,
-    * n / max(2048, 39k)) — the FAISS train-on-a-sample rule; rank,
-    * not raw id, so sparse id spaces still yield k seeds), two Lloyd
-    * iterations over that sample, all in exact integer arithmetic
-    * (round(v·1000)+1000 quantization, codegen'd `graft_sqdist`
-    * assignment, floor-div centroid update) so the DuckDB oracles
-    * replay the run bit for bit. The one full pass is the final cell
-    * assignment — the index build itself. The quantized corpus is
-    * cached because three assignment passes reference it (10 scans
-    * uncached, 1 with it). */
+    * k = ⌊√n⌋ cells, [[kmeans]] over the bounded deterministic
+    * training sample (every m-th vec_id, m = max(1, n / max(2048,
+    * 39k)) — the FAISS train-on-a-sample rule) on the round(v·1000)+1000
+    * grid. The one full pass is the final cell assignment — the index
+    * build itself, one `graft_nearest` call per vector. The quantized
+    * corpus is checkpointed because the seeding, both Lloyd passes and
+    * the final assignment all read it. The index is
+    * hash-partitioned by vec_id before the write so AQE sizes its files
+    * by bytes (one file at the fixtures), as the rank window it replaced
+    * did. */
   private[graft] def ivfIndex(s: SparkSession, d: String): DataFrame =
     graft.core.ArtifactCache.persisted(s, d, "ivf_index", "v2") {
-      // localCheckpoint, NOT cache(): three assignment passes reuse the
-      // quantized corpus either way, but a cache() entry stays pinned in
+      // localCheckpoint, NOT cache(): a cache() entry stays pinned in
       // the CacheManager for the whole session after the artifact is
       // built (nothing ever unpersisted it — storage memory stolen from
       // every later query), while checkpoint blocks are reclaimed by the
@@ -144,62 +250,18 @@ object Similarity {
         .select(col("vec_id"), col("embedding"),
           quantize(col("embedding")).as("qv"))
         .localCheckpoint()
-      // n / k / stride / sample modulus on the driver: the count is one
-      // tiny job per session, and it lets the empty-corpus case fail
-      // LOUDLY here instead of training a quantizer over zero seeds.
-      val n = Tables.embeddings(s, d).agg(count(lit(1))).head.getLong(0)
+      // The count lets the empty-corpus case fail LOUDLY here instead
+      // of training a quantizer over zero seeds.
+      val n = corpusSize(s, d)
       require(n >= 1, s"IVF index over an empty embeddings table ($d)")
       val k = math.max(1L, math.floor(math.sqrt(n.toDouble)).toLong)
       val m = math.max(1L, n / math.max(2048L, k * 39L))
-      val wAssign = Window.partitionBy(col("vec_id"))
-        .orderBy(col("dist").asc, col("cent_id"))
-      def assign(vecs: DataFrame, cents: DataFrame): DataFrame =
-        vecs.join(broadcast(cents))
-          .select(col("vec_id"), col("embedding"), col("qv"), col("cent_id"),
-            sqdist(col("qv"), col("cq")).as("dist"))
-          .withColumn("arn", row_number().over(wAssign))
-          .filter(col("arn") === 1)
-          .select(col("vec_id"), col("embedding"), col("qv"), col("cent_id"))
-      // Lloyd update: per-dimension integer mean (floor div — all values
-      // are non-negative, so Spark and DuckDB divisions agree;
-      // floor(a/b) on exact-integer doubles is exact since a ≤ 4e6 ≪
-      // 2^53 and a/b can't round across an integer).
-      def update(assigned: DataFrame): DataFrame =
-        assigned.select(col("cent_id"), posexplode(col("qv")).as(Seq("pos", "v")))
-          .groupBy(col("cent_id"), col("pos"))
-          .agg(floor(sum(col("v")) / count(lit(1))).cast("long").as("cmean"))
-          .groupBy(col("cent_id"))
-          .agg(transform(array_sort(collect_list(struct(col("pos"), col("cmean")))),
-            x => x.getField("cmean")).as("cq"))
-      // Bounded training sample: every m-th vec_id (deterministic, so
-      // the oracle replays the identical slice).
-      val tr = emb
-        .filter(col("vec_id") % lit(m) === 0)
-        .select(col("vec_id"), col("embedding"), col("qv"))
-      // Seeds: every (sample/k)-th member of the training sample BY
-      // RANK, bounded to exactly k. Rank, not raw id — the earlier
-      // `vec_id % stride` rule assumed ids dense in 0..n-1 and
-      // collapsed on a sparse id space (the 10x orthogonal-copy probe:
-      // 15 live cells where k=141, max cell 1434, candidate pairs 9.4x
-      // the n^1.5 envelope — any production corpus has sparse ids).
-      // The rank window runs over the BOUNDED sample (max(2048, 39k)
-      // rows), not the corpus, so the single-partition sort is a
-      // constant-ish cost however big the table — the FAISS shape:
-      // seeds come from the training slice. On a dense-id fixture
-      // sample rank == vec_id and the seed set is bit-identical to the
-      // old rule (every committed oracle result is unchanged).
-      val sn = tr.agg(count(lit(1))).head.getLong(0)
-      require(sn >= k, s"IVF training sample $sn smaller than k=$k")
-      val sstride = sn / k
-      val wSample = Window.orderBy(col("vec_id"))
-      val seeds = tr
-        .withColumn("srn", row_number().over(wSample).cast("long") - 1)
-        .filter(col("srn") % lit(sstride) === 0 &&
-          col("srn") < lit(sstride * k))
-        .select(col("vec_id").as("cent_id"), col("qv").as("cq"))
-      val trained = update(assign(tr, update(assign(tr, seeds))))
-      assign(emb, trained)
-        .select(col("vec_id"), col("embedding"), col("cent_id"))
+      val tr = emb.filter(col("vec_id") % lit(m) === 0)
+        .select(col("vec_id"), lit(0).as("set"), col("qv").as("v"))
+      val cents = kmeans(tr, 1, k, idByRank = false, "IVF")
+      emb.select(col("vec_id"), col("embedding"),
+          nearest(col("qv"), lit(0), cents).as("cent_id"))
+        .repartition(col("vec_id"))
     }
 
   private val PqNumSub = 4
@@ -220,81 +282,48 @@ object Similarity {
           .as("x"))
         .select(col("vec_id"), col("x.sub").as("sub"), col("x.sqv").as("sqv")))
 
-  /** One PQ assignment pass: each (vector, subspace) subvector to its
-    * nearest same-subspace centroid by integer squared-L2 (codegen'd
-    * `graft_sqdist`), ties to the smallest cent_id. */
-  private def pqAssign(vecs: DataFrame, cents: DataFrame): DataFrame = {
-    val wA = Window.partitionBy(col("vec_id"), col("sub"))
-      .orderBy(col("dist").asc, col("cent_id"))
-    vecs.join(broadcast(cents), "sub")
-      .select(col("vec_id"), col("sub"), col("sqv"), col("cent_id"),
-        sqdist(col("sqv"), col("cq")).as("dist"))
-      .withColumn("arn", row_number().over(wA))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("sub"), col("sqv"), col("cent_id"))
-  }
-
-  /** One per-subspace Lloyd update: per-dimension integer mean (floor
-    * div on non-negative sums — Spark and DuckDB agree exactly). */
-  private def pqLloydUpdate(assigned: DataFrame): DataFrame =
-    assigned.select(col("sub"), col("cent_id"),
-        posexplode(col("sqv")).as(Seq("pos", "v")))
-      .groupBy(col("sub"), col("cent_id"), col("pos"))
-      .agg(floor(sum(col("v")) / count(lit(1))).cast("long").as("cmean"))
-      .groupBy(col("sub"), col("cent_id"))
-      .agg(transform(
-        array_sort(collect_list(struct(col("pos"), col("cmean")))),
-        x => x.getField("cmean")).as("cq"))
-
-  /** The trained PQ codebooks (sub, cent_id, cq). Training runs on a
-    * bounded deterministic sample (every m-th vec_id, m = max(1,
-    * n/2048) — 2048 vectors ≫ the 39·16 FAISS floor for 16 centroids):
-    * Lloyd cost stays constant as the corpus grows; only the one-pass
-    * final encoding touches every vector. m = 1 at the driver fixtures
-    * (results unchanged); the oracle replays the identical slice. */
-  private def pqCents(s: SparkSession, d: String): DataFrame =
+  /** The trained PQ codebooks (sub, cent_id, cq): [[kmeans]] per
+    * subspace, PqK centroids each, on a bounded deterministic sample
+    * (every m-th vec_id, m = max(1, n/2048) — 2048 vectors ≫ the 39·16
+    * FAISS floor for 16 centroids): Lloyd cost stays constant as the
+    * corpus grows; only the one-pass final encoding touches every
+    * vector. m = 1 at the driver fixtures; the oracle replays the
+    * identical slice. Built on the driver, so written as one file. */
+  private[graft] def pqCents(s: SparkSession, d: String): DataFrame =
     graft.core.ArtifactCache.persisted(s, d, "pq_cents", "v2") {
-      val subv = pqSubv(s, d)
-      // stride = n/16 is ZERO for a corpus under 16 vectors, and `x % 0`
-      // is NULL in both engines — every filter would drop every row and
-      // all PQ queries would return 0 rows with no error (the oracle
-      // degenerates identically, so the gate would pass vacuously).
-      // Fail loudly instead.
-      val n = Tables.embeddings(s, d).agg(count(lit(1))).head.getLong(0)
+      // stride = n/16 is ZERO for a corpus under 16 vectors, and the
+      // oracle's `x % 0` is NULL — its filters would drop every row, all
+      // PQ oracles would return 0 rows with no error, and the gate would
+      // pass vacuously. Fail loudly instead.
+      val n = corpusSize(s, d)
       require(n >= PqK,
         s"PQ training needs at least $PqK vectors, got $n ($d)")
       val m = math.max(1L, n / 2048L)
-      val tr = subv
+      val tr = pqSubv(s, d)
         .filter(col("vec_id") % lit(m) === 0)
-        .select(col("vec_id"), col("sub"), col("sqv"))
-      // Seeds by rank WITHIN the bounded sample, not by raw vec_id —
-      // the same sparse-id robustness fix as the IVF quantizer (see
-      // ivfIndex): on a dense-id fixture sample rank == vec_id and
-      // seed set + cent ids are bit-identical to the old
-      // `vec_id % (n/16)` rule. The rank window is per-subspace over
-      // the ≤2048-id sample — bounded, never the corpus.
-      val sn = tr.agg(count(lit(1))).head.getLong(0) / PqNumSub
-      require(sn >= PqK,
-        s"PQ training sample $sn smaller than $PqK ($d)")
-      val sstride = sn / PqK
-      val wSub = Window.partitionBy(col("sub")).orderBy(col("vec_id"))
-      val seeds = tr
-        .withColumn("srn", row_number().over(wSub).cast("long") - 1)
-        .filter(col("srn") % lit(sstride) === 0 &&
-          col("srn") < lit(sstride * PqK))
-        .select(col("sub"),
-          floor(col("srn") / lit(sstride)).cast("long").as("cent_id"),
-          col("sqv").as("cq"))
-      pqLloydUpdate(pqAssign(tr, pqLloydUpdate(pqAssign(tr, seeds))))
+        .select(col("vec_id"), col("sub").as("set"), col("sqv").as("v"))
+      val rows = kmeans(tr, PqNumSub, PqK, idByRank = true, "PQ")
+        .zipWithIndex.flatMap { case (set, sub) =>
+          set.map { case (id, cq) => (sub, id, cq.toSeq) } }
+      s.createDataFrame(rows).toDF("sub", "cent_id", "cq").coalesce(1)
     }
 
   /** The encoded corpus (vec_id, sub, code): every vector as a 4-code
     * word — 64× smaller than the raw floats, which is what keeps
-    * billion-vector indexes RAM-resident at 100 TB. */
-  private def pqCodes(s: SparkSession, d: String): DataFrame =
-    graft.core.ArtifactCache.persisted(s, d, "pq_codes", "v2")(
-      pqAssign(pqSubv(s, d), pqCents(s, d))
-        .select(col("vec_id"), col("sub"), col("cent_id").as("code")))
+    * billion-vector indexes RAM-resident at 100 TB. Each subvector's
+    * code is its `graft_nearest` centroid of its subspace; hash-
+    * partitioned like [[ivfIndex]] so AQE sizes the files by bytes. */
+  private[graft] def pqCodes(s: SparkSession, d: String): DataFrame =
+    graft.core.ArtifactCache.persisted(s, d, "pq_codes", "v2") {
+      val bySub = pqCents(s, d).collect().groupBy(_.getInt(0))
+      val cents = (0 until PqNumSub).map(sub =>
+        bySub.getOrElse(sub, Array.empty).toSeq
+          .map(r => r.getLong(1) -> r.getSeq[Long](2).toArray).sortBy(_._1))
+      pqSubv(s, d)
+        .select(col("vec_id"), col("sub"),
+          nearest(col("sqv"), col("sub"), cents).as("code"))
+        .repartition(col("vec_id"))
+    }
 
   /** Query-side ADC distance table for the 8 fixture query vectors:
     * (query_id, dsub, dcent, dd) — 64 entries per query, broadcast to
@@ -525,17 +554,21 @@ object Similarity {
     // instead of every vector. At the driver fixtures m = 1 (sample =
     // corpus, results unchanged); the 8x amplified probe trains on
     // ~1/3 of the corpus. Every training step is exact integer
-    // arithmetic — embeddings quantize to round(v·1000)+1000 ∈ [0,2000],
-    // assignment is integer squared-L2 via the codegen'd `graft_sqdist`
-    // kernel, centroid update is a non-negative integer floor-division
+    // arithmetic — embeddings quantize to round(v·1000)+1000 ∈ [0,2000]
+    // (the codegen'd `graft_quantize` kernel), assignment is integer
+    // squared-L2 to the nearest centroid (the codegen'd `graft_nearest`
+    // kernel), centroid update is a non-negative integer floor-division
     // — so the DuckDB oracle replays the whole training run (same m,
     // same sample) bit for bit; only the final rerank uses fp (the
     // strict-fold double dot both engines share). Each iteration is one
-    // broadcast join + one aggregation: the sampled embeddings never
-    // shuffle, and the ~√n-row centroid table is the only thing that
-    // moves. The one remaining full pass is the final cell assignment —
-    // the index build itself, one O(n·k) scan that production systems
-    // also pay (or approximate with an ANN coarse assigner). Queries
+    // job: the kernel assigns every sampled vector in registers against
+    // the centroids passed in as a literal, one partial aggregation
+    // sums each (cell, dimension), and only those k·d sums reach the
+    // driver, which computes the means for the next iteration. The
+    // sampled embeddings never shuffle. The one remaining full pass is
+    // the final cell assignment — the index build itself, O(n·k)
+    // arithmetic but O(n) rows, which production systems also pay (or
+    // approximate with an ANN coarse assigner). Queries
     // probe their own cell and rerank by exact dot — the 1/√n scan
     // saving of a production IVF index.
     "sim_ivf_ann" -> ((s, d) => {
@@ -789,9 +822,9 @@ object Similarity {
 
   /** One IVF assignment step as a DuckDB CTE: every quantized vector of
     * `src` to its nearest centroid by integer squared-L2, ties to the
-    * smallest cent_id — the exact mirror of the Spark `assign` window
-    * (training iterations read the sampled `tr`, the final index build
-    * reads the full `qv`). */
+    * smallest cent_id — the exact mirror of the Spark `graft_nearest`
+    * assignment (training iterations read the sampled `tr`, the final
+    * index build reads the full `qv`). */
   private def ivfAssignSql(name: String, cents: String,
       src: String = "qv"): String =
     s"""$name AS (
@@ -807,7 +840,8 @@ object Similarity {
 
   /** One Lloyd update as a DuckDB CTE: per-dimension integer mean
     * (floor division on non-negative sums) reassembled in dimension
-    * order — the exact mirror of the Spark `update` aggregation. */
+    * order — the exact mirror of the Spark Lloyd update in
+    * [[kmeans]]. */
   private def ivfUpdateSql(name: String, assigned: String): String =
     s"""${name}_d AS (
        SELECT cent_id, u.pos AS pos,

@@ -2,8 +2,9 @@
 # The counts ROADMAP asks every change to report, against <base> (the
 # parent commit): net main-Scala lines, the spark.graft.* session-conf
 # keys the library reads or sets, the gcol part-file writer sites, the
-# lines of the sources package that mention a lineage, and the
-# `synchronized` and `Files.createLink` sites in LogSource.scala.
+# lines of the sources package that mention a lineage, the
+# `synchronized` and `Files.createLink` sites in LogSource.scala, and
+# the `localCheckpoint()` sites in src/main (ROADMAP item 12).
 # Stage new files first (`git add -A`): untracked files are left out of
 # the line count.
 #
@@ -24,3 +25,5 @@ echo "lineage lines in graft/sources: $(grep -rni lineage \
 echo "synchronized in LogSource.scala: $(grep -c synchronized "$log" || true)"
 echo "Files.createLink in LogSource.scala: $(grep -c 'Files.createLink' \
   "$log" || true)"
+echo "localCheckpoint() in src/main: $(grep -rhoE 'localCheckpoint\(' \
+  src/main | wc -l)"
