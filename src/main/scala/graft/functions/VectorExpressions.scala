@@ -202,27 +202,10 @@ case class NearestCentroid(vecId: Expression, vec: Expression,
   override def nullable: Boolean = false
   override def prettyName: String = "graft_nearest"
 
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def longs(dt: DataType): Boolean = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    def nested(dt: DataType): Boolean = dt match {
-      case ArrayType(inner, _) => longs(inner)
-      case _ => false
-    }
-    if (vecId.dataType != LongType || set.dataType != IntegerType ||
-        !longs(vec.dataType) || !nested(ids.dataType) ||
-        !nested(cents.dataType))
-      TypeCheckResult.TypeCheckFailure(
-        "graft_nearest(vec_id, vec, set, ids, cents) requires bigint, " +
-          "array<bigint>, int, array<array<bigint>>, array<array<bigint>>, " +
-          s"got ${children.map(_.dataType.simpleString).mkString(", ")}")
-    else if (!ids.foldable || !cents.foldable)
-      TypeCheckResult.TypeCheckFailure(
-        "graft_nearest: ids and cents must be literals")
-    else TypeCheckResult.TypeCheckSuccess
-  }
+  override def checkInputDataTypes(): TypeCheckResult =
+    Centroids.checkTypes(prettyName,
+      "graft_nearest(vec_id, vec, set, ids, cents)", vecId, vec, Some(set),
+      ids, cents)
 
   @transient private lazy val table = Centroids(
     ids.eval().asInstanceOf[ArrayData], cents.eval().asInstanceOf[ArrayData])
@@ -254,47 +237,227 @@ case class NearestCentroid(vecId: Expression, vec: Expression,
     copy(vecId = c(0), vec = c(1), set = c(2), ids = c(3), cents = c(4))
 }
 
-/** [[NearestCentroid]]'s centroid sets, each sorted by id so the first
-  * strict minimum is the smaller id of a tie. */
+/** The ADC distance table of each query vector — the query half of
+  * product-quantization search, as one fused loop: for every centroid
+  * set (a PQ subspace), the exact integer squared-L2 from the vector's
+  * slice of that set to each of its centroids. `vec` is the
+  * concatenation of one subvector per set, in set order.
+  *
+  * `graft_adc_table(vec_id, vec, ids, cents)` takes the centroids as
+  * [[NearestCentroid]] does, as literals. Row `set` of the result is
+  * indexed by centroid id and holds NULL at an id with no centroid (a
+  * centroid no vector chose during training), so [[AdcDistance]] fails
+  * on a code that names it instead of reading a distance. A malformed
+  * vector (NULL, a NULL element, or a length other than the sets'
+  * total dimension) throws, naming its `vec_id`. */
+case class AdcTable(vecId: Expression, vec: Expression, ids: Expression,
+    cents: Expression) extends Expression {
+
+  override def children: Seq[Expression] = Seq(vecId, vec, ids, cents)
+  override def dataType: DataType =
+    ArrayType(ArrayType(LongType, containsNull = true), containsNull = false)
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_adc_table"
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    Centroids.checkTypes(prettyName, "graft_adc_table(vec_id, vec, ids, cents)",
+      vecId, vec, None, ids, cents)
+
+  @transient private lazy val table = Centroids(
+    ids.eval().asInstanceOf[ArrayData], cents.eval().asInstanceOf[ArrayData])
+
+  override def eval(input: InternalRow): Any = {
+    val id = vecId.eval(input)
+    table.table(id == null, if (id == null) 0L else id.asInstanceOf[Long],
+      vec.eval(input).asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val t = ctx.addReferenceObj("centroids", table, classOf[Centroids].getName)
+    val id = vecId.genCode(ctx)
+    val v = vec.genCode(ctx)
+    ev.copy(isNull = FalseLiteral, code = code"""
+      |${id.code}
+      |${v.code}
+      |ArrayData ${ev.value} = $t.table(${id.isNull}, ${id.value},
+      |  ${v.isNull} ? null : ${v.value});
+      """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): AdcTable =
+    copy(vecId = c(0), vec = c(1), ids = c(2), cents = c(3))
+}
+
+/** Asymmetric distance computation for one PQ-encoded vector:
+  * Σ tbl[sub][codes[sub]], one table lookup per subspace, exact long
+  * arithmetic. `graft_adc(vec_id, codes, tbl)` takes the vector's code
+  * word and a query's [[AdcTable]] row. It never yields NULL: a NULL
+  * code word or table, a code word whose length is not the table's
+  * subspace count, a NULL code, or a code with no table slot (outside
+  * the row, or NULL there) throws, naming the `vec_id` — a NULL
+  * distance would sort first under `adc_dist ASC`. */
+case class AdcDistance(vecId: Expression, codes: Expression,
+    tbl: Expression) extends Expression {
+
+  override def children: Seq[Expression] = Seq(vecId, codes, tbl)
+  override def dataType: DataType = LongType
+  override def nullable: Boolean = false
+  override def prettyName: String = "graft_adc"
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val ok = vecId.dataType == LongType && (codes.dataType match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    }) && (tbl.dataType match {
+      case ArrayType(ArrayType(LongType, _), _) => true
+      case _ => false
+    })
+    if (ok) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure(
+      "graft_adc(vec_id, codes, tbl) requires bigint, array<bigint>, " +
+        "array<array<bigint>>, got " +
+        children.map(_.dataType.simpleString).mkString(", "))
+  }
+
+  override def eval(input: InternalRow): Any = {
+    val id = vecId.eval(input)
+    AdcDistance.distance(id == null, if (id == null) 0L else id.asInstanceOf[Long],
+      codes.eval(input).asInstanceOf[ArrayData],
+      tbl.eval(input).asInstanceOf[ArrayData])
+  }
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val id = vecId.genCode(ctx)
+    val c = codes.genCode(ctx)
+    val t = tbl.genCode(ctx)
+    ev.copy(isNull = FalseLiteral, code = code"""
+      |${id.code}
+      |${c.code}
+      |${t.code}
+      |long ${ev.value} = graft.functions.AdcDistance.distance(${id.isNull},
+      |  ${id.value}, ${c.isNull} ? null : ${c.value},
+      |  ${t.isNull} ? null : ${t.value});
+      """.stripMargin)
+  }
+
+  override protected def withNewChildrenInternal(
+      c: IndexedSeq[Expression]): AdcDistance =
+    copy(vecId = c(0), codes = c(1), tbl = c(2))
+}
+
+object AdcDistance {
+  def distance(idNull: Boolean, id: Long, codes: ArrayData,
+      tbl: ArrayData): Long = {
+    def fail(what: String): Nothing = throw new IllegalArgumentException(
+      s"graft_adc: vec_id ${if (idNull) "NULL" else id.toString} $what")
+    if (codes == null) fail("has a NULL code word")
+    if (tbl == null) fail("is scored against a NULL distance table")
+    val m = tbl.numElements()
+    if (codes.numElements() != m)
+      fail(s"has ${codes.numElements()} codes; the table has $m subspaces")
+    var acc = 0L
+    var sub = 0
+    while (sub < m) {
+      if (codes.isNullAt(sub)) fail(s"has a NULL code in subspace $sub")
+      val c = codes.getLong(sub)
+      val row = tbl.getArray(sub)
+      if (c < 0 || c >= row.numElements() || row.isNullAt(c.toInt))
+        fail(s"has code $c in subspace $sub, which has no centroid")
+      acc += row.getLong(c.toInt)
+      sub += 1
+    }
+    acc
+  }
+}
+
+/** [[NearestCentroid]]'s and [[AdcTable]]'s centroid sets, each sorted
+  * by id so the first strict minimum is the smaller id of a tie. */
 final class Centroids private (ids: Array[Array[Long]],
     cents: Array[Array[Long]], dims: Array[Int]) extends Serializable {
 
-  def nearest(idNull: Boolean, id: Long, v: ArrayData,
-      setNull: Boolean, set: Int): Long = {
-    def fail(what: String): Nothing = throw new IllegalArgumentException(
-      s"graft_nearest: vec_id ${if (idNull) "NULL" else id.toString} $what")
-    if (setNull || set < 0 || set >= ids.length || ids(set).isEmpty)
-      fail(s"names centroid set ${if (setNull) "NULL" else set.toString}, " +
-        "which has no centroids")
-    if (v == null) fail("has a NULL vector")
-    val d = dims(set)
-    val n = v.numElements()
-    if (n != d) fail(s"has $n elements; the centroids of set $set have $d")
+  private def fail(kernel: String, idNull: Boolean, id: Long,
+      what: String): Nothing = throw new IllegalArgumentException(
+    s"$kernel: vec_id ${if (idNull) "NULL" else id.toString} $what")
+
+  /** `v`'s elements, after checking it is non-NULL, `n` long and free of
+    * NULL elements; `where` says whose length `n` is. */
+  private def elements(kernel: String, idNull: Boolean, id: Long,
+      v: ArrayData, n: Int, where: => String): Array[Long] = {
+    if (v == null) fail(kernel, idNull, id, "has a NULL vector")
+    if (v.numElements() != n)
+      fail(kernel, idNull, id, s"has ${v.numElements()} elements; $where")
     val x = new Array[Long](n)
     var i = 0
     while (i < n) {
-      if (v.isNullAt(i)) fail(s"has a NULL element at position $i")
+      if (v.isNullAt(i))
+        fail(kernel, idNull, id, s"has a NULL element at position $i")
       x(i) = v.getLong(i)
       i += 1
     }
+    x
+  }
+
+  /** Squared-L2 from `x[xOff, xOff + d)` to centroid `j` of `set`. */
+  private def sqdist(x: Array[Long], xOff: Int, set: Int, j: Int): Long = {
+    val d = dims(set)
     val c = cents(set)
+    val off = j * d
+    var acc = 0L
+    var i = 0
+    while (i < d) {
+      val e = x(xOff + i) - c(off + i)
+      acc += e * e
+      i += 1
+    }
+    acc
+  }
+
+  def nearest(idNull: Boolean, id: Long, v: ArrayData,
+      setNull: Boolean, set: Int): Long = {
+    if (setNull || set < 0 || set >= ids.length || ids(set).isEmpty)
+      fail("graft_nearest", idNull, id,
+        s"names centroid set ${if (setNull) "NULL" else set.toString}, " +
+          "which has no centroids")
+    val d = dims(set)
+    val x = elements("graft_nearest", idNull, id, v, d,
+      s"the centroids of set $set have $d")
     val cid = ids(set)
     var best = 0
     var bestDist = 0L
     var j = 0
     while (j < cid.length) {
-      val off = j * d
-      var acc = 0L
-      i = 0
-      while (i < d) {
-        val e = x(i) - c(off + i)
-        acc += e * e
-        i += 1
-      }
+      val acc = sqdist(x, 0, set, j)
       if (j == 0 || acc < bestDist) { best = j; bestDist = acc }
       j += 1
     }
     cid(best)
+  }
+
+  /** Per set, the table row of [[AdcTable]]: `1 + max id` slots. */
+  @transient private lazy val widths: Array[Int] = ids.map { cid =>
+    require(cid.isEmpty || (cid.head >= 0 && cid.last < 65536),
+      s"graft_adc_table: centroid ids must lie in [0, 65536), got " +
+        s"${cid.head} to ${cid.last}")
+    if (cid.isEmpty) 0 else cid.last.toInt + 1
+  }
+
+  def table(idNull: Boolean, id: Long, v: ArrayData): ArrayData = {
+    val x = elements("graft_adc_table", idNull, id, v, dims.sum,
+      s"the ${ids.length} centroid sets cover ${dims.sum}")
+    var off = 0
+    val rows = Array.tabulate[Any](ids.length) { set =>
+      val row = new Array[Any](widths(set))
+      val cid = ids(set)
+      var j = 0
+      while (j < cid.length) {
+        row(cid(j).toInt) = sqdist(x, off, set, j)
+        j += 1
+      }
+      off += dims(set)
+      new GenericArrayData(row)
+    }
+    new GenericArrayData(rows)
   }
 }
 
@@ -318,6 +481,35 @@ object Centroids {
     }
     new Centroids(sets.map(_._1).toArray, sets.map(_._2).toArray,
       sets.map(_._3).toArray)
+  }
+
+  /** The type check [[NearestCentroid]] and [[AdcTable]] share: a bigint
+    * id, an `array<bigint>` vector, the int set where the kernel takes
+    * one, and the centroids as `array<array<bigint>>` literals. */
+  private[functions] def checkTypes(name: String, usage: String,
+      vecId: Expression, vec: Expression, set: Option[Expression],
+      ids: Expression, cents: Expression): TypeCheckResult = {
+    def longs(dt: DataType): Boolean = dt match {
+      case ArrayType(LongType, _) => true
+      case _ => false
+    }
+    def nested(dt: DataType): Boolean = dt match {
+      case ArrayType(inner, _) => longs(inner)
+      case _ => false
+    }
+    if (vecId.dataType != LongType || set.exists(_.dataType != IntegerType) ||
+        !longs(vec.dataType) || !nested(ids.dataType) ||
+        !nested(cents.dataType))
+      TypeCheckResult.TypeCheckFailure(
+        s"$usage requires bigint, array<bigint>, " +
+          set.fold("")(_ => "int, ") +
+          "array<array<bigint>>, array<array<bigint>>, got " +
+          (Seq(vecId, vec) ++ set ++ Seq(ids, cents))
+            .map(_.dataType.simpleString).mkString(", "))
+    else if (!ids.foldable || !cents.foldable)
+      TypeCheckResult.TypeCheckFailure(
+        s"$name: ids and cents must be literals")
+    else TypeCheckResult.TypeCheckSuccess
   }
 }
 
@@ -649,6 +841,25 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
             s"got ${children.length}")
         NearestCentroid(children(0), children(1), children(2), children(3),
           children(4))
+      }))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_adc_table"),
+      new ExpressionInfo(classOf[AdcTable].getCanonicalName,
+        "graft_adc_table"),
+      (children: Seq[Expression]) => {
+        require(children.length == 4,
+          "graft_adc_table(vec_id, vec, ids, cents) takes 4 arguments, " +
+            s"got ${children.length}")
+        AdcTable(children(0), children(1), children(2), children(3))
+      }))
+    ext.injectFunction((
+      new FunctionIdentifier("graft_adc"),
+      new ExpressionInfo(classOf[AdcDistance].getCanonicalName, "graft_adc"),
+      (children: Seq[Expression]) => {
+        require(children.length == 3,
+          "graft_adc(vec_id, codes, tbl) takes 3 arguments, " +
+            s"got ${children.length}")
+        AdcDistance(children(0), children(1), children(2))
       }))
     ext.injectFunction((
       new FunctionIdentifier("graft_quantize"),

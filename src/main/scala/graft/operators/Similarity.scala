@@ -58,8 +58,13 @@ object Similarity {
     * id, the centroids passed in as literals. It fails naming the
     * `vec_id` of a malformed vector. */
   private def nearest(v: Column, set: Column, cents: Cents): Column =
-    call_function("graft_nearest", col("vec_id"), v, set,
-      typedLit(cents.map(_.map(_._1))),
+    call_function("graft_nearest", col("vec_id") +: v +: set +:
+      centroidLits(cents): _*)
+
+  /** Centroid sets as the kernels' two literals: per set, the ids, and
+    * the centroids flattened row-major. */
+  private def centroidLits(cents: Cents): Seq[Column] =
+    Seq(typedLit(cents.map(_.map(_._1))),
       typedLit(cents.map(_.flatMap(_._2.toSeq))))
 
   /** splitmix64 finalizer (public-domain PRNG, Steele et al. 2014) —
@@ -222,11 +227,13 @@ object Similarity {
 
   /** The trained IVF index — corpus → cell assignment
     * (vec_id, embedding, cent_id) — as a session+fixture artifact
-    * shared by sim_ivf_ann (cell-probe search), sim_ivfpq_ann (cell
-    * routing for the composed IVF+PQ index), and dedup_semdedup
-    * (cluster-bounded semantic dedup): one coarse quantizer serves
-    * search AND dedup, exactly how a production corpus keeps one
-    * k-means clustering per embedding space.
+    * shared by sim_ivf_ann (cell-probe search), dedup_semdedup
+    * (cluster-bounded semantic dedup) and the PQ build, which trains
+    * on and encodes this corpus and copies each vector's cell into the
+    * `pq_codes` inverted list: one coarse quantizer serves search AND
+    * dedup, exactly how a production corpus keeps one k-means
+    * clustering per embedding space. The IVFADC queries read only
+    * their 8 query rows from it.
     *
     * Training (see the sim_ivf_ann scaladoc for the full rationale):
     * k = ⌊√n⌋ cells, [[kmeans]] over the bounded deterministic
@@ -268,27 +275,20 @@ object Similarity {
   private val PqSubDim = 16
   private val PqK = 16
 
-  /** Quantized per-subspace subvectors (vec_id, sub, sqv) — the input
-    * to PQ training, encoding, and the query-side distance tables;
-    * shared by sim_pq_adc and sim_ivfpq_ann as an ingest artifact. */
-  private def pqSubv(s: SparkSession, d: String): DataFrame =
-    graft.core.ArtifactCache.persisted(s, d, "pq_subv", "v1")(
-      fanout(Tables.embeddings(s, d))
-        .select(col("vec_id"), quantize(col("embedding")).as("qv"))
-        .select(col("vec_id"), explode(
-          transform(sequence(lit(0), lit(PqNumSub - 1)),
-            i => struct(i.cast("int").as("sub"),
-              slice(col("qv"), i * PqSubDim + 1, lit(PqSubDim)).as("sqv"))))
-          .as("x"))
-        .select(col("vec_id"), col("x.sub").as("sub"), col("x.sqv").as("sqv")))
+  /** The quantized corpus's `PqNumSub` subspace slices — the PQ
+    * training sample's rows and the encoding's inputs. */
+  private def subvector(qv: Column, sub: Int): Column =
+    slice(qv, sub * PqSubDim + 1, PqSubDim)
 
   /** The trained PQ codebooks (sub, cent_id, cq): [[kmeans]] per
     * subspace, PqK centroids each, on a bounded deterministic sample
     * (every m-th vec_id, m = max(1, n/2048) — 2048 vectors ≫ the 39·16
-    * FAISS floor for 16 centroids): Lloyd cost stays constant as the
-    * corpus grows; only the one-pass final encoding touches every
-    * vector. m = 1 at the driver fixtures; the oracle replays the
-    * identical slice. Built on the driver, so written as one file. */
+    * FAISS floor for 16 centroids) of the IVF index's corpus, quantized
+    * and sliced into its subspaces in the projection: Lloyd cost stays
+    * constant as the corpus grows; only the one-pass final encoding
+    * touches every vector. m = 1 at the driver fixtures; the oracle
+    * replays the identical slice. Built on the driver, so written as
+    * one file. */
   private[graft] def pqCents(s: SparkSession, d: String): DataFrame =
     graft.core.ArtifactCache.persisted(s, d, "pq_cents", "v2") {
       // stride = n/16 is ZERO for a corpus under 16 vectors, and the
@@ -299,68 +299,100 @@ object Similarity {
       require(n >= PqK,
         s"PQ training needs at least $PqK vectors, got $n ($d)")
       val m = math.max(1L, n / 2048L)
-      val tr = pqSubv(s, d)
+      val tr = ivfIndex(s, d)
         .filter(col("vec_id") % lit(m) === 0)
-        .select(col("vec_id"), col("sub").as("set"), col("sqv").as("v"))
+        .select(col("vec_id"), quantize(col("embedding")).as("qv"))
+        .select(col("vec_id"), explode(array((0 until PqNumSub).map(sub =>
+          struct(lit(sub).as("set"), subvector(col("qv"), sub).as("v"))): _*))
+          .as("x"))
+        .select(col("vec_id"), col("x.set").as("set"), col("x.v").as("v"))
       val rows = kmeans(tr, PqNumSub, PqK, idByRank = true, "PQ")
         .zipWithIndex.flatMap { case (set, sub) =>
           set.map { case (id, cq) => (sub, id, cq.toSeq) } }
       s.createDataFrame(rows).toDF("sub", "cent_id", "cq").coalesce(1)
     }
 
-  /** The encoded corpus (vec_id, sub, code): every vector as a 4-code
-    * word — 64× smaller than the raw floats, which is what keeps
-    * billion-vector indexes RAM-resident at 100 TB. Each subvector's
-    * code is its `graft_nearest` centroid of its subspace; hash-
-    * partitioned like [[ivfIndex]] so AQE sizes the files by bytes. */
-  private[graft] def pqCodes(s: SparkSession, d: String): DataFrame =
-    graft.core.ArtifactCache.persisted(s, d, "pq_codes", "v2") {
+  /** The PQ codebooks on the driver, one centroid set per subspace —
+    * index state, collected once per (session, fixture) and passed to
+    * the encoding and every query's ADC tables as a literal. */
+  private def pqCodebook(s: SparkSession, d: String): Cents =
+    graft.core.ArtifactCache.valueOf(s, d, "pq_cents@v2#codebook") {
       val bySub = pqCents(s, d).collect().groupBy(_.getInt(0))
-      val cents = (0 until PqNumSub).map(sub =>
+      (0 until PqNumSub).map(sub =>
         bySub.getOrElse(sub, Array.empty).toSeq
           .map(r => r.getLong(1) -> r.getSeq[Long](2).toArray).sortBy(_._1))
-      pqSubv(s, d)
-        .select(col("vec_id"), col("sub"),
-          nearest(col("sqv"), col("sub"), cents).as("code"))
+    }
+
+  /** The encoded corpus as an IVF-PQ inverted list (vec_id, cent_id,
+    * codes): one row per vector, its IVF cell and its `PqNumSub`-code
+    * word — 64× smaller than the raw floats, which is what keeps
+    * billion-vector indexes RAM-resident at 100 TB, and a cell-routed
+    * ADC scan reads nothing else. One projection over the IVF index
+    * quantizes each vector and names each subspace slice's
+    * `graft_nearest` centroid of that subspace; hash-partitioned like
+    * [[ivfIndex]] so AQE sizes the files by bytes. */
+  private[graft] def pqCodes(s: SparkSession, d: String): DataFrame =
+    graft.core.ArtifactCache.persisted(s, d, "pq_codes", "v3") {
+      val cb = pqCodebook(s, d)
+      ivfIndex(s, d)
+        .select(col("vec_id"), col("cent_id"),
+          quantize(col("embedding")).as("qv"))
+        .select(col("vec_id"), col("cent_id"),
+          array((0 until PqNumSub).map(sub =>
+            nearest(subvector(col("qv"), sub), lit(sub), cb)): _*)
+            .as("codes"))
         .repartition(col("vec_id"))
     }
 
-  /** Query-side ADC distance table for the 8 fixture query vectors:
-    * (query_id, dsub, dcent, dd) — 64 entries per query, broadcast to
-    * the code scan so each candidate costs 4 lookups + a sum. */
-  private def pqDistTable(s: SparkSession, d: String): DataFrame = {
-    val cents = pqCents(s, d)
-    pqSubv(s, d).filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("sub").as("dsub"),
-        col("sqv"))
-      .join(broadcast(cents), col("dsub") === cents("sub"))
-      .select(col("query_id"), col("dsub"),
-        col("cent_id").as("dcent"), sqdist(col("sqv"), col("cq")).as("dd"))
+  /** The 8 fixture query vectors as (query_id, own, qv, tbl): each
+    * query's IVF cell, its quantized vector and its ADC distance table
+    * — `tbl[sub][cent_id]`, the integer squared-L2 from the query's
+    * slice of subspace `sub` to that centroid, built by the codegen'd
+    * [[graft.functions.AdcTable]] kernel (`graft_adc_table`) with the
+    * codebook as a literal. One projection over the query rows of the
+    * IVF index. */
+  private def queryTables(s: SparkSession, d: String): DataFrame = {
+    val cb = pqCodebook(s, d)
+    ivfIndex(s, d).filter(col("vec_id") < 8)
+      .select(col("vec_id").as("query_id"), col("cent_id").as("own"),
+        quantize(col("embedding")).as("qv"))
+      .withColumn("tbl", call_function("graft_adc_table",
+        col("query_id") +: col("qv") +: centroidLits(cb): _*))
   }
 
-  /** The probed cell set per query — (query_id, p_cent): always the
-    * query's OWN assigned cell, plus, under
-    * `spark.graft.ivf.nprobe=P` (default 1 — the committed oracle
-    * form, bit-identical by construction since probe #1 IS the
-    * assignment), the P−1 nearest OTHER cells by integer squared-L2
-    * between the query's quantized vector and each cell's integer
-    * mean on the same grid (floor-div per dimension — the Lloyd
-    * update rule, so the routing surrogate matches the trained
-    * centroid's arithmetic). This is FAISS's nprobe: the recall
-    * lever for IVF-routed search — §2 of the r15 notes measured
-    * single-cell recall@3 at 0.25–0.29 under 10–30× occupancy, and
-    * extra probes buy recall linearly in scan cost (P·√n candidates).
-    * The cell-mean table is k rows — broadcast, never a shuffle of
-    * the corpus. */
-  private def queryProbeCells(s: SparkSession, d: String): DataFrame = {
-    val assigned = ivfIndex(s, d)
-    val own = assigned.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("query_id"), col("cent_id").as("p_cent"))
+  /** A candidate's ADC distance to a query — Σ tbl[sub][codes[sub]], the
+    * codegen'd [[graft.functions.AdcDistance]] kernel (`graft_adc`):
+    * exact long sums, and a code word that does not fit the table
+    * throws, naming the `vec_id`, instead of reading NULL. */
+  private def adc: Column =
+    call_function("graft_adc", col("vec_id"), col("codes"), col("tbl"))
+
+  /** The probed cells of each query: `q` (query_id, own, qv, …) with
+    * `p_cent` added, one row per probed cell — always the query's OWN
+    * assigned cell, plus, under `spark.graft.ivf.nprobe=P` (default 1
+    * — the committed oracle form, bit-identical by construction since
+    * probe #1 IS the assignment), the P−1 nearest OTHER cells by
+    * integer squared-L2 between the query's quantized vector and each
+    * cell's integer mean on the same grid (floor-div per dimension —
+    * the Lloyd update rule, so the routing surrogate matches the
+    * trained centroid's arithmetic). `q`'s other columns ride along to
+    * every probe row. This is FAISS's nprobe: the recall lever for
+    * IVF-routed search — §2 of the r15 notes measured single-cell
+    * recall@3 at 0.25–0.29 under 10–30× occupancy, and extra probes
+    * buy recall linearly in scan cost (P·√n candidates). The cell-mean
+    * table is k rows — broadcast, never a shuffle of the corpus. The
+    * distance is never NULL: every `ivf_index` vector, the queries
+    * included, passed `graft_nearest`, which rejects a NULL vector, a
+    * NULL element and a wrong length (IndexBuildSpec pins it), so
+    * every `qv` and every cell mean is a full-length non-NULL vector. */
+  private def queryProbeCells(s: SparkSession, d: String,
+      q: DataFrame): DataFrame = {
+    val own = q.withColumn("p_cent", col("own"))
     val nprobe = s.conf.getOption("spark.graft.ivf.nprobe")
       .map(_.toInt).getOrElse(1)
     if (nprobe <= 1) own
     else {
-      val means = assigned
+      val means = ivfIndex(s, d)
         .select(col("cent_id"),
           posexplode(quantize(col("embedding"))).as(Seq("pos", "v")))
         .groupBy(col("cent_id"), col("pos"))
@@ -369,17 +401,14 @@ object Similarity {
         .agg(transform(
           array_sort(collect_list(struct(col("pos"), col("cmean")))),
           x => x.getField("cmean")).as("cq"))
-      val q = assigned.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"),
-          quantize(col("embedding")).as("qv"), col("cent_id").as("own"))
       val wP = Window.partitionBy(col("query_id"))
         .orderBy(col("dist").asc, col("cent_id"))
       val extra = q.join(broadcast(means), col("cent_id") =!= col("own"))
-        .select(col("query_id"), col("cent_id"),
-          sqdist(col("qv"), col("cq")).as("dist"))
+        .withColumn("dist", sqdist(col("qv"), col("cq")))
         .withColumn("prn", row_number().over(wP))
         .filter(col("prn") <= nprobe - 1)
-        .select(col("query_id"), col("cent_id").as("p_cent"))
+        .withColumn("p_cent", col("cent_id"))
+        .drop("cent_id", "cq", "dist", "prn")
       own.unionByName(extra)
     }
   }
@@ -387,30 +416,23 @@ object Similarity {
   /** IVFADC candidate scoring — (query_id, vec_id, adc_dist) for the
     * 8 query vectors, cell-routed and table-looked-up: the shared
     * first stage of sim_ivfpq_ann (ranks it directly) and
-    * sim_ivfpq_rerank (shortlists then fp-refines). ONE definition so
-    * cell routing and ADC scoring cannot drift between the two.
-    * Routing honors `spark.graft.ivf.nprobe` via [[queryProbeCells]]
-    * (default: the committed single-cell form). */
-  private def adcDistances(s: SparkSession, d: String): DataFrame = {
-    val cells = ivfIndex(s, d).select(col("vec_id"), col("cent_id"))
-    val codes = pqCodes(s, d)
-    val dt = pqDistTable(s, d)
-    val qcell = queryProbeCells(s, d)
-      .select(col("query_id"), col("p_cent").as("q_cent"))
-    val cand = cells.join(broadcast(qcell),
-        col("cent_id") === col("q_cent") &&
-          col("vec_id") =!= col("query_id"))
-      .select(col("query_id").as("cq_id"), col("vec_id"))
-      .join(codes, "vec_id")
-    cand.join(broadcast(dt),
-        cand("cq_id") === dt("query_id") &&
-          cand("sub") === dt("dsub") && cand("code") === dt("dcent"))
-      .groupBy(col("cq_id").as("query_id"), col("vec_id"))
-      .agg(sum(col("dd")).as("adc_dist"))
+    * sim_ivfpq_rerank (shortlists then fp-refines), at every
+    * `spark.graft.ivf.nprobe`. ONE definition so cell routing and ADC
+    * scoring cannot drift between the two. The query tables join the
+    * probe-cell set ([[queryProbeCells]]) and are broadcast to the
+    * `pq_codes` scan, where each member of a probed cell scores with
+    * [[adc]]: one row per vector, no join on (sub, code) and no
+    * (query, vector) aggregation, and no float vector read. */
+  private[graft] def adcDistances(s: SparkSession, d: String): DataFrame = {
+    val probes = queryProbeCells(s, d, queryTables(s, d))
+      .select(col("query_id"), col("p_cent"), col("tbl"))
+    pqCodes(s, d).join(broadcast(probes),
+        col("cent_id") === col("p_cent") && col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id"), adc.as("adc_dist"))
   }
 
   /** Materialize every ANN index artifact (SRP signatures, trained IVF
-    * assignment, PQ subvectors / codebooks / encoded corpus) for `d` —
+    * assignment, PQ codebooks / encoded corpus) for `d` —
     * the bench drive's build phase calls this directly instead of
     * executing one full query per index. */
   def warmArtifacts(s: SparkSession, d: String): Unit = {
@@ -463,8 +485,8 @@ object Similarity {
     // set, not the corpus. Bounds-boolean oracle: TRUE rows the
     // Spark side must earn.
     "sim_ann_recall" -> ((s, d) => {
-      val emb = fanout(Tables.embeddings(s, d))
-      val exact = bruteForceTopK(emb, emb.filter(col("vec_id") < 8), 1)
+      val exact = bruteForceTopK(fanout(Tables.embeddings(s, d)),
+        Tables.embeddings(s, d).filter(col("vec_id") < 8), 1)
         .select(col("query_id"), col("sim").as("e_sim"))
       val approx = Similarity.queries("sim_lsh_ann_multiprobe")(s, d)
         .filter(col("rank") === 1)
@@ -484,8 +506,8 @@ object Similarity {
 
     // Brute-force cosine top-5 for 8 query vectors (ids 0..7)
     "sim_cosine_topk" -> ((s, d) => {
-      val emb = fanout(Tables.embeddings(s, d))
-      bruteForceTopK(emb, emb.filter(col("vec_id") < 8), k = 5)
+      bruteForceTopK(fanout(Tables.embeddings(s, d)),
+        Tables.embeddings(s, d).filter(col("vec_id") < 8), k = 5)
         .select(col("query_id"), col("rank"), col("vec_id"), col("sim"))
     }),
 
@@ -575,9 +597,9 @@ object Similarity {
       val assigned = ivfIndex(s, d)
       // probe set per query (own cell; + nearest others under the
       // `spark.graft.ivf.nprobe` recall lever — see queryProbeCells)
-      val q = assigned.filter(col("vec_id") < 8)
-        .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
-        .join(queryProbeCells(s, d), "query_id")
+      val q = queryProbeCells(s, d, assigned.filter(col("vec_id") < 8)
+          .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
+            col("cent_id").as("own"), quantize(col("embedding")).as("qv")))
         .select(col("query_id"), col("q_emb"), col("p_cent").as("q_cent"))
       val wRank = Window.partitionBy(col("query_id"))
         .orderBy(col("sim").desc, col("vec_id"))
@@ -598,23 +620,22 @@ object Similarity {
     // stored as a 4-code word (one centroid id per subspace) — 64×
     // smaller than the raw floats, which is what keeps billion-vector
     // indexes RAM-resident at 100 TB. Search is asymmetric distance
-    // computation: the query builds a 4×16 distance table against the
-    // centroids (64 entries, broadcast) and each candidate costs 4
-    // table lookups + a sum — the scan never touches a float vector.
-    // Training, encoding, and ADC are all integer squared-L2 on the
-    // ingest-quantized vectors, so the DuckDB oracle replays every
-    // step bit for bit. At this corpus size ADC scans all codes;
-    // production composes it with the IVF cell restriction above.
+    // computation: one projection over the 8 query rows builds each
+    // query's 4×16 distance table against the codebook, which it takes
+    // as a literal (`graft_adc_table`); the 8 tables are broadcast to
+    // the one-row-per-vector code scan, where each candidate costs 4
+    // table lookups + a sum in one kernel (`graft_adc`) — no join on
+    // (sub, code), no aggregation, and the scan never touches a float
+    // vector. Training, encoding, and ADC are all integer squared-L2
+    // on the ingest-quantized vectors, so the DuckDB oracle replays
+    // every step bit for bit. At this corpus size ADC scans all codes;
+    // production composes it with the IVF cell restriction below.
     "sim_pq_adc" -> ((s, d) => {
-      val codes = pqCodes(s, d)
-      val dt = pqDistTable(s, d)
+      val q = queryTables(s, d).select(col("query_id"), col("tbl"))
       val wR = Window.partitionBy(col("query_id"))
         .orderBy(col("adc_dist").asc, col("vec_id"))
-      codes.join(broadcast(dt),
-          col("sub") === col("dsub") && col("code") === col("dcent"))
-        .groupBy(col("query_id"), col("vec_id"))
-        .agg(sum(col("dd")).as("adc_dist"))
-        .filter(col("vec_id") =!= col("query_id"))
+      pqCodes(s, d).join(broadcast(q), col("vec_id") =!= col("query_id"))
+        .select(col("query_id"), col("vec_id"), adc.as("adc_dist"))
         .withColumn("rank", row_number().over(wR).cast("int"))
         .filter(col("rank") <= 3)
         .select(col("query_id"), col("rank"), col("vec_id"),
@@ -624,14 +645,15 @@ object Similarity {
     // The COMPOSED index — IVFADC (Jégou et al. 2011 §IV): the coarse
     // quantizer routes each query to its IVF cell and ADC scores only
     // the codes of that cell's members — the actual architecture FAISS
-    // ships for billion-vector search. Both halves already exist as
-    // ingest artifacts (ivf_index routes, pq_codes scores), so the
-    // search itself is a three-way join: cell-restricted candidates ⋈
-    // their 4-code words ⋈ the broadcast 64-entry distance table.
-    // Per-query cost is |cell| · 4 table lookups ≈ 4√n, versus 4n for
-    // flat ADC and d·n for brute force — and the scan never touches a
-    // float vector, so at 100 TB the working set is the 16-byte code
-    // table, not the 256-byte embeddings. Every ingredient is the same
+    // ships for billion-vector search. `pq_codes` is the inverted
+    // list: one row per vector holding its IVF cell and its 4-code
+    // word, so the search is one broadcast join of the query tables,
+    // keyed by probed cell, against the code scan, scored in the scan
+    // by `graft_adc` (see adcDistances). Per-query cost is |cell| · 4
+    // table lookups ≈ 4√n, versus 4n for flat ADC and d·n for brute
+    // force — and the scan never touches a float vector, so at 100 TB
+    // the working set is the code words, not the 256-byte embeddings.
+    // Every ingredient is the same
     // exact integer math as the two parent queries; the oracle chains
     // both training replays and agrees bit for bit.
     "sim_ivfpq_ann" -> ((s, d) => {
@@ -675,12 +697,15 @@ object Similarity {
         .withColumn("arank", row_number().over(wA))
         .filter(col("arank") <= depth)
         .select(col("query_id"), col("vec_id"))
-      val emb = fanout(Tables.embeddings(s, d))
+      // Both fp sides come from the plain scan: the ≤80 shortlisted
+      // vectors are a broadcast filter on it, never a shuffle of the
+      // corpus to join 80 keys.
+      val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 8)
         .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
       val wE = Window.partitionBy(col("query_id"))
         .orderBy(col("sim").desc, col("vec_id"))
-      short.join(emb, "vec_id").join(broadcast(q), "query_id")
+      emb.join(broadcast(short), "vec_id").join(broadcast(q), "query_id")
         .select(col("query_id"), col("vec_id"),
           dot(col("q_emb"), col("embedding")).as("sim"))
         .withColumn("rank", row_number().over(wE).cast("int"))

@@ -34,6 +34,10 @@ class IndexBuildSpec extends SparkSpec {
   /** A session whose in-memory artifact and scalar layers are empty. */
   private def fresh(): SparkSession = spark.newSession()
 
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+
   private def artifactDir(d: String, name: String): java.io.File =
     new java.io.File(new java.io.File(
       ArtifactCache.userScopedRoot("artifacts_e1"),
@@ -100,10 +104,12 @@ class IndexBuildSpec extends SparkSpec {
     val gotCents = Similarity.pqCents(s, d).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2))).toSeq
     assert(gotCents.sortBy(r => (r._1, r._2)) == wantCents)
-    val wantCodes = (for (sub <- 0 until 4; (id, v) <- subs(sub))
-      yield (id, sub, refNearest(v, pq(sub)))).toSet
+    // the inverted list: one row per vector, its cell and its 4 codes
+    val wantCodes = corpus.map { case (id, v) => (id, wantCells(id),
+      (0 until 4).map(sub => refNearest(v.slice(sub * 16, sub * 16 + 16),
+        pq(sub)))) }.toSet
     val gotCodes = Similarity.pqCodes(s, d).collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
+      .map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSet
     assert(gotCodes == wantCodes)
   }
 
@@ -117,9 +123,11 @@ class IndexBuildSpec extends SparkSpec {
     }
     // The join-and-rank build ran 42: it counted the corpus once per
     // index and the training sample in a job of its own, and each Lloyd
-    // update ran two aggregations and a broadcast.
-    assert(jobs == 29, s"cold IVF + PQ build ran $jobs jobs")
-    for (a <- Seq("ivf_index_v2", "pq_cents_v2", "pq_codes_v2")) {
+    // update ran two aggregations and a broadcast. The fused build ran
+    // 29 while PQ trained on and encoded a persisted `pq_subv` (four
+    // subvector rows per vector) into four code rows per vector.
+    assert(jobs == 26, s"cold IVF + PQ build ran $jobs jobs")
+    for (a <- Seq("ivf_index_v2", "pq_cents_v2", "pq_codes_v3")) {
       val parts = artifactDir(d, a).listFiles()
         .filter(_.getName.endsWith(".parquet"))
       assert(parts.length == 1, s"$a: ${parts.map(_.getName).toSeq}")
@@ -134,17 +142,37 @@ class IndexBuildSpec extends SparkSpec {
       .withColumn("embedding", when(col("vec_id") === 22,
         slice(col("embedding"), 1, 63)).otherwise(col("embedding")))
     val d = fixture(Some(emb))
-    def messages(t: Throwable): String =
-      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
-        .map(_.getMessage).mkString(" | ")
     val ivf = intercept[Exception](Similarity.ivfIndex(fresh(), d))
     assert(messages(ivf).contains("IVF k-means seed vec_id 22 is malformed: " +
       "it has 63 elements; the other seeds of set 0 have 64"),
       messages(ivf))
+    // PQ trains on and encodes the IVF index's corpus, so the IVF
+    // build's check stops it before a subspace slice is taken
     val pq = intercept[Exception](Similarity.pqCodes(fresh(), d))
-    assert(messages(pq).contains(
-      "graft_nearest: vec_id 22 has 15 elements; the centroids of set 3 " +
-        "have 16"), messages(pq))
+    assert(messages(pq).contains("IVF k-means seed vec_id 22 is malformed"),
+      messages(pq))
+  }
+
+  test("the IVF build rejects every vector whose quantized form could " +
+      "give a NULL squared-L2 to a cell mean, naming its vec_id") {
+    // `queryProbeCells` ranks extra cells by `graft_sqdist`, which is
+    // NULL on a length mismatch or a NULL element. Every vector of
+    // `ivf_index` (the queries too) passed `graft_nearest`, so each
+    // malformed form fails the build. vec_id 5 is a query, not a seed.
+    val base = spark.read.parquet(s"$sf0001/embeddings.parquet")
+    for ((bad, want) <- Seq(
+        slice(col("embedding"), 1, 63) ->
+          "has 63 elements; the centroids of set 0 have 64",
+        lit(null).cast("array<float>") -> "has a NULL vector",
+        transform(col("embedding"), (x, i) =>
+          when(i === 3, lit(null).cast("float")).otherwise(x)) ->
+          "has a NULL element at position 3")) {
+      val d = fixture(Some(base.withColumn("embedding",
+        when(col("vec_id") === 5, bad).otherwise(col("embedding")))))
+      val e = intercept[Exception](Similarity.ivfIndex(fresh(), d))
+      assert(messages(e).contains(s"graft_nearest: vec_id 5 $want"),
+        messages(e))
+    }
   }
 
   // --- graft_quantize against the composed form -----------------------

@@ -84,11 +84,15 @@ class PlanShapeSpec extends SparkSpec {
   }
 
   test("pq adc: codebook and distance table broadcast, top-k per query windowed") {
+    // The codebook ships as a literal in the table kernel; the 8 query
+    // tables are broadcast to the code scan (every code against every
+    // query, so a nested-loop join), and each candidate is scored
+    // there — no (sub, code) join and no (query, vector) aggregation.
     val p = phys("sim_pq_adc")
-    assert(p.contains("BroadcastHashJoin"), p.take(800))
-    assert(!p.contains("SortMergeJoin"),
-      "dictionary-sized codebook joins must never shuffle the codes:\n" +
-        p.take(800))
+    assert(p.contains("BroadcastNestedLoopJoin"), p.take(800))
+    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
+      "8 query tables must never shuffle the codes:\n" + p.take(800))
+    assert(!p.contains("HashAggregate"), p.take(800))
     assert(!p.contains("CartesianProduct"))
   }
 

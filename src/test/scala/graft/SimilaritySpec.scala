@@ -1,12 +1,23 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 import graft.sources.Tables
 
 /** ANN quality checks the oracle can't express: SRP-LSH bucket recall
-  * against brute force, signature determinism, cosine identity. */
+  * against brute force, signature determinism, cosine identity, ADC
+  * distances against a plain-Scala reference, the jobs each query
+  * runs, and the ADC kernels' loud failures. */
 class SimilaritySpec extends SparkSpec {
+
+  private def withNprobe[A](n: Option[Int])(body: => A): A = {
+    n match {
+      case Some(v) => spark.conf.set("spark.graft.ivf.nprobe", v.toString)
+      case None => spark.conf.unset("spark.graft.ivf.nprobe")
+    }
+    try body finally spark.conf.unset("spark.graft.ivf.nprobe")
+  }
 
   test("cosine of a vector with itself is 1") {
     val emb = Tables.embeddings(spark, sf0001).limit(10)
@@ -115,13 +126,6 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivf nprobe: 1 is row-identical to the committed single-cell " +
       "form; more probes only improve every query's best candidate") {
-    def withNprobe[A](n: Option[Int])(body: => A): A = {
-      n match {
-        case Some(v) => spark.conf.set("spark.graft.ivf.nprobe", v.toString)
-        case None => spark.conf.unset("spark.graft.ivf.nprobe")
-      }
-      try body finally spark.conf.unset("spark.graft.ivf.nprobe")
-    }
     def ivfRows(n: Option[Int]) = withNprobe(n) {
       Similarity.queries("sim_ivf_ann")(spark, sf0001).collect()
         .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
@@ -174,6 +178,134 @@ class SimilaritySpec extends SparkSpec {
       val best = rows.map(_.getLong(3)).min
       flat.get(q).foreach(fb => assert(fb <= best,
         s"query $q: flat ADC best $fb worse than cell-restricted $best"))
+    }
+  }
+
+  test("every ADC distance equals a plain-Scala sum of squared-L2 from " +
+      "the query's slices to its codes' centroids: flat, and cell-routed " +
+      "at nprobe 1 and 4") {
+    def quantize(v: Float): Long =
+      (BigDecimal(v.toDouble * 1000)
+        .setScale(0, BigDecimal.RoundingMode.HALF_UP).toDouble + 1000).toLong
+    def sq(a: Seq[Long], b: Seq[Long]): Long =
+      a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+    def slice(v: Array[Long], sub: Int): Seq[Long] =
+      v.slice(sub * 16, sub * 16 + 16).toSeq
+    val qv = Tables.embeddings(spark, sf0001).collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).map(quantize).toArray)
+      .toMap
+    val book = Similarity.pqCents(spark, sf0001).collect()
+      .map(r => (r.getInt(0), r.getLong(1)) -> r.getSeq[Long](2)).toMap
+    val codes = qv.map { case (id, v) => id -> (0 until 4).map { sub =>
+      book.collect { case ((`sub`, c), cq) => (sq(slice(v, sub), cq), c) }
+        .min._2
+    } }
+    def ref(q: Long, v: Long): Long = (0 until 4)
+      .map(sub => sq(slice(qv(q), sub), book((sub, codes(v)(sub))))).sum
+    val queries = 0L until 8L
+
+    val flat = Similarity.queries("sim_pq_adc")(spark, sf0001).collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getLong(3)))
+    for (q <- queries) {
+      val want = qv.keys.filter(_ != q).map(v => (ref(q, v), v)).toSeq
+        .sorted.take(3)
+      val got = flat.filter(_._1 == q).sortBy(_._2).map(t => (t._4, t._3))
+      assert(got.toSeq == want, s"flat ADC, query $q")
+    }
+
+    val cell = Similarity.ivfIndex(spark, sf0001).select("vec_id", "cent_id")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    for (n <- Seq(1, 4)) withNprobe(Some(n)) {
+      val got = Similarity.adcDistances(spark, sf0001).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      assert(got.map(t => (t._1, t._2)).distinct.length == got.length,
+        s"nprobe $n: one row per (query, vector)")
+      got.foreach { case (q, v, dd) =>
+        assert(dd == ref(q, v), s"nprobe $n: query $q, vec_id $v") }
+      for (q <- queries) {
+        val vecs = got.filter(_._1 == q).map(_._2).toSet
+        val cells = vecs.map(cell)
+        assert(cells.size == n && cells.contains(cell(q)),
+          s"nprobe $n: query $q probed cells $cells")
+        assert(vecs == cell.collect { case (v, c) if cells(c) => v }.toSet - q,
+          s"nprobe $n: query $q scores every member of its probed cells")
+      }
+    }
+  }
+
+  test("the ADC queries and the 8-row query sides run a pinned number " +
+      "of jobs") {
+    Similarity.warmArtifacts(spark, sf0001)
+    def jobs(name: String): Int = {
+      def run(): Unit = Similarity.queries(name)(spark, sf0001).write
+        .mode("overwrite").format("noop").save()
+      run() // the first run also collects the PQ codebook
+      jobsDuring(run())
+    }
+    val names = Seq("sim_pq_adc", "sim_ivfpq_ann", "sim_ivfpq_rerank",
+      "sim_cosine_topk", "sim_ann_recall")
+    // The previous plans ran 5, 7 and 11 for the ADC queries (the
+    // distance table built by a join and broadcast, four code rows per
+    // vector and a shuffled (query, vector) aggregation), and 5 and 8
+    // for the other two (a round-robin shuffle of the corpus before
+    // each 8-row query broadcast).
+    assert(names.map(n => n -> jobs(n)) == Seq("sim_pq_adc" -> 3,
+      "sim_ivfpq_ann" -> 3, "sim_ivfpq_rerank" -> 6, "sim_cosine_topk" -> 4,
+      "sim_ann_recall" -> 7))
+  }
+
+  test("ADC fails loudly, naming the vec_id, on a code word that does not " +
+      "fit the table and on a malformed query vector") {
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" | ")
+    // slot (2, 5) is NULL: a centroid no vector chose
+    val tbl = array((0 until 4).map(sub => array((0 until 16).map(c =>
+      if (sub == 2 && c == 5) lit(null).cast("long")
+      else lit(sub * 100L + c)): _*)): _*)
+    def codes(cs: Option[Long]*): Column =
+      array(cs.map(_.fold(lit(null).cast("long"))(lit(_))): _*)
+    // through codegen over a scan, and folded on the driver
+    def both(f: Column => Column): Seq[DataFrame] = Seq(
+      spark.range(7, 8).select(f(col("id"))),
+      spark.range(1).select(f(lit(7L))))
+    def adc(cs: Column)(id: Column): Column =
+      call_function("graft_adc", id, cs, tbl)
+    for (df <- both(adc(codes(Some(1), Some(2), Some(3), Some(4)))))
+      assert(df.collect().head.getLong(0) == 1 + 102 + 203 + 304)
+    val bad = Seq(
+      codes(Some(1), Some(2), Some(3)) -> "has 3 codes; the table has 4 subspaces",
+      codes(Seq.fill(5)(Some(1L)): _*) -> "has 5 codes; the table has 4 subspaces",
+      codes(Some(1), Some(2), Some(3), Some(16)) ->
+        "has code 16 in subspace 3, which has no centroid",
+      codes(Some(1), Some(-1), Some(3), Some(4)) ->
+        "has code -1 in subspace 1, which has no centroid",
+      codes(Some(1), Some(2), Some(5), Some(4)) ->
+        "has code 5 in subspace 2, which has no centroid",
+      codes(Some(1), None, Some(3), Some(4)) -> "has a NULL code in subspace 1",
+      lit(null).cast("array<bigint>") -> "has a NULL code word")
+    for ((cs, want) <- bad; df <- both(adc(cs))) {
+      val e = intercept[Exception](df.collect())
+      assert(messages(e).contains(s"graft_adc: vec_id 7 $want"), messages(e))
+    }
+
+    // set 0 has no centroid 1: its table row holds NULL there
+    val ids = typedLit(Seq(Seq(0L, 2L), Seq(0L)))
+    val cents = typedLit(Seq(Seq(0L, 0L, 4L, 4L), Seq(1L, 1L)))
+    def table(v: Column)(id: Column): Column =
+      call_function("graft_adc_table", id, v, ids, cents)
+    for (df <- both(table(typedLit(Seq(1L, 2L, 3L, 3L)))))
+      assert(df.collect().head.getSeq[Seq[Any]](0) ==
+        Seq(Seq(5L, null, 13L), Seq(8L)))
+    for ((v, want) <- Seq(
+        typedLit(Seq(1L, 2L, 3L)) -> "has 3 elements; the 2 centroid sets cover 4",
+        array(lit(1L), lit(null).cast("long"), lit(3L), lit(3L)) ->
+          "has a NULL element at position 1",
+        lit(null).cast("array<bigint>") -> "has a NULL vector");
+        df <- both(table(v))) {
+      val e = intercept[Exception](df.collect())
+      assert(messages(e).contains(s"graft_adc_table: vec_id 7 $want"),
+        messages(e))
     }
   }
 
